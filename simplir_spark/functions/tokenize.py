@@ -203,28 +203,16 @@ def tokenize_batch(texts: pd.Series, max_token_len: int | None = None) -> pd.Dat
     )
 
 
-def jvm_raw_tokens_expr(text_col: str = "content"):
-    """JVM-side equivalent of ``text.translate(_KILL_TABLE).split()``:
-    punctuation kill-set -> spaces via F.translate, split on Unicode
-    whitespace.  Java's (?U)\\s misses U+001C..001F (Python str.isspace()
-    includes the separator controls), so those are folded into the
-    translate map.  May emit '' edge tokens — the raw-token kernels drop
-    them (Python's argless split never yields '').
-
-    Moving kill+split into Tungsten takes ~25% of the tokenize kernel's
-    Python time off the build's hot path.
-    """
-    kill = KILL_CHARS + "\x1c\x1d\x1e\x1f"
-    return F.split(F.translate(F.col(text_col), kill, " " * len(kill)), r"(?U)\s+")
-
-
 def jvm_clean_text_expr(text_col: str = "content"):
-    """Kill-set translate ONLY (no split) — the Arrow kernels split with
-    C++ ``utf8_split_whitespace`` instead.  Shipping the cleaned STRING
-    through the JVM->Python Arrow stream instead of the split token array
-    drops ~35% of the transfer bytes (no per-token offsets) and the
-    '-separator-control fold keeps Python ``str.split()`` semantics
-    (U+001C..1F are isspace() in Python but not Unicode WSpace).
+    """JVM-side half of ``text.translate(_KILL_TABLE).split()``: the
+    punctuation kill-set -> spaces via F.translate, with NO split — the
+    Arrow kernels split with C++ ``utf8_split_whitespace``.  Shipping the
+    cleaned STRING through the JVM->Python Arrow stream instead of a
+    split token array drops ~35% of the transfer bytes (no per-token
+    offsets).  The separator controls U+001C..1F are also mapped to
+    spaces: Python's isspace() includes them but Unicode White_Space
+    does not, so the fold keeps ``str.split()`` semantics whichever
+    splitter follows (Arrow's already splits on them; tested).
     Arrow's splitter emits '' tokens at string edges where Python's
     doesn't — the kernels drop '' before any position assignment.
     """
@@ -253,12 +241,11 @@ def tokenize_tf_batch(texts: pd.Series) -> pd.DataFrame:
 
 
 def tokenize_tf_from_raw(raw: pd.Series, has_nul: bool | None = None) -> pd.DataFrame:
-    """tokenize_tf_batch's tail over pre-split raw-token arrays (either
-    Python-split or ``jvm_raw_tokens_expr`` output — '' tokens are
-    dropped, restoring Python split() semantics)."""
+    """tokenize_tf_batch's tail over pre-split raw-token arrays ('' tokens
+    are dropped, restoring Python split() semantics)."""
     n_docs = len(raw)
-    # null docs arrive as None from jvm_raw_tokens_expr (split(NULL) is
-    # NULL) — they contribute nothing, like the Arrow kernels' fill_null
+    # a None entry (a null doc) contributes nothing, like the Arrow
+    # kernels' fill_null
     lens = np.fromiter(
         (0 if t is None else len(t) for t in raw), dtype=np.int64, count=n_docs
     )

@@ -37,15 +37,23 @@ def local_rows_df(
     """``createDataFrame(rows, schema)`` for SMALL flat literal tables,
     built as a LocalRelation (see module docstring).  ``schema`` is the
     simple comma-separated "name type" form with scalar types only;
-    anything else (or an empty/oversized row set) falls back to
-    ``createDataFrame`` unchanged."""
+    anything else (an empty or oversized row set, or a row whose length
+    differs from the schema's) falls back to ``createDataFrame``
+    unchanged, which raises its usual error for a bad row.  Values are
+    bound through ``CAST``, which is laxer than ``createDataFrame``'s
+    type check: under non-ANSI SQL an out-of-range or fractional value
+    truncates or becomes NULL instead of raising."""
     fields = []
     for part in schema.split(","):
         toks = part.strip().split()
         if len(toks) != 2 or toks[1].lower() not in _SQL_TYPES:
             return spark.createDataFrame(rows, schema)
         fields.append((toks[0], _SQL_TYPES[toks[1].lower()]))
-    if not rows or len(rows) * len(fields) > _MAX_PARAMS:
+    if (
+        not rows
+        or len(rows) * len(fields) > _MAX_PARAMS
+        or any(len(r) != len(fields) for r in rows)
+    ):
         return spark.createDataFrame(rows, schema)
     args: dict = {}
     tuples = []

@@ -2,11 +2,11 @@
 
 Stage graph (each stage checkpointed + lineaged by PipelineRunner):
 
-  corpus ─ tokenize ─ doc-ids ─┬─ docmeta  (did, doc_key, doc_len, sha256, …)
-                               ├─ postings (term-range-partitioned, delta+
-                               │            varint runs ≤ 2^14 postings)
-                               ├─ term_stats  (term, df, cf)
-                               └─ corpus_stats.json
+  corpus ─ chunks ─┬─ docmeta  (did, doc_key, doc_len, sha256, …)
+  (doc-ids +       ├─ postings (term-range-partitioned, delta+
+   tokenize +      │            varint runs ≤ 2^14 postings)
+   run encode)     ├─ term_stats  (term, df, cf)
+                   └─ corpus_stats.json
 
 Scale design decisions (vs the reference's single-process build,
 simplir-disk-index/src/SimplIR/DiskIndex/Build.hs:34-135):
@@ -14,11 +14,13 @@ simplir-disk-index/src/SimplIR/DiskIndex/Build.hs:34-135):
 * ONE heavy pass over content: two column-pruned bookkeeping scans
   (boundary sample + per-bucket counts over doc_key only), then a single
   shuffle of raw content into bucket-aligned partitions where one
-  mapInArrow kernel assigns dense doc ids AND tokenizes AND aggregates
-  per-doc term frequencies.  Content crosses the wire exactly once, the
+  mapInArrow kernel assigns dense doc ids AND tokenizes AND encodes the
+  partition's posting runs.  Content crosses the wire exactly once, the
+  per-doc term lists never materialize, the
   raw token stream never materializes as Python objects (Arrow
   dictionary-encode + integer numpy cores; string work is
-  vocabulary-sized), and kill+split runs in Tungsten pre-kernel.
+  vocabulary-sized), and the punctuation kill runs in Tungsten
+  pre-kernel.
 
 * Dense 0-based doc ids (DocumentId, Types.hs:54-63) are assigned by
   doc_key order: sampled range-bucket boundaries, driver-side exclusive
@@ -31,7 +33,7 @@ simplir-disk-index/src/SimplIR/DiskIndex/Build.hs:34-135):
   on this mapping, correctness never does.
 
 * Posting runs (≤ run_size postings, DiskIndex.hs:117-119: 2^14) are
-  encoded INSIDE each did-contiguous tokenized partition — the chunked
+  encoded INSIDE each did-contiguous bucket partition — the chunked
   collectIndex build (Build.hs:117-135) — so per-term runs across
   partitions occupy disjoint did ranges and the final index is their
   union ordered by (term, start_did): chunk-level DiskIndex.merge
@@ -62,16 +64,15 @@ from pyspark.sql import functions as F
 from simplir_spark.functions import codec
 from simplir_spark.operators.stats import corpus_stats as corpus_stats_agg
 from simplir_spark.plans.pipeline import PipelineRunner
-from simplir_spark.schema import POSTINGS_SCHEMA
 from simplir_spark.sources.corpus import with_integrity
 
 RUN_SIZE_DEFAULT = 1 << 14  # postings per run chunk — DiskIndex.hs:117-119
 
 # Target docs per bucket-aligned partition: the reference's chunkSize
-# (SimpleIndex.hs:100, 64000 docs/chunk).  Bounds the partition run
-# encoder's working set — make_partition_run_encoder holds ONE partition's
-# exploded postings in numpy while encoding, so partition size must scale
-# with this constant, not with corpus/shuffle-partitions.
+# (SimpleIndex.hs:100, 64000 docs/chunk).  Bounds the chunk kernel's
+# working set — make_chunk_kernel holds ONE partition's postings in numpy
+# while encoding, so partition size must scale with this constant, not
+# with corpus/shuffle-partitions.
 DOCS_PER_BUCKET_DEFAULT = 64_000
 # Auto bucket-count cap.  Below _BUCKET_UDF_MIN buckets the cuts ride the
 # plan as an array literal (bucket_expr); past it, routing switches to a
@@ -223,28 +224,6 @@ def _bucket_expr_linear(key_col: str, cuts: list[str]):
     return F.size(F.filter(arr, lambda c: c <= F.col(key_col)))
 
 
-def _bucket_expr_case(key_col: str, cuts: list[str]):
-    """Nested-CASE binary search form, kept for the parity test only.
-
-    Log-depth per row but REJECTED as the default: a CASE tree carries
-    one WHEN + one Literal NODE per cut, and Catalyst pays tree-walk cost
-    per node per rule — measured ~16 s of driver time per job at 4k cuts
-    (vs ~0 for array-literal forms, which constant-fold to ONE node).
-    """
-    if not cuts:
-        return F.lit(0)
-    key = F.col(key_col)
-
-    def build(lo: int, hi: int):
-        # possible bucket values in [lo, hi]; bucket > mid iff cuts[mid] <= key
-        if lo == hi:
-            return F.lit(lo)
-        mid = (lo + hi) // 2
-        return F.when(F.lit(cuts[mid]) <= key, build(mid + 1, hi)).otherwise(build(lo, mid))
-
-    return build(0, len(cuts))
-
-
 _BUCKET_SQRT_MIN = 128
 
 
@@ -259,7 +238,7 @@ def bucket_expr(key_col: str, cuts: list[str]):
     corpus.  Both levels are array LITERALS (constant-folded to single
     Literal nodes), so the driver-side plan cost stays ~zero — unlike a
     log-depth nested-CASE, whose per-cut WHEN nodes cost seconds of
-    Catalyst tree-walking per job (measured; see _bucket_expr_case).
+    Catalyst tree-walking per job (measured, BENCH/bucket_search.json).
     """
     n = len(cuts)
     if n == 0:
@@ -533,193 +512,8 @@ def with_term_did_bucket_and_xb(
     )
 
 
-def make_tokenize_assign_kernel(offsets: dict[int, int], carry_cols: list[str],
-                                with_positions: bool):
-    """mapInPandas kernel: rows sorted by (_bucket, doc_key) within the
-    partition -> tokenized rows with dense dids.
-
-    did = offset[bucket] + running position within the bucket — the
-    distributed equivalent of zipping the doc stream with [0..]
-    (collectIndex, Build.hs:117-135) plus chunk-offset re-basing
-    (Document.hs:62-76).  Tokenization runs in the SAME pass, after the
-    shuffle, so content crosses the wire exactly once and no separate
-    id-assignment job exists.
-    """
-    from simplir_spark.functions.tokenize import tokenize_pos_batch, tokenize_tf_from_raw
-
-    def kernel(batches):
-        counters: dict[int, int] = {}
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            b = pdf["_bucket"].to_numpy()
-            dids = np.empty(n, dtype=np.int64)
-            change = np.nonzero(b[1:] != b[:-1])[0] + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [n]))
-            for s, e in zip(starts, ends):
-                bb = int(b[s])
-                base = offsets[bb] + counters.get(bb, 0)
-                dids[s:e] = np.arange(base, base + (e - s))
-                counters[bb] = counters.get(bb, 0) + (e - s)
-            tok = (
-                tokenize_pos_batch(pdf["content"])
-                if with_positions
-                # tf path: kill+split already ran JVM-side (jvm_raw_tokens_expr)
-                else tokenize_tf_from_raw(pdf["_raw"])
-            )
-            out = {"did": dids}
-            for c in carry_cols:
-                out[c] = pdf[c].to_numpy()
-            for c in tok.columns:
-                out[c] = tok[c].to_numpy() if tok[c].dtype != object else tok[c]
-            yield pd.DataFrame(out)
-
-    return kernel
-
-
-def make_tokenize_assign_kernel_arrow(
-    offsets: dict[int, int], carry_cols: list[str], with_positions: bool = False
-):
-    """mapInArrow twin of :func:`make_tokenize_assign_kernel`.
-
-    Same semantics, but the per-token data never becomes Python objects:
-    the JVM-split ``_raw`` list column is flattened zero-copy, raw tokens
-    are coded by ``pyarrow.compute.dictionary_encode`` (C++), the shared
-    integer cores (:func:`tokenize.tf_codes_core` /
-    :func:`tokenize.pos_codes_core`) do the grouping, and the output
-    ``terms`` list column is assembled by a C++ ``take`` of the batch
-    vocabulary — Python string work is vocabulary-sized, not
-    token-stream-sized.
-
-    ``with_positions`` emits the positional layout instead: ``terms`` is
-    the normalized occurrence stream in raw order and ``positions`` the
-    matching pre-normalization token indexes (tokenize_pos_batch
-    semantics; '' artifacts of the JVM split are dropped BEFORE position
-    assignment, restoring Python ``str.split()`` numbering).
-    """
-    import pyarrow as pa
-
-    from simplir_spark.functions.tokenize import pos_codes_core, tf_codes_core
-
-    def kernel(batches):
-        import pyarrow.compute as pc
-
-        counters: dict[int, int] = {}
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            bkt = b.column(b.schema.get_field_index("_bucket")).to_numpy(
-                zero_copy_only=False
-            )
-            dids = np.empty(n, dtype=np.int64)
-            change = np.nonzero(bkt[1:] != bkt[:-1])[0] + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [n]))
-            for s, e in zip(starts, ends):
-                bb = int(bkt[s])
-                base = offsets[bb] + counters.get(bb, 0)
-                dids[s:e] = np.arange(base, base + (e - s))
-                counters[bb] = counters.get(bb, 0) + (e - s)
-
-            ci = b.schema.get_field_index("_clean")
-            if ci >= 0:
-                # cleaned STRING per doc -> C++ whitespace split here;
-                # the Arrow stream carried no per-token offsets
-                raw = pc.utf8_split_whitespace(b.column(ci))
-            else:
-                raw = b.column(b.schema.get_field_index("_raw"))
-            lens = (
-                pc.fill_null(pc.list_value_length(raw), 0)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            values = raw.flatten()  # zero-copy; null docs contribute nothing
-            doc_ix = np.repeat(np.arange(n, dtype=np.int64), lens)
-            if len(values) > 0:
-                nonempty = pc.not_equal(values, "")  # split()'s '' edge tokens
-                mask = nonempty.to_numpy(zero_copy_only=False)
-                if not mask.all():
-                    values = values.filter(nonempty)
-                    doc_ix = doc_ix[mask]
-
-            if len(values) == 0:
-                inv = uniq = None
-            else:
-                enc = pc.dictionary_encode(values)
-                # dictionary indices carry no nulls -> zero-copy int32 view
-                inv = np.asarray(enc.indices)
-                uniq = np.asarray(
-                    enc.dictionary.to_numpy(zero_copy_only=False), dtype=object
-                )
-
-            if with_positions:
-                if inv is None:
-                    codes_kept = np.zeros(0, dtype=np.int64)
-                    vocab_arrow = pa.array([], type=pa.string())
-                    pos_kept = np.zeros(0, dtype=np.int32)
-                    doc_len = np.zeros(n, dtype=np.int32)
-                    dl_alnum = np.zeros(n, dtype=np.int32)
-                else:
-                    # raw position = index within the doc's nonempty raw
-                    # token stream (pre-normalization-drop numbering)
-                    kept_lens = np.bincount(doc_ix, minlength=n)
-                    off = np.concatenate(([0], np.cumsum(kept_lens)))[:-1]
-                    raw_pos = (np.arange(len(doc_ix)) - off[doc_ix]).astype(np.int32)
-                    codes_kept, vocab, pos_kept, _, doc_len, dl_alnum = pos_codes_core(
-                        inv, uniq, doc_ix, raw_pos, n
-                    )
-                    vocab_arrow = pa.array(vocab, type=pa.string())
-                payload_idx, payload_vocab = codes_kept, vocab_arrow
-                payload_col_vals = pa.array(pos_kept, type=pa.int32())
-                payload_name = "positions"
-                per_doc = doc_len
-            else:
-                if inv is None:
-                    payload_idx = np.zeros(0, dtype=np.int64)
-                    payload_vocab = pa.array([], type=pa.string())
-                    tf = np.zeros(0, dtype=np.int64)
-                    per_doc = np.zeros(n, dtype=np.int64)
-                    doc_len = np.zeros(n, dtype=np.int32)
-                    dl_alnum = np.zeros(n, dtype=np.int32)
-                else:
-                    term_idx, nt_sorted, tf, n_distinct, doc_len, dl_alnum = (
-                        tf_codes_core(inv, uniq, doc_ix, n)
-                    )
-                    payload_idx, payload_vocab = term_idx, pa.array(
-                        nt_sorted, type=pa.string()
-                    )
-                    per_doc = n_distinct
-                payload_col_vals = pa.array(tf, type=pa.int64())
-                payload_name = "tfs"
-
-            list_offs = np.concatenate(([0], np.cumsum(per_doc))).astype(np.int32)
-            offs_arr = pa.array(list_offs, type=pa.int32())
-            terms_col = pa.ListArray.from_arrays(
-                offs_arr, pc.take(payload_vocab, pa.array(payload_idx))
-            )
-            payload_col = pa.ListArray.from_arrays(offs_arr, payload_col_vals)
-            cols = [pa.array(dids, type=pa.int64())]
-            names = ["did"]
-            for c in carry_cols:
-                cols.append(b.column(b.schema.get_field_index(c)))
-                names.append(c)
-            cols += [
-                terms_col,
-                payload_col,
-                pa.array(doc_len, type=pa.int32()),
-                pa.array(dl_alnum, type=pa.int32()),
-            ]
-            names += ["terms", payload_name, "doc_len", "doc_len_alnum"]
-            yield pa.RecordBatch.from_arrays(cols, names=names)
-
-    return kernel
-
-
-def fused_chunk_schema(carry_cols: list[str], carry_types: dict[str, str]) -> str:
-    """Union schema for the fused build's chunks table: docmeta rows
+def chunk_schema(carry_cols: list[str], carry_types: dict[str, str]) -> str:
+    """Union schema for the build's chunks table: docmeta rows
     (row_kind=0) and encoded posting runs (row_kind=1) side by side."""
     carries = ", ".join(f"{c} {carry_types[c]}" for c in carry_cols)
     return (
@@ -730,13 +524,23 @@ def fused_chunk_schema(carry_cols: list[str], carry_types: dict[str, str]) -> st
     )
 
 
-def make_fused_chunk_kernel(
+def make_chunk_kernel(
     offsets: dict[int, int], carry_cols: list[str], run_size: int,
     with_positions: bool = False,
 ):
-    """mapInArrow kernel fusing tokenize-assign AND run encoding: one
-    heavy pass emits docmeta rows (row_kind=0) and the partition's
-    encoded posting runs (row_kind=1) — the per-doc terms/tfs lists,
+    """mapInArrow kernel: rows sorted by (_bucket, doc_key) within one
+    bucket partition -> docmeta rows (row_kind=0) and the partition's
+    encoded posting runs (row_kind=1).
+
+    did = offset[bucket] + running position within the bucket — the
+    distributed equivalent of zipping the doc stream with [0..]
+    (collectIndex, Build.hs:117-135) plus chunk-offset re-basing
+    (Document.hs:62-76).  Tokenizing is vectorized: the cleaned text is
+    split C++-side, raw tokens are coded by
+    ``pyarrow.compute.dictionary_encode`` and the shared integer cores
+    (:func:`tokenize.tf_codes_core` / :func:`tokenize.pos_codes_core`)
+    do the grouping, so Python string work is vocabulary-sized, not
+    token-stream-sized.  The per-doc terms/tfs lists,
     the build's largest intermediate, are never materialized at all
     (at corpus scale that checkpoint costs a full extra write+read of
     roughly the text volume).  This is the closest Spark analog of the
@@ -748,9 +552,11 @@ def make_fused_chunk_kernel(
     Types.hs:139-158): the kernel keeps the per-occurrence normalized
     stream + raw token positions (pos_codes_core semantics) and the
     back-half groups occurrences into postings with one extra
-    position-delta varint stream — the same shared back-half the
-    two-stage positional encoder uses, so the layouts are
-    value-identical by construction.
+    position-delta varint stream.
+
+    Memory contract: the partition's postings are held in numpy arrays
+    while encoding — size partitions like the reference sizes its chunks
+    (chunkSize=64000 docs, SimpleIndex.hs:100).
     """
     import pyarrow as pa
 
@@ -786,7 +592,7 @@ def make_fused_chunk_kernel(
                 pa.nulls(n, pa.binary()),      # dls
                 pa.nulls(n, pa.binary()),      # pos
             ]
-            return pa.RecordBatch.from_arrays(cols, names=_FUSED_COLS(carry_cols))
+            return pa.RecordBatch.from_arrays(cols, names=_chunk_cols(carry_cols))
 
         for b in batches:
             n = b.num_rows
@@ -805,11 +611,11 @@ def make_fused_chunk_kernel(
                 dids[s:e] = np.arange(base, base + (e - s))
                 counters[bb] = counters.get(bb, 0) + (e - s)
 
-            ci = b.schema.get_field_index("_clean")
-            if ci >= 0:
-                raw = pc.utf8_split_whitespace(b.column(ci))
-            else:
-                raw = b.column(b.schema.get_field_index("_raw"))
+            # cleaned STRING per doc -> C++ whitespace split here; the
+            # Arrow stream carried no per-token offsets
+            raw = pc.utf8_split_whitespace(
+                b.column(b.schema.get_field_index("_clean"))
+            )
             lens = (
                 pc.fill_null(pc.list_value_length(raw), 0)
                 .to_numpy(zero_copy_only=False)
@@ -818,7 +624,7 @@ def make_fused_chunk_kernel(
             values = raw.flatten()
             doc_ix = np.repeat(np.arange(n, dtype=np.int64), lens)
             if len(values) > 0:
-                nonempty = pc.not_equal(values, "")
+                nonempty = pc.not_equal(values, "")  # split()'s '' edge tokens
                 mask = nonempty.to_numpy(zero_copy_only=False)
                 if not mask.all():
                     values = values.filter(nonempty)
@@ -887,12 +693,12 @@ def make_fused_chunk_kernel(
                 pa.nulls(m, pa.int32()),  # doc_len_alnum
                 *run_cols,
             ]
-            yield pa.RecordBatch.from_arrays(cols, names=_FUSED_COLS(carry_cols))
+            yield pa.RecordBatch.from_arrays(cols, names=_chunk_cols(carry_cols))
 
     return kernel
 
 
-def _FUSED_COLS(carry_cols: list[str]) -> list[str]:
+def _chunk_cols(carry_cols: list[str]) -> list[str]:
     return (
         ["row_kind", "did"] + list(carry_cols) + ["doc_len", "doc_len_alnum"]
         + _RUN_COLS
@@ -907,71 +713,6 @@ def _FUSED_COLS(carry_cols: list[str]) -> list[str]:
 _RUN_COLS = ["term", "start_did", "end_did", "n", "max_tf", "sum_tf", "deltas", "tfs", "dls", "pos"]
 
 
-def make_partition_run_encoder(run_size: int):
-    """mapInPandas kernel: one tokenized PARTITION -> its encoded posting runs.
-
-    The Spark re-expression of ``collectIndex`` (Build.hs:117-135): each
-    partition is a did-contiguous chunk, so its per-term runs occupy
-    disjoint did ranges across partitions and the final index is just the
-    union of partition runs ordered by (term, start_did) — chunk-level
-    merge exactly as ``DiskIndex.merge`` concatenates chunk posting lists
-    (Posting2/Merge.hs:47-69) without re-encoding.  Only the small encoded
-    runs are shuffled; the exploded (doc, term) rows never leave the
-    partition.
-
-    Memory contract: the partition's exploded postings are held in numpy
-    arrays while encoding — size partitions like the reference sizes its
-    chunks (chunkSize=64000 docs, SimpleIndex.hs:100).
-    """
-    from itertools import chain
-
-    def encode(batches):
-        did_parts, tf_parts, dl_parts, term_parts = [], [], [], []
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            terms_col = pdf["terms"]
-            lens = np.fromiter((len(t) for t in terms_col), dtype=np.int64, count=n)
-            total = int(lens.sum())
-            if total == 0:
-                continue
-            term_parts.append(np.fromiter(chain.from_iterable(terms_col), dtype=object, count=total))
-            tf_parts.append(np.fromiter(chain.from_iterable(pdf["tfs"]), dtype=np.int64, count=total))
-            did_parts.append(np.repeat(pdf["did"].to_numpy(np.int64), lens))
-            dl_parts.append(np.repeat(pdf["doc_len"].to_numpy(np.int64), lens))
-        if not did_parts:
-            return
-        terms = np.concatenate(term_parts)
-        tfs = np.concatenate(tf_parts)
-        dids = np.concatenate(did_parts)
-        dls = np.concatenate(dl_parts)
-        codes, uniq = pd.factorize(terms)  # normalized terms are NUL-free
-        uniq = np.asarray(uniq, dtype=object)
-        order = np.lexsort((dids, codes))
-        codes_s, dids_s, tfs_s, dls_s = codes[order], dids[order], tfs[order], dls[order]
-        change = np.nonzero(codes_s[1:] != codes_s[:-1])[0] + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [len(codes_s)]))
-        out: list[tuple] = []
-        for s, e in zip(starts, ends):
-            t = uniq[codes_s[s]]
-            for rs in range(s, e, run_size):
-                re_ = min(rs + run_size, e)
-                run = codec.encode_run(dids_s[rs:re_], tfs_s[rs:re_], dls_s[rs:re_])
-                out.append(
-                    (t, run["start_did"], run["end_did"], run["n"], run["max_tf"],
-                     run["sum_tf"], run["deltas"], run["tfs"], run["dls"], None)
-                )
-                if len(out) >= 8192:
-                    yield pd.DataFrame(out, columns=_RUN_COLS)
-                    out = []
-        if out:
-            yield pd.DataFrame(out, columns=_RUN_COLS)
-
-    return encode
-
-
 # per-column byte cap for one emitted Arrow batch: binary columns carry
 # int32 offsets, so a batch's data buffer must stay < 2 GiB; 1 GiB leaves
 # headroom for the three parallel blob columns
@@ -980,17 +721,15 @@ _ARROW_CHUNK_RUNS = 1 << 16
 
 
 def _posting_run_batches(val_parts, tf_parts, did_parts, dl_parts, run_size):
-    """Shared encoder back-half: accumulated posting-level arrays -> run
-    column tuples (the 10 POSTINGS_SCHEMA columns), chunked.
+    """Chunk-kernel back-half (tf payload): accumulated posting-level
+    arrays -> run column tuples (the 10 POSTINGS_SCHEMA columns), chunked.
 
     ``val_parts``: large_string Arrow arrays of per-posting terms;
     ``tf_parts``/``did_parts``/``dl_parts``: int64 numpy arrays, aligned.
     Postings need not be sorted — a stable radix argsort on the
     dictionary codes groups them (did order within a term is preserved
     when input dids are non-decreasing, the bucket layout's guarantee;
-    lexsort fallback otherwise).  Same algorithm as the tf branch of
-    :func:`make_partition_run_encoder_arrow` (kept separate there to
-    leave the positional variant self-contained).
+    lexsort fallback otherwise).
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -1151,80 +890,6 @@ def _occurrence_run_batches(val_parts, pos_parts, did_parts, dl_parts, run_size)
     )
 
 
-def make_partition_run_encoder_arrow(run_size: int, with_positions: bool = False):
-    """mapInArrow kernel: one tokenized PARTITION -> encoded posting runs.
-
-    Semantics identical to :func:`make_partition_run_encoder` (the chunked
-    ``collectIndex`` build, Build.hs:117-135) but with NO per-token Python
-    objects and NO per-term Python loop — the pandas kernel's
-    Arrow->object-string conversion + ``pd.factorize`` + per-run
-    ``encode_run`` calls were allocator/memory-bandwidth-bound, which is
-    what capped the postings stage at ~1.5x going 4->16 cores while the
-    tokenize stage hit the host ceiling:
-
-    * token flatten is zero-copy (``ListArray.flatten``),
-    * term -> code is C++ (``pyarrow.compute.dictionary_encode``),
-    * the sort is a stable integer argsort on the int32 codes (numpy radix
-      sort, O(n)) when docs arrive did-ordered (the bucket layout
-      guarantees it; a lexsort fallback covers file-packed reorders),
-    * per-run stats are ``reduceat`` reductions,
-    * the varint streams are encoded ONCE for the whole partition
-      (per-value lengths from ``encode_varints_with_lens``) and the
-      per-run blobs become an Arrow BinaryArray built straight from the
-      stream + cumulative-length offsets — runs tile the posting array,
-      so their byte ranges tile the stream.
-
-    ``with_positions`` consumes the positional tokenized layout (``terms``
-    = normalized occurrence stream, ``positions`` = raw token indexes):
-    occurrences group into postings by (term, did) change after the sort,
-    tf = group size, and the per-posting position deltas (first absolute,
-    ``codec.encode_positions`` format) are one more whole-partition varint
-    stream whose per-run slices tile exactly like the others — the
-    positional payload of the reference's generic posting
-    (Types.hs:139-158) without the exploded pair-row shuffle.
-    """
-    import pyarrow as pa
-
-    def encode(batches):
-        import pyarrow.compute as pc
-
-        val_parts: list = []
-        aux_parts: list[np.ndarray] = []  # tfs (tf path) / positions (pos path)
-        did_parts: list[np.ndarray] = []
-        dl_parts: list[np.ndarray] = []
-        aux_name = "positions" if with_positions else "tfs"
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            terms = b.column(b.schema.get_field_index("terms"))
-            lens = pc.list_value_length(terms).to_numpy().astype(np.int64)
-            if int(lens.sum()) == 0:
-                continue
-            val_parts.append(terms.flatten().cast(pa.large_string()))
-            aux_col = b.column(b.schema.get_field_index(aux_name)).flatten()
-            aux_parts.append(aux_col.to_numpy(zero_copy_only=False).astype(np.int64))
-            dids_b = b.column(b.schema.get_field_index("did")).to_numpy(
-                zero_copy_only=False
-            )
-            dls_b = b.column(b.schema.get_field_index("doc_len")).to_numpy(
-                zero_copy_only=False
-            )
-            did_parts.append(np.repeat(dids_b.astype(np.int64), lens))
-            dl_parts.append(np.repeat(dls_b.astype(np.int64), lens))
-        if not did_parts:
-            return
-        # shared back-halves (also used by the fused build) — one code
-        # path per payload, so fused and two-stage outputs are
-        # value-identical by construction
-        back = (_occurrence_run_batches if with_positions else _posting_run_batches)(
-            val_parts, aux_parts, did_parts, dl_parts, run_size
-        )
-        for run_cols in back:
-            yield pa.RecordBatch.from_arrays(list(run_cols), names=_RUN_COLS)
-
-    return encode
-
-
 def term_did_cuts(pairs_sample: list[tuple], n_partitions: int) -> list[tuple]:
     """Range boundaries over (term, did) pairs — (n_partitions-1) cuts."""
     if n_partitions <= 1 or not pairs_sample:
@@ -1291,15 +956,8 @@ class IndexPaths:
     root: str
 
     @property
-    def tokenized(self) -> str:
-        return os.path.join(self.root, "tokenized")
-
-    @property
     def docmeta(self) -> str:
-        """Merged indexes write an explicit docmeta dir; fresh builds serve
-        docmeta from the tokenized checkpoint via column pruning."""
-        explicit = os.path.join(self.root, "docmeta")
-        return explicit if os.path.exists(explicit) else self.tokenized
+        return os.path.join(self.root, "docmeta")
 
     @property
     def postings(self) -> str:
@@ -1314,19 +972,69 @@ class IndexPaths:
         return os.path.join(self.root, "corpus_stats.json")
 
 
-def _build_index_fused(
+# Arrow batch size for the chunks stage: one 64k-row batch per bucket
+# partition serializes transfer -> compute -> emit, while ~16k-row batches
+# pipeline them (JVM encodes batch i+1 while Python tokenizes batch i) —
+# interleaved A/B min 2.06s -> 1.44s on the 500k-doc chunks stage
+# (BENCH/arrow_batch.json).
+_CHUNKS_ARROW_BATCH = 16384
+# Driver threads running the four stages that rewrite the chunks table.
+_TAIL_WORKERS = 4
+
+
+def build_index(
     spark: SparkSession,
     corpus: DataFrame,
-    paths: IndexPaths,
-    runner: PipelineRunner,
-    n_partitions: int,
-    run_size: int,
-    n_docs_known: int | None,
+    out_dir: str,
+    n_partitions: int | None = None,
+    run_size: int = RUN_SIZE_DEFAULT,
+    params_fp: dict | None = None,
     with_positions: bool = False,
+    docs_per_bucket: int = DOCS_PER_BUCKET_DEFAULT,
 ) -> IndexPaths:
-    """Fused stage graph: chunks (docmeta + runs in one heavy pass) ->
-    docmeta / postings (both slim rewrites of chunks) -> stats."""
-    out_dir = paths.root
+    """Build a complete index directory from a corpus DataFrame.
+
+    Stage graph: ``chunks`` (ONE heavy pass: dense ids + tokenize + run
+    encoding, emitting docmeta rows and encoded posting runs side by
+    side) -> ``docmeta`` / ``postings`` (slim rewrites of chunks) and
+    ``term_stats`` / ``corpus_stats`` (aggregates of chunks).  The per-doc
+    terms/tfs lists are never materialized — the reference's single-pass
+    chunked ``collectIndex`` (Build.hs:117-135).
+
+    Resumable: each stage is skipped when its lineage fingerprint matches
+    a previous run (kill/re-run safe); a wiped downstream stage rebuilds
+    from the chunks checkpoint without re-tokenizing.  ``with_positions``
+    builds the positional payload (per-posting occurrence positions) —
+    DiskIndex's payload genericity (Types.hs:139-158).
+
+    When ``n_partitions`` is not given it SCALES WITH THE CORPUS:
+    ceil(n_docs / docs_per_bucket) buckets (floor: shuffle partitions,
+    cap: MAX_AUTO_PARTITIONS) — bounding the per-task memory of the
+    chunk kernel regardless of corpus size, like the reference's fixed
+    64000-doc chunks.
+
+    While it runs, the build sets ``spark.sql.execution.arrow.
+    maxRecordsPerBatch`` and ``spark.sql.files.openCostInBytes``
+    SESSION-WIDE (restored on exit, also on error): it assumes it has the
+    SparkSession to itself, since any query planned on the same session
+    meanwhile inherits both settings.
+    """
+    n_docs_known: int | None = None
+    if n_partitions is None:
+        shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        n_docs_known = corpus.select("doc_key").count()  # column-pruned
+        need = -(-n_docs_known // docs_per_bucket) if n_docs_known else 1
+        n_partitions = max(shuffle_p, min(MAX_AUTO_PARTITIONS, need))
+    paths = IndexPaths(out_dir)
+    runner = PipelineRunner(
+        out_dir,
+        params={
+            "run_size": run_size,
+            "n_partitions": n_partitions,
+            "with_positions": with_positions,
+            **(params_fp or {}),
+        },
+    )
 
     def build_chunks() -> DataFrame:
         src = with_integrity(corpus)  # schema source for carry types
@@ -1336,15 +1044,20 @@ def _build_index_fused(
         with open(os.path.join(out_dir, "_bucket_cuts.json"), "w") as f:
             json.dump(cuts, f)
         n_buckets = len(cuts) + 1
+        # probe modulus MUST equal the repartition partition count, else
+        # buckets scatter (collision skew)
         xkeys = probe_shuffle_keys(n_buckets, n_buckets)
         carry = ["doc_key"] + [
             c for c in ("repo", "path", "commit", "lang") if c in src.columns
         ] + ["sha256"]
         carry_types = {f.name: f.dataType.simpleString() for f in src.schema.fields}
-        schema = fused_chunk_schema(carry, carry_types)
+        schema = chunk_schema(carry, carry_types)
         from simplir_spark.functions.tokenize import jvm_clean_text_expr
 
-        # sha256 is computed AFTER the exchange: the integrity column is a
+        # Kill-set translate in Tungsten AFTER the exchange; the kernel
+        # splits C++-side, so the shuffle and the JVM->Python Arrow stream
+        # carry one cleaned string per doc (no per-token offsets).  sha256
+        # is likewise computed post-exchange: the integrity column is a
         # pure function of content, so hashing post-shuffle is
         # value-identical and the 64-char hex never crosses the wire
         # (~20% of per-row shuffle metadata at the fixture's doc sizes —
@@ -1360,21 +1073,14 @@ def _build_index_fused(
             .drop("content")
         )
         return heavy.mapInArrow(
-            make_fused_chunk_kernel(offsets, carry, run_size, with_positions), schema
+            make_chunk_kernel(offsets, carry, run_size, with_positions), schema
         )
 
     os.makedirs(out_dir, exist_ok=True)
-    # Smaller Arrow batches for the heavy kernel stage: one 64k-row batch
-    # per bucket partition serializes transfer -> compute -> emit, while
-    # ~16k-row batches pipeline them (JVM encodes batch i+1 while Python
-    # tokenizes batch i) — interleaved A/B min 2.06s -> 1.44s on the
-    # 500k-doc chunks stage (BENCH/arrow_batch.json).  Scoped to this
-    # stage so other Arrow paths keep the session default.
+    # scoped to the chunks stage so other Arrow paths keep the session default
     _ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
     _prev_batch = spark.conf.get(_ARROW_BATCH)
-    spark.conf.set(
-        _ARROW_BATCH, os.environ.get("SIMPLIR_BUILD_ARROW_BATCH", "16384")
-    )
+    spark.conf.set(_ARROW_BATCH, str(_CHUNKS_ARROW_BATCH))
     try:
         r_chunks = runner.run_df_stage("chunks", build_chunks)
     finally:
@@ -1385,11 +1091,13 @@ def _build_index_fused(
         if c not in {"row_kind"} | set(_RUN_COLS)
     ]
 
-    # One chunks file == one read task for the slim rewrites below (same
-    # rationale as the two-stage path): small-file packing (openCostInBytes
-    # default 4 MB) would merge several compressed chunk files into one
-    # read task and starve the decode side of parallelism — measured as a
-    # postings-stage wall FLAT across 4 vs 16 cores until scoped here.
+    # One chunks file == one read task for the slim rewrites below:
+    # small-file packing (openCostInBytes default 4 MB) would merge several
+    # compressed chunk files into one read task and starve the decode side
+    # of parallelism — measured as a postings-stage wall FLAT across 4 vs
+    # 16 cores until scoped here.  Raising the open cost to the bin size
+    # makes packing a no-op; splitting of genuinely large files is
+    # unaffected.
     _OPEN_COST = "spark.sql.files.openCostInBytes"
     _prev_open_cost = spark.conf.get(_OPEN_COST)
     spark.conf.set(_OPEN_COST, str(128 * 1024 * 1024))
@@ -1427,6 +1135,8 @@ def _build_index_fused(
                 return runs.coalesce(1)
             n_buckets = len(cuts) + 1
             xkeys = probe_shuffle_keys(n_buckets, n_buckets)
+            # a run is placed by its start_did: bucketing is monotone in
+            # the final (term, start_did) sort key, so global order holds
             return (
                 with_term_did_bucket_and_xb(runs, cuts, xkeys, did_col="start_did")
                 .repartition(n_buckets, "_xb")
@@ -1443,13 +1153,14 @@ def _build_index_fused(
         # non-chunks wall 2.2-3.8s -> 1.7-2.3s, BENCH/build_tail.json).
         from concurrent.futures import ThreadPoolExecutor
 
-        tail_workers = int(os.environ.get("SIMPLIR_BUILD_TAIL_WORKERS", "4"))
-        with ThreadPoolExecutor(max_workers=max(1, tail_workers)) as pool:
+        with ThreadPoolExecutor(max_workers=_TAIL_WORKERS) as pool:
             f_doc = pool.submit(
                 runner.run_df_stage,
                 "docmeta",
                 # row_kind min/max prunes the pure row groups; the heavy blob
-                # columns are never read (column pruning)
+                # columns are never read (column pruning).  Bucket-aligned
+                # partitions are did-contiguous, so parquet min/max stats on
+                # did give range pruning for free.
                 lambda: chunks.filter(F.col("row_kind") == 0).select(*doc_cols),
                 upstream=["chunks"],
                 sort_within_partitions=["did"],
@@ -1488,207 +1199,6 @@ def _build_index_fused(
     return paths
 
 
-def build_index(
-    spark: SparkSession,
-    corpus: DataFrame,
-    out_dir: str,
-    n_partitions: int | None = None,
-    run_size: int = RUN_SIZE_DEFAULT,
-    params_fp: dict | None = None,
-    with_positions: bool = False,
-    docs_per_bucket: int = DOCS_PER_BUCKET_DEFAULT,
-    fused: bool | None = None,
-) -> IndexPaths:
-    """Build a complete index directory from a corpus DataFrame.
-
-    Resumable: each stage is skipped when its lineage fingerprint matches
-    a previous run (kill/re-run safe).  ``with_positions`` builds the
-    positional payload (per-posting occurrence positions) — DiskIndex's
-    payload genericity (Types.hs:139-158).
-
-    ``fused`` (THE DEFAULT, both payloads) runs tokenize AND run
-    encoding in ONE heavy stage whose output holds docmeta rows +
-    encoded runs side by side — the per-doc terms/tfs (or occurrence/
-    positions) lists, the build's largest intermediate at roughly the
-    text volume again, are never written or re-read.  Pass
-    ``fused=False`` for the two-stage layout with its finer resume
-    granularity (a wiped postings dir rebuilds without re-tokenizing).
-
-    When ``n_partitions`` is not given it SCALES WITH THE CORPUS:
-    ceil(n_docs / docs_per_bucket) buckets (floor: shuffle partitions,
-    cap: MAX_AUTO_PARTITIONS) — bounding the per-task memory of the
-    partition run encoder regardless of corpus size, like the reference's
-    fixed 64000-doc chunks.
-    """
-    if fused is None:
-        fused = True
-    n_docs_known: int | None = None
-    if n_partitions is None:
-        shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        n_docs_known = corpus.select("doc_key").count()  # column-pruned
-        need = -(-n_docs_known // docs_per_bucket) if n_docs_known else 1
-        n_partitions = max(shuffle_p, min(MAX_AUTO_PARTITIONS, need))
-    paths = IndexPaths(out_dir)
-    runner = PipelineRunner(
-        out_dir,
-        params={
-            "run_size": run_size,
-            "n_partitions": n_partitions,
-            "with_positions": with_positions,
-            **({"fused": True} if fused else {}),
-            **(params_fp or {}),
-        },
-    )
-    if fused:
-        return _build_index_fused(
-            spark, corpus, paths, runner, n_partitions, run_size, n_docs_known,
-            with_positions,
-        )
-
-    def build_docmeta() -> DataFrame:
-        # One slim pass for id bookkeeping, ONE heavy pass for everything
-        # else.  Shape of the heavy pass: shuffle raw content once
-        # (bucket-aligned partitions), then a single mapInPandas performs
-        # dense-id assignment AND tokenization AND per-doc tf aggregation —
-        # content crosses the wire exactly once and the token stream is
-        # never materialized (each doc stores distinct terms + tfs).
-        src = with_integrity(corpus)  # schema source for carry types
-        slim = corpus.select("doc_key")
-        cuts = sample_boundaries(slim, "doc_key", n_partitions, n=n_docs_known)
-        offsets = bucket_offsets(slim, "doc_key", cuts)          # slim agg
-        with open(os.path.join(out_dir, "_bucket_cuts.json"), "w") as f:
-            json.dump(cuts, f)
-        n_buckets = len(cuts) + 1
-        # probe modulus MUST equal the repartition partition count, else
-        # buckets scatter (collision skew)
-        xkeys = probe_shuffle_keys(n_buckets, n_buckets)
-        carry = ["doc_key"] + [
-            c for c in ("repo", "path", "commit", "lang") if c in src.columns
-        ] + ["sha256"]
-        tok_fields = (
-            "terms array<string>, positions array<int>"
-            if with_positions
-            else "terms array<string>, tfs array<long>"
-        )
-        carry_types = {f.name: f.dataType.simpleString() for f in src.schema.fields}
-        schema = (
-            "did long, "
-            + ", ".join(f"{c} {carry_types[c]}" for c in carry)
-            + f", {tok_fields}, doc_len int, doc_len_alnum int"
-        )
-        heavy = (
-            with_bucket_and_xb(corpus, "doc_key", cuts, xkeys)
-            .repartition(n_buckets, "_xb")
-            .sortWithinPartitions("_bucket", "doc_key")
-        )
-        # kill-set translate in Tungsten AFTER the exchange; the Arrow
-        # kernel splits C++-side.  Both the shuffle AND the JVM->Python
-        # Arrow stream carry one cleaned UTF8String per doc — the split
-        # token array's per-token offsets would add ~35% to the stream
-        # (measured; see jvm_clean_text_expr) and ~2x to the shuffle.
-        # sha256 likewise computes post-exchange (pure function of
-        # content; the 64-char hex never crosses the wire).
-        from simplir_spark.functions.tokenize import jvm_clean_text_expr
-
-        heavy = (
-            with_integrity(heavy)
-            .withColumn("_clean", jvm_clean_text_expr("content"))
-            .drop("content")
-        )
-        return heavy.mapInArrow(
-            make_tokenize_assign_kernel_arrow(offsets, carry, with_positions), schema
-        )
-
-    # The tokenized checkpoint IS the docmeta table: parquet column pruning
-    # means docmeta readers never touch the heavy `terms`/`tfs` columns, so
-    # a separate docmeta write would only duplicate I/O (open_index projects
-    # the docmeta columns).  Bucket-aligned partitions are did-contiguous,
-    # so parquet min/max stats on did give range pruning for free.
-    os.makedirs(out_dir, exist_ok=True)
-    r_tok = runner.run_df_stage("tokenized", build_docmeta, sort_within_partitions=["did"])
-
-    tokenized = spark.read.parquet(r_tok.output)
-
-    def sample_term_did() -> list[tuple]:
-        # boundary sample for the final term-range layout: explode a small
-        # doc sample (page-cached, column-pruned) — no full-plan resample
-        n_docs = r_tok.rows or tokenized.count()
-        if n_docs == 0:
-            return []
-        # ~25 sampled docs (≈1k (term,did) pairs) per cut is ample for
-        # load balancing; this collect is SERIAL driver time inside the
-        # postings stage, so oversampling directly erodes scaling
-        frac = min(1.0, max(1000, n_partitions * 25) / n_docs)
-        return [
-            (r["term"], int(r["did"]))
-            for r in tokenized.sample(False, frac, seed=42)
-            .select("did", F.explode("terms").alias("term"))
-            .collect()
-        ]
-
-    def build_runs() -> DataFrame:
-        # encode runs INSIDE each did-contiguous tokenized partition
-        # (collectIndex per chunk, Build.hs:117-135), then shuffle only
-        # the small encoded runs into term-range buckets — the exploded
-        # posting rows never cross the wire (positional payloads ride
-        # inside the run blobs, so this holds for both layouts).
-        # Boundary cuts come from the doc sample; a run whose did range
-        # spans a cut is placed by its start_did (bucketing is monotone
-        # in the final (term, start_did) sort key, so global order is
-        # preserved).
-        payload = "positions" if with_positions else "tfs"
-        runs = tokenized.select("did", "doc_len", "terms", payload).mapInArrow(
-            make_partition_run_encoder_arrow(run_size, with_positions),
-            POSTINGS_SCHEMA,
-        )
-        cuts = term_did_cuts(sample_term_did(), n_partitions)
-        if not cuts:
-            return runs.coalesce(1)
-        n_buckets = len(cuts) + 1
-        xkeys = probe_shuffle_keys(n_buckets, n_buckets)
-        return (
-            with_term_did_bucket_and_xb(runs, cuts, xkeys, did_col="start_did")
-            .repartition(n_buckets, "_xb")
-            .drop("_b", "_xb")
-        )
-
-    # One tokenized bucket file == one encode task.  Small-file packing
-    # (openCostInBytes default 4 MB) would merge several dictionary-
-    # compressed bucket files into one task, breaking the 64k-docs-per-
-    # task memory contract of the partition run encoder and starving the
-    # stage of parallelism (a bucket file's in-memory token arrays are
-    # orders of magnitude larger than its on-disk footprint).  Raising the
-    # open cost to the bin size makes packing a no-op; splitting of
-    # genuinely large files is unaffected.
-    _OPEN_COST = "spark.sql.files.openCostInBytes"
-    _prev_open_cost = spark.conf.get(_OPEN_COST)
-    spark.conf.set(_OPEN_COST, str(128 * 1024 * 1024))
-    try:
-        r_post = runner.run_df_stage(
-            "postings",
-            build_runs,
-            upstream=["tokenized"],
-            sort_within_partitions=["term", "start_did"],
-        )
-    finally:
-        spark.conf.set(_OPEN_COST, _prev_open_cost)
-
-    runner.run_df_stage(
-        "term_stats",
-        lambda: spark.read.parquet(r_post.output)
-        .groupBy("term")
-        .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("cf")),
-        upstream=["postings"],
-    )
-
-    runner.run_json_stage(
-        "corpus_stats",
-        lambda: corpus_stats_agg(tokenized).collect()[0].asDict(),
-        upstream=["tokenized"],
-    )
-    return paths
-
-
 @dataclass
 class IndexHandle:
     paths: IndexPaths
@@ -1707,13 +1217,9 @@ def open_index(spark: SparkSession, root: str) -> IndexHandle:
     paths = IndexPaths(root)
     with open(paths.corpus_stats) as f:
         cs = json.load(f)
-    docmeta = spark.read.parquet(paths.docmeta)
-    for heavy in ("terms", "positions", "tfs"):
-        if heavy in docmeta.columns:
-            docmeta = docmeta.drop(heavy)  # column-pruned at scan time
     return IndexHandle(
         paths=paths,
-        docmeta=docmeta,
+        docmeta=spark.read.parquet(paths.docmeta),
         postings=spark.read.parquet(paths.postings),
         term_stats=spark.read.parquet(paths.term_stats),
         doc_count=int(cs["doc_count"]),

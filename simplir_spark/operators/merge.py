@@ -82,8 +82,7 @@ def _merge_group(spark: SparkSession, sources: list[str], out_dir: str) -> Index
     for h, off in zip(handles, offsets):
         part = h.docmeta.withColumn("did", F.col("did") + F.lit(off))
         docmeta = part if docmeta is None else docmeta.unionByName(part)
-    # explicit dir (fresh builds serve docmeta from the tokenized checkpoint)
-    docmeta.write.mode("overwrite").parquet(os.path.join(out_dir, "docmeta"))
+    docmeta.write.mode("overwrite").parquet(paths.docmeta)
 
     postings = None
     for h, off in zip(handles, offsets):
@@ -237,7 +236,7 @@ def compact_index(
     compact_postings(sorted_postings, run_size=run_size, min_run=min_run).write.mode(
         "overwrite"
     ).option("maxRecordsPerFile", 0).parquet(paths.postings)
-    h.docmeta.write.mode("overwrite").parquet(os.path.join(dst_dir, "docmeta"))
+    h.docmeta.write.mode("overwrite").parquet(paths.docmeta)
     h.term_stats.write.mode("overwrite").parquet(paths.term_stats)
     shutil.copyfile(h.paths.corpus_stats, paths.corpus_stats)
     return paths

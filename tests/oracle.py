@@ -18,7 +18,7 @@ import math
 from collections import Counter
 from dataclasses import dataclass, field
 
-from simplir_spark.functions.tokenize import tokenize_text
+from simplir_spark.functions.tokenize import _KILL_TABLE, normalize_token, tokenize_text
 
 # BASELINE.json-mandated engine defaults (the reference's own sensibleParams
 # is k1=1.2, b=0.75 — BM25.hs:20-21; params are explicit everywhere).
@@ -62,6 +62,18 @@ def build_oracle_index(docs: list[tuple[str, str]]) -> OracleIndex:
             idx.cf[t] += n
         idx.token_count += len(terms)
     return idx
+
+
+def oracle_positions(text: str) -> list[tuple[str, int]]:
+    """(normalized term, raw token index) for surviving tokens
+    (accumPositions, Tokenise.hs:101-105)."""
+    raw = text.translate(_KILL_TABLE).split()
+    out = []
+    for i, tok in enumerate(raw):
+        n = normalize_token(tok)
+        if n:
+            out.append((n, i))
+    return out
 
 
 def bm25_idf(doc_count: int, df: int) -> float:

@@ -130,3 +130,8 @@ def test_local_rows_df_roundtrip(spark):
     ]
     empty = local_rows_df(spark, [], "a string, b int")
     assert empty.count() == 0 and empty.columns == ["a", "b"]
+    # a row longer or shorter than the schema falls back to
+    # createDataFrame and gets its length error, not an IndexError
+    for bad in ([("a", 1, 2)], [("a", 1), ("b",)]):
+        with pytest.raises(ValueError, match="LENGTH_MISMATCH"):
+            local_rows_df(spark, bad, "a string, b int")

@@ -103,13 +103,25 @@ def test_term_stats_match_oracle(spark, index_dir, oracle_idx):
     assert idx.token_count == oracle_idx.token_count
 
 
-def test_bm25_indexed_rank_identical(spark, index_dir, oracle_idx):
-    idx = open_index(spark, index_dir)
-    got = bm25_indexed(spark, idx, QUERIES, k=K).collect()
+_STAGE_MANIFESTS = {
+    "chunks.json", "docmeta.json", "postings.json", "term_stats.json", "corpus_stats.json",
+}
+
+
+def _manifest_mtimes(root) -> dict[str, float]:
+    import os
+
+    lineage = os.path.join(root, "_lineage")
+    return {n: os.path.getmtime(os.path.join(lineage, n)) for n in os.listdir(lineage)}
+
+
+def _assert_bm25_rank_identical(spark, root, oracle_idx, queries=QUERIES):
+    idx = open_index(spark, root)
+    got = bm25_indexed(spark, idx, queries, k=K).collect()
     by_q: dict[str, list] = {}
     for r in got:
         by_q.setdefault(r.query_id, []).append(r)
-    for qid, terms in QUERIES:
+    for qid, terms in queries:
         want = bm25_topk(oracle_idx, terms, K)
         have = sorted(by_q.get(qid, []), key=lambda r: r.rank)
         assert len(have) == len(want), qid
@@ -118,26 +130,24 @@ def test_bm25_indexed_rank_identical(spark, index_dir, oracle_idx):
             assert abs(r.score - score) <= REL_TOL * max(1.0, abs(score))
 
 
-def test_resume_skips_all_stages(spark, corpus_small, tmp_path_factory):
-    from simplir_spark.plans.pipeline import PipelineRunner  # noqa: F401
+def test_bm25_indexed_rank_identical(spark, index_dir, oracle_idx):
+    _assert_bm25_rank_identical(spark, index_dir, oracle_idx)
 
-    # two-stage layout pinned: this test covers ITS lineage contract;
-    # the fused layout's resume skip is covered by the fused-build test
-    import io, json, os
+
+def test_resume_skips_all_stages(spark, corpus_small, tmp_path_factory):
+    """A second build over the same inputs skips every stage: the five
+    lineage manifests exist and none of them is rewritten."""
+    import json, os
+
     d = str(tmp_path_factory.mktemp("resume_all") / "idx")
-    build_index(spark, corpus_small, d, n_partitions=8, run_size=64, fused=False)
-    # second build over the same inputs: every stage must be skipped
-    paths = build_index(spark, corpus_small, d, n_partitions=8, run_size=64, fused=False)
-    lineage = os.path.join(d, "_lineage")
-    assert {f for f in os.listdir(lineage)} == {
-        "tokenized.json", "postings.json", "term_stats.json", "corpus_stats.json",
-    }
-    # stage runner reported skips (wall 0) — verify via fresh runner behavior:
-    # the manifests exist and build_index returned instantly reusing them.
-    for f in os.listdir(lineage):
-        with open(os.path.join(lineage, f)) as fh:
-            m = json.load(fh)
-        assert "fingerprint" in m
+    build_index(spark, corpus_small, d, n_partitions=8, run_size=64)
+    before = _manifest_mtimes(d)
+    assert set(before) == _STAGE_MANIFESTS
+    build_index(spark, corpus_small, d, n_partitions=8, run_size=64)
+    assert _manifest_mtimes(d) == before
+    for f in before:
+        with open(os.path.join(d, "_lineage", f)) as fh:
+            assert "fingerprint" in json.load(fh)
 
 
 def test_merge_equals_full_build(spark, corpus_small, index_dir, oracle_idx, tmp_path_factory):
@@ -235,30 +245,24 @@ def test_murmur3_matches_spark_hash(spark):
     assert [placed[k] for k in keys] == list(range(8))
 
 
-def test_partial_resume_rebuilds_only_downstream(spark, corpus_small, tmp_path_factory):
-    """Kill/resume: wipe one stage's output, re-run the build — upstream
-    stages are skipped (same fingerprints), the wiped stage and its
-    dependents are rebuilt, and the index still answers correctly."""
-    import json, os, shutil
+def test_partial_resume_rebuilds_only_downstream(spark, corpus_small, oracle_idx, tmp_path_factory):
+    """Kill/resume: wipe the postings stage's output and re-run the build —
+    the chunks and docmeta stages are skipped (same fingerprints, nothing
+    re-tokenized), postings is rebuilt from the chunks checkpoint, and the
+    index still answers rank-identically to the oracle."""
+    import os, shutil
 
     out = str(tmp_path_factory.mktemp("resume") / "idx")
-    build_index(spark, corpus_small, out, n_partitions=4, run_size=64, fused=False)
-
-    def mtimes():
-        return {
-            n: os.path.getmtime(os.path.join(out, "_lineage", n))
-            for n in os.listdir(os.path.join(out, "_lineage"))
-        }
-
-    before = mtimes()
+    build_index(spark, corpus_small, out, n_partitions=4, run_size=64)
+    before = _manifest_mtimes(out)
     shutil.rmtree(os.path.join(out, "postings"))
-    build_index(spark, corpus_small, out, n_partitions=4, run_size=64, fused=False)
-    after = mtimes()
-    assert after["tokenized.json"] == before["tokenized.json"]  # skipped
-    assert after["postings.json"] > before["postings.json"]     # rebuilt
-    idx = open_index(spark, out)
-    got = bm25_indexed(spark, idx, QUERIES[:3], k=K)
-    assert got.count() > 0
+    build_index(spark, corpus_small, out, n_partitions=4, run_size=64)
+    after = _manifest_mtimes(out)
+    assert after["chunks.json"] == before["chunks.json"]    # skipped
+    assert after["docmeta.json"] == before["docmeta.json"]  # skipped
+    assert after["postings.json"] > before["postings.json"]  # rebuilt
+    _assert_bm25_rank_identical(spark, out, oracle_idx)
+
 
 
 def test_postings_scan_prunes_on_term(spark, index_dir):
@@ -373,159 +377,75 @@ def test_compact_runs_are_full_size(spark, corpus_small, index_dir, tmp_path_fac
     assert all(r["n_short"] <= 1 for r in rows)
 
 
-def test_arrow_encoder_matches_pandas_encoder(spark):
-    """The mapInArrow partition run encoder is a pure performance rewrite
-    of the mapInPandas one — same partition input must yield the SAME runs
-    (terms, boundaries, stats, and byte-identical blobs)."""
-    import random
+# Edge-case content for the production tokenize path (Tungsten kill-set
+# translate + Arrow utf8_split_whitespace inside the chunk kernel).
+EDGE_DOCS = [
+    ("e00", "Hello, World! hello"),
+    ("e01", ""),
+    ("e02", "   \t\n  "),
+    ("e03", "a b c a b a"),
+    ("e04", "nul\x00inside token\x00s here"),
+    ("e05", "çağrı ÇAĞRI straße STRASSE"),
+    ("e06", "!!! ??? ..."),
+    ("e07", "x" * 50 + " y z"),
+    ("e08", "  leading space Word word"),
+    ("e09", "tail space  "),
+    ("e10", "123 456 foo2 bar"),  # digit tokens normalize to ''
+    ("e11", "!!! stop ??? go ..."),
+    ("e12", "x\x1cy\x1dz\x1ea\x1fb word"),
+    ("e13", "word\x1c\x1dword foo\x1f"),
+]
 
-    from simplir_spark.operators.index_build import (
-        make_partition_run_encoder,
-        make_partition_run_encoder_arrow,
-    )
-    from simplir_spark.schema import POSTINGS_SCHEMA
 
-    rng = random.Random(42)
-    vocab = [f"t{i:03d}" for i in range(40)]
-    rows = []
-    for did in range(300):
-        n_terms = rng.randint(1, 12)
-        terms = sorted(rng.sample(vocab, n_terms))
-        tfs = [rng.randint(1, 5) for _ in terms]
-        rows.append((did, sum(tfs), terms, [int(x) for x in tfs]))
-    tok = spark.createDataFrame(
-        rows, "did long, doc_len int, terms array<string>, tfs array<long>"
-    ).repartitionByRange(3, "did").sortWithinPartitions("did")
-    run_size = 7  # tiny so multi-run terms appear
+@pytest.mark.parametrize("with_positions", [False, True])
+def test_edge_case_build_matches_oracle(spark, tmp_path_factory, with_positions):
+    """build_index on edge-case content (empty and whitespace-only docs,
+    NULs inside tokens, non-ASCII case folding, punctuation-only docs, a
+    50-char token, leading/trailing whitespace, separator controls
+    U+001C..1F) matches the pure-Python oracle: postings with their
+    inline doc lengths (and positions), docmeta lengths, term and corpus
+    statistics."""
+    from tests.oracle import oracle_positions
 
-    cols = ["term", "start_did", "n", "max_tf", "sum_tf", "deltas", "tfs", "dls"]
+    docs = spark.createDataFrame(EDGE_DOCS, "doc_key string, content string")
+    out = str(tmp_path_factory.mktemp("edge") / "idx")
+    build_index(spark, docs, out, n_partitions=3, run_size=2, with_positions=with_positions)
+    idx = open_index(spark, out)
+    oracle = build_oracle_index(EDGE_DOCS)
+    texts = dict(EDGE_DOCS)
 
-    def canon(recs):
-        return sorted(
-            (r["term"], r["start_did"], r["n"], r["max_tf"], r["sum_tf"],
-             bytes(r["deltas"]), bytes(r["tfs"]), bytes(r["dls"]))
-            for r in recs
+    meta = sorted((r.did, r.doc_key, r.doc_len, r.doc_len_alnum) for r in idx.docmeta.collect())
+    assert meta == [
+        (did, key, oracle.doc_lens[did], oracle.doc_lens_alnum[did])
+        for did, key in enumerate(oracle.doc_keys)
+    ]
+    assert (idx.doc_count, idx.token_count) == (oracle.doc_count, oracle.token_count)
+    assert {(r.term, r.df, r.cf) for r in idx.term_stats.collect()} == {
+        (t, oracle.df[t], oracle.cf[t]) for t in oracle.df
+    }
+
+    got: dict[tuple[str, int], tuple] = {}
+    for r in idx.postings.collect():
+        assert r.n <= 2
+        dids, tfs, dls = codec.decode_run(
+            r.start_did, r.n, bytes(r.deltas), bytes(r.tfs), bytes(r.dls)
         )
-
-    a = canon(
-        tok.mapInArrow(make_partition_run_encoder_arrow(run_size), POSTINGS_SCHEMA)
-        .select(*cols).collect()
-    )
-    p = canon(
-        tok.mapInPandas(make_partition_run_encoder(run_size), POSTINGS_SCHEMA)
-        .select(*cols).collect()
-    )
-    assert len(a) == len(p) > 0
-    assert a == p
-
-
-def test_arrow_tokenize_kernel_matches_pandas(spark):
-    """The mapInArrow tokenize-assign kernel must agree with the pandas
-    kernel row-for-row (dids, terms, tfs, lengths) on edge-case content:
-    empty docs, NUL bytes, unicode, pure-punctuation docs."""
-    from simplir_spark.functions.tokenize import jvm_raw_tokens_expr
-    from simplir_spark.operators.index_build import (
-        make_tokenize_assign_kernel,
-        make_tokenize_assign_kernel_arrow,
-    )
-
-    docs = [
-        ("d00", "Hello, World! hello"),
-        ("d01", ""),
-        ("d02", "   \t\n  "),
-        ("d03", "a b c a b a"),
-        ("d04", "nul\x00inside token\x00s here"),
-        ("d05", "çağrı ÇAĞRI straße STRASSE"),
-        ("d06", "!!! ??? ..."),
-        ("d07", "x" * 50 + " y z"),
-    ]
-    df = spark.createDataFrame(docs, "doc_key string, content string").withColumn(
-        "_bucket", (F.col("doc_key").substr(2, 2).cast("int") / 4).cast("int")
-    ).withColumn("sha256", F.sha2("content", 256))
-    offsets = {0: 0, 1: 100}
-    heavy = (
-        df.repartition(1)
-        .sortWithinPartitions("_bucket", "doc_key")
-        .withColumn("_raw", jvm_raw_tokens_expr("content"))
-        .drop("content")
-    )
-    schema = (
-        "did long, doc_key string, sha256 string, terms array<string>, "
-        "tfs array<long>, doc_len int, doc_len_alnum int"
-    )
-    carry = ["doc_key", "sha256"]
-    a = {
-        r["doc_key"]: r
-        for r in heavy.mapInArrow(
-            make_tokenize_assign_kernel_arrow(offsets, carry), schema
-        ).collect()
-    }
-    p = {
-        r["doc_key"]: r
-        for r in heavy.mapInPandas(
-            make_tokenize_assign_kernel(offsets, carry, False), schema
-        ).collect()
-    }
-    assert set(a) == set(p) == {k for k, _ in docs}
-    for k in a:
-        ra, rp = a[k], p[k]
-        assert (ra["did"], ra["terms"], ra["tfs"], ra["doc_len"],
-                ra["doc_len_alnum"], ra["sha256"]) == (
-            rp["did"], rp["terms"], rp["tfs"], rp["doc_len"],
-            rp["doc_len_alnum"], rp["sha256"]), k
-
-
-def test_arrow_tokenize_kernel_positions_matches_pandas(spark):
-    """Positional layout parity: the Arrow kernel's (terms, positions)
-    occurrence stream must equal the pandas kernel's on edge-case
-    content (leading/trailing whitespace shifts, killed tokens keeping
-    their raw position, NULs, unicode)."""
-    from simplir_spark.functions.tokenize import jvm_raw_tokens_expr
-    from simplir_spark.operators.index_build import (
-        make_tokenize_assign_kernel,
-        make_tokenize_assign_kernel_arrow,
-    )
-
-    docs = [
-        ("d00", "  leading space Word word"),
-        ("d01", ""),
-        ("d02", "123 456 foo2 bar"),  # digit tokens normalize to ''
-        ("d03", "a b c a b a"),
-        ("d04", "nul\x00inside token here"),
-        ("d05", "çağrı ÇAĞRI straße"),
-        ("d06", "!!! stop ??? go ..."),
-        ("d07", "tail space  "),
-    ]
-    df = spark.createDataFrame(docs, "doc_key string, content string").withColumn(
-        "_bucket", F.lit(0)
-    ).withColumn("sha256", F.sha2("content", 256))
-    offsets = {0: 0}
-    base = df.repartition(1).sortWithinPartitions("_bucket", "doc_key")
-    schema = (
-        "did long, doc_key string, sha256 string, terms array<string>, "
-        "positions array<int>, doc_len int, doc_len_alnum int"
-    )
-    carry = ["doc_key", "sha256"]
-    heavy_arrow = base.withColumn("_raw", jvm_raw_tokens_expr("content")).drop("content")
-    a = {
-        r["doc_key"]: r
-        for r in heavy_arrow.mapInArrow(
-            make_tokenize_assign_kernel_arrow(offsets, carry, True), schema
-        ).collect()
-    }
-    p = {
-        r["doc_key"]: r
-        for r in base.mapInPandas(
-            make_tokenize_assign_kernel(offsets, carry, True), schema
-        ).collect()
-    }
-    assert set(a) == set(p) == {k for k, _ in docs}
-    for k in a:
-        ra, rp = a[k], p[k]
-        assert (ra["did"], ra["terms"], ra["positions"], ra["doc_len"],
-                ra["doc_len_alnum"]) == (
-            rp["did"], rp["terms"], rp["positions"], rp["doc_len"],
-            rp["doc_len_alnum"]), k
+        plists = (
+            codec.decode_positions(bytes(r.pos), tfs) if with_positions else [None] * r.n
+        )
+        assert (r.pos is not None) == with_positions
+        for did, tf, dl, p in zip(dids.tolist(), tfs.tolist(), dls.tolist(), plists):
+            assert (r.term, did) not in got
+            got[(r.term, did)] = (tf, dl, None if p is None else [int(x) for x in p])
+    want: dict[tuple[str, int], tuple] = {}
+    for did, key in enumerate(oracle.doc_keys):
+        pos: dict[str, list[int]] = {}
+        for t, i in oracle_positions(texts[key]):
+            pos.setdefault(t, []).append(i)
+        assert {t: len(p) for t, p in pos.items()} == oracle.tfs[did]
+        for t, tf in oracle.tfs[did].items():
+            want[(t, did)] = (tf, oracle.doc_lens[did], pos[t] if with_positions else None)
+    assert got == want
 
 
 def test_bm25_indexed_plan_broadcasts_and_prunes(spark, index_dir):
@@ -547,47 +467,13 @@ def test_bm25_indexed_plan_broadcasts_and_prunes(spark, index_dir):
     assert "IN (" in plan or "In(term" in plan, plan  # term pruning reached the scan
 
 
-def test_fused_build_matches_two_stage(spark, corpus_small, index_dir, oracle_idx, tmp_path_factory):
-    """The fused (single-heavy-pass) build must be value-identical to the
-    two-stage build: same docmeta, term stats, postings, and
-    rank-identical BM25 — only the stage graph (and the absence of the
-    terms/tfs intermediate) differs."""
-    d = str(tmp_path_factory.mktemp("fused") / "idx")
-    build_index(spark, corpus_small, d, n_partitions=8, run_size=64, fused=True)
-    fi = open_index(spark, d)
-    ti = open_index(spark, index_dir)
-    assert fi.doc_count == ti.doc_count and fi.token_count == ti.token_count
-    assert {(r.term, r.df, r.cf) for r in fi.term_stats.collect()} == {
-        (r.term, r.df, r.cf) for r in ti.term_stats.collect()
-    }
-    assert _postings_map(spark, d) == _postings_map(spark, index_dir)
-    a = {(r.did, r.doc_key, r.doc_len, r.doc_len_alnum) for r in fi.docmeta.collect()}
-    b = {(r.did, r.doc_key, r.doc_len, r.doc_len_alnum) for r in ti.docmeta.collect()}
-    assert a == b
-    got = bm25_indexed(spark, fi, QUERIES, k=K).collect()
-    by_q: dict[str, list] = {}
-    for r in got:
-        by_q.setdefault(r.query_id, []).append(r)
-    for qid, terms in QUERIES:
-        want = bm25_topk(oracle_idx, terms, K)
-        have = sorted(by_q.get(qid, []), key=lambda r: r.rank)
-        assert [(r.rank, r.doc_key) for r in have] == [(rk, ky) for rk, ky, _ in want], qid
-    # resume: second run skips every stage
-    import glob as _glob, json as _json, os as _os
-    build_index(spark, corpus_small, d, n_partitions=8, run_size=64, fused=True)
-    names = {_os.path.basename(f) for f in _glob.glob(_os.path.join(d, "_lineage", "*.json"))}
-    assert names == {"chunks.json", "docmeta.json", "postings.json",
-                     "term_stats.json", "corpus_stats.json"}
-
-
 def test_bucket_expr_forms_agree(spark):
-    """The sqrt-decomposed two-level bucket assignment (the default) and
-    the nested-CASE binary-search form must agree with the O(n_cuts)
-    linear-scan reference on every key, including keys equal to a cut
+    """The sqrt-decomposed two-level bucket assignment (the default) must
+    agree with the O(n_cuts) linear-scan reference on every key,
+    including keys equal to a cut
     (boundary inclusivity), keys outside the cut range, and cut counts
     straddling the sqrt-path threshold."""
     from simplir_spark.operators.index_build import (
-        _bucket_expr_case,
         _bucket_expr_linear,
         _term_did_bucket_expr_linear,
         bucket_expr,
@@ -601,11 +487,10 @@ def test_bucket_expr_forms_agree(spark):
         df = spark.createDataFrame([(k,) for k in keys] + [("", ), ("zzzz",)], "doc_key string")
         got = df.select(
             bucket_expr("doc_key", cuts).alias("bs"),
-            _bucket_expr_case("doc_key", cuts).alias("cs"),
             _bucket_expr_linear("doc_key", cuts).alias("lin"),
         ).collect()
         for r in got:
-            assert r["bs"] == r["lin"] == r["cs"], (n_cuts, r)
+            assert r["bs"] == r["lin"], (n_cuts, r)
 
     # (term, did) lexicographic variant, boundary did inclusive — one
     # small-cut case and one crossing the sqrt threshold

@@ -8,24 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from simplir_spark.functions import codec
-from simplir_spark.functions.tokenize import (
-    _KILL_TABLE,
-    normalize_token,
-    tokenize_pos_batch,
-)
+from simplir_spark.functions.tokenize import tokenize_pos_batch
+from tests.oracle import oracle_positions
 
 SF = "/root/testdata/sf0.001"
-
-
-def oracle_positions(text: str) -> list[tuple[str, int]]:
-    """(normalized term, raw token index) for surviving tokens."""
-    raw = text.translate(_KILL_TABLE).split()
-    out = []
-    for i, tok in enumerate(raw):
-        n = normalize_token(tok)
-        if n:
-            out.append((n, i))
-    return out
 
 
 def test_tokenize_pos_batch_matches_oracle():
@@ -96,41 +82,3 @@ def test_non_positional_index_has_null_pos(spark, tmp_path_factory):
     idx = open_index(spark, out)
     assert all(r.pos is None for r in idx.postings.collect())
 
-
-def test_fused_positional_matches_two_stage(spark, tmp_path_factory):
-    """The fused single-pass positional build must be value-identical to
-    the two-stage positional layout: same docmeta, same postings
-    including the per-posting position lists."""
-    from simplir_spark.operators.index_build import build_index, open_index
-
-    docs = (
-        spark.read.parquet(f"{SF}/documents.parquet")
-        .filter(F.col("doc_id") < 120)
-        .select(F.col("doc_id").alias("doc_key"), F.col("text").alias("content"))
-    )
-    base = tmp_path_factory.mktemp("fusedpos")
-    da, db = str(base / "fused"), str(base / "twostage")
-    build_index(spark, docs, da, n_partitions=4, run_size=64, with_positions=True)
-    build_index(spark, docs, db, n_partitions=4, run_size=64, with_positions=True, fused=False)
-
-    def decoded(root):
-        idx = open_index(spark, root)
-        out = {}
-        for r in idx.postings.collect():
-            dids, tfs, dls = codec.decode_run(
-                r.start_did, r.n, bytes(r.deltas), bytes(r.tfs), bytes(r.dls)
-            )
-            plists = codec.decode_positions(bytes(r.pos), tfs)
-            for did, tf, dl, p in zip(dids.tolist(), tfs.tolist(), dls.tolist(), plists):
-                out[(r.term, did)] = (tf, dl, [int(x) for x in p])
-        meta = {
-            (r.did, r.doc_key, r.doc_len, r.doc_len_alnum)
-            for r in idx.docmeta.collect()
-        }
-        return out, meta, idx.doc_count, idx.token_count
-
-    pa_, ma, ca, ta = decoded(da)
-    pb, mb, cb, tb = decoded(db)
-    assert (ca, ta) == (cb, tb)
-    assert ma == mb
-    assert pa_ == pb

@@ -129,28 +129,38 @@ def test_spark_udf_matches_pure(spark, corpus_small):
         assert r.doc_len_alnum == dl
 
 
-def test_jvm_raw_tokens_matches_python_split(spark):
-    """jvm_raw_tokens_expr (translate + (?U)\\s split in Tungsten) must
-    reproduce Python's text.translate(KILL).split() exactly after ''
-    removal — including separator controls U+001C..1F, which Python
-    isspace() includes but Java (?U)\\s does not."""
-    from simplir_spark.functions.tokenize import _KILL_TABLE, jvm_raw_tokens_expr
+def test_jvm_clean_text_split_matches_python_split(spark):
+    """jvm_clean_text_expr (kill-set translate in Tungsten) followed by
+    Arrow's utf8_split_whitespace — the index build's tokenize path —
+    must reproduce Python's text.translate(KILL).split() exactly after
+    '' removal, including separator controls U+001C..1F, which Python
+    isspace() includes but Unicode White_Space does not."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from simplir_spark.functions.tokenize import _KILL_TABLE, jvm_clean_text_expr
 
     texts = [
         "Hello, world! foo2 bar",
         "",
         "x\x1cy\x1dz\x1ea\x1fb",
         "tab\tand\nnewline\r mix",
-        "unicode space wide",
+        "unicode\u00a0space\u2003wide",
         "emoji 🎉 stays; punct!kill",
         "  leading and trailing  ",
         "a.b'c keeps dots'n'quotes",
+        "nul\x00inside token\x00s",
+        "   \t\n  ",
     ]
-    df = spark.createDataFrame([(t,) for t in texts], "content string")
-    got = [
-        [x for x in r.raw if x != ""]
-        for r in df.select(jvm_raw_tokens_expr("content").alias("raw")).collect()
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, content string")
+    cleaned = [
+        r.clean
+        for r in df.select("i", jvm_clean_text_expr("content").alias("clean"))
+        .orderBy("i")
+        .collect()
     ]
+    split = pc.utf8_split_whitespace(pa.array(cleaned, pa.string())).to_pylist()
+    got = [[x for x in toks if x != ""] for toks in split]
     want = [t.translate(_KILL_TABLE).split() for t in texts]
     assert got == want
 
