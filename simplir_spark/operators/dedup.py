@@ -51,6 +51,11 @@ def ngram_shingles(tokenized: DataFrame, n: int = 3, id_col: str = "doc_id") -> 
 
     Built from the normalized `terms` array entirely JVM-side
     (transform+sequence), no Python.
+
+    ``id_col`` must be unique per row of ``tokenized``: shingles are
+    deduplicated within each row's array, not across rows, so two rows
+    sharing an id emit duplicate (id, shingle) rows, which inflate the
+    overlap counts of every Jaccard / MinHash consumer.
     """
     # N.B. sequence(0, x) DESCENDS when x < 0 — guard short docs explicitly.
     # Dedup happens INSIDE the per-doc array (array_distinct) before the

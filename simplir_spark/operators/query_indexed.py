@@ -5,8 +5,16 @@ Plan shape:
   postings table — parquet scan with ``term IN (query terms)`` pushed down
   (the Spark analog of the reference's term->offset index lookup,
   TermIndex.hs:26-34) → broadcast join with the (query_id, term) table →
-  ``groupBy(query_id).applyInPandas`` numpy scorer → top-k → broadcast
-  join against docmeta for doc_key resolution.
+  ONE ``repartition(n, group keys)`` exchange, n = min(defaultParallelism,
+  groups) → one ``mapInArrow`` kernel per partition running the numpy
+  scorer on each of its (query, did-shard) groups (``_score_groups``) →
+  per-shard top-k candidates.  The finish (``_finish_topk``) then either
+  collects the candidates (at most queries x shards x k rows) with one
+  ``toArrow``, ranks them on the driver and resolves doc_keys with one
+  ``did IN (...)`` docmeta collect — the result is materialized, a local
+  DataFrame — when queries x k <= ``_RESOLVE_ISIN_MAX``; or, above that
+  cap, ranks with a window and joins docmeta lazily on the cluster.
+  No intermediate is cached.
 
 The scorer is document-at-a-time over decoded runs (collectPostings'
 k-way union, Posting2/Collect.hs:53-82, vectorized) with an exact
@@ -28,10 +36,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from simplir_spark.cacheutil import CacheRegistry
 from simplir_spark.functions import codec
 from simplir_spark.functions.scoring import B_DEFAULT, K1_DEFAULT
 from simplir_spark.operators.index_build import IndexHandle
@@ -413,6 +421,106 @@ def score_query_runs_ql(
     return dids_out[sel], scores[sel]
 
 
+def _score_groups(
+    spark: SparkSession,
+    matched: DataFrame,
+    keys: list[str],
+    n_groups: int,
+    score_group,
+) -> DataFrame:
+    """Run ``score_group(key, pdf)`` once per distinct ``keys`` group of
+    ``matched``; returns the (query_id, did, score) rows it yields.
+
+    ``score_group`` gets the group's key tuple and its rows as a pandas
+    frame, and yields (query_id, dids, scores) triples.  The rows are
+    hash-partitioned by ``keys`` into n = min(defaultParallelism,
+    ``n_groups``) partitions — AQE never coalesces an explicit-count
+    ``repartition``, so a sub-MB scoring shuffle still runs on every core
+    instead of one coalesced task — and one ``mapInArrow`` kernel per
+    partition converts to pandas ONCE and splits it into its groups,
+    instead of one pandas conversion per group.
+    ``n_groups`` may be an upper bound; hashing leaves some partitions
+    empty either way.
+    """
+    n = max(1, min(spark.sparkContext.defaultParallelism, n_groups))
+
+    def kernel(batches):
+        batches = list(batches)
+        if not batches:  # an empty hash partition
+            return
+        pdf = pa.Table.from_batches(batches).to_pandas()
+        qids, dids, scores = [], [], []
+        for key, grp in pdf.groupby(keys, sort=False):
+            for qid, d, s in score_group(key, grp):
+                qids.extend([qid] * len(d))
+                dids.append(d)
+                scores.append(s)
+        if qids:
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(qids, pa.string()),
+                    pa.array(np.concatenate(dids), pa.int64()),
+                    pa.array(np.concatenate(scores), pa.float64()),
+                ],
+                names=["query_id", "did", "score"],
+            )
+
+    return matched.repartition(n, *keys).mapInArrow(
+        kernel, "query_id string, did long, score double"
+    )
+
+
+# serving/bulk cut-over of the finish (``_finish_topk``), in result rows
+# (queries x k): at or under it the candidates are ranked on the driver
+# and the top-k dids become one In-literal docmeta lookup; above it an
+# In-literal's plan cost outweighs its pruning win (measured wall for
+# Catalyst literals in BENCH/bucket_udf_route.json informed the same cap)
+_RESOLVE_ISIN_MAX = 32768
+
+
+def _doc_keys(index: IndexHandle, dids: list[int]) -> DataFrame:
+    """(did, doc_key) of ``dids``; the In-literal keeps parquet min/max
+    row-group pruning on the did-contiguous docmeta partitions."""
+    return index.docmeta.filter(F.col("did").isin(dids)).select("did", "doc_key")
+
+
+def _finish_topk(
+    spark: SparkSession, index: IndexHandle, scored: DataFrame, k: int, n_queries: int
+) -> DataFrame:
+    """Global top-k of each query from its per-shard candidates
+    (``scored``: query_id, did, score), as (query_id, doc_key, rank,
+    score).  Rank orders by score descending, then did ascending — a
+    doc's complete score lives in exactly one shard, so this is exact.
+
+    Serving case, ``n_queries * k <= _RESOLVE_ISIN_MAX``: the candidates
+    (at most queries x shards x k rows) are collected once with
+    ``toArrow``, ranked on the driver, and their doc_keys resolved by one
+    In-literal docmeta collect; the result is a local DataFrame, so the
+    caller's ``collect`` runs no job.  Bulk case, above the cap: a window
+    rank, joined to docmeta lazily — nothing is collected on the driver
+    and the planner picks the join.
+    """
+    if n_queries * k > _RESOLVE_ISIN_MAX:
+        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("did"))
+        topk = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+        return (
+            index.docmeta.select("did", "doc_key")
+            .join(topk, "did")
+            .select("query_id", "doc_key", F.col("rank").cast("int").alias("rank"), "score")
+        )
+    cand = scored.toArrow().to_pandas()
+    cand = cand.sort_values(["query_id", "score", "did"], ascending=[True, False, True])
+    cand["rank"] = cand.groupby("query_id", sort=False).cumcount() + 1
+    top = cand[cand["rank"] <= k]
+    key_type = index.docmeta.schema["doc_key"].dataType.simpleString()
+    schema = f"query_id string, doc_key {key_type}, rank int, score double"
+    if len(top) == 0:
+        return spark.createDataFrame([], schema)
+    keys = _doc_keys(index, np.unique(top["did"].to_numpy()).tolist()).toArrow().to_pandas()
+    out = top.merge(keys, on="did")[["query_id", "doc_key", "rank", "score"]]
+    return spark.createDataFrame(pa.Table.from_pandas(out, preserve_index=False), schema)
+
+
 def ql_dirichlet_indexed(
     spark: SparkSession,
     index: IndexHandle,
@@ -445,6 +553,9 @@ def ql_dirichlet_indexed(
     bounds on the positive corr contributions drive the same DAAT
     threshold pruning as BM25 — disabled automatically for queries with
     cf=0 terms, where -inf finals break the partial-score lower bound.
+
+    Scoring and the finish are ``bm25_indexed``'s: the result is
+    materialized when queries x k <= ``_RESOLVE_ISIN_MAX``.
     """
     queries = merge_query_entries(queries)
     if grouping not in ("query_shard", "shard"):
@@ -468,6 +579,19 @@ def ql_dirichlet_indexed(
     }
     q_term_lists = {qid: sorted(set(terms)) for qid, terms in queries}
 
+    def ql_weights(qid: str) -> tuple[dict, dict]:
+        terms_q = q_term_lists[qid]
+        term_w = {t: float(qtf[(qid, t)]) for t in terms_q}
+        term_bg = {
+            t: (cf_by_term.get(t, 0) / token_count if token_count else 0.0)
+            for t in terms_q
+        }
+        return term_w, term_bg
+
+    def shard_bounds(shard: int) -> tuple[int, int]:
+        lo, hi = shard * span, min((shard + 1) * span, max(doc_count, 1))
+        return lo, max(hi, lo + 1)
+
     post = index.postings.filter(F.col("term").isin(q_terms))
     matched = (
         post.join(F.broadcast(qdf), "term")
@@ -487,31 +611,17 @@ def ql_dirichlet_indexed(
     )
 
     def make_score_group(theta0_map: dict):
-        def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            qid = pdf["query_id"].iloc[0]
-            shard = int(pdf["shard"].iloc[0])
-            lo, hi = shard * span, min((shard + 1) * span, max(doc_count, 1))
-            terms_q = q_term_lists[qid]
-            term_w = {t: float(qtf[(qid, t)]) for t in terms_q}
-            term_bg = {
-                t: (cf_by_term.get(t, 0) / token_count if token_count else 0.0)
-                for t in terms_q
-            }
+        def score_group(key, pdf: pd.DataFrame):
+            qid, shard = key
+            term_w, term_bg = ql_weights(qid)
             dids_out, scores = score_query_runs_ql(
-                pdf, term_w, term_bg, mu, k, lo, max(hi, lo + 1),
+                pdf, term_w, term_bg, mu, k, *shard_bounds(int(shard)),
                 theta0=theta0_map.get(qid, -np.inf),
             )
-            if len(dids_out) == 0:
-                return pd.DataFrame({"query_id": [], "did": [], "score": []}).astype(
-                    {"query_id": str, "did": np.int64, "score": np.float64}
-                )
-            return pd.DataFrame({"query_id": qid, "did": dids_out, "score": scores})
+            yield qid, dids_out, scores
 
         return score_group
 
-    from pyspark.sql import Window
-
-    group_schema = "query_id string, did long, score double"
     # Cross-shard theta seeding (same design + auto-gate as bm25_indexed):
     # a seed pass on each query's densest shard yields a global k-th lower
     # bound that deepens every other shard's pruning.  Auto-gated on BOTH
@@ -527,26 +637,9 @@ def ql_dirichlet_indexed(
             grouping == "query_shard" and n_shards >= 8 and doc_count >= _SEED_MIN_DOCS
         )
     if seed_threshold and grouping == "query_shard" and n_shards > 1:
-        mass = matched.groupBy("query_id", "shard").agg(F.sum("n").alias("_mass"))
-        w0 = Window.partitionBy("query_id").orderBy(F.desc("_mass"), F.asc("shard"))
-        seed_sel = (
-            mass.withColumn("_r", F.row_number().over(w0))
-            .filter(F.col("_r") == 1)
-            .select("query_id", "shard")
+        theta0_by_query = _seed_thetas(
+            spark, matched, len(queries), k, make_score_group({})
         )
-        seed_local = (
-            matched.join(F.broadcast(seed_sel), ["query_id", "shard"])
-            .groupBy("query_id", "shard")
-            .applyInPandas(make_score_group({}), group_schema)
-        )
-        for r in (
-            seed_local.filter(~F.isnan("score") & (F.col("score") > float("-inf")))
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("c"), F.min("score").alias("mn"))
-            .collect()
-        ):
-            if int(r["c"]) >= k:
-                theta0_by_query[r["query_id"]] = float(r["mn"])
 
     if grouping == "shard":
         # one group per did-shard, all queries scored against a shared
@@ -566,114 +659,55 @@ def ql_dirichlet_indexed(
             "deltas", "tfs", "dls",
         )
 
-        def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            shard = int(pdf["shard"].iloc[0])
-            lo, hi = shard * span, min((shard + 1) * span, max(doc_count, 1))
+        def score_shard(key, pdf: pd.DataFrame):
+            lo, hi = shard_bounds(int(key[0]))
             cache: dict = {}
             shard_terms = set(pdf["term"])
-            out_qid, out_did, out_score = [], [], []
             for qid in sorted(q_term_lists):
                 terms_q = q_term_lists[qid]
                 if not any(t in shard_terms for t in terms_q):
                     continue
-                sub = pdf[pdf["term"].isin(terms_q)]
-                term_w = {t: float(qtf[(qid, t)]) for t in terms_q}
-                term_bg = {
-                    t: (cf_by_term.get(t, 0) / token_count if token_count else 0.0)
-                    for t in terms_q
-                }
+                term_w, term_bg = ql_weights(qid)
                 dids_out, scores = score_query_runs_ql(
-                    sub, term_w, term_bg, mu, k, lo, max(hi, lo + 1),
+                    pdf[pdf["term"].isin(terms_q)], term_w, term_bg, mu, k, lo, hi,
                     decode_cache=cache,
                 )
-                out_qid.extend([qid] * len(dids_out))
-                out_did.append(dids_out)
-                out_score.append(scores)
-            if not out_qid:
-                return pd.DataFrame({"query_id": [], "did": [], "score": []}).astype(
-                    {"query_id": str, "did": np.int64, "score": np.float64}
-                )
-            return pd.DataFrame(
-                {
-                    "query_id": out_qid,
-                    "did": np.concatenate(out_did),
-                    "score": np.concatenate(out_score),
-                }
-            )
+                yield qid, dids_out, scores
 
-        local_topk = matched_s.groupBy("shard").applyInPandas(
-            score_shard, group_schema
-        )
+        scored = _score_groups(spark, matched_s, ["shard"], n_shards, score_shard)
     else:
-        local_topk = matched.groupBy("query_id", "shard").applyInPandas(
-            make_score_group(theta0_by_query), group_schema
+        scored = _score_groups(
+            spark, matched, ["query_id", "shard"], len(queries) * n_shards,
+            make_score_group(theta0_by_query),
         )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("did"))
-    topk = (
-        local_topk.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "did", F.col("rank").cast("int").alias("rank"), "score")
+    return _finish_topk(spark, index, scored, k, len(queries))
+
+
+def _seed_thetas(
+    spark: SparkSession, matched: DataFrame, n_queries: int, k: int, score_group
+) -> dict[str, float]:
+    """Theta seed pass shared by both models: score each query's densest
+    shard (most matched postings — a metadata-only aggregation picks it,
+    no blob columns execute) and return {query_id: k-th score} for the
+    queries whose seed shard filled a top-k.  -inf and NaN scores never
+    seed."""
+    mass = matched.groupBy("query_id", "shard").agg(F.sum("n").alias("_mass"))
+    w0 = Window.partitionBy("query_id").orderBy(F.desc("_mass"), F.asc("shard"))
+    seed_sel = (
+        mass.withColumn("_r", F.row_number().over(w0))
+        .filter(F.col("_r") == 1)
+        .select("query_id", "shard")
     )
-    return _resolve_doc_keys(spark, index, topk)
-
-
-_live_topk_caches = CacheRegistry(retain=4)
-
-# max dids to embed as an In-literal for docmeta row-group pruning; above
-# this the literal's plan cost outweighs the pruning win (measured wall for
-# Catalyst literals in BENCH/bucket_udf_route.json informed the same cap)
-_RESOLVE_ISIN_MAX = 32768
-
-
-def _resolve_doc_keys(spark: SparkSession, index: IndexHandle, topk: DataFrame) -> DataFrame:
-    """doc_key resolution for a (query_id, did, rank, score) top-k.
-
-    The top-k is persisted (it is queries x k rows) and ONLY the distinct
-    dids are collected — they become an ``isin`` literal so the docmeta
-    scan keeps parquet min/max row-group pruning on the did-contiguous
-    partitions.  The returned plan joins docmeta against the REAL top-k
-    DataFrame (broadcast), so lineage/AQE stay intact — no
-    createDataFrame round-trip of the scores through the driver.
-
-    Cache lifecycle: a lock-guarded bounded registry (``CacheRegistry``)
-    retains the most recent persisted top-ks and evicts older ones, so
-    repeated indexed queries hold a bounded set of tiny cached blocks
-    instead of accumulating for the session's lifetime, and a handful of
-    concurrent queries cannot unpersist each other's in-flight cache.
-    A result re-collected after falling out of the window recomputes —
-    correct, just unpersisted.
-    """
-    topk = topk.persist()
-    _live_topk_caches.register(topk)
-    # ONE bounded job for the common case: collect distinct dids only up
-    # to the In-literal cap (+1 sentinel).  Never collect an unbounded
-    # did list — 10k queries x k=1000 would put 10^7 dids in an
-    # In-literal, and Catalyst chokes well below that (the same
-    # plan-size wall the index build's bucket routing hit at ~32k
-    # literals).  Only the over-cap case pays a second aggregate.
-    sample = topk.select("did").distinct().limit(_RESOLVE_ISIN_MAX + 1).collect()
-    if not sample:
-        key_type = index.docmeta.schema["doc_key"].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"query_id string, doc_key {key_type}, rank int, score double"
-        )
-    meta = index.docmeta.select("did", "doc_key")
-    if len(sample) <= _RESOLVE_ISIN_MAX:
-        meta = meta.filter(F.col("did").isin(sorted(r["did"] for r in sample)))
-        joined = meta.join(F.broadcast(topk), "did")
-    else:
-        # did-range filter keeps parquet min/max row-group pruning on the
-        # did-contiguous partitions
-        bounds = topk.agg(F.min("did").alias("lo"), F.max("did").alias("hi")).first()
-        meta = meta.filter(
-            (F.col("did") >= bounds["lo"]) & (F.col("did") <= bounds["hi"])
-        )
-        # over the isin cap the top-k can be huge (10k queries x k=1000 =
-        # 10^7 rows) — a FORCED broadcast there risks driver/executor OOM
-        # (ADVICE r5): plain equi-join instead and let the planner pick;
-        # the range filter already bounded the docmeta side.
-        joined = meta.join(topk, "did")
-    return joined.select("query_id", "doc_key", "rank", "score")
+    seed = _score_groups(
+        spark, matched.join(F.broadcast(seed_sel), ["query_id", "shard"]),
+        ["query_id", "shard"], n_queries, score_group,
+    ).toArrow().to_pandas()
+    seed = seed[seed["score"] > -np.inf]
+    return {
+        qid: float(s.min())
+        for qid, s in seed.groupby("query_id")["score"]
+        if len(s) >= k
+    }
 
 
 def _bm25_indexed_shard_grouped(
@@ -685,11 +719,14 @@ def _bm25_indexed_shard_grouped(
     k1: float,
     b: float,
     span: int,
+    n_shards: int,
 ) -> DataFrame:
-    """bm25_indexed's ``grouping="shard"`` body: one group per did-shard,
-    every query scored inside it against a shared per-shard decode cache.
-    The matched runs never join the query table, so the shuffle carries
-    each run's blobs exactly once however many queries share its term."""
+    """bm25_indexed's ``grouping="shard"`` scoring: one group per
+    did-shard, every query scored inside it against a shared per-shard
+    decode cache.  The matched runs never join the query table, so the
+    shuffle carries each run's blobs exactly once however many queries
+    share its term.  Returns the per-shard (query_id, did, score)
+    candidates."""
     doc_count, avg_doc_len = index.doc_count, index.avg_doc_len
     q_terms = sorted({t for _, terms in queries for t in terms})
     q_term_lists = {qid: sorted(set(terms)) for qid, terms in queries}
@@ -710,48 +747,22 @@ def _bm25_indexed_shard_grouped(
         )
     )
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
+    def score_group(key, pdf: pd.DataFrame):
+        shard = int(key[0])
         lo, hi = shard * span, (shard + 1) * span
         cache: dict = {}
-        out_qid, out_did, out_score = [], [], []
         shard_terms = set(pdf["term"])
         for qid in sorted(q_term_lists):
             terms_q = [t for t in q_term_lists[qid] if t in shard_terms]
             if not terms_q:
                 continue
-            sub = pdf[pdf["term"].isin(terms_q)]
             dids, scores = score_query_runs(
-                sub, doc_count, avg_doc_len, k, k1, b,
+                pdf[pdf["term"].isin(terms_q)], doc_count, avg_doc_len, k, k1, b,
                 did_lo=lo, did_hi=hi, decode_cache=cache,
             )
-            out_qid.extend([qid] * len(dids))
-            out_did.append(dids)
-            out_score.append(scores)
-        if not out_qid:
-            return pd.DataFrame({"query_id": [], "did": [], "score": []}).astype(
-                {"query_id": str, "did": np.int64, "score": np.float64}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": out_qid,
-                "did": np.concatenate(out_did),
-                "score": np.concatenate(out_score),
-            }
-        )
+            yield qid, dids, scores
 
-    from pyspark.sql import Window
-
-    local_topk = matched.groupBy("shard").applyInPandas(
-        score_group, "query_id string, did long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("did"))
-    topk = (
-        local_topk.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "did", F.col("rank").cast("int").alias("rank"), "score")
-    )
-    return _resolve_doc_keys(spark, index, topk)
+    return _score_groups(spark, matched, ["shard"], n_shards, score_group)
 
 
 def bm25_indexed(
@@ -765,7 +776,7 @@ def bm25_indexed(
     seed_threshold: bool | None = None,
     grouping: str = "query_shard",
 ) -> DataFrame:
-    """All queries against the index in one job.
+    """All queries against the index in one scoring pass.
 
     ``grouping`` picks the scoring-group shape:
       * ``"query_shard"`` (default): one group per (query, did-shard) —
@@ -782,15 +793,24 @@ def bm25_indexed(
     which by construction equals doc_key order (dense ids are assigned in
     doc_key order — index_build).
 
+    When queries x k <= ``_RESOLVE_ISIN_MAX`` (the serving case) the
+    result is MATERIALIZED before return: scoring runs once, the driver
+    holds at most queries x n_shards x k candidate rows while it ranks
+    them, and the returned local DataFrame collects without a Spark job.
+    Above the cap (bulk) the result is a lazy plan that ranks with a
+    window and joins docmeta on the cluster (``_finish_topk``).
+
     Scoring parallelism is (queries × did-range shards), not just queries:
     each run row is routed to every shard its [start_did, end_did] range
     overlaps (``F.sequence`` + explode, ≤2 shards per run in practice), a
     shard scores only dids inside its range — a doc's complete score lives
-    in exactly one shard, so per-shard top-k then a global window rank is
-    exact (the distributed form of collectPostings' doc-at-a-time union,
-    Posting2/Collect.hs:53-82).
+    in exactly one shard, so per-shard top-k then a global rank is exact
+    (the distributed form of collectPostings' doc-at-a-time union,
+    Posting2/Collect.hs:53-82).  The groups are spread over
+    min(defaultParallelism, groups) partitions (``_score_groups``).
 
-    ``seed_threshold`` (None = auto: on from 8 shards up): the
+    ``seed_threshold`` (None = auto: on from 8 shards up over a
+    decode-heavy corpus): the
     reference's streaming top-k maintains ONE threshold over the whole
     corpus (TopK.hs:36-70), whereas independent shards each start from
     theta = -inf and late shards decode runs a global threshold would
@@ -817,9 +837,10 @@ def bm25_indexed(
     post = index.postings.filter(F.col("term").isin(q_terms))  # parquet pushdown
 
     if grouping == "shard":
-        return _bm25_indexed_shard_grouped(
-            spark, index, queries, post, k, k1, b, span
+        scored = _bm25_indexed_shard_grouped(
+            spark, index, queries, post, k, k1, b, span, n_shards
         )
+        return _finish_topk(spark, index, scored, k, len(queries))
     matched = (
         post.join(F.broadcast(qdf), "term")
         .join(F.broadcast(index.term_stats.filter(F.col("term").isin(q_terms))), "term")
@@ -839,21 +860,17 @@ def bm25_indexed(
     )
 
     def make_score_group(theta0_map: dict):
-        def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            qid = pdf["query_id"].iloc[0]
-            shard = int(pdf["shard"].iloc[0])
+        def score_group(key, pdf: pd.DataFrame):
+            qid, shard = key
             dids, scores = score_query_runs(
                 pdf, doc_count, avg_doc_len, k, k1, b,
-                did_lo=shard * span, did_hi=(shard + 1) * span,
+                did_lo=int(shard) * span, did_hi=(int(shard) + 1) * span,
                 theta0=theta0_map.get(qid, float("-inf")),
             )
-            return pd.DataFrame({"query_id": qid, "did": dids, "score": scores})
+            yield qid, dids, scores
 
         return score_group
 
-    from pyspark.sql import Window
-
-    group_schema = "query_id string, did long, score double"
     theta0_by_query: dict[str, float] = {}
     if seed_threshold is None:
         # >= 8 shards AND a decode-heavy corpus: seeding's fixed seed-job
@@ -862,34 +879,12 @@ def bm25_indexed(
         # amortizes only when per-shard decode dominates job overhead
         seed_threshold = n_shards >= 8 and index.doc_count >= _SEED_MIN_DOCS
     if seed_threshold and n_shards > 1:
-        # metadata-only densest-shard pick: no blob columns execute
-        mass = matched.groupBy("query_id", "shard").agg(F.sum("n").alias("_mass"))
-        w0 = Window.partitionBy("query_id").orderBy(F.desc("_mass"), F.asc("shard"))
-        seed_sel = (
-            mass.withColumn("_r", F.row_number().over(w0))
-            .filter(F.col("_r") == 1)
-            .select("query_id", "shard")
+        theta0_by_query = _seed_thetas(
+            spark, matched, len(queries), k, make_score_group({})
         )
-        seed_local = (
-            matched.join(F.broadcast(seed_sel), ["query_id", "shard"])
-            .groupBy("query_id", "shard")
-            .applyInPandas(make_score_group({}), group_schema)
-        )
-        for r in (
-            seed_local.groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("c"), F.min("score").alias("mn"))
-            .collect()
-        ):
-            if int(r["c"]) >= k:
-                theta0_by_query[r["query_id"]] = float(r["mn"])
 
-    local_topk = matched.groupBy("query_id", "shard").applyInPandas(
-        make_score_group(theta0_by_query), group_schema
+    scored = _score_groups(
+        spark, matched, ["query_id", "shard"], len(queries) * n_shards,
+        make_score_group(theta0_by_query),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("did"))
-    topk = (
-        local_topk.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "did", F.col("rank").cast("int").alias("rank"), "score")
-    )
-    return _resolve_doc_keys(spark, index, topk)
+    return _finish_topk(spark, index, scored, k, len(queries))

@@ -495,7 +495,9 @@ def cosine_neardup_pairs(
     id_a < id_b and cos >= threshold.
 
     method='brute' compares all pairs (broadcast one normalized side) —
-    exact, the small-N baseline.  method='lsh' generates candidates from
+    exact, the small-N baseline; it evaluates ``emb`` twice (a driver
+    collect and the streamed side), so ``emb`` must be deterministic.
+    It also collects eagerly, at call time.  method='lsh' generates candidates from
     shared random-hyperplane buckets then verifies exactly — sub-quadratic
     at scale, recall < 1 for pairs near the threshold (standard LSH
     trade-off; tests assert lsh ⊆ brute).
@@ -550,6 +552,10 @@ def cosine_neardup_pairs(
     # F.round + threshold filter below runs Spark-side, so rounding
     # semantics match the LSH branch to the byte (asserted equal to the
     # old form in tests/test_dedup_text.py).
+    # `base` must be deterministic: it is collected here for the broadcast
+    # side AND recomputed as the kernel's streamed side, and the kernel
+    # looks every streamed id up in the collected side's rank table — a
+    # nondeterministic embedding plan would raise KeyError there.
     sc = emb.sparkSession.sparkContext
     rows = base.collect()
     if not rows:

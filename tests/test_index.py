@@ -7,6 +7,8 @@ plus BASELINE.json invariants: dense ids, sha256 integrity, resume.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 import duckdb
@@ -448,23 +450,70 @@ def test_edge_case_build_matches_oracle(spark, tmp_path_factory, with_positions)
     assert got == want
 
 
-def test_bm25_indexed_plan_broadcasts_and_prunes(spark, index_dir):
-    """Plan audit for the indexed query path: the (query_id, term) side
-    must broadcast (no shuffle of the postings for the join) and the
-    final docmeta resolution must broadcast the bounded top-k, keeping
-    the big tables shuffle-free end to end."""
+def test_bm25_indexed_plan_broadcasts_and_prunes(spark, index_dir, monkeypatch):
+    """Plan audit for the indexed query path.  A serving-size request
+    returns a local relation, so the audit reads the SCORING plan: the
+    (query_id, term) side must broadcast (the postings are never
+    exchanged for the query join), term pruning must reach the postings
+    scan, and the scoring groups cross exactly ONE hash exchange — the
+    explicit-count repartition.  The docmeta resolve must keep its did
+    pushdown (min/max row-group pruning)."""
+    import simplir_spark.operators.query_indexed as qi
+
+    plans = {}
+    finish, doc_keys = qi._finish_topk, qi._doc_keys
+
+    def spy_finish(spark_, index, scored, k, n_queries):
+        # read before the finish executes it: AQE then prints only the
+        # initial plan, once
+        plans["scoring"] = scored._jdf.queryExecution().executedPlan().toString()
+        return finish(spark_, index, scored, k, n_queries)
+
+    def spy_doc_keys(index, dids):
+        df = doc_keys(index, dids)
+        plans["resolve"] = df._jdf.queryExecution().executedPlan().toString()
+        return df
+
+    monkeypatch.setattr(qi, "_finish_topk", spy_finish)
+    monkeypatch.setattr(qi, "_doc_keys", spy_doc_keys)
     idx = open_index(spark, index_dir)
-    df = bm25_indexed(spark, idx, QUERIES[:4], k=5)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert qi.bm25_indexed(spark, idx, QUERIES[:4], k=5).collect()
+    plan = plans["scoring"]
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
-    # docmeta scan keeps did pushdown (min/max row-group pruning)
-    assert "PushedFilters" in plan, plan
-    # the postings side must NOT be exchanged for the query join
-    # (broadcast goes the other way); hash exchanges exist only for the
-    # groupBy(query_id, shard) scorer and the window top-k — 2 in the
-    # plan, AQE prints initial+current sections so allow the double
-    assert 0 < plan.count("Exchange hashpartitioning") <= 4, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    # n = min(defaultParallelism, groups): 4 queries x 1 shard on this corpus
+    assert re.search(r"hashpartitioning\(query_id#\d+, shard#\d+L, 4\), REPARTITION_BY_NUM", plan), plan
     assert "IN (" in plan or "In(term" in plan, plan  # term pruning reached the scan
+    assert "PushedFilters: [" in plans["resolve"] and "In(did" in plans["resolve"], plans["resolve"]
+
+
+def test_bm25_indexed_request_job_count(spark, index_dir):
+    """A serving-size request runs a small fixed number of Spark jobs:
+    the query-table and term_stats broadcasts, the scoring shuffle's map
+    stage, the scoring collect and the docmeta collect — the returned
+    local DataFrame's collect adds none.  Jobs that engine threads
+    (broadcasts) submit carry no job group, so every job newer than the
+    last one seen before the request is counted."""
+    sc = spark.sparkContext
+    idx = open_index(spark, index_dir)
+
+    def settle():  # job status reaches the tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    for n_queries in (1, 4):
+        group = f"job-count-{n_queries}"
+        settle()
+        last = max([-1, *sc.statusTracker().getJobIdsForGroup(None)])
+        sc.setJobGroup(group, group)
+        try:
+            rows = bm25_indexed(spark, idx, QUERIES[:n_queries], k=K).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        settle()
+        st = sc.statusTracker()
+        jobs = {j for j in [*st.getJobIdsForGroup(group), *st.getJobIdsForGroup(None)] if j > last}
+        assert rows
+        assert len(jobs) <= 5, (n_queries, sorted(jobs))
 
 
 def test_bucket_expr_forms_agree(spark):
@@ -944,6 +993,34 @@ def test_cache_registry_concurrent_register(spark):
         d.unpersist()
 
 
+def test_cache_registry_keeps_shared_cache(spark):
+    """persist() of a plan that is already cached is a no-op, so two
+    separately built identical frames share ONE cache and unpersisting
+    either drops it.  Re-registering the identical frame must move the
+    existing entry to the newest slot, not add a second one whose older
+    twin's eviction would uncache it."""
+    from pyspark import StorageLevel
+
+    from simplir_spark.cacheutil import CacheRegistry
+
+    reg = CacheRegistry(retain=2)
+    first = spark.range(100).selectExpr("id * 2 AS x").persist()
+    first.count()
+    reg.register(first)
+    other = spark.range(7).persist()
+    reg.register(other)
+    twin = spark.range(100).selectExpr("id * 2 AS x").persist()
+    reg.register(twin)  # the registry is (other, first) afterwards
+    assert len(reg) == 2
+    assert twin.storageLevel != StorageLevel.NONE
+    last = spark.range(9).persist()
+    reg.register(last)  # evicts `other` only
+    assert twin.storageLevel != StorageLevel.NONE
+    assert other.storageLevel == StorageLevel.NONE
+    for d in (twin, last):
+        d.unpersist()
+
+
 def test_hot_query_shard_mass_balance(spark, tmp_path):
     """Query-side skew (VERDICT r4 #6): a term with df = 50% of docs must
     spread its posting mass evenly across did-range shards (runs are
@@ -1162,15 +1239,31 @@ def test_duplicate_query_ids_merge_not_double_score(spark, corpus_small, index_d
         assert got == want and got
 
 
-def test_resolve_doc_keys_range_path_matches_isin(spark, corpus_small, index_dir, monkeypatch):
-    """Above _RESOLVE_ISIN_MAX distinct dids the docmeta prune switches
-    from an In-literal to a did-range filter + broadcast join; results
-    must be identical."""
+def test_finish_serving_matches_bulk(spark, index_dir, monkeypatch):
+    """The two finishes of an indexed query agree.  Serving (queries x k
+    <= _RESOLVE_ISIN_MAX) ranks the candidates on the driver and returns
+    a local relation; with the cap forced to 0 every request takes the
+    bulk finish (window rank + lazy docmeta join).  Rows must be
+    identical for BM25 query_shard, BM25 grouping="shard" and QL."""
     import simplir_spark.operators.query_indexed as qi
 
     idx = open_index(spark, index_dir)
-    queries = [("q1", ["hash", "join"]), ("q2", ["customer", "order"])]
-    base = sorted(tuple(r) for r in qi.bm25_indexed(spark, idx, queries, k=10).collect())
+    queries = [("q1", ["hash", "join"]), ("q2", ["customer", "order"]), ("q3", ["zzabsent"])]
+    requests = {
+        "bm25": lambda: qi.bm25_indexed(spark, idx, queries, k=10),
+        "bm25_shard": lambda: qi.bm25_indexed(
+            spark, idx, queries, k=10, grouping="shard", n_shards=4
+        ),
+        "ql": lambda: qi.ql_dirichlet_indexed(spark, idx, queries, k=10),
+    }
+
+    def run(fn, want_op):
+        df = fn()
+        assert want_op in df._jdf.queryExecution().executedPlan().toString()
+        return sorted(tuple(r) for r in df.collect())
+
+    serving = {name: run(fn, "LocalTableScan") for name, fn in requests.items()}
     monkeypatch.setattr(qi, "_RESOLVE_ISIN_MAX", 0)
-    ranged = sorted(tuple(r) for r in qi.bm25_indexed(spark, idx, queries, k=10).collect())
-    assert base == ranged and base
+    for name, fn in requests.items():
+        bulk = run(fn, "Window")
+        assert bulk == serving[name] and len(bulk) == 20, name
