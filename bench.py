@@ -147,17 +147,6 @@ def run_bench(sf_dir: str, cores: int, out_stream=sys.stdout) -> dict:
                 lambda: bm25_indexed(spark, idx, QUERIES, k=10).collect(),
             )
 
-            # q2b: shard-grouped decode (VERDICT r4 #8) — ships each run
-            # once however many queries match it; rank-identical to the
-            # default query_shard grouping, tracked so the newest decode
-            # strategy has a per-round regression signal
-            timed(
-                "bm25_topk_indexed_sharded",
-                lambda: bm25_indexed(
-                    spark, idx, QUERIES, k=10, grouping="shard"
-                ).collect(),
-            )
-
             # q2c: indexed Dirichlet-QL (block-max pruned since r4)
             timed(
                 "ql_topk_indexed",

@@ -111,9 +111,6 @@ def _query_thunks(spark):
 
     return {
         "bm25_topk_indexed": lambda: bm25_indexed(spark, idx, QUERIES, k=10),
-        "bm25_topk_indexed_sharded": lambda: bm25_indexed(
-            spark, idx, QUERIES, k=10, grouping="shard"
-        ),
         "ql_topk_indexed": lambda: ql_dirichlet_indexed(spark, idx, QUERIES, k=10),
         "bm25_topk_scan": lambda: entry.q_bm25_topk(spark, SF_DIR),
         "term_stats": lambda: entry.q_term_stats(spark, SF_DIR),

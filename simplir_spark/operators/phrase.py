@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from simplir_spark.functions import codec
 from simplir_spark.operators.index_build import IndexHandle
+from simplir_spark.operators.query_indexed import _did_shards, _route_runs
 
 
 def phrase_match_scan(
@@ -80,15 +81,15 @@ def phrase_match_positional(
     spark: SparkSession,
     index: IndexHandle,
     phrases: list[tuple[str, list[str]]],
-    n_shards: int | None = None,
 ) -> DataFrame:
     """(phrase_id, did, tf) via the positional index: decode each phrase
     term's runs, group by did, intersect position lists with +1 shifts.
 
     Plan: postings scan pruned to the phrase terms (parquet pushdown) →
-    runs routed to every did-range shard they overlap → per-(phrase,
-    shard) applyInPandas intersection (a doc's complete position data
-    lives in one shard, so shard outputs union exactly).  Bounds per-task
+    runs routed to every did-range shard they overlap (the indexed
+    scorers' ``_did_shards`` / ``_route_runs``) → per-(phrase, shard)
+    applyInPandas intersection (a doc's complete position data lives in
+    one shard, so shard outputs union exactly).  Bounds per-task
     memory to one shard's postings — a phrase containing a common term
     never lands corpus-wide in a single task.  Adjacency is in raw tokenN
     space (see module docstring).
@@ -97,34 +98,17 @@ def phrase_match_positional(
     post = index.postings.filter(F.col("term").isin(terms_needed))
     if "pos" not in post.columns:
         raise ValueError("index was not built with_positions=True")
-    if n_shards is None:
-        from simplir_spark.operators.query_indexed import _pick_n_shards
-
-        par = spark.sparkContext.defaultParallelism
-        # same span floor as the scorers: runs span many dids, narrow
-        # shards duplicate every run (see query_indexed._MIN_SHARD_SPAN)
-        n_shards = _pick_n_shards(par, len(phrases), index.doc_count, "query_shard")
-    span = max(1, -(-max(1, index.doc_count) // n_shards))
+    # same span floor as the scorers: runs span many dids, narrow
+    # shards duplicate every run (see query_indexed._MIN_SHARD_SPAN)
+    _, span = _did_shards(spark, len(phrases), index.doc_count)
 
     rows = [(pid, t, j) for pid, p in phrases for j, t in enumerate(p)]
     from simplir_spark.localdf import local_rows_df
 
     pdf_phrases = local_rows_df(spark, rows, "phrase_id string, term string, term_ix int")
-    matched = (
-        post.join(F.broadcast(pdf_phrases), "term")
-        .withColumn(
-            "shard",
-            F.explode(
-                F.sequence(
-                    (F.col("start_did") / span).cast("long"),
-                    (F.col("end_did") / span).cast("long"),
-                )
-            ),
-        )
-        .select(
-            "phrase_id", "shard", "term_ix", "term", "start_did", "n",
-            "deltas", "tfs", "dls", "pos",
-        )
+    matched = _route_runs(post.join(F.broadcast(pdf_phrases), "term"), span).select(
+        "phrase_id", "shard", "term_ix", "term", "start_did", "n",
+        "deltas", "tfs", "dls", "pos",
     )
     phrase_len = {pid: len(p) for pid, p in phrases}
 

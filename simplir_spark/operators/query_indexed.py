@@ -1,11 +1,18 @@
-"""Indexed BM25 top-k (EP2: SimpleIndex.score, SURVEY.md §3) with
-block-max pruning.
+"""Indexed top-k retrieval (EP2: SimpleIndex.score, SURVEY.md §3) with
+block-max pruning, for BM25 and Dirichlet QL.
+
+One planner, ``_indexed_topk``, runs every request, as the reference runs
+every retrieval model through one scorer and one top-k fold
+(SimpleIndex.hs:159-165, TopK.hs:36-70).  The model wrappers only add
+their per-term columns to the runs and supply a per-group scorer.
 
 Plan shape:
   postings table — parquet scan with ``term IN (query terms)`` pushed down
   (the Spark analog of the reference's term->offset index lookup,
-  TermIndex.hs:26-34) → broadcast join with the (query_id, term) table →
-  ONE ``repartition(n, group keys)`` exchange, n = min(defaultParallelism,
+  TermIndex.hs:26-34) → broadcast join with the (query_id, term) table
+  (BM25 also joins the broadcast term_stats ``df``) → each run routed to
+  every did-shard its did range overlaps (``_route_runs``) → ONE
+  ``repartition(n, query_id, shard)`` exchange, n = min(defaultParallelism,
   groups) → one ``mapInArrow`` kernel per partition running the numpy
   scorer on each of its (query, did-shard) groups (``_score_groups``) →
   per-shard top-k candidates.  The finish (``_finish_topk``) then either
@@ -45,35 +52,51 @@ from simplir_spark.functions.scoring import B_DEFAULT, K1_DEFAULT
 from simplir_spark.operators.index_build import IndexHandle
 from simplir_spark.operators.query import merge_query_entries, queries_df
 
-# theta-seeding auto-gate: measured crossover on local[16] lies between 4M
-# docs (seeding -7%) and 16M (first win, +2.5% BM25 / +11% QL) at 16
-# shards — BENCH/seed_threshold.json (500k), BENCH/seed_threshold_4m.json
-# (4M + 16M).  Gate at the measured-win point; callers on real clusters
-# where per-shard decode dominates can force seed_threshold=True.
-_SEED_MIN_DOCS = 16_000_000
-
 # Minimum did-span per shard.  A posting run covers up to 2^14 postings
 # whose did range routinely spans tens of thousands of dids, so shards
 # narrower than that duplicate EVERY run into many shards (explode of the
 # [start_did, end_did] overlap): at 5k docs the old default of 2 x
 # parallelism shards gave span 79 and shipped/decoded each run up to 63
 # times.  Floor the span at 2^16 dids — r6 interleaved A/B at 5k docs
-# measured shard-grouped BM25 3.7x faster and query-shard BM25/QL 1.3-1.4x
+# measured indexed BM25/QL requests 1.3-1.4x faster
 # (BENCH/shard_span.json); at >= 4M docs every term of the old formula is
 # unchanged, so cluster-scale sharding is unaffected.  Shard count never
-# affects results (per-shard top-k + global window rank is exact at any
+# affects results (per-shard top-k + global rank is exact at any
 # sharding).
 _MIN_SHARD_SPAN = 1 << 16
 
 
-def _pick_n_shards(par: int, n_queries: int, doc_count: int, grouping: str) -> int:
+def _pick_n_shards(par: int, n_queries: int, doc_count: int) -> int:
     """Default did-shard count: enough shards to use the cluster, never so
     many that spans drop under ``_MIN_SHARD_SPAN`` (run-duplication wall),
     always enough to keep spans dense-accumulator-sized (<= 2^22)."""
-    per_q = (2 * par) if grouping == "shard" else (2 * par) // max(1, n_queries)
+    per_q = (2 * par) // max(1, n_queries)
     hi = -(-max(1, doc_count) // _MIN_SHARD_SPAN)
     lo = -(-doc_count // (1 << 22))
     return max(1, min(max(1, per_q), hi), lo)
+
+
+def _did_shards(spark: SparkSession, n_queries: int, doc_count: int) -> tuple[int, int]:
+    """(n_shards, span) of a request: ``_pick_n_shards``'s count and the
+    did width of each shard (ceil, so the shards cover every did)."""
+    par = spark.sparkContext.defaultParallelism
+    n_shards = _pick_n_shards(par, n_queries, doc_count)
+    return n_shards, max(1, -(-max(1, doc_count) // n_shards))
+
+
+def _route_runs(runs: DataFrame, span: int) -> DataFrame:
+    """``runs`` with a ``shard`` column: each run row once per did-shard of
+    width ``span`` that its [start_did, end_did] range overlaps (at most
+    2 per run in practice, since spans are floored at ``_MIN_SHARD_SPAN``)."""
+    return runs.withColumn(
+        "shard",
+        F.explode(
+            F.sequence(
+                (F.col("start_did") / span).cast("long"),
+                (F.col("end_did") / span).cast("long"),
+            )
+        ),
+    )
 
 
 def _bm25_contrib(tfs: np.ndarray, dls: np.ndarray, idf: float,
@@ -93,32 +116,14 @@ def score_query_runs(
     decode_counter: list | None = None,
     did_lo: int | None = None,
     did_hi: int | None = None,
-    theta0: float = float("-inf"),
-    decode_cache: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Score one query's posting runs; returns (top dids, top scores).
-
-    ``decode_cache`` (optional dict keyed (term, start_did) -> raw decoded
-    arrays) memoizes run decodes ACROSS calls — the shard-grouped scorer
-    passes one cache for all queries in a shard so a run shared by
-    several queries decodes once.
 
     ``runs`` columns: term, start_did, end_did, n, max_tf, deltas, tfs, dls
     plus per-term ``df``.  ``decode_counter`` (tests) receives
     [decoded_runs, total_runs].  ``did_lo``/``did_hi`` restrict scoring to
     dids in [lo, hi) — the shard contract: every run overlapping the range
     must be present, postings outside it are dropped after decode.
-
-    ``theta0`` is an EXTERNAL score floor — any valid lower bound on the
-    final global k-th score (e.g. the k-th score of another shard).  It
-    deepens block-max pruning without affecting the global result:
-    pruning is strict (a skipped doc's upper bound <= theta, and actual
-    scores are strictly below their upper bounds), so every dropped doc
-    is strictly below theta0 and could never enter the global top-k.
-    The reference's streaming top-k maintains ONE threshold across the
-    whole corpus (TopK.hs:36-70); theta0 is the distributed analog —
-    shards prune against the best global bound known at launch instead
-    of only their local accumulation.
     """
     if len(runs) == 0:
         return np.zeros(0, dtype=np.int64), np.zeros(0)
@@ -158,27 +163,23 @@ def score_query_runs(
     seen_count = 0
     for t in order:
         rest = rest_after[t]
-        if dense is not None and (seen_count >= k or theta0 > -np.inf):
-            # candidates only matter once pruning can engage (theta >
-            # -inf) — which an external theta0 makes true from the first
-            # term, so the live set MUST be refreshed then too: a doc
-            # already accumulated in dense stays live (partial + rest may
-            # beat theta) and skipping its runs would under-score it
+        if dense is not None and seen_count >= k:
+            # candidates only matter once pruning can engage (k docs
+            # seen, theta > -inf)
             ix = np.nonzero(seen)[0]
             cand_dids = ix + did_lo
             cand_scores = dense[ix]
         if len(cand_scores) >= k:
-            theta = max(float(np.partition(cand_scores, -k)[-k]), theta0)
+            theta = float(np.partition(cand_scores, -k)[-k])
         else:
-            theta = theta0
+            theta = -np.inf
         trun = runs[terms == t].sort_values("start_did")
         idf = idf_by_term[t]
 
         # Skip a run's unseen docs only when rest < theta STRICTLY: with
         # b=0 the per-term upper bound (dl->0) is exact at tf==max_tf, so
         # a doc scoring exactly theta is attainable and the did tie-break
-        # could place it in the global top-k — non-strict pruning would
-        # make seeded and unseeded shards disagree on such ties.
+        # could place it in the top-k — non-strict pruning would drop it.
         if theta <= rest:
             decode_mask = np.ones(len(trun), dtype=bool)
         else:
@@ -199,19 +200,9 @@ def score_query_runs(
             if not dec:
                 continue
             decoded += 1
-            if decode_cache is not None:
-                ckey = (t, int(row.start_did))
-                cached = decode_cache.get(ckey)
-                if cached is None:
-                    cached = codec.decode_run(
-                        row.start_did, row.n, row.deltas, row.tfs, row.dls
-                    )
-                    decode_cache[ckey] = cached
-                dids, tfs, dls = cached
-            else:
-                dids, tfs, dls = codec.decode_run(
-                    row.start_did, row.n, row.deltas, row.tfs, row.dls
-                )
+            dids, tfs, dls = codec.decode_run(
+                row.start_did, row.n, row.deltas, row.tfs, row.dls
+            )
             if did_lo is not None or did_hi is not None:
                 m = np.ones(len(dids), dtype=bool)
                 if did_lo is not None:
@@ -262,12 +253,9 @@ def score_query_runs_ql(
     did_lo: int,
     did_hi: int,
     decode_counter: list | None = None,
-    theta0: float = -np.inf,
-    decode_cache: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Dirichlet-QL DAAT scoring with block-max run skipping — the QL
-    analog of ``score_query_runs`` (``decode_cache`` memoizes raw run
-    decodes across calls, as there).
+    analog of ``score_query_runs``.
 
     Decomposition (see ``ql_dirichlet_indexed``):
         score(d) = C0 + corr(d) - Q * ln(dl_d + mu)
@@ -288,10 +276,6 @@ def score_query_runs_ql(
     Terms with cf = 0 (bg = 0) make matched docs lacking them score -inf,
     which breaks the partial-is-a-lower-bound invariant — pruning is
     DISABLED for such queries (decode everything; results unchanged).
-
-    ``theta0`` is an external score floor (any valid lower bound on the
-    global k-th final score, e.g. another shard's k-th) — it engages
-    pruning from the first term, exactly as in ``score_query_runs``.
 
     Returns (dids, scores) of the shard-local top-k; ``decode_counter``
     (tests) receives [decoded_runs, total_runs].
@@ -352,16 +336,12 @@ def score_query_runs_ql(
         bg = term_bg.get(t, 0.0)
         base = base_by_term[t]
 
-        if not pruning_ok or (seen_count < k and theta0 == -np.inf):
+        if not pruning_ok or seen_count < k:
             decode_mask = np.ones(len(trun), dtype=bool)
         else:
             ix = np.nonzero(seen)[0]
             cand_scores = c0 + corr[ix] - q_total * np.log(dl_arr[ix] + mu)
-            theta = (
-                max(float(np.partition(cand_scores, -k)[-k]), theta0)
-                if len(ix) >= k
-                else theta0
-            )
+            theta = float(np.partition(cand_scores, -k)[-k])
             if theta <= c0 + rest - unseen_norm:
                 decode_mask = np.ones(len(trun), dtype=bool)
             else:
@@ -379,19 +359,9 @@ def score_query_runs_ql(
             if not dec:
                 continue
             decoded += 1
-            if decode_cache is not None:
-                ckey = (t, int(row.start_did))
-                cached = decode_cache.get(ckey)
-                if cached is None:
-                    cached = codec.decode_run(
-                        row.start_did, row.n, row.deltas, row.tfs, row.dls
-                    )
-                    decode_cache[ckey] = cached
-                dids, tfs, dls = cached
-            else:
-                dids, tfs, dls = codec.decode_run(
-                    row.start_did, row.n, row.deltas, row.tfs, row.dls
-                )
+            dids, tfs, dls = codec.decode_run(
+                row.start_did, row.n, row.deltas, row.tfs, row.dls
+            )
             m = (dids >= did_lo) & (dids < did_hi)
             if not m.any():
                 continue
@@ -422,27 +392,23 @@ def score_query_runs_ql(
 
 
 def _score_groups(
-    spark: SparkSession,
-    matched: DataFrame,
-    keys: list[str],
-    n_groups: int,
-    score_group,
+    spark: SparkSession, matched: DataFrame, n_groups: int, score_group
 ) -> DataFrame:
-    """Run ``score_group(key, pdf)`` once per distinct ``keys`` group of
-    ``matched``; returns the (query_id, did, score) rows it yields.
+    """Run ``score_group(query_id, shard, pdf)`` once per (query_id, shard)
+    group of ``matched``; returns the (query_id, did, score) rows of the
+    (dids, scores) it returns.
 
-    ``score_group`` gets the group's key tuple and its rows as a pandas
-    frame, and yields (query_id, dids, scores) triples.  The rows are
-    hash-partitioned by ``keys`` into n = min(defaultParallelism,
-    ``n_groups``) partitions — AQE never coalesces an explicit-count
-    ``repartition``, so a sub-MB scoring shuffle still runs on every core
-    instead of one coalesced task — and one ``mapInArrow`` kernel per
-    partition converts to pandas ONCE and splits it into its groups,
-    instead of one pandas conversion per group.
+    The rows are hash-partitioned by (query_id, shard) into
+    n = min(defaultParallelism, ``n_groups``) partitions — AQE never
+    coalesces an explicit-count ``repartition``, so a sub-MB scoring
+    shuffle still runs on every core instead of one coalesced task — and
+    one ``mapInArrow`` kernel per partition converts to pandas ONCE and
+    splits it into its groups, instead of one pandas conversion per group.
     ``n_groups`` may be an upper bound; hashing leaves some partitions
     empty either way.
     """
     n = max(1, min(spark.sparkContext.defaultParallelism, n_groups))
+    keys = ["query_id", "shard"]
 
     def kernel(batches):
         batches = list(batches)
@@ -450,11 +416,11 @@ def _score_groups(
             return
         pdf = pa.Table.from_batches(batches).to_pandas()
         qids, dids, scores = [], [], []
-        for key, grp in pdf.groupby(keys, sort=False):
-            for qid, d, s in score_group(key, grp):
-                qids.extend([qid] * len(d))
-                dids.append(d)
-                scores.append(s)
+        for (qid, shard), grp in pdf.groupby(keys, sort=False):
+            d, s = score_group(qid, int(shard), grp)
+            qids.extend([qid] * len(d))
+            dids.append(d)
+            scores.append(s)
         if qids:
             yield pa.RecordBatch.from_arrays(
                 [
@@ -521,15 +487,110 @@ def _finish_topk(
     return spark.createDataFrame(pa.Table.from_pandas(out, preserve_index=False), schema)
 
 
+def _query_terms(queries: list[tuple[str, list[str]]]) -> list[str]:
+    return sorted({t for _, terms in queries for t in terms})
+
+
+# posting-run columns the scorers read besides ``term``
+_RUN_COLS = ("start_did", "end_did", "n", "max_tf", "deltas", "tfs", "dls")
+
+
+def _indexed_topk(
+    spark: SparkSession,
+    index: IndexHandle,
+    queries: list[tuple[str, list[str]]],
+    k: int,
+    runs,
+    score_one,
+) -> DataFrame:
+    """Top-k of every query under one retrieval model, as (query_id,
+    doc_key, rank, score) — the one planner of the indexed request path.
+
+    ``runs(post, merged)`` returns the run rows the model scores:
+    ``post`` holds the postings runs of the query terms (``term IN``
+    pushed into the scan) joined to the broadcast (query_id, term) table,
+    ``merged`` is ``queries`` after ``merge_query_entries``.  Columns it adds reach the scorer.
+    It is called before ``score_one`` is shipped to the workers, so
+    driver-side state it collects is visible to ``score_one``.
+
+    ``score_one(query_id, pdf, lo, hi)`` scores one query's runs in one
+    did-shard, dids in [lo, hi), and returns that shard's top-k as
+    (dids, scores).
+
+    Scoring parallelism is (queries × did-range shards), not just queries:
+    each run row is routed to every shard its [start_did, end_did] range
+    overlaps (``_route_runs``), a shard scores only dids inside its range
+    — a doc's complete score lives in exactly one shard, so per-shard
+    top-k then a global rank is exact (the distributed form of
+    collectPostings' doc-at-a-time union, Posting2/Collect.hs:53-82).
+    """
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    queries = merge_query_entries(queries)
+    qdf = queries_df(spark, queries)
+    doc_count = index.doc_count
+    n_shards, span = _did_shards(spark, len(queries), doc_count)
+
+    post = (
+        index.postings.filter(F.col("term").isin(_query_terms(queries)))  # parquet pushdown
+        .join(F.broadcast(qdf), "term")
+    )
+    model_runs = runs(post, queries)
+    extra = [c for c in model_runs.columns if c not in post.columns]
+    matched = _route_runs(model_runs, span).select(
+        "query_id", "shard", "term", *extra, *_RUN_COLS
+    )
+
+    def score_group(qid: str, shard: int, pdf: pd.DataFrame):
+        lo = shard * span
+        # the last shard ends at doc_count; a range is never empty
+        return score_one(qid, pdf, lo, max(min(lo + span, doc_count), lo + 1))
+
+    scored = _score_groups(spark, matched, len(queries) * n_shards, score_group)
+    return _finish_topk(spark, index, scored, k, len(queries))
+
+
+def bm25_indexed(
+    spark: SparkSession,
+    index: IndexHandle,
+    queries: list[tuple[str, list[str]]],
+    k: int = 10,
+    k1: float = K1_DEFAULT,
+    b: float = B_DEFAULT,
+) -> DataFrame:
+    """BM25 top-k of all queries against the index in one scoring pass
+    (``_indexed_topk``); the runs carry each term's ``df`` from the
+    broadcast term_stats, the scorer is ``score_query_runs``.
+
+    Returns (query_id, doc_key, rank, score).  Rank ties break by did,
+    which by construction equals doc_key order (dense ids are assigned in
+    doc_key order — index_build).  ``k`` must be >= 1.
+
+    When queries x k <= ``_RESOLVE_ISIN_MAX`` (the serving case) the
+    result is MATERIALIZED before return: scoring runs once, the driver
+    holds at most queries x n_shards x k candidate rows while it ranks
+    them, and the returned local DataFrame collects without a Spark job.
+    Above the cap (bulk) the result is a lazy plan that ranks with a
+    window and joins docmeta on the cluster (``_finish_topk``).
+    """
+    doc_count, avg_doc_len = index.doc_count, index.avg_doc_len
+
+    def runs(post: DataFrame, merged) -> DataFrame:
+        stats = index.term_stats.filter(F.col("term").isin(_query_terms(merged)))
+        return post.join(F.broadcast(stats.select("term", "df")), "term")
+
+    def score_one(qid: str, pdf: pd.DataFrame, lo: int, hi: int):
+        return score_query_runs(pdf, doc_count, avg_doc_len, k, k1, b, did_lo=lo, did_hi=hi)
+
+    return _indexed_topk(spark, index, queries, k, runs, score_one)
+
+
 def ql_dirichlet_indexed(
     spark: SparkSession,
     index: IndexHandle,
     queries: list[tuple[str, list[str]]],
     k: int = 10,
     mu: float = 1000.0,
-    n_shards: int | None = None,
-    seed_threshold: bool | None = None,
-    grouping: str = "query_shard",
 ) -> DataFrame:
     """Dirichlet-smoothed query likelihood over the inverted index — the
     index is retrieval-model-generic like the reference's SimpleIndex
@@ -554,337 +615,30 @@ def ql_dirichlet_indexed(
     threshold pruning as BM25 — disabled automatically for queries with
     cf=0 terms, where -inf finals break the partial-score lower bound.
 
-    Scoring and the finish are ``bm25_indexed``'s: the result is
-    materialized when queries x k <= ``_RESOLVE_ISIN_MAX``.
+    The request runs through the planner ``bm25_indexed`` uses
+    (``_indexed_topk``) with the plain postings as runs; the background
+    probabilities bg_t = cf_t / |C| come from one driver collect of the
+    query terms' term_stats.  The result is materialized when
+    queries x k <= ``_RESOLVE_ISIN_MAX``.
     """
-    queries = merge_query_entries(queries)
-    if grouping not in ("query_shard", "shard"):
-        raise ValueError(f"unknown grouping {grouping!r}")
-    qdf = queries_df(spark, queries)
-    doc_count, token_count = index.doc_count, index.token_count
-    if n_shards is None:
-        par = spark.sparkContext.defaultParallelism
-        n_shards = _pick_n_shards(par, len(queries), doc_count, grouping)
-    span = max(1, -(-max(1, doc_count) // n_shards))
+    token_count = index.token_count
+    weights: dict[str, tuple[dict, dict]] = {}  # query_id -> (term_w, term_bg)
 
-    q_terms = sorted({t for _, terms in queries for t in terms})
-    cf_by_term = {
-        r["term"]: int(r["cf"])
-        for r in index.term_stats.filter(F.col("term").isin(q_terms)).collect()
-    }
-    qtf = {
-        (qid, t): sum(1 for x in terms if x == t)
-        for qid, terms in queries
-        for t in set(terms)
-    }
-    q_term_lists = {qid: sorted(set(terms)) for qid, terms in queries}
-
-    def ql_weights(qid: str) -> tuple[dict, dict]:
-        terms_q = q_term_lists[qid]
-        term_w = {t: float(qtf[(qid, t)]) for t in terms_q}
-        term_bg = {
-            t: (cf_by_term.get(t, 0) / token_count if token_count else 0.0)
-            for t in terms_q
+    def runs(post: DataFrame, merged) -> DataFrame:
+        cf = {
+            r["term"]: int(r["cf"])
+            for r in index.term_stats.filter(F.col("term").isin(_query_terms(merged))).collect()
         }
-        return term_w, term_bg
-
-    def shard_bounds(shard: int) -> tuple[int, int]:
-        lo, hi = shard * span, min((shard + 1) * span, max(doc_count, 1))
-        return lo, max(hi, lo + 1)
-
-    post = index.postings.filter(F.col("term").isin(q_terms))
-    matched = (
-        post.join(F.broadcast(qdf), "term")
-        .withColumn(
-            "shard",
-            F.explode(
-                F.sequence(
-                    (F.col("start_did") / span).cast("long"),
-                    (F.col("end_did") / span).cast("long"),
-                )
-            ),
-        )
-        .select(
-            "query_id", "shard", "term", "start_did", "end_did", "n", "max_tf",
-            "deltas", "tfs", "dls",
-        )
-    )
-
-    def make_score_group(theta0_map: dict):
-        def score_group(key, pdf: pd.DataFrame):
-            qid, shard = key
-            term_w, term_bg = ql_weights(qid)
-            dids_out, scores = score_query_runs_ql(
-                pdf, term_w, term_bg, mu, k, *shard_bounds(int(shard)),
-                theta0=theta0_map.get(qid, -np.inf),
+        for qid, terms in merged:
+            term_w = {t: float(terms.count(t)) for t in sorted(set(terms))}
+            weights[qid] = (
+                term_w,
+                {t: (cf.get(t, 0) / token_count if token_count else 0.0) for t in term_w},
             )
-            yield qid, dids_out, scores
+        return post
 
-        return score_group
+    def score_one(qid: str, pdf: pd.DataFrame, lo: int, hi: int):
+        term_w, term_bg = weights[qid]
+        return score_query_runs_ql(pdf, term_w, term_bg, mu, k, lo, hi)
 
-    # Cross-shard theta seeding (same design + auto-gate as bm25_indexed):
-    # a seed pass on each query's densest shard yields a global k-th lower
-    # bound that deepens every other shard's pruning.  Auto-gated on BOTH
-    # >= 8 shards AND a decode-heavy corpus (>= 16M docs): the seed pass
-    # is one extra fixed-cost job; interleaved A/Bs at 16 shards measured
-    # a net ~20% SLOWDOWN at 500k docs (BENCH/seed_threshold.json), still
-    # -7% at 4M, and the first WIN at 16M (+2.5% BM25 / +11% QL,
-    # BENCH/seed_threshold_4m.json) — the savings only amortize once each
-    # shard's decode work dominates the job overhead.
-    theta0_by_query: dict[str, float] = {}
-    if seed_threshold is None:
-        seed_threshold = (
-            grouping == "query_shard" and n_shards >= 8 and doc_count >= _SEED_MIN_DOCS
-        )
-    if seed_threshold and grouping == "query_shard" and n_shards > 1:
-        theta0_by_query = _seed_thetas(
-            spark, matched, len(queries), k, make_score_group({})
-        )
-
-    if grouping == "shard":
-        # one group per did-shard, all queries scored against a shared
-        # decode cache — each run ships/decodes once regardless of query
-        # count (same trade-offs as bm25_indexed(grouping='shard'):
-        # BENCH/query_grouping.json; theta seeding stays query_shard)
-        matched_s = post.withColumn(
-            "shard",
-            F.explode(
-                F.sequence(
-                    (F.col("start_did") / span).cast("long"),
-                    (F.col("end_did") / span).cast("long"),
-                )
-            ),
-        ).select(
-            "shard", "term", "start_did", "end_did", "n", "max_tf",
-            "deltas", "tfs", "dls",
-        )
-
-        def score_shard(key, pdf: pd.DataFrame):
-            lo, hi = shard_bounds(int(key[0]))
-            cache: dict = {}
-            shard_terms = set(pdf["term"])
-            for qid in sorted(q_term_lists):
-                terms_q = q_term_lists[qid]
-                if not any(t in shard_terms for t in terms_q):
-                    continue
-                term_w, term_bg = ql_weights(qid)
-                dids_out, scores = score_query_runs_ql(
-                    pdf[pdf["term"].isin(terms_q)], term_w, term_bg, mu, k, lo, hi,
-                    decode_cache=cache,
-                )
-                yield qid, dids_out, scores
-
-        scored = _score_groups(spark, matched_s, ["shard"], n_shards, score_shard)
-    else:
-        scored = _score_groups(
-            spark, matched, ["query_id", "shard"], len(queries) * n_shards,
-            make_score_group(theta0_by_query),
-        )
-    return _finish_topk(spark, index, scored, k, len(queries))
-
-
-def _seed_thetas(
-    spark: SparkSession, matched: DataFrame, n_queries: int, k: int, score_group
-) -> dict[str, float]:
-    """Theta seed pass shared by both models: score each query's densest
-    shard (most matched postings — a metadata-only aggregation picks it,
-    no blob columns execute) and return {query_id: k-th score} for the
-    queries whose seed shard filled a top-k.  -inf and NaN scores never
-    seed."""
-    mass = matched.groupBy("query_id", "shard").agg(F.sum("n").alias("_mass"))
-    w0 = Window.partitionBy("query_id").orderBy(F.desc("_mass"), F.asc("shard"))
-    seed_sel = (
-        mass.withColumn("_r", F.row_number().over(w0))
-        .filter(F.col("_r") == 1)
-        .select("query_id", "shard")
-    )
-    seed = _score_groups(
-        spark, matched.join(F.broadcast(seed_sel), ["query_id", "shard"]),
-        ["query_id", "shard"], n_queries, score_group,
-    ).toArrow().to_pandas()
-    seed = seed[seed["score"] > -np.inf]
-    return {
-        qid: float(s.min())
-        for qid, s in seed.groupby("query_id")["score"]
-        if len(s) >= k
-    }
-
-
-def _bm25_indexed_shard_grouped(
-    spark: SparkSession,
-    index: IndexHandle,
-    queries: list[tuple[str, list[str]]],
-    post: DataFrame,
-    k: int,
-    k1: float,
-    b: float,
-    span: int,
-    n_shards: int,
-) -> DataFrame:
-    """bm25_indexed's ``grouping="shard"`` scoring: one group per
-    did-shard, every query scored inside it against a shared per-shard
-    decode cache.  The matched runs never join the query table, so the
-    shuffle carries each run's blobs exactly once however many queries
-    share its term.  Returns the per-shard (query_id, did, score)
-    candidates."""
-    doc_count, avg_doc_len = index.doc_count, index.avg_doc_len
-    q_terms = sorted({t for _, terms in queries for t in terms})
-    q_term_lists = {qid: sorted(set(terms)) for qid, terms in queries}
-    matched = (
-        post.join(F.broadcast(index.term_stats.filter(F.col("term").isin(q_terms))), "term")
-        .withColumn(
-            "shard",
-            F.explode(
-                F.sequence(
-                    (F.col("start_did") / span).cast("long"),
-                    (F.col("end_did") / span).cast("long"),
-                )
-            ),
-        )
-        .select(
-            "shard", "term", "df", "start_did", "end_did", "n",
-            "max_tf", "deltas", "tfs", "dls",
-        )
-    )
-
-    def score_group(key, pdf: pd.DataFrame):
-        shard = int(key[0])
-        lo, hi = shard * span, (shard + 1) * span
-        cache: dict = {}
-        shard_terms = set(pdf["term"])
-        for qid in sorted(q_term_lists):
-            terms_q = [t for t in q_term_lists[qid] if t in shard_terms]
-            if not terms_q:
-                continue
-            dids, scores = score_query_runs(
-                pdf[pdf["term"].isin(terms_q)], doc_count, avg_doc_len, k, k1, b,
-                did_lo=lo, did_hi=hi, decode_cache=cache,
-            )
-            yield qid, dids, scores
-
-    return _score_groups(spark, matched, ["shard"], n_shards, score_group)
-
-
-def bm25_indexed(
-    spark: SparkSession,
-    index: IndexHandle,
-    queries: list[tuple[str, list[str]]],
-    k: int = 10,
-    k1: float = K1_DEFAULT,
-    b: float = B_DEFAULT,
-    n_shards: int | None = None,
-    seed_threshold: bool | None = None,
-    grouping: str = "query_shard",
-) -> DataFrame:
-    """All queries against the index in one scoring pass.
-
-    ``grouping`` picks the scoring-group shape:
-      * ``"query_shard"`` (default): one group per (query, did-shard) —
-        maximal per-group pruning depth, but a run whose term appears in
-        q queries ships q times through the shuffle;
-      * ``"shard"``: one group per did-shard, ALL queries scored inside
-        it with a shared decode cache — each matched run crosses the wire
-        and decodes exactly ONCE regardless of query count.  The right
-        shape for large query batches over overlapping vocabulary (term
-        grids, query logs), where per-query duplication dominates; theta
-        seeding stays a query_shard feature.
-
-    Returns (query_id, doc_key, rank, score).  Rank ties break by did,
-    which by construction equals doc_key order (dense ids are assigned in
-    doc_key order — index_build).
-
-    When queries x k <= ``_RESOLVE_ISIN_MAX`` (the serving case) the
-    result is MATERIALIZED before return: scoring runs once, the driver
-    holds at most queries x n_shards x k candidate rows while it ranks
-    them, and the returned local DataFrame collects without a Spark job.
-    Above the cap (bulk) the result is a lazy plan that ranks with a
-    window and joins docmeta on the cluster (``_finish_topk``).
-
-    Scoring parallelism is (queries × did-range shards), not just queries:
-    each run row is routed to every shard its [start_did, end_did] range
-    overlaps (``F.sequence`` + explode, ≤2 shards per run in practice), a
-    shard scores only dids inside its range — a doc's complete score lives
-    in exactly one shard, so per-shard top-k then a global rank is exact
-    (the distributed form of collectPostings' doc-at-a-time union,
-    Posting2/Collect.hs:53-82).  The groups are spread over
-    min(defaultParallelism, groups) partitions (``_score_groups``).
-
-    ``seed_threshold`` (None = auto: on from 8 shards up over a
-    decode-heavy corpus): the
-    reference's streaming top-k maintains ONE threshold over the whole
-    corpus (TopK.hs:36-70), whereas independent shards each start from
-    theta = -inf and late shards decode runs a global threshold would
-    skip.  A cheap SEED PASS first scores each query's densest shard
-    (most matched postings — a metadata-only aggregation picks it); its
-    k-th score is a valid lower bound on the global k-th score and is
-    handed to every shard of the main pass as the pruning floor
-    (``score_query_runs(theta0=...)``).  Exactness is preserved — docs
-    pruned under theta0 are strictly below it, and the global k-th is >=
-    theta0.  Cost: one shard per query is scored twice (~1/n_shards extra
-    work) buying first-term pruning everywhere else.
-    """
-    queries = merge_query_entries(queries)
-    if grouping not in ("query_shard", "shard"):
-        raise ValueError(f"unknown grouping {grouping!r}")
-    qdf = queries_df(spark, queries)
-    doc_count, avg_doc_len = index.doc_count, index.avg_doc_len
-    if n_shards is None:
-        par = spark.sparkContext.defaultParallelism
-        n_shards = _pick_n_shards(par, len(queries), doc_count, grouping)
-    span = max(1, -(-max(1, doc_count) // n_shards))  # ceil
-
-    q_terms = sorted({t for _, terms in queries for t in terms})
-    post = index.postings.filter(F.col("term").isin(q_terms))  # parquet pushdown
-
-    if grouping == "shard":
-        scored = _bm25_indexed_shard_grouped(
-            spark, index, queries, post, k, k1, b, span, n_shards
-        )
-        return _finish_topk(spark, index, scored, k, len(queries))
-    matched = (
-        post.join(F.broadcast(qdf), "term")
-        .join(F.broadcast(index.term_stats.filter(F.col("term").isin(q_terms))), "term")
-        .withColumn(
-            "shard",
-            F.explode(
-                F.sequence(
-                    (F.col("start_did") / span).cast("long"),
-                    (F.col("end_did") / span).cast("long"),
-                )
-            ),
-        )
-        .select(
-            "query_id", "shard", "term", "df", "start_did", "end_did", "n",
-            "max_tf", "deltas", "tfs", "dls",
-        )
-    )
-
-    def make_score_group(theta0_map: dict):
-        def score_group(key, pdf: pd.DataFrame):
-            qid, shard = key
-            dids, scores = score_query_runs(
-                pdf, doc_count, avg_doc_len, k, k1, b,
-                did_lo=int(shard) * span, did_hi=(int(shard) + 1) * span,
-                theta0=theta0_map.get(qid, float("-inf")),
-            )
-            yield qid, dids, scores
-
-        return score_group
-
-    theta0_by_query: dict[str, float] = {}
-    if seed_threshold is None:
-        # >= 8 shards AND a decode-heavy corpus: seeding's fixed seed-job
-        # cost measured as a net slowdown at 500k and 4M docs x 16 shards
-        # and its first win at 16M (BENCH/seed_threshold{,_4m}.json); it
-        # amortizes only when per-shard decode dominates job overhead
-        seed_threshold = n_shards >= 8 and index.doc_count >= _SEED_MIN_DOCS
-    if seed_threshold and n_shards > 1:
-        theta0_by_query = _seed_thetas(
-            spark, matched, len(queries), k, make_score_group({})
-        )
-
-    scored = _score_groups(
-        spark, matched, ["query_id", "shard"], len(queries) * n_shards,
-        make_score_group(theta0_by_query),
-    )
-    return _finish_topk(spark, index, scored, k, len(queries))
+    return _indexed_topk(spark, index, queries, k, runs, score_one)

@@ -132,8 +132,21 @@ def _assert_bm25_rank_identical(spark, root, oracle_idx, queries=QUERIES):
             assert abs(r.score - score) <= REL_TOL * max(1.0, abs(score))
 
 
-def test_bm25_indexed_rank_identical(spark, index_dir, oracle_idx):
+def _force_shards(monkeypatch, n_shards: int) -> None:
+    """Route the indexed requests over ``n_shards`` did-shards; the
+    2,000-doc corpus gets a single shard by default."""
+    import simplir_spark.operators.query_indexed as qi
+
+    monkeypatch.setattr(qi, "_pick_n_shards", lambda par, n_queries, doc_count: n_shards)
+
+
+def test_bm25_indexed_rank_identical(spark, index_dir, oracle_idx, monkeypatch):
+    """Rank-identical to the oracle at the default sharding and at forced
+    shard counts (several shards, runs split across shard bounds)."""
     _assert_bm25_rank_identical(spark, index_dir, oracle_idx)
+    for n_shards in (1, 2, 5):
+        _force_shards(monkeypatch, n_shards)
+        _assert_bm25_rank_identical(spark, index_dir, oracle_idx)
 
 
 def test_resume_skips_all_stages(spark, corpus_small, tmp_path_factory):
@@ -557,79 +570,6 @@ def test_bucket_expr_forms_agree(spark):
             assert r["bs"] == r["lin"], (len(td_cuts), r)
 
 
-def test_theta0_seed_deepens_pruning_and_preserves_topk():
-    """Unit-level: an external score floor (the cross-shard seed, TopK.hs
-    single-threshold analog) must decode strictly fewer runs while
-    returning exactly the docs at-or-above the floor, in order."""
-    rng = np.random.RandomState(11)
-    n_docs, run_size = 5000, 128
-    rows = []
-    for term, df_sel, tf_hi in [("common", np.arange(n_docs), 3), ("rare", np.arange(0, 200, 10), 50)]:
-        dids = np.asarray(df_sel, dtype=np.int64)
-        tfs = rng.randint(1, tf_hi + 1, size=len(dids)).astype(np.int64)
-        dls = np.full(len(dids), 100, dtype=np.int64)
-        for s in range(0, len(dids), run_size):
-            e = min(s + run_size, len(dids))
-            run = codec.encode_run(dids[s:e], tfs[s:e], dls[s:e])
-            rows.append({"term": term, "df": len(dids), **run})
-    runs = pd.DataFrame(rows)
-
-    base_cnt = [0, 0]
-    d0, s0 = score_query_runs(
-        runs, n_docs, 100.0, 10, decode_counter=base_cnt, did_lo=0, did_hi=n_docs
-    )
-    # contract 1: a floor at our own 5th score — every returned doc
-    # at-or-above the floor matches the unseeded run, never more decodes
-    theta0 = float(s0[4])
-    seed_cnt = [0, 0]
-    d1, s1 = score_query_runs(
-        runs, n_docs, 100.0, 10, decode_counter=seed_cnt,
-        did_lo=0, did_hi=n_docs, theta0=theta0,
-    )
-    keep = s0 >= theta0
-    assert d1[: keep.sum()].tolist() == d0[keep].tolist()
-    np.testing.assert_allclose(s1[: keep.sum()], s0[keep], rtol=1e-12)
-    assert seed_cnt[0] <= base_cnt[0], (seed_cnt, base_cnt)
-
-    # contract 2: a floor above every reachable upper bound (a denser
-    # shard already holds k far better docs) must skip ALL runs — the
-    # whole point of cross-shard seeding: late shards decode nothing
-    high_cnt = [0, 0]
-    d2, s2 = score_query_runs(
-        runs, n_docs, 100.0, 10, decode_counter=high_cnt,
-        did_lo=0, did_hi=n_docs, theta0=float(s0[0]) * 2.0 + 1.0,
-    )
-    assert high_cnt[0] == 0, high_cnt
-    assert len(d2) == 0
-
-
-def test_bm25_indexed_seeded_equals_unseeded(spark, index_dir, oracle_idx):
-    """End-to-end: the seeded cross-shard threshold pass must be
-    result-invisible — identical (rank, doc_key, score) with and without
-    seeding, at several shard counts, and rank-identical to the oracle."""
-    idx = open_index(spark, index_dir)
-    for n_shards in (2, 5):
-        a = sorted(
-            (r.query_id, r.rank, r.doc_key, round(r.score, 12))
-            for r in bm25_indexed(
-                spark, idx, QUERIES, k=K, n_shards=n_shards, seed_threshold=True
-            ).collect()
-        )
-        b = sorted(
-            (r.query_id, r.rank, r.doc_key, round(r.score, 12))
-            for r in bm25_indexed(
-                spark, idx, QUERIES, k=K, n_shards=n_shards, seed_threshold=False
-            ).collect()
-        )
-        assert a == b, n_shards
-    by_q: dict[str, list] = {}
-    for qid, rank, key, _ in a:
-        by_q.setdefault(qid, []).append((rank, key))
-    for qid, terms in QUERIES:
-        want = [(rk, ky) for rk, ky, _ in bm25_topk(oracle_idx, terms, K)]
-        assert sorted(by_q.get(qid, [])) == want, qid
-
-
 def test_compact_postings_rejects_mixed_pos_buffers(spark):
     """A term whose short runs mix positional and non-positional blobs
     cannot be merged without misaligning positions — the kernel must
@@ -841,125 +781,46 @@ def test_ql_pruning_disabled_for_cf0_terms():
     assert finite and all(x % 10 == 0 for x in finite)
 
 
-def test_ql_indexed_small_k_matches_scan(spark, index_dir, corpus_small):
+def test_ql_indexed_small_k_matches_scan(spark, index_dir, corpus_small, monkeypatch):
     """End-to-end: the pruned indexed QL path at k=10 is rank-identical to
-    scan-mode QL (pruning engaged, results invisible)."""
+    scan-mode QL (pruning engaged, results invisible), at the default
+    sharding and at forced shard counts."""
     from simplir_spark.operators.query import bm25_scan
     from simplir_spark.operators.query_indexed import ql_dirichlet_indexed
 
     queries = [q for q in QUERIES if q[0] not in ("Q08", "Q09", "Q14")][:6]
     idx = open_index(spark, index_dir)
-    got = ql_dirichlet_indexed(spark, idx, queries, k=10, mu=1000.0).collect()
     want = bm25_scan(spark, corpus_small, queries, k=10, model="ql_dirichlet", mu=1000.0).collect()
-    g, w = {}, {}
-    for r in got:
-        g.setdefault(r.query_id, []).append((r.rank, r.doc_key, round(r.score, 9)))
+    w = {}
     for r in want:
         w.setdefault(r.query_id, []).append((r.rank, r.doc_key, round(r.score, 9)))
-    assert set(g) == set(w)
-    for qid in g:
-        assert sorted(g[qid]) == sorted(w[qid]), qid
+    for n_shards in (None, 1, 2, 5):
+        if n_shards is not None:
+            _force_shards(monkeypatch, n_shards)
+        got = ql_dirichlet_indexed(spark, idx, queries, k=10, mu=1000.0).collect()
+        g = {}
+        for r in got:
+            g.setdefault(r.query_id, []).append((r.rank, r.doc_key, round(r.score, 9)))
+        assert set(g) == set(w), n_shards
+        for qid in g:
+            assert sorted(g[qid]) == sorted(w[qid]), (n_shards, qid)
 
 
-def test_ql_theta0_seed_deepens_pruning_and_preserves_topk():
-    """An external theta0 (another shard's k-th score) must only DEEPEN
-    QL run skipping, never change results."""
-    from simplir_spark.operators.query_indexed import score_query_runs_ql
-
-    rng = np.random.RandomState(11)
-    n_docs, run_size = 4000, 128
-    rows = []
-    for term, df_sel, tf_hi in [("common", np.arange(n_docs), 3), ("rare", np.arange(0, 160, 8), 40)]:
-        dids = np.asarray(df_sel, dtype=np.int64)
-        tfs = rng.randint(1, tf_hi + 1, size=len(dids)).astype(np.int64)
-        dls = np.full(len(dids), 80, dtype=np.int64)
-        for s in range(0, len(dids), run_size):
-            e = min(s + run_size, len(dids))
-            rows.append({"term": term, **codec.encode_run(dids[s:e], tfs[s:e], dls[s:e])})
-    runs = pd.DataFrame(rows)
-    term_w = {"common": 1.0, "rare": 1.0}
-    term_bg = {"common": 0.02, "rare": 0.0002}
-
-    base_cnt = [0, 0]
-    d0, s0 = score_query_runs_ql(runs, term_w, term_bg, 1000.0, 10, 0, n_docs, decode_counter=base_cnt)
-    # seed theta0 with the true 10th score: valid global lower bound
-    theta0 = float(s0[-1])
-    cnt = [0, 0]
-    d1, s1 = score_query_runs_ql(
-        runs, term_w, term_bg, 1000.0, 10, 0, n_docs, decode_counter=cnt, theta0=theta0
-    )
-    assert d1.tolist() == d0.tolist()
-    np.testing.assert_allclose(s1, s0, rtol=1e-12)
-    assert cnt[0] <= base_cnt[0]
-    assert cnt[0] < cnt[1]
-
-
-def test_ql_indexed_seeded_equals_unseeded(spark, index_dir, corpus_small):
-    """End-to-end: seeded sharded QL == unseeded == scan ranking."""
+def test_indexed_rejects_k_below_one(spark, index_dir):
+    """k < 1 is rejected before any Spark job runs (the scorers' k-th
+    score lookup has no k-th element)."""
     from simplir_spark.operators.query_indexed import ql_dirichlet_indexed
 
-    queries = [q for q in QUERIES if q[0] not in ("Q08", "Q09", "Q14")][:5]
+    sc = spark.sparkContext
     idx = open_index(spark, index_dir)
-    unseeded = ql_dirichlet_indexed(
-        spark, idx, queries, k=10, n_shards=8, seed_threshold=False
-    ).collect()
-    seeded = ql_dirichlet_indexed(
-        spark, idx, queries, k=10, n_shards=8, seed_threshold=True
-    ).collect()
-    key = lambda rows: sorted((r.query_id, r.rank, r.doc_key, round(r.score, 9)) for r in rows)
-    assert key(seeded) == key(unseeded)
-
-
-def test_bm25_indexed_shard_grouping_rank_identical(spark, index_dir, oracle_idx):
-    """grouping='shard' (one group per did-shard, shared decode cache
-    across queries) must be rank-identical to the default query_shard
-    grouping and to the oracle."""
-    idx = open_index(spark, index_dir)
-    got = bm25_indexed(spark, idx, QUERIES, k=K, grouping="shard", n_shards=4).collect()
-    by_q: dict[str, list] = {}
-    for r in got:
-        by_q.setdefault(r.query_id, []).append(r)
-    for qid, terms in QUERIES:
-        want = bm25_topk(oracle_idx, terms, K)
-        have = sorted(by_q.get(qid, []), key=lambda r: r.rank)
-        assert [(r.rank, r.doc_key) for r in have] == [(rk, ky) for rk, ky, _ in want], qid
-        for r, (_, _, sc) in zip(have, want):
-            assert r.score == pytest.approx(sc, rel=REL_TOL)
-
-
-def test_decode_cache_shares_across_queries():
-    """The shared decode cache decodes a run once even when several
-    queries' scoring passes touch it."""
-    from simplir_spark.operators.query_indexed import score_query_runs
-
-    rng = np.random.RandomState(3)
-    dids = np.arange(0, 500, dtype=np.int64)
-    tfs = rng.randint(1, 4, size=len(dids)).astype(np.int64)
-    dls = np.full(len(dids), 60, dtype=np.int64)
-    run = codec.encode_run(dids, tfs, dls)
-    runs = pd.DataFrame([{"term": "shared", "df": len(dids), **run}])
-    cache: dict = {}
-    d1, s1 = score_query_runs(runs, 500, 60.0, 10, did_lo=0, did_hi=500, decode_cache=cache)
-    assert len(cache) == 1
-    key = next(iter(cache))
-    first = cache[key]
-    d2, s2 = score_query_runs(runs, 500, 60.0, 10, did_lo=0, did_hi=500, decode_cache=cache)
-    assert cache[key] is first  # reused, not re-decoded
-    assert d1.tolist() == d2.tolist()
-    np.testing.assert_allclose(s1, s2, rtol=0)
-
-
-def test_ql_indexed_shard_grouping_matches_query_shard(spark, index_dir, corpus_small):
-    """QL grouping='shard' (shared decode cache across queries) is
-    rank-identical to the default grouping and the scan scorer."""
-    from simplir_spark.operators.query_indexed import ql_dirichlet_indexed
-
-    queries = [q for q in QUERIES if q[0] not in ("Q08", "Q09", "Q14")][:6]
-    idx = open_index(spark, index_dir)
-    a = ql_dirichlet_indexed(spark, idx, queries, k=10).collect()
-    b = ql_dirichlet_indexed(spark, idx, queries, k=10, grouping="shard", n_shards=4).collect()
-    key = lambda rows: sorted((r.query_id, r.rank, r.doc_key, round(r.score, 9)) for r in rows)
-    assert key(a) == key(b)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    last = max([-1, *sc.statusTracker().getJobIdsForGroup(None)])
+    for fn in (bm25_indexed, ql_dirichlet_indexed):
+        for k in (0, -1):
+            with pytest.raises(ValueError, match="k must be >= 1"):
+                fn(spark, idx, QUERIES[:2], k=k)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert max([-1, *sc.statusTracker().getJobIdsForGroup(None)]) == last
 
 
 def test_cache_registry_concurrent_register(spark):
@@ -1021,11 +882,11 @@ def test_cache_registry_keeps_shared_cache(spark):
         d.unpersist()
 
 
-def test_hot_query_shard_mass_balance(spark, tmp_path):
+def test_hot_query_shard_mass_balance(spark, tmp_path, monkeypatch):
     """Query-side skew (VERDICT r4 #6): a term with df = 50% of docs must
     spread its posting mass evenly across did-range shards (runs are
-    bounded-width did ranges over a dense id space), and the two scoring
-    groupings must be rank-identical on a batch where EVERY query carries
+    bounded-width did ranges over a dense id space), and 8 shards must
+    return the same rows as 1 shard on a batch where EVERY query carries
     the hot term."""
     from pyspark.sql import functions as F
 
@@ -1063,17 +924,11 @@ def test_hot_query_shard_mass_balance(spark, tmp_path):
     assert max(masses) <= 3 * mean, masses
 
     queries = [(f"H{i}", ["hotterm", w]) for i, w in enumerate(fill)]
-    a = sorted(
-        tuple(r)
-        for r in bm25_indexed(spark, idx, queries, k=10, grouping="query_shard")
-        .select("query_id", "doc_key", "rank").collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in bm25_indexed(spark, idx, queries, k=10, grouping="shard")
-        .select("query_id", "doc_key", "rank").collect()
-    )
-    assert a == b and len(a) == 40
+    rows = {}
+    for n in (n_shards, 1):
+        _force_shards(monkeypatch, n)
+        rows[n] = sorted(tuple(r) for r in bm25_indexed(spark, idx, queries, k=10).collect())
+    assert rows[n_shards] == rows[1] and len(rows[1]) == 40
 
 
 # ---------------------------------------------------------------------------
@@ -1244,16 +1099,20 @@ def test_finish_serving_matches_bulk(spark, index_dir, monkeypatch):
     <= _RESOLVE_ISIN_MAX) ranks the candidates on the driver and returns
     a local relation; with the cap forced to 0 every request takes the
     bulk finish (window rank + lazy docmeta join).  Rows must be
-    identical for BM25 query_shard, BM25 grouping="shard" and QL."""
+    identical for BM25, BM25 over 4 forced shards and QL."""
     import simplir_spark.operators.query_indexed as qi
 
     idx = open_index(spark, index_dir)
     queries = [("q1", ["hash", "join"]), ("q2", ["customer", "order"]), ("q3", ["zzabsent"])]
+
+    def bm25_4_shards():
+        with monkeypatch.context() as m:
+            _force_shards(m, 4)
+            return qi.bm25_indexed(spark, idx, queries, k=10)
+
     requests = {
         "bm25": lambda: qi.bm25_indexed(spark, idx, queries, k=10),
-        "bm25_shard": lambda: qi.bm25_indexed(
-            spark, idx, queries, k=10, grouping="shard", n_shards=4
-        ),
+        "bm25_4_shards": bm25_4_shards,
         "ql": lambda: qi.ql_dirichlet_indexed(spark, idx, queries, k=10),
     }
 
