@@ -364,9 +364,8 @@ def pos_codes_core(
     """Positional twin of :func:`tf_codes_core`: per-OCCURRENCE output.
 
     Keeps every occurrence whose normalized term is non-empty, in the
-    original raw-token order (tokenize_pos_batch semantics: Position is
-    the index over the pre-normalization-drop token stream,
-    Tokenise.hs:46-82).  Returns ``(codes_kept, norm_vocab, pos_kept,
+    original raw-token order (Position is the index over the
+    pre-normalization-drop token stream, Tokenise.hs:46-82).  Returns ``(codes_kept, norm_vocab, pos_kept,
     kept_doc_ix, doc_len, dl_alnum)`` — occurrence i's term is
     ``norm_vocab[codes_kept[i]]``, its position ``pos_kept[i]``.
     """
@@ -449,62 +448,6 @@ def with_tokens(
     return out
 
 
-TOKENIZE_POS_RESULT_TYPE = T.StructType(
-    [
-        T.StructField("terms", T.ArrayType(T.StringType()), False),
-        T.StructField("positions", T.ArrayType(T.IntegerType()), False),
-        T.StructField("doc_len", T.IntegerType(), False),
-        T.StructField("doc_len_alnum", T.IntegerType(), False),
-    ]
-)
-
-
-def tokenize_pos_batch(texts: pd.Series) -> pd.DataFrame:
-    """Like tokenize_batch but also returns each surviving term's RAW token
-    index (Position.tokenN over the pre-normalization token stream,
-    Tokenise.hs:46-82 + normTerms keeping original positions)."""
-    texts = texts.fillna("")
-    raw = texts.str.translate(_KILL_TABLE).str.split()
-    n_docs = len(texts)
-    lens = np.fromiter((len(t) for t in raw), dtype=np.int64, count=n_docs)
-    total = int(lens.sum())
-    if total == 0:
-        return pd.DataFrame(
-            {
-                "terms": [[] for _ in range(n_docs)],
-                "positions": [[] for _ in range(n_docs)],
-                "doc_len": np.zeros(n_docs, dtype=np.int32),
-                "doc_len_alnum": np.zeros(n_docs, dtype=np.int32),
-            }
-        )
-    from itertools import chain
-
-    all_toks = np.fromiter(chain.from_iterable(raw), dtype=object, count=total)
-    doc_ix = np.repeat(np.arange(n_docs), lens)
-    offsets = np.concatenate(([0], np.cumsum(lens)))[:-1]
-    raw_pos = (np.arange(total) - offsets[doc_ix]).astype(np.int32)
-
-    inv, uniq = _factorize_tokens(all_toks, texts)
-    norm_all = _norm_unique(uniq)[inv]
-    alnum_all = _alnum_unique(uniq)[inv]
-    dl_alnum = np.bincount(doc_ix[alnum_all], minlength=n_docs).astype(np.int32)
-
-    keep = norm_all != ""
-    kept_docs = doc_ix[keep]
-    doc_len = np.bincount(kept_docs, minlength=n_docs).astype(np.int32)
-    bounds = np.cumsum(doc_len)[:-1]
-    term_lists = [list(a) for a in np.split(norm_all[keep], bounds)]
-    pos_lists = [a.tolist() for a in np.split(raw_pos[keep], bounds)]
-    return pd.DataFrame(
-        {"terms": term_lists, "positions": pos_lists, "doc_len": doc_len, "doc_len_alnum": dl_alnum}
-    )
-
-
-@F.pandas_udf(TOKENIZE_POS_RESULT_TYPE)
-def tokenize_pos_udf(texts: pd.Series) -> pd.DataFrame:
-    return tokenize_pos_batch(texts)
-
-
 # --------------------------------------------------------------------------
 # Per-document term frequencies, vectorized.
 # --------------------------------------------------------------------------
@@ -541,38 +484,3 @@ def term_tfs_batch(term_lists: pd.Series) -> pd.Series:
 @F.pandas_udf(TERM_TF_TYPE)
 def term_tfs_udf(term_lists: pd.Series) -> pd.Series:
     return term_tfs_batch(term_lists)
-
-
-TERM_TF_POS_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("term", T.StringType(), False),
-            T.StructField("tf", T.LongType(), False),
-            T.StructField("positions", T.ArrayType(T.IntegerType()), False),
-        ]
-    )
-)
-
-
-@F.pandas_udf(TERM_TF_POS_TYPE)
-def term_tf_positions_udf(term_lists: pd.Series, pos_lists: pd.Series) -> pd.Series:
-    """Per-doc (term, tf, sorted positions) — the positional-payload analog
-    of term_tfs_udf (accumPositions, Tokenise.hs:101-105)."""
-    out = []
-    for terms, poss in zip(term_lists, pos_lists):
-        if terms is None or len(terms) == 0:
-            out.append([])
-            continue
-        arr = np.asarray(terms, dtype=object)
-        p = np.asarray(poss, dtype=np.int64)
-        order = np.argsort(arr, kind="stable")
-        arr_s, p_s = arr[order], p[order]
-        u, starts = np.unique(arr_s, return_index=True)
-        ends = np.append(starts[1:], len(arr_s))
-        out.append(
-            [
-                (t, int(e - s), sorted(int(x) for x in p_s[s:e]))
-                for t, s, e in zip(u, starts, ends)
-            ]
-        )
-    return pd.Series(out)

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 import math
 
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -134,10 +136,10 @@ def _eval_coordinate_steps(
             rows.append((si, float(w[j] + s)))
     if not cands:
         return {}, {}
-    from simplir_spark.localdf import local_rows_df
-
-    # LocalRelation: the per-coordinate candidate grid broadcasts with no job
-    cand = local_rows_df(spark, rows, "cand_id int, wj double")
+    # an Arrow table becomes a LocalRelation: the per-coordinate candidate
+    # grid broadcasts with no job
+    cand_table = pa.Table.from_pandas(pd.DataFrame(rows, columns=["cand_id", "wj"]), preserve_index=False)
+    cand = spark.createDataFrame(cand_table, "cand_id int, wj double")
     w_arr = F.array([F.lit(float(x)) for x in w])
     fj = F.element_at("features", j + 1)
     base = features.select(

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -103,9 +104,10 @@ def phrase_match_positional(
     _, span = _did_shards(spark, len(phrases), index.doc_count)
 
     rows = [(pid, t, j) for pid, p in phrases for j, t in enumerate(p)]
-    from simplir_spark.localdf import local_rows_df
-
-    pdf_phrases = local_rows_df(spark, rows, "phrase_id string, term string, term_ix int")
+    phrase_table = pa.Table.from_pandas(
+        pd.DataFrame(rows, columns=["phrase_id", "term", "term_ix"]), preserve_index=False
+    )
+    pdf_phrases = spark.createDataFrame(phrase_table, "phrase_id string, term string, term_ix int")
     matched = _route_runs(post.join(F.broadcast(pdf_phrases), "term"), span).select(
         "phrase_id", "shard", "term_ix", "term", "start_did", "n",
         "deltas", "tfs", "dls", "pos",

@@ -16,6 +16,8 @@ are broadcast.
 
 from __future__ import annotations
 
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -32,7 +34,6 @@ from simplir_spark.functions.scoring import (
     tfidf_term_score,
 )
 from simplir_spark.cacheutil import CacheRegistry
-from simplir_spark.localdf import local_rows_df
 from simplir_spark.operators.stats import doc_term_tfs_fused, term_stats
 
 # Bounded eviction for the per-call pairs/stats caches: repeated scan
@@ -63,9 +64,10 @@ def queries_df(spark: SparkSession, queries: list[tuple[str, list[str]]]) -> Dat
     twice — set semantics here is a correctness invariant, not tidiness.
     """
     rows = sorted({(qid, t) for qid, terms in queries for t in terms})
-    # LocalRelation: broadcasts of the query table fold driver-side with
-    # no Python job (localdf module docstring)
-    return local_rows_df(spark, rows, "query_id string, term string")
+    # an Arrow table becomes a LocalRelation, so broadcasts of the query
+    # table fold on the driver with no job
+    table = pa.Table.from_pandas(pd.DataFrame(rows, columns=["query_id", "term"]), preserve_index=False)
+    return spark.createDataFrame(table, "query_id string, term string")
 
 
 def topk_ranked(scored: DataFrame, k: int, doc_col: str = "doc_key") -> DataFrame:
@@ -135,7 +137,10 @@ def bm25_scan(
         for qid, terms in queries
         for t in sorted(set(terms))
     ]
-    qdf_qtf = local_rows_df(spark, qtf_rows, "query_id string, term string, qtf long")
+    qtf_table = pa.Table.from_pandas(
+        pd.DataFrame(qtf_rows, columns=["query_id", "term", "qtf"]), preserve_index=False
+    )
+    qdf_qtf = spark.createDataFrame(qtf_table, "query_id string, term string, qtf long")
     # stats only for query terms — the analog of the reference's upfront
     # background-stats memoization (Search.hs:253-260); filtering pairs by
     # term first leaves cf/df values identical to the full aggregation.

@@ -23,7 +23,8 @@ Plan shape:
   cap, ranks with a window and joins docmeta lazily on the cluster.
   No intermediate is cached.
 
-The scorer is document-at-a-time over decoded runs (collectPostings'
+One kernel, ``_daat_topk``, scores every (query, did-shard) group for
+both models.  It is document-at-a-time over decoded runs (collectPostings'
 k-way union, Posting2/Collect.hs:53-82, vectorized) with an exact
 block-max skip rule in the spirit of Block-Max WAND [Ding & Suel 2011]
 and the reference's lazily-thresholded top-k fold (TopK.hs:36-70):
@@ -37,9 +38,19 @@ and the reference's lazily-thresholded top-k fold (TopK.hs:36-70):
 Skipping is score-preserving for the returned top-k: any doc in the final
 top-k is live at every step (its partial score + remaining potential
 bounds its final score from above), so all its runs are decoded.
+
+A model is a small adapter (``_Model``), as a RetrievalModel is in the
+reference (SimpleIndex.hs:159-165): its per-term upper bound, its
+per-posting contribution into a dense accumulator over the shard's did
+range, the score of the seen docs, the bound of an unseen doc and whether
+pruning holds.  ``score_query_runs`` (BM25) and ``score_query_runs_ql``
+(Dirichlet QL) build the two adapters.
 """
 
 from __future__ import annotations
+
+import math
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -99,11 +110,100 @@ def _route_runs(runs: DataFrame, span: int) -> DataFrame:
     )
 
 
-def _bm25_contrib(tfs: np.ndarray, dls: np.ndarray, idf: float,
-                  avg_doc_len: float, k1: float, b: float) -> np.ndarray:
-    tf = tfs.astype(np.float64)
-    denom = tf + k1 * (1.0 - b + b * dls.astype(np.float64) / avg_doc_len)
-    return idf * tf * (k1 + 1.0) / denom
+_NO_HITS = (np.zeros(0, dtype=np.int64), np.zeros(0))
+
+
+class _Model(NamedTuple):
+    """What a retrieval model supplies to ``_daat_topk``.
+
+    ``ub(term, max_tf)`` bounds one posting's contribution from above,
+    given its run's ``max_tf``; ``add(term, off, tfs, dls)`` adds the
+    postings at shard offsets ``off`` (each offset at most once per term)
+    to the model's dense accumulator; ``scores(ix)`` is the current score
+    of the seen docs at offsets ``ix``; ``unseen(rest)`` bounds the score
+    of a doc no term has matched yet, ``rest`` being the upper bounds of
+    the terms still to come; ``prune`` is False when a partial score is
+    not a lower bound of the final score, and then every run is decoded.
+    """
+
+    ub: Callable[[str, float], float]
+    add: Callable[[str, np.ndarray, np.ndarray, np.ndarray], None]
+    scores: Callable[[np.ndarray], np.ndarray]
+    unseen: Callable[[float], float]
+    prune: bool
+
+
+def _daat_topk(
+    runs: pd.DataFrame, k: int, lo: int, hi: int, model: _Model, decode_counter: list | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """Top-k (dids, scores) of one query's posting ``runs`` over the dids
+    in [lo, hi), scored by ``model``: the block-max DAAT loop of both
+    retrieval models (see the module docstring for the skip rule).
+
+    Every run overlapping [lo, hi) must be present; postings outside it
+    are dropped after decode.  A term's runs have disjoint did ranges, so
+    a doc gets at most one ``add`` per term, in descending-upper-bound
+    term order.  Ties rank by did ascending.  ``decode_counter`` (tests)
+    receives [decoded_runs, total_runs].
+    """
+    if len(runs) == 0:
+        return _NO_HITS
+    terms = runs["term"].to_numpy()
+    by_term = {t: runs[terms == t].sort_values("start_did") for t in pd.unique(runs["term"])}
+    ub = {t: model.ub(t, float(trun["max_tf"].max())) for t, trun in by_term.items()}
+    order = sorted(by_term, key=lambda t: -ub[t])
+    rest_after = {}
+    acc = 0.0
+    for t in reversed(order):
+        acc += ub[t]
+        rest_after[t] = acc  # ub of t + all later terms
+
+    seen = np.zeros(hi - lo, dtype=bool)
+    seen_count = 0
+    decoded = 0
+    for t in order:
+        rest = rest_after[t]
+        trun = by_term[t]
+        decode_mask = np.ones(len(trun), dtype=bool)
+        # theta exists once k docs are seen
+        if model.prune and seen_count >= k:
+            ix = np.nonzero(seen)[0]
+            scores = model.scores(ix)
+            theta = float(np.partition(scores, -k)[-k])
+            # Skip a run's unseen docs only when theta beats their bound
+            # STRICTLY: with b=0 the BM25 upper bound (dl->0) is exact at
+            # tf==max_tf, so a doc scoring exactly theta is attainable and
+            # the did tie-break could place it in the top-k.
+            if theta > model.unseen(rest):
+                # then only runs overlapping live candidates matter
+                live = (ix + lo)[scores + rest >= theta]
+                starts = trun["start_did"].to_numpy(dtype=np.int64)
+                ends = trun["end_did"].to_numpy(dtype=np.int64)
+                first = np.searchsorted(live, starts, side="left")
+                decode_mask = np.searchsorted(live, ends, side="right") > first
+
+        for row, dec in zip(trun.itertuples(index=False), decode_mask):
+            if not dec:
+                continue
+            decoded += 1
+            dids, tfs, dls = codec.decode_run(row.start_did, row.n, row.deltas, row.tfs, row.dls)
+            m = (dids >= lo) & (dids < hi)
+            if not m.any():
+                continue
+            off = dids[m] - lo
+            model.add(t, off, tfs[m], dls[m])
+            seen_count += int(np.count_nonzero(~seen[off]))
+            seen[off] = True
+
+    if decode_counter is not None:
+        decode_counter[:] = [decoded, len(runs)]
+    ix = np.nonzero(seen)[0]
+    if len(ix) == 0:
+        return _NO_HITS
+    scores = model.scores(ix)
+    dids = ix + lo
+    sel = np.lexsort((dids, -scores))[:k]
+    return dids[sel], scores[sel]
 
 
 def score_query_runs(
@@ -117,131 +217,36 @@ def score_query_runs(
     did_lo: int | None = None,
     did_hi: int | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Score one query's posting runs; returns (top dids, top scores).
+    """BM25 top-k of one query's posting runs; returns (top dids, top
+    scores).  The BM25 adapter of ``_daat_topk``: a posting scores
+    idf·tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) into a dense accumulator
+    over the did range; the term upper bound takes tf=max_tf, dl→0.
 
     ``runs`` columns: term, start_did, end_did, n, max_tf, deltas, tfs, dls
     plus per-term ``df``.  ``decode_counter`` (tests) receives
     [decoded_runs, total_runs].  ``did_lo``/``did_hi`` restrict scoring to
     dids in [lo, hi) — the shard contract: every run overlapping the range
-    must be present, postings outside it are dropped after decode.
+    must be present, postings outside it are dropped after decode.  They
+    default to the whole index, [0, doc_count).
     """
-    if len(runs) == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(0)
+    lo = 0 if did_lo is None else did_lo
+    hi = doc_count if did_hi is None else did_hi
+    idf = {
+        t: float(np.log(1.0 + (doc_count - int(df_t) + 0.5) / (int(df_t) + 0.5)))
+        for t, df_t in runs.drop_duplicates("term")[["term", "df"]].itertuples(index=False)
+    }
+    acc = np.zeros(hi - lo)
 
-    # per-term idf and upper bound (tf=max_tf, dl->0 maximizes the kernel)
-    terms = runs["term"].to_numpy()
-    uniq_terms = pd.unique(runs["term"])
-    idf_by_term = {}
-    ub_by_term = {}
-    for t in uniq_terms:
-        m = terms == t
-        df_t = int(runs.loc[m, "df"].iloc[0])
-        idf = float(np.log(1.0 + (doc_count - df_t + 0.5) / (df_t + 0.5)))
-        idf_by_term[t] = idf
-        max_tf = float(runs.loc[m, "max_tf"].max())
-        ub_by_term[t] = idf * max_tf * (k1 + 1.0) / (max_tf + k1 * (1.0 - b))
+    def ub(t: str, max_tf: float) -> float:
+        return idf[t] * max_tf * (k1 + 1.0) / (max_tf + k1 * (1.0 - b))
 
-    order = sorted(uniq_terms, key=lambda t: -ub_by_term[t])
-    rest_after = {}
-    acc = 0.0
-    for t in reversed(order):
-        acc += ub_by_term[t]
-        rest_after[t] = acc  # ub of t + all later terms
+    def add(t: str, off: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> None:
+        tf = tfs.astype(np.float64)
+        denom = tf + k1 * (1.0 - b + b * dls.astype(np.float64) / avg_doc_len)
+        acc[off] += idf[t] * tf * (k1 + 1.0) / denom
 
-    cand_dids = np.zeros(0, dtype=np.int64)
-    cand_scores = np.zeros(0)
-    decoded = 0
-    total = len(runs)
-
-    # dense shard-local accumulator: contiguous [did_lo, did_hi) ranges up
-    # to 4M docs score in O(postings) per term instead of the O(n log n)
-    # unique-merge (the sparse fallback for unbounded ranges)
-    span = (did_hi - did_lo) if (did_lo is not None and did_hi is not None) else None
-    dense = np.zeros(span) if span is not None and 0 < span <= (1 << 22) else None
-    seen = np.zeros(span, dtype=bool) if dense is not None else None
-
-    seen_count = 0
-    for t in order:
-        rest = rest_after[t]
-        if dense is not None and seen_count >= k:
-            # candidates only matter once pruning can engage (k docs
-            # seen, theta > -inf)
-            ix = np.nonzero(seen)[0]
-            cand_dids = ix + did_lo
-            cand_scores = dense[ix]
-        if len(cand_scores) >= k:
-            theta = float(np.partition(cand_scores, -k)[-k])
-        else:
-            theta = -np.inf
-        trun = runs[terms == t].sort_values("start_did")
-        idf = idf_by_term[t]
-
-        # Skip a run's unseen docs only when rest < theta STRICTLY: with
-        # b=0 the per-term upper bound (dl->0) is exact at tf==max_tf, so
-        # a doc scoring exactly theta is attainable and the did tie-break
-        # could place it in the top-k — non-strict pruning would drop it.
-        if theta <= rest:
-            decode_mask = np.ones(len(trun), dtype=bool)
-        else:
-            # only runs overlapping live candidates matter
-            live = cand_dids[cand_scores + rest >= theta]
-            starts = trun["start_did"].to_numpy(dtype=np.int64)
-            ends = trun["end_did"].to_numpy(dtype=np.int64)
-            if len(live) == 0:
-                decode_mask = np.zeros(len(trun), dtype=bool)
-            else:
-                lo = np.searchsorted(live, starts, side="left")
-                hi = np.searchsorted(live, ends, side="right")
-                decode_mask = hi > lo
-
-        new_dids = []
-        new_contribs = []
-        for row, dec in zip(trun.itertuples(index=False), decode_mask):
-            if not dec:
-                continue
-            decoded += 1
-            dids, tfs, dls = codec.decode_run(
-                row.start_did, row.n, row.deltas, row.tfs, row.dls
-            )
-            if did_lo is not None or did_hi is not None:
-                m = np.ones(len(dids), dtype=bool)
-                if did_lo is not None:
-                    m &= dids >= did_lo
-                if did_hi is not None:
-                    m &= dids < did_hi
-                dids, tfs, dls = dids[m], tfs[m], dls[m]
-                if len(dids) == 0:
-                    continue
-            new_dids.append(dids)
-            new_contribs.append(_bm25_contrib(tfs, dls, idf, avg_doc_len, k1, b))
-        if new_dids:
-            nd = np.concatenate(new_dids)
-            nc = np.concatenate(new_contribs)
-            if dense is not None:
-                # O(n) accumulate into the shard-local dense array
-                # (nd unique within a term: runs have disjoint did ranges)
-                off = nd - did_lo
-                seen_count += int(np.count_nonzero(~seen[off]))
-                np.add.at(dense, off, nc)
-                seen[off] = True
-            else:
-                all_dids = np.concatenate([cand_dids, nd])
-                all_scores = np.concatenate([cand_scores, nc])
-                cand_dids, inv = np.unique(all_dids, return_inverse=True)
-                cand_scores = np.bincount(inv, weights=all_scores)
-
-    if decode_counter is not None:
-        decode_counter[:] = [decoded, total]
-
-    if dense is not None:
-        ix = np.nonzero(seen)[0]
-        cand_dids = ix + did_lo
-        cand_scores = dense[ix]
-
-    if len(cand_dids) == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(0)
-    sel = np.lexsort((cand_dids, -cand_scores))[:k]
-    return cand_dids[sel], cand_scores[sel]
+    model = _Model(ub, add, lambda ix: acc[ix], lambda rest: rest, True)
+    return _daat_topk(runs, k, lo, hi, model, decode_counter)
 
 
 def score_query_runs_ql(
@@ -254,24 +259,21 @@ def score_query_runs_ql(
     did_hi: int,
     decode_counter: list | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Dirichlet-QL DAAT scoring with block-max run skipping — the QL
-    analog of ``score_query_runs``.
+    """Dirichlet-QL top-k of one query's posting runs in [did_lo, did_hi)
+    — the QL adapter of ``_daat_topk``.
 
     Decomposition (see ``ql_dirichlet_indexed``):
         score(d) = C0 + corr(d) - Q * ln(dl_d + mu)
     where every per-term corr contribution is STRICTLY POSITIVE
     (w*(ln(tf+mu*bg)-ln(mu*bg)) > 0 for tf >= 1), so a seen doc's partial
-    score is a valid lower bound of its final score and the BM25-style
-    threshold logic transfers:
+    score is a valid lower bound of its final score and the kernel's
+    threshold logic holds:
       * per-term upper bound ub_t = w_t*(ln(max_tf_t+mu*bg_t)-ln(mu*bg_t));
-      * terms processed in descending ub order; rest = ub of the current
-        and all later terms;
-      * an UNSEEN doc's best case is C0 + rest - Q*ln(0+mu) (dl >= 0), so
-        runs not overlapping live candidates are skipped only when
-        theta > that bound STRICTLY (exact ties stay decodable — the same
-        b=0-style tie rule as BM25);
-      * a seen doc stays live while partial + rest >= theta (its dl is
-        known, the normalization is already in the partial).
+      * an UNSEEN doc's best case is C0 + rest - Q*ln(0+mu) (dl >= 0);
+      * a seen doc's partial score already holds its dl normalization
+        (a doc's dl is the same in every posting of it).
+    corr, each doc's dl and its count of cf=0 hits live in dense arrays
+    over the did range.
 
     Terms with cf = 0 (bg = 0) make matched docs lacking them score -inf,
     which breaks the partial-is-a-lower-bound invariant — pruning is
@@ -280,115 +282,45 @@ def score_query_runs_ql(
     Returns (dids, scores) of the shard-local top-k; ``decode_counter``
     (tests) receives [decoded_runs, total_runs].
     """
-    import math
-
-    if len(runs) == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(0)
-
-    q_terms = sorted(term_w)
     c0 = 0.0
     q_total = 0.0
-    for t in q_terms:
-        w = term_w[t]
-        q_total += w
+    for t in sorted(term_w):
+        q_total += term_w[t]
         if term_bg.get(t, 0.0) > 0:
-            c0 += w * math.log(mu * term_bg[t])
-    cf0_terms = [t for t in q_terms if term_bg.get(t, 0.0) <= 0]
-    pruning_ok = not cf0_terms
-
-    terms = runs["term"].to_numpy()
-    uniq_terms = pd.unique(runs["term"])
-    ub_by_term = {}
-    base_by_term = {}
-    for t in uniq_terms:
-        m = terms == t
-        bg = term_bg.get(t, 0.0)
-        w = term_w[t]
-        base_by_term[t] = math.log(mu * bg) if bg > 0 else 0.0
-        max_tf = float(runs.loc[m, "max_tf"].max())
-        if bg > 0:
-            ub_by_term[t] = w * (math.log(max_tf + mu * bg) - base_by_term[t])
-        else:
-            # unused when pruning is disabled, but keep it a finite bound
-            ub_by_term[t] = w * max(math.log(max(max_tf, 1.0)), 0.0)
-
-    order = sorted(uniq_terms, key=lambda t: -ub_by_term[t])
-    rest_after = {}
-    acc = 0.0
-    for t in reversed(order):
-        acc += ub_by_term[t]
-        rest_after[t] = acc
+            c0 += term_w[t] * math.log(mu * term_bg[t])
+    n_cf0 = sum(1 for t in term_w if term_bg.get(t, 0.0) <= 0)
+    unseen_norm = q_total * math.log(mu)  # dl >= 0 maximizes -Q*ln(dl+mu)
 
     span = did_hi - did_lo
     corr = np.zeros(span)
-    dl_arr = np.zeros(span, dtype=np.int64)
-    seen = np.zeros(span, dtype=bool)
-    cf0_seen = np.zeros(span, dtype=np.int32)
-    seen_count = 0
-    decoded = 0
-    total = len(runs)
-    unseen_norm = q_total * math.log(mu)  # dl >= 0 maximizes -Q*ln(dl+mu)
+    dl = np.zeros(span, dtype=np.int64)
+    cf0_hits = np.zeros(span, dtype=np.int32)
 
-    for t in order:
-        rest = rest_after[t]
-        trun = runs[terms == t].sort_values("start_did")
-        w = term_w[t]
+    def ub(t: str, max_tf: float) -> float:
         bg = term_bg.get(t, 0.0)
-        base = base_by_term[t]
+        if bg > 0:
+            return term_w[t] * (math.log(max_tf + mu * bg) - math.log(mu * bg))
+        # unused when pruning is disabled, but keep it a finite bound
+        return term_w[t] * max(math.log(max(max_tf, 1.0)), 0.0)
 
-        if not pruning_ok or seen_count < k:
-            decode_mask = np.ones(len(trun), dtype=bool)
+    def add(t: str, off: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> None:
+        tf = tfs.astype(np.float64)
+        bg = term_bg.get(t, 0.0)
+        if bg > 0:
+            corr[off] += term_w[t] * (np.log(tf + mu * bg) - math.log(mu * bg))
         else:
-            ix = np.nonzero(seen)[0]
-            cand_scores = c0 + corr[ix] - q_total * np.log(dl_arr[ix] + mu)
-            theta = float(np.partition(cand_scores, -k)[-k])
-            if theta <= c0 + rest - unseen_norm:
-                decode_mask = np.ones(len(trun), dtype=bool)
-            else:
-                live = (ix + did_lo)[cand_scores + rest >= theta]
-                starts = trun["start_did"].to_numpy(dtype=np.int64)
-                ends = trun["end_did"].to_numpy(dtype=np.int64)
-                if len(live) == 0:
-                    decode_mask = np.zeros(len(trun), dtype=bool)
-                else:
-                    lo_i = np.searchsorted(live, starts, side="left")
-                    hi_i = np.searchsorted(live, ends, side="right")
-                    decode_mask = hi_i > lo_i
+            corr[off] += term_w[t] * np.log(tf)
+            cf0_hits[off] += 1
+        dl[off] = dls
 
-        for row, dec in zip(trun.itertuples(index=False), decode_mask):
-            if not dec:
-                continue
-            decoded += 1
-            dids, tfs, dls = codec.decode_run(
-                row.start_did, row.n, row.deltas, row.tfs, row.dls
-            )
-            m = (dids >= did_lo) & (dids < did_hi)
-            if not m.any():
-                continue
-            off = dids[m] - did_lo
-            tf = tfs[m].astype(np.float64)
-            if bg > 0:
-                corr[off] += w * (np.log(tf + mu * bg) - base)
-            else:
-                corr[off] += w * np.log(tf)
-                cf0_seen[off] += 1
-            dl_arr[off] = dls[m]
-            new = ~seen[off]
-            seen_count += int(np.count_nonzero(new))
-            seen[off] = True
+    def scores(ix: np.ndarray) -> np.ndarray:
+        s = c0 + corr[ix] - q_total * np.log(dl[ix] + mu)
+        if n_cf0:
+            s = np.where(cf0_hits[ix] == n_cf0, s, float("-inf"))
+        return s
 
-    if decode_counter is not None:
-        decode_counter[:] = [decoded, total]
-
-    ix = np.nonzero(seen)[0]
-    if len(ix) == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(0)
-    scores = c0 + corr[ix] - q_total * np.log(dl_arr[ix] + mu)
-    if cf0_terms:
-        scores = np.where(cf0_seen[ix] == len(cf0_terms), scores, float("-inf"))
-    dids_out = ix + did_lo
-    sel = np.lexsort((dids_out, -scores))[:k]
-    return dids_out[sel], scores[sel]
+    model = _Model(ub, add, scores, lambda rest: c0 + rest - unseen_norm, n_cf0 == 0)
+    return _daat_topk(runs, k, did_lo, did_hi, model, decode_counter)
 
 
 def _score_groups(
@@ -481,10 +413,13 @@ def _finish_topk(
     key_type = index.docmeta.schema["doc_key"].dataType.simpleString()
     schema = f"query_id string, doc_key {key_type}, rank int, score double"
     if len(top) == 0:
-        return spark.createDataFrame([], schema)
-    keys = _doc_keys(index, np.unique(top["did"].to_numpy()).tolist()).toArrow().to_pandas()
-    out = top.merge(keys, on="did")[["query_id", "doc_key", "rank", "score"]]
-    return spark.createDataFrame(pa.Table.from_pandas(out, preserve_index=False), schema)
+        out = top.assign(doc_key=[])
+    else:
+        keys = _doc_keys(index, np.unique(top["did"].to_numpy()).tolist()).toArrow().to_pandas()
+        out = top.merge(keys, on="did")
+    # an Arrow table becomes a LocalRelation, empty or not: no job at collect
+    out = pa.Table.from_pandas(out[["query_id", "doc_key", "rank", "score"]], preserve_index=False)
+    return spark.createDataFrame(out, schema)
 
 
 def _query_terms(queries: list[tuple[str, list[str]]]) -> list[str]:

@@ -115,23 +115,23 @@ def test_empty_and_absent_queries(spark, corpus_small):
     assert "Q09" not in qids  # sub-3-char term matches nothing
 
 
-def test_local_rows_df_roundtrip(spark):
-    # LocalRelation literal tables (localdf.py): exact value round-trip
-    # including quotes/newlines/unicode, typed columns, empty fallback
-    from simplir_spark.localdf import local_rows_df
+def test_queries_df_roundtrip(spark):
+    """The (query_id, term) table is an Arrow-built LocalRelation: exact
+    value round-trip including quotes/newlines/unicode, typed columns,
+    global (query_id, term) dedup, and still a LocalRelation past 2,048
+    rows."""
+    from simplir_spark.operators.query import queries_df
 
-    rows = [("Q'1\\x", "a\nb", 2), ("Q2", "t'erm", 3), ("Qé", "x", 0)]
-    df = local_rows_df(spark, rows, "query_id string, term string, qtf long")
-    assert "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
-    got = sorted(tuple(r) for r in df.collect())
-    assert got == sorted(rows)
-    assert [f.dataType.simpleString() for f in df.schema.fields] == [
-        "string", "string", "bigint"
-    ]
-    empty = local_rows_df(spark, [], "a string, b int")
-    assert empty.count() == 0 and empty.columns == ["a", "b"]
-    # a row longer or shorter than the schema falls back to
-    # createDataFrame and gets its length error, not an IndexError
-    for bad in ([("a", 1, 2)], [("a", 1), ("b",)]):
-        with pytest.raises(ValueError, match="LENGTH_MISMATCH"):
-            local_rows_df(spark, bad, "a string, b int")
+    def is_local(df):
+        return "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
+
+    queries = [("Q'1\\x", ["a\nb", "a\nb", "t'erm"]), ("Qé", ["çağrı", "x"]), ("Q'1\\x", ["z"])]
+    df = queries_df(spark, queries)
+    assert is_local(df)
+    assert [f.dataType.simpleString() for f in df.schema.fields] == ["string", "string"]
+    assert sorted(tuple(r) for r in df.collect()) == sorted(
+        {("Q'1\\x", "a\nb"), ("Q'1\\x", "t'erm"), ("Q'1\\x", "z"), ("Qé", "çağrı"), ("Qé", "x")}
+    )
+    big = queries_df(spark, [(f"q{i:04d}", [f"t{i}", "shared"]) for i in range(1100)])
+    assert is_local(big)
+    assert big.count() == 2200

@@ -13,6 +13,8 @@ import numpy as np
 import pandas as pd
 import duckdb
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from simplir_spark.functions import codec
@@ -409,6 +411,10 @@ EDGE_DOCS = [
     ("e11", "!!! stop ??? go ..."),
     ("e12", "x\x1cy\x1dz\x1ea\x1fb word"),
     ("e13", "word\x1c\x1dword foo\x1f"),
+    ("e14", "foo bar foo baz"),
+    ("e15", "a.b foo2 ... bar_baz qux"),
+    ("e16", ""),
+    ("e17", "ONE two THREE two"),
 ]
 
 
@@ -527,6 +533,22 @@ def test_bm25_indexed_request_job_count(spark, index_dir):
         jobs = {j for j in [*st.getJobIdsForGroup(group), *st.getJobIdsForGroup(None)] if j > last}
         assert rows
         assert len(jobs) <= 5, (n_queries, sorted(jobs))
+
+
+def test_indexed_no_match_collects_without_job(spark, index_dir):
+    """A request whose queries match nothing returns an empty local
+    relation: the collect after the call runs no Spark job."""
+    from simplir_spark.operators.query_indexed import ql_dirichlet_indexed
+
+    sc = spark.sparkContext
+    idx = open_index(spark, index_dir)
+    for fn in (bm25_indexed, ql_dirichlet_indexed):
+        df = fn(spark, idx, [("Q08", ["zebra"])], k=K)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        last = max([-1, *sc.statusTracker().getJobIdsForGroup(None)])
+        assert df.collect() == []
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert max([-1, *sc.statusTracker().getJobIdsForGroup(None)]) == last, fn.__name__
 
 
 def test_bucket_expr_forms_agree(spark):
@@ -779,6 +801,60 @@ def test_ql_pruning_disabled_for_cf0_terms():
     # are multiples of 5, docs with a are even -> finite = multiples of 10
     finite = [int(x) for x, sc in zip(d, s) if sc > float("-inf")]
     assert finite and all(x % 10 == 0 for x in finite)
+
+
+@st.composite
+def _kernel_case(draw):
+    """Random posting runs for 1-4 terms over a small did space, with
+    small tf and dl ranges so score ties occur (a doc's dl is the same in
+    every term's postings, as in an index), an optional [lo, hi)
+    sub-range and a small k inside it."""
+    n_docs = draw(st.integers(2, 60))
+    doc_len = np.array(draw(st.lists(st.integers(1, 3), min_size=n_docs, max_size=n_docs)))
+    rows = []
+    for ti in range(draw(st.integers(1, 4))):
+        dids = np.array(sorted(draw(st.sets(st.integers(0, n_docs - 1), min_size=1))), dtype=np.int64)
+        tfs = np.array(draw(st.lists(st.integers(1, 2), min_size=len(dids), max_size=len(dids))))
+        run_size = draw(st.integers(1, 8))
+        for s in range(0, len(dids), run_size):
+            sl = slice(s, s + run_size)
+            run = codec.encode_run(dids[sl], tfs[sl], doc_len[dids[sl]])
+            rows.append({"term": f"t{ti}", "df": len(dids), **run})
+    runs = pd.DataFrame(rows).sample(frac=1.0, random_state=draw(st.integers(0, 99)))
+    lo, hi = 0, n_docs
+    if draw(st.booleans()):
+        lo = draw(st.integers(0, n_docs - 1))
+        hi = draw(st.integers(lo + 1, n_docs))
+    return runs, n_docs, lo, hi, draw(st.integers(1, min(4, hi - lo)))
+
+
+@settings(max_examples=300, deadline=None, derandomize=True)
+@given(case=_kernel_case(), b=st.sampled_from([0.4, 0.0]), cf0=st.booleans())
+def test_daat_kernel_pruned_topk_equals_unpruned(case, b, cf0):
+    """Property of the one block-max kernel, under both models: the
+    pruned top-k equals the first k rows of the same kernel at
+    k = hi - lo (the full ranking of the range), same dids and
+    bit-identical scores, and every did lies in [lo, hi).  QL cases may
+    carry a cf=0 term (pruning off, -inf scores)."""
+    from simplir_spark.operators.query_indexed import score_query_runs_ql
+
+    runs, n_docs, lo, hi, k = case
+    terms = sorted(runs["term"].unique())
+    term_w = {t: float(1 + i % 2) for i, t in enumerate(terms)}
+    term_bg = {t: 0.0 if cf0 and i == 0 else 0.001 * (i + 1) for i, t in enumerate(terms)}
+
+    def bm25(kk):
+        return score_query_runs(runs, n_docs, 2.5, kk, 1.2, b, did_lo=lo, did_hi=hi)
+
+    def ql(kk):
+        return score_query_runs_ql(runs, term_w, term_bg, 10.0, kk, lo, hi)
+
+    for model in (bm25, ql):
+        d, s = model(k)
+        d_all, s_all = model(hi - lo)
+        assert d.tolist() == d_all[:k].tolist(), model.__name__
+        assert s.tolist() == s_all[:k].tolist(), model.__name__
+        assert ((d_all >= lo) & (d_all < hi)).all()
 
 
 def test_ql_indexed_small_k_matches_scan(spark, index_dir, corpus_small, monkeypatch):

@@ -8,26 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from simplir_spark.functions import codec
-from simplir_spark.functions.tokenize import tokenize_pos_batch
 from tests.oracle import oracle_positions
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_tokenize_pos_batch_matches_oracle():
-    import pandas as pd
-
-    texts = [
-        "foo bar foo baz",
-        "a.b foo2 ... bar_baz qux",
-        "",
-        "ONE two THREE two",
-    ]
-    out = tokenize_pos_batch(pd.Series(texts))
-    for i, t in enumerate(texts):
-        want = oracle_positions(t)
-        got = list(zip(out["terms"].iloc[i], out["positions"].iloc[i]))
-        assert got == want, (t, got, want)
 
 
 def test_positions_roundtrip_codec():
