@@ -30,6 +30,14 @@ wildly understates cluster scaling.  Corrections, all reported:
 
 Writes BENCH/BASELINE.md with files/sec at both widths and
   efficiency = throughput_hi / ((hi/lo) × throughput_lo).
+
+``query_sec`` times one ``bm25_indexed`` request over QUERIES on the
+fresh index.  On an index of at most 2^22 docs (the raw sf0.1 corpus)
+the driver serves that request, so ``query_sec`` measures the driver
+path and does not depend on the width; on the amplified corpus (5M docs
+at the default REPLICATE) the request takes the Spark path.  The
+query_sec values recorded before the driver path existed measured the
+Spark path at every size.
 """
 
 from __future__ import annotations

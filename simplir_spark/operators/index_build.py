@@ -55,9 +55,13 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1211,6 +1215,28 @@ class IndexHandle:
     @property
     def avg_doc_len(self) -> float:
         return self.token_count / self.doc_count if self.doc_count else 1.0
+
+    # Driver-side parts of the indexed request path (query_indexed), each
+    # built on its first use: opening, merging or compacting an index
+    # never pays for them.  Postings stay on disk and are read per request.
+
+    @cached_property
+    def postings_dataset(self) -> ds.Dataset:
+        """The postings as a pyarrow dataset, files discovered once."""
+        return ds.dataset(self.paths.postings, format="parquet")
+
+    @cached_property
+    def lexicon(self) -> dict[str, tuple[int, int]]:
+        """term -> (df, cf) of every indexed term (the reference's
+        in-memory term index, TermIndex.hs:26-34)."""
+        t = ds.dataset(self.paths.term_stats, format="parquet").to_table(columns=["term", "df", "cf"])
+        return dict(zip(t["term"].to_pylist(), zip(t["df"].to_pylist(), t["cf"].to_pylist())))
+
+    @cached_property
+    def doc_key_array(self) -> pa.Array:
+        """doc_key of every did, indexed by did (dids are dense)."""
+        t = ds.dataset(self.paths.docmeta, format="parquet").to_table(columns=["did", "doc_key"])
+        return t["doc_key"].take(pc.sort_indices(t["did"])).combine_chunks()
 
 
 def open_index(spark: SparkSession, root: str) -> IndexHandle:

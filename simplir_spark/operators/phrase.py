@@ -30,7 +30,12 @@ from pyspark.sql import functions as F
 
 from simplir_spark.functions import codec
 from simplir_spark.operators.index_build import IndexHandle
-from simplir_spark.operators.query_indexed import _did_shards, _route_runs
+from simplir_spark.operators.query_indexed import (
+    _did_shards,
+    _on_driver,
+    _read_runs,
+    _route_runs,
+)
 
 
 def phrase_match_scan(
@@ -78,27 +83,89 @@ def phrase_match_scan(
     return tokenized.mapInPandas(kernel, f"phrase_id string, {id_col} {id_type}, tf long")
 
 
+def _phrase_tfs(pdf: pd.DataFrame, m: int, lo: int, hi: int) -> tuple[list[int], list[int]]:
+    """(dids, phrase tfs) of one ``m``-term phrase over the dids in
+    [lo, hi): ``pdf`` holds the runs of the phrase's terms, ``term_ix``
+    being the term's place in the phrase (a term the phrase repeats has
+    its runs once per place).  Each place's position lists are decoded
+    and grouped by did, then intersected with +1 shifts."""
+    per_ix: list[dict[int, np.ndarray]] = [dict() for _ in range(m)]
+    for row in pdf.itertuples(index=False):
+        dids, tfs, _ = codec.decode_run(
+            row.start_did, row.n, bytes(row.deltas), bytes(row.tfs), bytes(row.dls)
+        )
+        plists = codec.decode_positions(bytes(row.pos), tfs)
+        d = per_ix[row.term_ix]
+        for did, pl in zip(dids.tolist(), plists):
+            if did < lo or did >= hi:
+                continue
+            prev = d.get(did)
+            d[did] = np.concatenate([prev, pl]) if prev is not None else np.asarray(pl)
+    out_did, out_tf = [], []
+    for did, p0 in per_ix[0].items():
+        cand = np.sort(p0)
+        for j in range(1, m):
+            nxt = per_ix[j].get(did)
+            if nxt is None:
+                cand = cand[:0]
+                break
+            cand = cand[np.isin(cand + 1, np.sort(nxt))] + 1
+            if len(cand) == 0:
+                break
+        if len(cand):
+            out_did.append(did)
+            out_tf.append(len(cand))
+    return out_did, out_tf
+
+
+_PHRASE_COLS = ("start_did", "n", "deltas", "tfs", "dls", "pos")
+_PHRASE_SCHEMA = "phrase_id string, did long, tf long"
+
+
 def phrase_match_positional(
     spark: SparkSession,
     index: IndexHandle,
     phrases: list[tuple[str, list[str]]],
 ) -> DataFrame:
     """(phrase_id, did, tf) via the positional index: decode each phrase
-    term's runs, group by did, intersect position lists with +1 shifts.
+    term's runs, group by did, intersect position lists with +1 shifts
+    (``_phrase_tfs``).  Adjacency is in raw tokenN space (see module
+    docstring).
 
-    Plan: postings scan pruned to the phrase terms (parquet pushdown) →
-    runs routed to every did-range shard they overlap (the indexed
-    scorers' ``_did_shards`` / ``_route_runs``) → per-(phrase, shard)
-    applyInPandas intersection (a doc's complete position data lives in
-    one shard, so shard outputs union exactly).  Bounds per-task
-    memory to one shard's postings — a phrase containing a common term
-    never lands corpus-wide in a single task.  Adjacency is in raw tokenN
-    space (see module docstring).
+    The indexed scorers' path rule (``query_indexed._on_driver``) picks
+    where it runs.  On the driver: one pushdown read of the phrase
+    terms' runs, each phrase intersected over the whole did range, and an
+    Arrow-built LocalRelation returned — no Spark job.  On Spark: the
+    postings scan pruned to the phrase terms → runs routed to every
+    did-range shard they overlap (``_did_shards`` / ``_route_runs``) →
+    per-(phrase, shard) applyInPandas intersection (a doc's complete
+    position data lives in one shard, so shard outputs union exactly),
+    which bounds per-task memory to one shard's postings.
     """
-    terms_needed = sorted({t for _, p in phrases for t in p})
-    post = index.postings.filter(F.col("term").isin(terms_needed))
-    if "pos" not in post.columns:
+    if "pos" not in index.postings.columns:
         raise ValueError("index was not built with_positions=True")
+    terms_needed = sorted({t for _, p in phrases for t in p})
+    if _on_driver(index, phrases):
+        runs = _read_runs(index, terms_needed, _PHRASE_COLS)
+        out = {"phrase_id": [], "did": [], "tf": []}
+        for pid, p in phrases:
+            if not p:
+                continue
+            by_ix = [runs[runs["term"] == t].assign(term_ix=j) for j, t in enumerate(p)]
+            dids, tfs = _phrase_tfs(pd.concat(by_ix), len(p), 0, index.doc_count)
+            out["phrase_id"] += [pid] * len(dids)
+            out["did"] += dids
+            out["tf"] += tfs
+        table = pa.table(
+            {
+                "phrase_id": pa.array(out["phrase_id"], pa.string()),
+                "did": pa.array(out["did"], pa.int64()),
+                "tf": pa.array(out["tf"], pa.int64()),
+            }
+        )
+        return spark.createDataFrame(table, _PHRASE_SCHEMA)
+
+    post = index.postings.filter(F.col("term").isin(terms_needed))
     # same span floor as the scorers: runs span many dids, narrow
     # shards duplicate every run (see query_indexed._MIN_SHARD_SPAN)
     _, span = _did_shards(spark, len(phrases), index.doc_count)
@@ -109,58 +176,23 @@ def phrase_match_positional(
     )
     pdf_phrases = spark.createDataFrame(phrase_table, "phrase_id string, term string, term_ix int")
     matched = _route_runs(post.join(F.broadcast(pdf_phrases), "term"), span).select(
-        "phrase_id", "shard", "term_ix", "term", "start_did", "n",
-        "deltas", "tfs", "dls", "pos",
+        "phrase_id", "shard", "term_ix", "term", *_PHRASE_COLS
     )
     phrase_len = {pid: len(p) for pid, p in phrases}
 
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pid = pdf["phrase_id"].iloc[0]
-        shard = int(pdf["shard"].iloc[0])
-        lo, hi = shard * span, (shard + 1) * span
-        m = phrase_len[pid]
-        # positions per (term_ix, did): dict did -> list of position arrays
-        per_ix: list[dict[int, np.ndarray]] = [dict() for _ in range(m)]
-        for row in pdf.itertuples(index=False):
-            dids, tfs, _ = codec.decode_run(
-                row.start_did, row.n, bytes(row.deltas), bytes(row.tfs), bytes(row.dls)
-            )
-            plists = codec.decode_positions(bytes(row.pos), tfs)
-            d = per_ix[row.term_ix]
-            for did, pl in zip(dids.tolist(), plists):
-                if did < lo or did >= hi:
-                    continue
-                prev = d.get(did)
-                d[did] = np.concatenate([prev, pl]) if prev is not None else np.asarray(pl)
-        out_did, out_tf = [], []
-        first = per_ix[0]
-        for did, p0 in first.items():
-            cand = np.sort(p0)
-            ok = True
-            for j in range(1, m):
-                nxt = per_ix[j].get(did)
-                if nxt is None:
-                    ok = False
-                    break
-                nxt = np.sort(nxt)
-                cand = cand[np.isin(cand + 1, nxt)] + 1
-                if len(cand) == 0:
-                    ok = False
-                    break
-            if ok and len(cand):
-                out_did.append(did)
-                out_tf.append(len(cand))
+        lo = int(pdf["shard"].iloc[0]) * span
+        dids, tfs = _phrase_tfs(pdf, phrase_len[pid], lo, lo + span)
         return pd.DataFrame(
             {
                 "phrase_id": pid,
-                "did": np.asarray(out_did, dtype=np.int64),
-                "tf": np.asarray(out_tf, dtype=np.int64),
+                "did": np.asarray(dids, dtype=np.int64),
+                "tf": np.asarray(tfs, dtype=np.int64),
             }
         )
 
-    return matched.groupBy("phrase_id", "shard").applyInPandas(
-        score_group, "phrase_id string, did long, tf long"
-    )
+    return matched.groupBy("phrase_id", "shard").applyInPandas(score_group, _PHRASE_SCHEMA)
 
 
 def phrase_unit_rows(

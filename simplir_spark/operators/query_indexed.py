@@ -3,33 +3,46 @@ block-max pruning, for BM25 and Dirichlet QL.
 
 One planner, ``_indexed_topk``, runs every request, as the reference runs
 every retrieval model through one scorer and one top-k fold
-(SimpleIndex.hs:159-165, TopK.hs:36-70).  The model wrappers only add
-their per-term columns to the runs and supply a per-group scorer.
+(SimpleIndex.hs:159-165, TopK.hs:36-70).  A model wrapper supplies only
+its per-query scorer, built from the request's term stats (df, cf).
 
-Plan shape:
-  postings table — parquet scan with ``term IN (query terms)`` pushed down
-  (the Spark analog of the reference's term->offset index lookup,
-  TermIndex.hs:26-34) → broadcast join with the (query_id, term) table
-  (BM25 also joins the broadcast term_stats ``df``) → each run routed to
-  every did-shard its did range overlaps (``_route_runs``) → ONE
-  ``repartition(n, query_id, shard)`` exchange, n = min(defaultParallelism,
-  groups) → one ``mapInArrow`` kernel per partition running the numpy
-  scorer on each of its (query, did-shard) groups (``_score_groups``) →
-  per-shard top-k candidates.  The finish (``_finish_topk``) then either
-  collects the candidates (at most queries x shards x k rows) with one
-  ``toArrow``, ranks them on the driver and resolves doc_keys with one
-  ``did IN (...)`` docmeta collect — the result is materialized, a local
-  DataFrame — when queries x k <= ``_RESOLVE_ISIN_MAX``; or, above that
-  cap, ranks with a window and joins docmeta lazily on the cluster.
-  No intermediate is cached.
+Two paths run the same scorer, and ``_on_driver`` picks one from the
+request and the index alone:
 
-One kernel, ``_daat_topk``, scores every (query, did-shard) group for
-both models.  It is document-at-a-time over decoded runs (collectPostings'
-k-way union, Posting2/Collect.hs:53-82, vectorized) with an exact
-block-max skip rule in the spirit of Block-Max WAND [Ding & Suel 2011]
+  * driver — when doc_count <= ``_MAX_SPAN`` (one dense accumulator holds
+    the whole did range) and the request's work is within
+    ``_DRIVER_DF_BUDGET``: the postings its queries decode (each query's
+    distinct terms' ``df``) plus a fixed cost per query.  The term stats
+    come from the index's lexicon, the query terms' runs from one pyarrow
+    read with the term filter pushed into the parquet reader (the
+    reference's term -> postings lookup, TermIndex.hs:26-34), each query
+    is scored over [0, doc_count) on the driver thread, and dids map to
+    doc_keys through the did-indexed doc_key array.  The result is an
+    Arrow-built LocalRelation: the request and its collect run no Spark
+    job (``_driver_topk``).
+  * Spark — every other request.  Postings scan with ``term IN (query
+    terms)`` pushed down → broadcast join with the (query_id, term)
+    table → each run routed to every did-shard its did range overlaps
+    (``_route_runs``) → ONE ``repartition(n, query_id, shard)`` exchange,
+    n = min(defaultParallelism, groups) → one ``mapInArrow`` kernel per
+    partition scoring its (query, did-shard) groups (``_score_groups``)
+    → per-shard top-k candidates → window rank joined to docmeta lazily
+    (``_finish_topk``).  The driver collects only per-term values (each
+    query term's whole-index max ``max_tf``, and its term stats past the
+    accumulator cap); no intermediate is cached (``_spark_topk``).
+
+The lexicon (term -> df, cf), the pyarrow postings dataset and the
+doc_key array are the ``IndexHandle``'s resident parts, each built on its
+first use; the postings themselves are read per request.
+
+One kernel, ``_daat_topk``, scores every query (or, on Spark, every
+(query, did-shard) group) for both models.  It is document-at-a-time
+over decoded runs (collectPostings' k-way union,
+Posting2/Collect.hs:53-82, vectorized) with an exact block-max skip rule in the spirit of Block-Max WAND [Ding & Suel 2011]
 and the reference's lazily-thresholded top-k fold (TopK.hs:36-70):
 
-  * terms processed in descending score upper bound;
+  * terms processed in descending score upper bound, ties by term, so a
+    score's last bits never depend on the order the runs arrive in;
   * a run is decoded only if (a) undiscovered docs could still reach the
     current kth score via the remaining terms' upper bounds, or (b) the
     run's did range contains a *live* candidate (current score + remaining
@@ -41,7 +54,7 @@ bounds its final score from above), so all its runs are decoded.
 
 A model is a small adapter (``_Model``), as a RetrievalModel is in the
 reference (SimpleIndex.hs:159-165): its per-term upper bound, its
-per-posting contribution into a dense accumulator over the shard's did
+per-posting contribution into a dense accumulator over the scored did
 range, the score of the seen docs, the bound of an unseen doc and whether
 pruning holds.  ``score_query_runs`` (BM25) and ``score_query_runs_ql``
 (Dirichlet QL) build the two adapters.
@@ -55,6 +68,7 @@ from typing import Callable, NamedTuple
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -75,15 +89,29 @@ from simplir_spark.operators.query import merge_query_entries, queries_df
 # affects results (per-shard top-k + global rank is exact at any
 # sharding).
 _MIN_SHARD_SPAN = 1 << 16
+# Maximum did-span one dense accumulator covers: a shard's, and the whole
+# index's on the driver path.
+_MAX_SPAN = 1 << 22
+# Driver-path budget of a request (``_on_driver``), in postings: each
+# query counts its distinct terms' df plus ``_DRIVER_QUERY_POSTINGS`` for
+# its fixed cost.  Measured on the 2,000-file perfbench index, 4 vCPU:
+# the driver spends ~4 ms per query (~2,500 postings' worth, rounded up
+# here) plus ~1.6 us per posting on one thread; the Spark path pays
+# ~0.7-1.2 s of jobs and spreads that work over all cores.  Driver vs
+# Spark, by this count: 128 tail queries (0.64M) 0.73 s vs 1.06 s; 64
+# head-term queries (0.54M) 0.71 s vs 0.92 s; 256 tail queries (1.28M)
+# 1.65 s vs 1.17 s; 256 head-term queries (2.2M) 2.87 s vs 1.40 s.
+_DRIVER_QUERY_POSTINGS = 1 << 12
+_DRIVER_DF_BUDGET = 1 << 20
 
 
 def _pick_n_shards(par: int, n_queries: int, doc_count: int) -> int:
     """Default did-shard count: enough shards to use the cluster, never so
     many that spans drop under ``_MIN_SHARD_SPAN`` (run-duplication wall),
-    always enough to keep spans dense-accumulator-sized (<= 2^22)."""
+    always enough to keep spans dense-accumulator-sized (<= ``_MAX_SPAN``)."""
     per_q = (2 * par) // max(1, n_queries)
     hi = -(-max(1, doc_count) // _MIN_SHARD_SPAN)
-    lo = -(-doc_count // (1 << 22))
+    lo = -(-doc_count // _MAX_SPAN)
     return max(1, min(max(1, per_q), hi), lo)
 
 
@@ -134,7 +162,13 @@ class _Model(NamedTuple):
 
 
 def _daat_topk(
-    runs: pd.DataFrame, k: int, lo: int, hi: int, model: _Model, decode_counter: list | None = None
+    runs: pd.DataFrame,
+    k: int,
+    lo: int,
+    hi: int,
+    model: _Model,
+    decode_counter: list | None = None,
+    order_tf: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Top-k (dids, scores) of one query's posting ``runs`` over the dids
     in [lo, hi), scored by ``model``: the block-max DAAT loop of both
@@ -142,16 +176,23 @@ def _daat_topk(
 
     Every run overlapping [lo, hi) must be present; postings outside it
     are dropped after decode.  A term's runs have disjoint did ranges, so
-    a doc gets at most one ``add`` per term, in descending-upper-bound
-    term order.  Ties rank by did ascending.  ``decode_counter`` (tests)
-    receives [decoded_runs, total_runs].
+    a doc gets at most one ``add`` per term, in (descending upper bound,
+    term) order, so its score does not depend on the row order of
+    ``runs``.  ``order_tf`` (term -> max_tf over the whole index) makes
+    that the order of the terms' whole-index upper bounds: a did-shard
+    then sums a doc's score exactly as the whole-range scorer does.
+    Ties rank by did ascending.  ``decode_counter`` (tests) receives
+    [decoded_runs, total_runs].
     """
     if len(runs) == 0:
         return _NO_HITS
     terms = runs["term"].to_numpy()
     by_term = {t: runs[terms == t].sort_values("start_did") for t in pd.unique(runs["term"])}
     ub = {t: model.ub(t, float(trun["max_tf"].max())) for t, trun in by_term.items()}
-    order = sorted(by_term, key=lambda t: -ub[t])
+    # a total order: terms tied on ub are summed in term order, not in the
+    # order their runs arrived in (float addition is not associative)
+    key = ub if order_tf is None else {t: model.ub(t, float(order_tf[t])) for t in by_term}
+    order = sorted(by_term, key=lambda t: (-key[t], t))
     rest_after = {}
     acc = 0.0
     for t in reversed(order):
@@ -216,6 +257,7 @@ def score_query_runs(
     decode_counter: list | None = None,
     did_lo: int | None = None,
     did_hi: int | None = None,
+    order_tf: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """BM25 top-k of one query's posting runs; returns (top dids, top
     scores).  The BM25 adapter of ``_daat_topk``: a posting scores
@@ -227,7 +269,8 @@ def score_query_runs(
     [decoded_runs, total_runs].  ``did_lo``/``did_hi`` restrict scoring to
     dids in [lo, hi) — the shard contract: every run overlapping the range
     must be present, postings outside it are dropped after decode.  They
-    default to the whole index, [0, doc_count).
+    default to the whole index, [0, doc_count).  ``order_tf``: see
+    ``_daat_topk``.
     """
     lo = 0 if did_lo is None else did_lo
     hi = doc_count if did_hi is None else did_hi
@@ -246,7 +289,7 @@ def score_query_runs(
         acc[off] += idf[t] * tf * (k1 + 1.0) / denom
 
     model = _Model(ub, add, lambda ix: acc[ix], lambda rest: rest, True)
-    return _daat_topk(runs, k, lo, hi, model, decode_counter)
+    return _daat_topk(runs, k, lo, hi, model, decode_counter, order_tf)
 
 
 def score_query_runs_ql(
@@ -258,6 +301,7 @@ def score_query_runs_ql(
     did_lo: int,
     did_hi: int,
     decode_counter: list | None = None,
+    order_tf: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Dirichlet-QL top-k of one query's posting runs in [did_lo, did_hi)
     — the QL adapter of ``_daat_topk``.
@@ -280,7 +324,8 @@ def score_query_runs_ql(
     DISABLED for such queries (decode everything; results unchanged).
 
     Returns (dids, scores) of the shard-local top-k; ``decode_counter``
-    (tests) receives [decoded_runs, total_runs].
+    (tests) receives [decoded_runs, total_runs]; ``order_tf``: see
+    ``_daat_topk``.
     """
     c0 = 0.0
     q_total = 0.0
@@ -320,7 +365,7 @@ def score_query_runs_ql(
         return s
 
     model = _Model(ub, add, scores, lambda rest: c0 + rest - unseen_norm, n_cf0 == 0)
-    return _daat_topk(runs, k, did_lo, did_hi, model, decode_counter)
+    return _daat_topk(runs, k, did_lo, did_hi, model, decode_counter, order_tf)
 
 
 def _score_groups(
@@ -368,58 +413,20 @@ def _score_groups(
     )
 
 
-# serving/bulk cut-over of the finish (``_finish_topk``), in result rows
-# (queries x k): at or under it the candidates are ranked on the driver
-# and the top-k dids become one In-literal docmeta lookup; above it an
-# In-literal's plan cost outweighs its pruning win (measured wall for
-# Catalyst literals in BENCH/bucket_udf_route.json informed the same cap)
-_RESOLVE_ISIN_MAX = 32768
-
-
-def _doc_keys(index: IndexHandle, dids: list[int]) -> DataFrame:
-    """(did, doc_key) of ``dids``; the In-literal keeps parquet min/max
-    row-group pruning on the did-contiguous docmeta partitions."""
-    return index.docmeta.filter(F.col("did").isin(dids)).select("did", "doc_key")
-
-
-def _finish_topk(
-    spark: SparkSession, index: IndexHandle, scored: DataFrame, k: int, n_queries: int
-) -> DataFrame:
+def _finish_topk(index: IndexHandle, scored: DataFrame, k: int) -> DataFrame:
     """Global top-k of each query from its per-shard candidates
     (``scored``: query_id, did, score), as (query_id, doc_key, rank,
-    score).  Rank orders by score descending, then did ascending — a
-    doc's complete score lives in exactly one shard, so this is exact.
-
-    Serving case, ``n_queries * k <= _RESOLVE_ISIN_MAX``: the candidates
-    (at most queries x shards x k rows) are collected once with
-    ``toArrow``, ranked on the driver, and their doc_keys resolved by one
-    In-literal docmeta collect; the result is a local DataFrame, so the
-    caller's ``collect`` runs no job.  Bulk case, above the cap: a window
-    rank, joined to docmeta lazily — nothing is collected on the driver
-    and the planner picks the join.
-    """
-    if n_queries * k > _RESOLVE_ISIN_MAX:
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("did"))
-        topk = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-        return (
-            index.docmeta.select("did", "doc_key")
-            .join(topk, "did")
-            .select("query_id", "doc_key", F.col("rank").cast("int").alias("rank"), "score")
-        )
-    cand = scored.toArrow().to_pandas()
-    cand = cand.sort_values(["query_id", "score", "did"], ascending=[True, False, True])
-    cand["rank"] = cand.groupby("query_id", sort=False).cumcount() + 1
-    top = cand[cand["rank"] <= k]
-    key_type = index.docmeta.schema["doc_key"].dataType.simpleString()
-    schema = f"query_id string, doc_key {key_type}, rank int, score double"
-    if len(top) == 0:
-        out = top.assign(doc_key=[])
-    else:
-        keys = _doc_keys(index, np.unique(top["did"].to_numpy()).tolist()).toArrow().to_pandas()
-        out = top.merge(keys, on="did")
-    # an Arrow table becomes a LocalRelation, empty or not: no job at collect
-    out = pa.Table.from_pandas(out[["query_id", "doc_key", "rank", "score"]], preserve_index=False)
-    return spark.createDataFrame(out, schema)
+    score): a window rank by score descending, then did ascending — a
+    doc's complete score lives in exactly one shard, so this is exact —
+    joined to docmeta lazily, so nothing is collected on the driver and
+    the planner picks the join."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("did"))
+    topk = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return (
+        index.docmeta.select("did", "doc_key")
+        .join(topk, "did")
+        .select("query_id", "doc_key", F.col("rank").cast("int").alias("rank"), "score")
+    )
 
 
 def _query_terms(queries: list[tuple[str, list[str]]]) -> list[str]:
@@ -430,59 +437,132 @@ def _query_terms(queries: list[tuple[str, list[str]]]) -> list[str]:
 _RUN_COLS = ("start_did", "end_did", "n", "max_tf", "deltas", "tfs", "dls")
 
 
+def _term_stats(index: IndexHandle, terms: list[str]) -> dict[str, tuple[int, int]]:
+    """term -> (df, cf) of the indexed ``terms``: from the lexicon when
+    doc_count <= ``_MAX_SPAN``, otherwise from one term_stats collect (an
+    index that no driver-path request can use never builds its lexicon)."""
+    if index.doc_count > _MAX_SPAN:
+        rows = index.term_stats.filter(F.col("term").isin(terms)).select("term", "df", "cf").collect()
+        return {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
+    lexicon = index.lexicon
+    return {t: lexicon[t] for t in terms if t in lexicon}
+
+
+def _on_driver(index: IndexHandle, queries: list[tuple[str, list[str]]]) -> bool:
+    """Whether the driver serves the request: the index fits one dense
+    accumulator (doc_count <= ``_MAX_SPAN``) and the request's work is
+    within ``_DRIVER_DF_BUDGET`` — the postings each query decodes, the
+    lexicon ``df`` of its distinct terms, plus ``_DRIVER_QUERY_POSTINGS``
+    per query."""
+    if index.doc_count > _MAX_SPAN:
+        return False
+    lexicon = index.lexicon
+    work = sum(
+        _DRIVER_QUERY_POSTINGS + sum(lexicon.get(t, (0, 0))[0] for t in set(q)) for _, q in queries
+    )
+    return work <= _DRIVER_DF_BUDGET
+
+
+def _read_runs(index: IndexHandle, terms: list[str], cols: tuple[str, ...]) -> pd.DataFrame:
+    """The posting runs of ``terms``, read on the driver.  The term filter
+    is pushed into the parquet reader; the postings are range-partitioned
+    and sorted on (term, start_did), so file and row-group statistics
+    prune all but the terms' own row groups."""
+    return index.postings_dataset.to_table(
+        columns=["term", *cols], filter=pc.field("term").isin(terms)
+    ).to_pandas()
+
+
+def _driver_topk(
+    spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], score_one
+) -> DataFrame:
+    """The driver path: every query's runs from one pushdown read, each
+    query scored by ``score_one`` over the whole did range (the kernel's
+    top-k is already ranked), dids mapped to doc_keys through the did-
+    indexed doc_key array.  The result is an Arrow-built LocalRelation:
+    no Spark job runs, now or at collect."""
+    runs = _read_runs(index, _query_terms(queries), _RUN_COLS)
+    qids, dids, ranks, scores = [], [_NO_HITS[0]], [np.zeros(0, dtype=np.int32)], [_NO_HITS[1]]
+    for qid, terms in queries:
+        sub = runs[runs["term"].isin(terms)]
+        if len(sub) == 0:
+            continue
+        d, s = score_one(qid, sub, 0, index.doc_count, None)
+        qids += [qid] * len(d)
+        dids.append(d)
+        ranks.append(np.arange(1, len(d) + 1, dtype=np.int32))
+        scores.append(s)
+    table = pa.table(
+        {
+            "query_id": pa.array(qids, pa.string()),
+            "doc_key": index.doc_key_array.take(pa.array(np.concatenate(dids), pa.int64())),
+            "rank": pa.array(np.concatenate(ranks), pa.int32()),
+            "score": pa.array(np.concatenate(scores), pa.float64()),
+        }
+    )
+    key_type = index.docmeta.schema["doc_key"].dataType.simpleString()
+    return spark.createDataFrame(table, f"query_id string, doc_key {key_type}, rank int, score double")
+
+
+def _spark_topk(
+    spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], k: int, score_one
+) -> DataFrame:
+    """The Spark path: (query, did-shard) scoring groups, per-shard top-k,
+    then the lazy window finish (``_finish_topk``).
+
+    Each run row is routed to every shard its [start_did, end_did] range
+    overlaps (``_route_runs``) and a shard scores only dids inside its
+    range — a doc's complete score lives in exactly one shard, so
+    per-shard top-k then a global rank is exact (the distributed form of
+    collectPostings' doc-at-a-time union, Posting2/Collect.hs:53-82).
+    Every shard orders the terms by their whole-index upper bounds (one
+    collect of each term's max ``max_tf``), so a doc's score is summed
+    as on the driver path, to the last bit.
+    """
+    doc_count = index.doc_count
+    n_shards, span = _did_shards(spark, len(queries), doc_count)
+    runs = index.postings.filter(F.col("term").isin(_query_terms(queries)))  # parquet pushdown
+    order_tf = {
+        r["term"]: int(r["max_tf"])
+        for r in runs.groupBy("term").agg(F.max("max_tf").alias("max_tf")).collect()
+    }
+    post = runs.join(F.broadcast(queries_df(spark, queries)), "term")
+    matched = _route_runs(post, span).select("query_id", "shard", "term", *_RUN_COLS)
+
+    def score_group(qid: str, shard: int, pdf: pd.DataFrame):
+        lo = shard * span
+        # the last shard ends at doc_count; a range is never empty
+        return score_one(qid, pdf, lo, max(min(lo + span, doc_count), lo + 1), order_tf)
+
+    scored = _score_groups(spark, matched, len(queries) * n_shards, score_group)
+    return _finish_topk(index, scored, k)
+
+
 def _indexed_topk(
     spark: SparkSession,
     index: IndexHandle,
     queries: list[tuple[str, list[str]]],
     k: int,
-    runs,
-    score_one,
+    scorer,
 ) -> DataFrame:
     """Top-k of every query under one retrieval model, as (query_id,
     doc_key, rank, score) — the one planner of the indexed request path.
 
-    ``runs(post, merged)`` returns the run rows the model scores:
-    ``post`` holds the postings runs of the query terms (``term IN``
-    pushed into the scan) joined to the broadcast (query_id, term) table,
-    ``merged`` is ``queries`` after ``merge_query_entries``.  Columns it adds reach the scorer.
-    It is called before ``score_one`` is shipped to the workers, so
-    driver-side state it collects is visible to ``score_one``.
-
-    ``score_one(query_id, pdf, lo, hi)`` scores one query's runs in one
-    did-shard, dids in [lo, hi), and returns that shard's top-k as
-    (dids, scores).
-
-    Scoring parallelism is (queries × did-range shards), not just queries:
-    each run row is routed to every shard its [start_did, end_did] range
-    overlaps (``_route_runs``), a shard scores only dids inside its range
-    — a doc's complete score lives in exactly one shard, so per-shard
-    top-k then a global rank is exact (the distributed form of
-    collectPostings' doc-at-a-time union, Posting2/Collect.hs:53-82).
+    ``scorer(stats, merged)`` returns the model's ``score_one(query_id,
+    pdf, lo, hi, order_tf)``, which scores one query's runs over the dids
+    in [lo, hi) (``order_tf``: see ``_daat_topk``) and returns its top-k
+    there as (dids, scores); ``stats`` maps
+    the request's indexed terms to (df, cf) and ``merged`` is ``queries``
+    after ``merge_query_entries``.  ``_on_driver`` picks the path: the
+    driver (``_driver_topk``) or Spark (``_spark_topk``).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     queries = merge_query_entries(queries)
-    qdf = queries_df(spark, queries)
-    doc_count = index.doc_count
-    n_shards, span = _did_shards(spark, len(queries), doc_count)
-
-    post = (
-        index.postings.filter(F.col("term").isin(_query_terms(queries)))  # parquet pushdown
-        .join(F.broadcast(qdf), "term")
-    )
-    model_runs = runs(post, queries)
-    extra = [c for c in model_runs.columns if c not in post.columns]
-    matched = _route_runs(model_runs, span).select(
-        "query_id", "shard", "term", *extra, *_RUN_COLS
-    )
-
-    def score_group(qid: str, shard: int, pdf: pd.DataFrame):
-        lo = shard * span
-        # the last shard ends at doc_count; a range is never empty
-        return score_one(qid, pdf, lo, max(min(lo + span, doc_count), lo + 1))
-
-    scored = _score_groups(spark, matched, len(queries) * n_shards, score_group)
-    return _finish_topk(spark, index, scored, k, len(queries))
+    score_one = scorer(_term_stats(index, _query_terms(queries)), queries)
+    if _on_driver(index, queries):
+        return _driver_topk(spark, index, queries, score_one)
+    return _spark_topk(spark, index, queries, k, score_one)
 
 
 def bm25_indexed(
@@ -494,30 +574,34 @@ def bm25_indexed(
     b: float = B_DEFAULT,
 ) -> DataFrame:
     """BM25 top-k of all queries against the index in one scoring pass
-    (``_indexed_topk``); the runs carry each term's ``df`` from the
-    broadcast term_stats, the scorer is ``score_query_runs``.
+    (``_indexed_topk``); the scorer is ``score_query_runs`` with each
+    term's ``df`` from the request's term stats.
 
     Returns (query_id, doc_key, rank, score).  Rank ties break by did,
     which by construction equals doc_key order (dense ids are assigned in
     doc_key order — index_build).  ``k`` must be >= 1.
 
-    When queries x k <= ``_RESOLVE_ISIN_MAX`` (the serving case) the
-    result is MATERIALIZED before return: scoring runs once, the driver
-    holds at most queries x n_shards x k candidate rows while it ranks
-    them, and the returned local DataFrame collects without a Spark job.
-    Above the cap (bulk) the result is a lazy plan that ranks with a
-    window and joins docmeta on the cluster (``_finish_topk``).
+    A request the driver serves (doc_count <= ``_MAX_SPAN`` and its
+    postings within ``_DRIVER_DF_BUDGET``, see ``_on_driver``) is
+    scored before return and comes back as a local DataFrame whose
+    collect runs no Spark job.  Any other request returns a lazy plan: did-sharded
+    scoring on the cluster, ranked with a window and joined to docmeta
+    there.  Both paths give the same rows.
     """
     doc_count, avg_doc_len = index.doc_count, index.avg_doc_len
 
-    def runs(post: DataFrame, merged) -> DataFrame:
-        stats = index.term_stats.filter(F.col("term").isin(_query_terms(merged)))
-        return post.join(F.broadcast(stats.select("term", "df")), "term")
+    def scorer(stats: dict, merged):
+        df_of = {t: df for t, (df, _) in stats.items()}
 
-    def score_one(qid: str, pdf: pd.DataFrame, lo: int, hi: int):
-        return score_query_runs(pdf, doc_count, avg_doc_len, k, k1, b, did_lo=lo, did_hi=hi)
+        def score_one(qid: str, pdf: pd.DataFrame, lo: int, hi: int, order_tf):
+            runs = pdf.assign(df=pdf["term"].map(df_of))
+            return score_query_runs(
+                runs, doc_count, avg_doc_len, k, k1, b, did_lo=lo, did_hi=hi, order_tf=order_tf
+            )
 
-    return _indexed_topk(spark, index, queries, k, runs, score_one)
+        return score_one
+
+    return _indexed_topk(spark, index, queries, k, scorer)
 
 
 def ql_dirichlet_indexed(
@@ -531,8 +615,8 @@ def ql_dirichlet_indexed(
     index is retrieval-model-generic like the reference's SimpleIndex
     (RetrievalModel plug-in, SimpleIndex.hs:159-165).
 
-    Per (query, did-shard) the match-any doc set scores via the dense
-    decomposition
+    Per query (and did-shard, on the Spark path) the match-any doc set
+    scores via the dense decomposition
 
         score(d) = C0 + corr(d) - Q * ln(dl_d + mu)
         C0       = sum_t qtf_t * ln(mu * bg_t)           (per query)
@@ -551,29 +635,28 @@ def ql_dirichlet_indexed(
     cf=0 terms, where -inf finals break the partial-score lower bound.
 
     The request runs through the planner ``bm25_indexed`` uses
-    (``_indexed_topk``) with the plain postings as runs; the background
-    probabilities bg_t = cf_t / |C| come from one driver collect of the
-    query terms' term_stats.  The result is materialized when
-    queries x k <= ``_RESOLVE_ISIN_MAX``.
+    (``_indexed_topk``), on the driver or on Spark by the same rule; the
+    background probabilities bg_t = cf_t / |C| come from the request's
+    term stats.
     """
     token_count = index.token_count
-    weights: dict[str, tuple[dict, dict]] = {}  # query_id -> (term_w, term_bg)
 
-    def runs(post: DataFrame, merged) -> DataFrame:
-        cf = {
-            r["term"]: int(r["cf"])
-            for r in index.term_stats.filter(F.col("term").isin(_query_terms(merged))).collect()
-        }
+    def scorer(stats: dict, merged):
+        weights: dict[str, tuple[dict, dict]] = {}  # query_id -> (term_w, term_bg)
         for qid, terms in merged:
             term_w = {t: float(terms.count(t)) for t in sorted(set(terms))}
             weights[qid] = (
                 term_w,
-                {t: (cf.get(t, 0) / token_count if token_count else 0.0) for t in term_w},
+                {
+                    t: (stats.get(t, (0, 0))[1] / token_count if token_count else 0.0)
+                    for t in term_w
+                },
             )
-        return post
 
-    def score_one(qid: str, pdf: pd.DataFrame, lo: int, hi: int):
-        term_w, term_bg = weights[qid]
-        return score_query_runs_ql(pdf, term_w, term_bg, mu, k, lo, hi)
+        def score_one(qid: str, pdf: pd.DataFrame, lo: int, hi: int, order_tf):
+            term_w, term_bg = weights[qid]
+            return score_query_runs_ql(pdf, term_w, term_bg, mu, k, lo, hi, order_tf=order_tf)
 
-    return _indexed_topk(spark, index, queries, k, runs, score_one)
+        return score_one
+
+    return _indexed_topk(spark, index, queries, k, scorer)

@@ -134,17 +134,29 @@ def _assert_bm25_rank_identical(spark, root, oracle_idx, queries=QUERIES):
             assert abs(r.score - score) <= REL_TOL * max(1.0, abs(score))
 
 
-def _force_shards(monkeypatch, n_shards: int) -> None:
-    """Route the indexed requests over ``n_shards`` did-shards; the
-    2,000-doc corpus gets a single shard by default."""
+def _force_spark(monkeypatch) -> None:
+    """Send every indexed request down the Spark path: each query costs
+    the driver at least ``_DRIVER_QUERY_POSTINGS``, so no request fits a
+    budget of 0."""
     import simplir_spark.operators.query_indexed as qi
 
+    monkeypatch.setattr(qi, "_DRIVER_DF_BUDGET", 0)
+
+
+def _force_shards(monkeypatch, n_shards: int) -> None:
+    """Route the indexed requests over ``n_shards`` did-shards on the
+    Spark path (the driver path has no shards); the 2,000-doc corpus gets
+    a single shard by default."""
+    import simplir_spark.operators.query_indexed as qi
+
+    _force_spark(monkeypatch)
     monkeypatch.setattr(qi, "_pick_n_shards", lambda par, n_queries, doc_count: n_shards)
 
 
 def test_bm25_indexed_rank_identical(spark, index_dir, oracle_idx, monkeypatch):
-    """Rank-identical to the oracle at the default sharding and at forced
-    shard counts (several shards, runs split across shard bounds)."""
+    """Rank-identical to the oracle on the driver path and on the Spark
+    path at forced shard counts (several shards, runs split across shard
+    bounds)."""
     _assert_bm25_rank_identical(spark, index_dir, oracle_idx)
     for n_shards in (1, 2, 5):
         _force_shards(monkeypatch, n_shards)
@@ -470,31 +482,25 @@ def test_edge_case_build_matches_oracle(spark, tmp_path_factory, with_positions)
 
 
 def test_bm25_indexed_plan_broadcasts_and_prunes(spark, index_dir, monkeypatch):
-    """Plan audit for the indexed query path.  A serving-size request
-    returns a local relation, so the audit reads the SCORING plan: the
-    (query_id, term) side must broadcast (the postings are never
-    exchanged for the query join), term pruning must reach the postings
-    scan, and the scoring groups cross exactly ONE hash exchange — the
-    explicit-count repartition.  The docmeta resolve must keep its did
-    pushdown (min/max row-group pruning)."""
+    """Plan audit for the Spark path of an indexed request (forced; the
+    driver serves this request by default).  The audit reads the SCORING
+    plan: the (query_id, term) side must broadcast (the postings are
+    never exchanged for the query join), term pruning must reach the
+    postings scan, and the scoring groups cross exactly ONE hash exchange
+    — the explicit-count repartition."""
     import simplir_spark.operators.query_indexed as qi
 
     plans = {}
-    finish, doc_keys = qi._finish_topk, qi._doc_keys
+    finish = qi._finish_topk
 
-    def spy_finish(spark_, index, scored, k, n_queries):
-        # read before the finish executes it: AQE then prints only the
+    def spy_finish(index, scored, k):
+        # read before the result executes it: AQE then prints only the
         # initial plan, once
         plans["scoring"] = scored._jdf.queryExecution().executedPlan().toString()
-        return finish(spark_, index, scored, k, n_queries)
+        return finish(index, scored, k)
 
-    def spy_doc_keys(index, dids):
-        df = doc_keys(index, dids)
-        plans["resolve"] = df._jdf.queryExecution().executedPlan().toString()
-        return df
-
+    _force_spark(monkeypatch)
     monkeypatch.setattr(qi, "_finish_topk", spy_finish)
-    monkeypatch.setattr(qi, "_doc_keys", spy_doc_keys)
     idx = open_index(spark, index_dir)
     assert qi.bm25_indexed(spark, idx, QUERIES[:4], k=5).collect()
     plan = plans["scoring"]
@@ -503,36 +509,56 @@ def test_bm25_indexed_plan_broadcasts_and_prunes(spark, index_dir, monkeypatch):
     # n = min(defaultParallelism, groups): 4 queries x 1 shard on this corpus
     assert re.search(r"hashpartitioning\(query_id#\d+, shard#\d+L, 4\), REPARTITION_BY_NUM", plan), plan
     assert "IN (" in plan or "In(term" in plan, plan  # term pruning reached the scan
-    assert "PushedFilters: [" in plans["resolve"] and "In(did" in plans["resolve"], plans["resolve"]
 
 
-def test_bm25_indexed_request_job_count(spark, index_dir):
-    """A serving-size request runs a small fixed number of Spark jobs:
-    the query-table and term_stats broadcasts, the scoring shuffle's map
-    stage, the scoring collect and the docmeta collect — the returned
-    local DataFrame's collect adds none.  Jobs that engine threads
+def _jobs_run(spark, fn) -> tuple[object, int]:
+    """(fn(), number of Spark jobs it ran).  Jobs that engine threads
     (broadcasts) submit carry no job group, so every job newer than the
-    last one seen before the request is counted."""
+    last one seen before the call is counted."""
     sc = spark.sparkContext
-    idx = open_index(spark, index_dir)
 
     def settle():  # job status reaches the tracker through the listener bus
         sc._jsc.sc().listenerBus().waitUntilEmpty()
 
-    for n_queries in (1, 4):
-        group = f"job-count-{n_queries}"
-        settle()
-        last = max([-1, *sc.statusTracker().getJobIdsForGroup(None)])
-        sc.setJobGroup(group, group)
-        try:
-            rows = bm25_indexed(spark, idx, QUERIES[:n_queries], k=K).collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        settle()
-        st = sc.statusTracker()
-        jobs = {j for j in [*st.getJobIdsForGroup(group), *st.getJobIdsForGroup(None)] if j > last}
-        assert rows
-        assert len(jobs) <= 5, (n_queries, sorted(jobs))
+    settle()
+    last = max([-1, *sc.statusTracker().getJobIdsForGroup(None)])
+    sc.setJobGroup("counted", "counted")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    settle()
+    st = sc.statusTracker()
+    jobs = {j for j in [*st.getJobIdsForGroup("counted"), *st.getJobIdsForGroup(None)] if j > last}
+    return out, len(jobs)
+
+
+def test_bm25_indexed_request_job_count(spark, index_dir, tmp_path_factory):
+    """A request the driver serves runs NO Spark job, neither in the call
+    nor in the collect of the local DataFrame it returns: BM25 and QL at
+    1 and 4 queries (the first request also builds the index's resident
+    parts), and a positional phrase request."""
+    from simplir_spark.operators.phrase import phrase_match_positional
+    from simplir_spark.operators.query_indexed import ql_dirichlet_indexed
+
+    idx = open_index(spark, index_dir)
+    for fn in (bm25_indexed, ql_dirichlet_indexed):
+        for n_queries in (1, 4):
+            rows, jobs = _jobs_run(spark, lambda: fn(spark, idx, QUERIES[:n_queries], k=K).collect())
+            assert rows
+            assert jobs == 0, (fn.__name__, n_queries, jobs)
+
+    corpus = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "beta gamma alpha beta")], "doc_key long, content string"
+    )
+    out = str(tmp_path_factory.mktemp("phrasejobs") / "idx")
+    build_index(spark, corpus, out, n_partitions=2, run_size=8, with_positions=True)
+    pidx = open_index(spark, out)
+    rows, jobs = _jobs_run(
+        spark, lambda: phrase_match_positional(spark, pidx, [("P1", ["alpha", "beta"])]).collect()
+    )
+    assert sorted(tuple(r) for r in rows) == [("P1", 0, 1), ("P1", 1, 1)]
+    assert jobs == 0, jobs
 
 
 def test_indexed_no_match_collects_without_job(spark, index_dir):
@@ -859,8 +885,8 @@ def test_daat_kernel_pruned_topk_equals_unpruned(case, b, cf0):
 
 def test_ql_indexed_small_k_matches_scan(spark, index_dir, corpus_small, monkeypatch):
     """End-to-end: the pruned indexed QL path at k=10 is rank-identical to
-    scan-mode QL (pruning engaged, results invisible), at the default
-    sharding and at forced shard counts."""
+    scan-mode QL (pruning engaged, results invisible), on the driver path
+    and on the Spark path at forced shard counts."""
     from simplir_spark.operators.query import bm25_scan
     from simplir_spark.operators.query_indexed import ql_dirichlet_indexed
 
@@ -962,8 +988,8 @@ def test_hot_query_shard_mass_balance(spark, tmp_path, monkeypatch):
     """Query-side skew (VERDICT r4 #6): a term with df = 50% of docs must
     spread its posting mass evenly across did-range shards (runs are
     bounded-width did ranges over a dense id space), and 8 shards must
-    return the same rows as 1 shard on a batch where EVERY query carries
-    the hot term."""
+    return the same rows as 1 shard and as the driver path on a batch
+    where EVERY query carries the hot term."""
     from pyspark.sql import functions as F
 
     from simplir_spark.operators.index_build import build_index, open_index
@@ -1000,11 +1026,12 @@ def test_hot_query_shard_mass_balance(spark, tmp_path, monkeypatch):
     assert max(masses) <= 3 * mean, masses
 
     queries = [(f"H{i}", ["hotterm", w]) for i, w in enumerate(fill)]
+    driver = sorted(tuple(r) for r in bm25_indexed(spark, idx, queries, k=10).collect())
     rows = {}
     for n in (n_shards, 1):
         _force_shards(monkeypatch, n)
         rows[n] = sorted(tuple(r) for r in bm25_indexed(spark, idx, queries, k=10).collect())
-    assert rows[n_shards] == rows[1] and len(rows[1]) == 40
+    assert rows[n_shards] == rows[1] == driver and len(rows[1]) == 40
 
 
 # ---------------------------------------------------------------------------
@@ -1170,12 +1197,13 @@ def test_duplicate_query_ids_merge_not_double_score(spark, corpus_small, index_d
         assert got == want and got
 
 
-def test_finish_serving_matches_bulk(spark, index_dir, monkeypatch):
-    """The two finishes of an indexed query agree.  Serving (queries x k
-    <= _RESOLVE_ISIN_MAX) ranks the candidates on the driver and returns
-    a local relation; with the cap forced to 0 every request takes the
-    bulk finish (window rank + lazy docmeta join).  Rows must be
-    identical for BM25, BM25 over 4 forced shards and QL."""
+def test_driver_path_matches_spark_path(spark, index_dir, monkeypatch):
+    """The two paths of an indexed request agree.  By default the driver
+    serves these requests and returns a local relation; with the postings
+    budget forced to 0 they take the Spark path (did-shard scoring,
+    window rank, lazy docmeta join).  Rows, scores to the last bit, must
+    be identical for BM25, BM25 over 4 forced shards and QL, with an
+    absent-term query in the batch."""
     import simplir_spark.operators.query_indexed as qi
 
     idx = open_index(spark, index_dir)
@@ -1188,17 +1216,106 @@ def test_finish_serving_matches_bulk(spark, index_dir, monkeypatch):
 
     requests = {
         "bm25": lambda: qi.bm25_indexed(spark, idx, queries, k=10),
-        "bm25_4_shards": bm25_4_shards,
         "ql": lambda: qi.ql_dirichlet_indexed(spark, idx, queries, k=10),
     }
 
     def run(fn, want_op):
         df = fn()
         assert want_op in df._jdf.queryExecution().executedPlan().toString()
-        return sorted(tuple(r) for r in df.collect())
+        return sorted((r.query_id, r.doc_key, r.rank, repr(r.score)) for r in df.collect())
 
-    serving = {name: run(fn, "LocalTableScan") for name, fn in requests.items()}
-    monkeypatch.setattr(qi, "_RESOLVE_ISIN_MAX", 0)
+    driver = {name: run(fn, "LocalTableScan") for name, fn in requests.items()}
+    requests["bm25_4_shards"] = bm25_4_shards
+    driver["bm25_4_shards"] = driver["bm25"]
+    _force_spark(monkeypatch)
     for name, fn in requests.items():
-        bulk = run(fn, "Window")
-        assert bulk == serving[name] and len(bulk) == 20, name
+        on_spark = run(fn, "Window")
+        assert on_spark == driver[name] and len(on_spark) == 20, name
+
+
+def test_sharded_scores_sum_in_whole_index_term_order(spark, index_dir, monkeypatch):
+    """A did-shard sees only its own runs, so its per-term upper bounds
+    (from the shard's max_tf) can order the terms differently from the
+    whole index, and a doc's score would then be summed in another order.
+    The Spark path orders every shard by the whole-index bounds: at 5 and
+    8 forced shards (where Q03 and Q15 have terms whose shard-local order
+    flips) BM25 rows equal the driver's to the last bit."""
+    import simplir_spark.operators.query_indexed as qi
+
+    idx = open_index(spark, index_dir)
+
+    def rows():
+        return sorted(
+            (r.query_id, r.doc_key, r.rank, repr(r.score))
+            for r in qi.bm25_indexed(spark, idx, QUERIES, k=30).collect()
+        )
+
+    driver = rows()
+    for n_shards in (5, 8):
+        with monkeypatch.context() as m:
+            _force_shards(m, n_shards)
+            assert rows() == driver, n_shards
+
+
+def test_path_selection_declines_oversized_requests(spark, index_dir, monkeypatch):
+    """The driver declines a request whose queries' postings exceed the
+    budget, and any request on an index past the dense-accumulator cap;
+    both take the Spark path and return the rows the driver returns."""
+    import dataclasses
+
+    import simplir_spark.operators.query_indexed as qi
+
+    idx = open_index(spark, index_dir)
+    queries = [("q1", ["hash", "join"]), ("q2", ["customer", "order"])]
+
+    def rows(df, want_op):
+        assert want_op in df._jdf.queryExecution().executedPlan().toString()
+        return sorted((r.query_id, r.doc_key, r.rank, repr(r.score)) for r in df.collect())
+
+    want_bm25 = rows(qi.bm25_indexed(spark, idx, queries, k=10), "LocalTableScan")
+    want_ql = rows(qi.ql_dirichlet_indexed(spark, idx, queries, k=10), "LocalTableScan")
+    postings = sum(
+        qi._DRIVER_QUERY_POSTINGS + sum(idx.lexicon.get(t, (0, 0))[0] for t in set(terms))
+        for _, terms in queries
+    )
+    with monkeypatch.context() as m:
+        m.setattr(qi, "_DRIVER_DF_BUDGET", postings - 1)
+        assert rows(qi.bm25_indexed(spark, idx, queries, k=10), "Window") == want_bm25
+    with monkeypatch.context() as m:
+        m.setattr(qi, "_DRIVER_DF_BUDGET", postings)
+        assert rows(qi.bm25_indexed(spark, idx, queries, k=10), "LocalTableScan") == want_bm25
+    # QL scores do not depend on doc_count, so the same rows must come
+    # back from an index that claims more docs than one accumulator holds
+    big = dataclasses.replace(idx, doc_count=qi._MAX_SPAN + 1)
+    assert rows(qi.ql_dirichlet_indexed(spark, big, queries, k=10), "Window") == want_ql
+    assert "lexicon" not in vars(big)  # the Spark path never builds it
+
+
+def test_daat_score_independent_of_run_order():
+    """A doc's score is summed in a total term order: two terms with
+    equal upper bounds (same df, same max_tf) and a third, chosen so
+    that (a + b) + c != (a + c) + b for doc 0, score bit-identically
+    under every row order of the runs."""
+    import itertools
+
+    k1, b, avgdl, n_docs = 1.1, 0.4, 5.0, 10
+    dls = np.array([12, 7])
+    spec = [("x", [0], [1], 1), ("y", [0, 1], [1, 2], 2), ("z", [0, 1], [2, 1], 2)]
+    rows = []
+    for term, dids, tfs, df in spec:
+        d = np.array(dids)
+        rows.append({"term": term, "df": df, **codec.encode_run(d, np.array(tfs), dls[d])})
+    runs = pd.DataFrame(rows)
+
+    def contrib(df, tf, dl):
+        idf = np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+        return idf * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+    a, bb, c = contrib(1, 1, 12), contrib(2, 1, 12), contrib(2, 2, 12)
+    assert (a + bb) + c != (a + c) + bb  # the sum order is visible
+
+    outs = set()
+    for perm in itertools.permutations(range(len(runs))):
+        d, s = score_query_runs(runs.iloc[list(perm)], n_docs, avgdl, 10, k1, b)
+        outs.add((tuple(d.tolist()), tuple(s.tolist())))
+    assert len(outs) == 1, outs

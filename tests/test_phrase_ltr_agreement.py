@@ -50,7 +50,11 @@ def test_phrase_match_scan_vs_oracle(spark):
     assert got[("P1", 2)] == 1
 
 
-def test_phrase_match_positional_raw_adjacency(spark, tmp_path_factory):
+def test_phrase_match_positional_raw_adjacency(spark, tmp_path_factory, monkeypatch):
+    """Raw-token adjacency over a positional index, on the driver path
+    (the default here) and on the Spark path (postings budget forced to
+    0): identical rows."""
+    import simplir_spark.operators.query_indexed as qi
     from simplir_spark.operators.index_build import build_index, open_index
     from simplir_spark.operators.phrase import phrase_match_positional
 
@@ -64,10 +68,20 @@ def test_phrase_match_positional_raw_adjacency(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("phraseidx") / "idx")
     build_index(spark, corpus, out, n_partitions=2, run_size=8, with_positions=True)
     idx = open_index(spark, out)
-    res = phrase_match_positional(spark, idx, [("P1", ["alpha", "beta"]), ("P2", ["gamma", "gamma"])])
-    got = {(r.phrase_id, r.did): r.tf for r in res.collect()}
+    phrases = [("P1", ["alpha", "beta"]), ("P2", ["gamma", "gamma"])]
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    res = phrase_match_positional(spark, idx, phrases)
+    assert "LocalTableScan" in plan(res) and "FlatMapGroupsInPandas" not in plan(res)
+    got = sorted(tuple(r) for r in res.collect())
     # did order = doc_key order: doc_key 1..4 -> did 0..3
-    assert got == {("P1", 0): 1, ("P1", 2): 1, ("P2", 3): 2}
+    assert got == [("P1", 0, 1), ("P1", 2, 1), ("P2", 3, 2)]
+    monkeypatch.setattr(qi, "_DRIVER_DF_BUDGET", 0)
+    res = phrase_match_positional(spark, idx, phrases)
+    assert "FlatMapGroupsInPandas" in plan(res)
+    assert sorted(tuple(r) for r in res.collect()) == got
 
 
 def test_phrase_scan_on_testdata(spark):
