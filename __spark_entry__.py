@@ -609,38 +609,25 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-payload feature extraction plumbing (decode stubbed behind a
-    deterministic md5-derived fake — no codec libs in this container).
-    The fake is SQL-reproducible, so this is FULLY oracle-checked:
-    n_bytes, sha256 integrity AND every feature component.  Exploded to
-    scalar (media_id, ..., ix, fv) rows for the driver's canonicalizer."""
-    import os as _os
-
+    """Binary-payload feature extraction: each document's text as a
+    payload through ``extract_features``, one Catalyst projection of
+    md5/sha2 expressions.  Every value is SQL-reproducible, so this is
+    FULLY oracle-checked: n_bytes, sha256 integrity AND every feature
+    component.  Exploded to scalar (media_id, ..., ix, fv) rows for the
+    driver's canonicalizer."""
     from simplir_spark.operators.multimodal import extract_features
 
-    # the fake/real switch is read at PLAN-BUILD time into a closure, so
-    # setting the env only around construction is enough — and restoring
-    # it keeps later real-decode paths in this process honest
-    _prev_fake = _os.environ.get("SIMPLIR_FAKE_DECODE")
-    _os.environ["SIMPLIR_FAKE_DECODE"] = "1"
-    try:
-        media = _documents(spark, sf_dir).select(
-            F.col("doc_id").alias("media_id"),
-            F.lit("image").alias("kind"),
-            F.lit("application/octet-stream").alias("mime"),
-            F.encode(F.col("text"), "UTF-8").alias("payload"),
-            F.struct(
-                F.lit(64).alias("width"), F.lit(64).alias("height"),
-                F.lit(None).cast("int").alias("duration_ms"),
-            ).alias("meta"),
-        )
-        feats = extract_features(media, dim=8)
-    finally:
-        if _prev_fake is None:
-            _os.environ.pop("SIMPLIR_FAKE_DECODE", None)
-        else:
-            _os.environ["SIMPLIR_FAKE_DECODE"] = _prev_fake
-    exploded = feats.select(
+    media = _documents(spark, sf_dir).select(
+        F.col("doc_id").alias("media_id"),
+        F.lit("image").alias("kind"),
+        F.lit("application/octet-stream").alias("mime"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
+        F.struct(
+            F.lit(64).alias("width"), F.lit(64).alias("height"),
+            F.lit(None).cast("int").alias("duration_ms"),
+        ).alias("meta"),
+    )
+    exploded = extract_features(media, dim=8).select(
         "media_id", "kind", "n_bytes", "sha256",
         F.posexplode("feature").alias("ix", "fv"),
     )

@@ -1,30 +1,21 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video are carried as ``binary`` columns with a metadata
-struct; decode / feature-extraction / resize / frame-sampling run as
-Arrow-vectorized ``mapInPandas`` so each batch of payloads hits the
-(vectorized) decoder once.  General-purpose codecs (PIL/libav) are NOT in
-this container; decode resolution is: deterministic fake when
-``SIMPLIR_FAKE_DECODE=1`` (the oracle-checked default in tests/contract),
-else a REAL decoder for supported formats (uncompressed 24-bit BMP in
-pure numpy — functions/imagecodec.py — plus any PIL format when PIL is
-importable), else NotImplementedError at first batch, keeping the stub
-explicit rather than silently wrong.
+struct (``MEDIA_SCHEMA``); ``sources/media.py`` loads media directories
+into it.  simplir is a text IR system and decodes no media: the one
+operator here, ``extract_features``, derives a deterministic feature
+vector from the payload bytes with Catalyst expressions only (md5/sha2),
+so the plan is a single codegen ``Project`` with no Python worker and
+the driver's DuckDB oracle reproduces every value.
 
-Scale notes: payload batches are bounded by
-spark.sql.execution.arrow.maxRecordsPerBatch; binary columns should live
-in their own parquet column chunk (they do — columnar format), so
-metadata-only queries never read the payload bytes (column pruning).
+Scale notes: binary columns live in their own parquet column chunk
+(columnar format), so metadata-only queries never read the payload
+bytes (column pruning).
 """
 
 from __future__ import annotations
 
-import hashlib
-import os
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -53,255 +44,24 @@ FEATURE_SCHEMA = (
 )
 
 
-def _fake_decode_features(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic fake 'decoder': md5-derived feature vector.
-
-    Stands in for image-decode + embedding until codecs are available;
-    keeps every Spark-side contract (batch shape, dtype, determinism)
-    real and testable.  Component j = (first 60 md5 bits of
-    payload||':'||j) % 1000 / 1000 — reproducible in ANSI SQL, so the
-    driver's DuckDB oracle fully checks the plumbing end to end.
-    """
-    return [
-        (
-            int.from_bytes(hashlib.md5(payload + f":{j}".encode()).digest()[:8], "big")
-            >> 4
-        )
-        % 1000
-        / 1000.0
-        for j in range(dim)
-    ]
+def _feature(payload: Column, j: int) -> Column:
+    """Component ``j``: the first 60 bits of md5(payload || ':j'), mod
+    1000, over 1000.  The suffix is a binary literal, so the payload
+    bytes are hashed as they are, never decoded as text."""
+    hex60 = F.substring(F.md5(F.concat(payload, F.lit(f":{j}".encode()))), 1, 15)
+    return (F.conv(hex60, 16, 10).cast("long") % 1000) / F.lit(1000.0)
 
 
 def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
-    """binary payloads -> per-item feature vectors via mapInPandas.
-
-    Decode resolution order: the deterministic fake when
-    SIMPLIR_FAKE_DECODE=1 (the oracle-checked default in tests/contract),
-    else a REAL decode for supported formats (24-bit BMP in pure numpy;
-    any PIL format when PIL is importable — see functions/imagecodec.py),
-    else NotImplementedError — the stub stays explicit, never silently
-    wrong."""
-    fake = os.environ.get("SIMPLIR_FAKE_DECODE") == "1"
-
-    def _real_features(payload: bytes) -> list[float]:
-        from simplir_spark.functions.audiocodec import audio_features, try_decode_audio
-        from simplir_spark.functions.avicodec import try_decode_video, video_features
-        from simplir_spark.functions.imagecodec import image_features, try_decode_image
-
-        rgb = try_decode_image(payload)
-        if rgb is not None:
-            return image_features(rgb, dim)
-        clip = try_decode_audio(payload)
-        if clip is not None:
-            return audio_features(clip, dim)
-        vid = try_decode_video(payload)
-        if vid is not None:
-            return video_features(vid, dim)
-        raise NotImplementedError(
-            "no decoder for this payload (pure-numpy BMP/PNG/baseline-JPEG "
-            "images, PCM WAV audio, and MJPEG AVI video are built in; other "
-            "formats need PIL/libav, not in this container); set "
-            "SIMPLIR_FAKE_DECODE=1 for the deterministic test path"
-        )
-
-    def kernel(batches):
-        for pdf in batches:
-            if fake:
-                feats = [_fake_decode_features(bytes(p), dim) for p in pdf["payload"]]
-            else:
-                feats = [_real_features(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                    "sha256": pdf["payload"].map(
-                        lambda b: hashlib.sha256(bytes(b)).hexdigest()
-                    ),
-                    "feature": feats,
-                }
-            )
-
-    return media.mapInPandas(kernel, FEATURE_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling: one output row per sampled frame.
-
-    Gate order mirrors extract_features: the deterministic fake when
-    SIMPLIR_FAKE_DECODE=1 (oracle-reproducible), else REAL decode for
-    MJPEG AVI (RIFF parse + per-frame JPEG payloads — each emitted
-    frame_payload is itself a decodable baseline JPEG), else
-    NotImplementedError — other containers/codecs need libav.  The
-    row-explosion shape (media_id, frame_ts_ms, frame_payload) is the
-    contract either way.
-    """
-    fake = os.environ.get("SIMPLIR_FAKE_DECODE") == "1"
-
-    def kernel(batches):
-        from simplir_spark.functions.avicodec import try_decode_video
-
-        for pdf in batches:
-            out_id, out_ts, out_frame = [], [], []
-            for mid, payload, meta in zip(pdf["media_id"], pdf["payload"], pdf["meta"]):
-                if fake:
-                    dur = (meta or {}).get("duration_ms") or 0
-                    for ts in range(0, int(dur), every_ms):
-                        out_id.append(mid)
-                        out_ts.append(ts)
-                        digest = hashlib.md5(
-                            bytes(payload) + ts.to_bytes(8, "big")
-                        ).digest()
-                        out_frame.append(digest)
-                    continue
-                clip = try_decode_video(bytes(payload))
-                if clip is None:
-                    raise NotImplementedError(
-                        "no video decoder for this payload (pure-python MJPEG "
-                        "AVI is built in; other formats need libav); set "
-                        "SIMPLIR_FAKE_DECODE=1 for the deterministic test path"
-                    )
-                for ts in range(0, clip.duration_ms, every_ms):
-                    idx = int(ts * clip.fps / 1000.0)
-                    if idx >= clip.n_frames:
-                        break
-                    out_id.append(mid)
-                    out_ts.append(ts)
-                    out_frame.append(clip.frames[idx])
-            yield pd.DataFrame(
-                {"media_id": out_id, "frame_ts_ms": out_ts, "frame_payload": out_frame}
-            )
-
-    return media.mapInPandas(kernel, "media_id long, frame_ts_ms int, frame_payload binary")
-
-
-def resample_audio(media: DataFrame, target_rate: int) -> DataFrame:
-    """Audio-resample plumbing: payload -> resampled payload, the audio
-    analog of resize_images.
-
-    With SIMPLIR_FAKE_DECODE=1 the sample transform is a deterministic
-    fake (md5(payload || rate) tiled to ~2 bytes per output frame at an
-    assumed source rate); otherwise PCM WAV payloads go through the REAL
-    pure-numpy path (decode -> linear-interp resample -> re-encode WAV,
-    functions/audiocodec.py) and unsupported formats raise.  Non-audio
-    rows pass through unchanged; meta.duration_ms is preserved (duration
-    is rate-invariant) or filled from the real decode when absent.
-    """
-    fake = os.environ.get("SIMPLIR_FAKE_DECODE") == "1"
-
-    def _real_resample(payload: bytes):
-        from simplir_spark.functions.audiocodec import (
-            resample_linear,
-            try_decode_audio,
-            wav_encode,
-        )
-
-        clip = try_decode_audio(payload)
-        if clip is None:
-            raise NotImplementedError(
-                "no audio decoder for this payload (pure-numpy PCM WAV is "
-                "built in; other formats need libsndfile/ffmpeg, not in this "
-                "container); set SIMPLIR_FAKE_DECODE=1 for the deterministic "
-                "test path"
-            )
-        out = resample_linear(clip, target_rate)
-        return wav_encode(out), out.duration_ms
-
-    def kernel(batches):
-        for pdf in batches:
-            out_payload, out_meta = [], []
-            for kind, payload, meta in zip(pdf["kind"], pdf["payload"], pdf["meta"]):
-                if kind != "audio":
-                    out_payload.append(bytes(payload))
-                    out_meta.append(meta)
-                    continue
-                m = dict(meta or {})
-                if fake:
-                    dur = m.get("duration_ms") or 1000
-                    seed = hashlib.md5(
-                        bytes(payload) + f"@{target_rate}".encode()
-                    ).digest()
-                    # fake 'frames': digest tiled to ~2 bytes/output frame
-                    n_out = max(1, int(dur) * target_rate // 1000)
-                    n = max(1, (n_out * 2) // len(seed))
-                    out_payload.append((seed * n)[: n_out * 2])
-                else:
-                    pay, dur = _real_resample(bytes(payload))
-                    out_payload.append(pay)
-                    m["duration_ms"] = dur
-                out_meta.append(m)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "mime": pdf["mime"],
-                    "payload": out_payload,
-                    "meta": out_meta,
-                }
-            )
-
-    return media.mapInPandas(kernel, MEDIA_SCHEMA)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image-resize plumbing: payload -> resized payload + updated meta.
-
-    With SIMPLIR_FAKE_DECODE=1 the pixel transform is the deterministic
-    fake (md5(payload || WxH) tiled to the target area — the
-    oracle-checked default); otherwise BMP payloads go through the REAL
-    pure-numpy path (decode -> nearest-neighbor resample -> re-encode
-    BMP, functions/imagecodec.py) and unsupported formats raise.  Either
-    way the Spark-side contract is the same: batched binary in / binary
-    out, metadata struct rewritten to the target dimensions.  Non-image
-    rows pass through unchanged.
-    """
-    fake = os.environ.get("SIMPLIR_FAKE_DECODE") == "1"
-
-    def _real_resize(payload: bytes) -> bytes:
-        from simplir_spark.functions.imagecodec import (
-            bmp_encode,
-            resize_nearest,
-            try_decode_image,
-        )
-
-        rgb = try_decode_image(payload)
-        if rgb is None:
-            raise NotImplementedError(
-                "no decoder for this payload (pure-numpy BMP is built in; other "
-                "formats need PIL, not in this container); set "
-                "SIMPLIR_FAKE_DECODE=1 for the deterministic test path"
-            )
-        return bmp_encode(resize_nearest(rgb, width, height))
-
-    def kernel(batches):
-        for pdf in batches:
-            out_payload, out_meta = [], []
-            for kind, payload, meta in zip(pdf["kind"], pdf["payload"], pdf["meta"]):
-                if kind != "image":
-                    out_payload.append(bytes(payload))
-                    out_meta.append(meta)
-                    continue
-                if fake:
-                    seed = hashlib.md5(
-                        bytes(payload) + f"{width}x{height}".encode()
-                    ).digest()
-                    # fake 'pixels': digest tiled to ~3 bytes/pixel of target
-                    n = max(1, (width * height * 3) // len(seed))
-                    out_payload.append((seed * n)[: width * height * 3])
-                else:
-                    out_payload.append(_real_resize(bytes(payload)))
-                m = dict(meta or {})
-                m["width"], m["height"] = width, height
-                out_meta.append(m)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "mime": pdf["mime"],
-                    "payload": out_payload,
-                    "meta": out_meta,
-                }
-            )
-
-    return media.mapInPandas(kernel, MEDIA_SCHEMA)
+    """MEDIA_SCHEMA rows -> (media_id, kind, n_bytes, sha256, feature):
+    the payload's byte length, its SHA-256 hex digest and a ``dim``-long
+    md5-derived feature vector (``_feature``), as one projection with
+    ``FEATURE_SCHEMA``'s columns."""
+    payload = F.col("payload")
+    return media.select(
+        "media_id",
+        "kind",
+        F.length(payload).cast("long").alias("n_bytes"),
+        F.sha2(payload, 256).alias("sha256"),
+        F.array(*[_feature(payload, j) for j in range(dim)]).alias("feature"),
+    )

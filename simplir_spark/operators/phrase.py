@@ -35,6 +35,7 @@ from simplir_spark.operators.query_indexed import (
     _on_driver,
     _read_runs,
     _route_runs,
+    _score_groups,
 )
 
 
@@ -83,12 +84,12 @@ def phrase_match_scan(
     return tokenized.mapInPandas(kernel, f"phrase_id string, {id_col} {id_type}, tf long")
 
 
-def _phrase_tfs(pdf: pd.DataFrame, m: int, lo: int, hi: int) -> tuple[list[int], list[int]]:
-    """(dids, phrase tfs) of one ``m``-term phrase over the dids in
-    [lo, hi): ``pdf`` holds the runs of the phrase's terms, ``term_ix``
-    being the term's place in the phrase (a term the phrase repeats has
-    its runs once per place).  Each place's position lists are decoded
-    and grouped by did, then intersected with +1 shifts."""
+def _phrase_tfs(pdf: pd.DataFrame, m: int, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
+    """(dids, phrase tfs), both int64, of one ``m``-term phrase over the
+    dids in [lo, hi): ``pdf`` holds the runs of the phrase's terms,
+    ``term_ix`` being the term's place in the phrase (a term the phrase
+    repeats has its runs once per place).  Each place's position lists
+    are decoded and grouped by did, then intersected with +1 shifts."""
     per_ix: list[dict[int, np.ndarray]] = [dict() for _ in range(m)]
     for row in pdf.itertuples(index=False):
         dids, tfs, _ = codec.decode_run(
@@ -115,7 +116,7 @@ def _phrase_tfs(pdf: pd.DataFrame, m: int, lo: int, hi: int) -> tuple[list[int],
         if len(cand):
             out_did.append(did)
             out_tf.append(len(cand))
-    return out_did, out_tf
+    return np.asarray(out_did, dtype=np.int64), np.asarray(out_tf, dtype=np.int64)
 
 
 _PHRASE_COLS = ("start_did", "n", "deltas", "tfs", "dls", "pos")
@@ -130,7 +131,7 @@ def phrase_match_positional(
     """(phrase_id, did, tf) via the positional index: decode each phrase
     term's runs, group by did, intersect position lists with +1 shifts
     (``_phrase_tfs``).  Adjacency is in raw tokenN space (see module
-    docstring).
+    docstring).  Phrase ids must be distinct.
 
     The indexed scorers' path rule (``query_indexed._on_driver``) picks
     where it runs.  On the driver: one pushdown read of the phrase
@@ -138,29 +139,34 @@ def phrase_match_positional(
     Arrow-built LocalRelation returned — no Spark job.  On Spark: the
     postings scan pruned to the phrase terms → runs routed to every
     did-range shard they overlap (``_did_shards`` / ``_route_runs``) →
-    per-(phrase, shard) applyInPandas intersection (a doc's complete
-    position data lives in one shard, so shard outputs union exactly),
-    which bounds per-task memory to one shard's postings.
+    the scorers' (query_id, shard) ``mapInArrow`` pass
+    (``_score_groups``), one intersection per (phrase, shard) group (a
+    doc's complete position data lives in one shard, so shard outputs
+    union exactly), which bounds per-task memory to one shard's postings.
     """
+    ids = [pid for pid, _ in phrases]
+    if len(set(ids)) != len(ids):
+        raise ValueError(f"phrase ids must be distinct, got {ids}")
     if "pos" not in index.postings.columns:
         raise ValueError("index was not built with_positions=True")
     terms_needed = sorted({t for _, p in phrases for t in p})
     if _on_driver(index, phrases):
         runs = _read_runs(index, terms_needed, _PHRASE_COLS)
-        out = {"phrase_id": [], "did": [], "tf": []}
+        none = np.zeros(0, dtype=np.int64)
+        pids, dids, tfs = [], [none], [none]
         for pid, p in phrases:
             if not p:
                 continue
             by_ix = [runs[runs["term"] == t].assign(term_ix=j) for j, t in enumerate(p)]
-            dids, tfs = _phrase_tfs(pd.concat(by_ix), len(p), 0, index.doc_count)
-            out["phrase_id"] += [pid] * len(dids)
-            out["did"] += dids
-            out["tf"] += tfs
+            d, tf = _phrase_tfs(pd.concat(by_ix), len(p), 0, index.doc_count)
+            pids += [pid] * len(d)
+            dids.append(d)
+            tfs.append(tf)
         table = pa.table(
             {
-                "phrase_id": pa.array(out["phrase_id"], pa.string()),
-                "did": pa.array(out["did"], pa.int64()),
-                "tf": pa.array(out["tf"], pa.int64()),
+                "phrase_id": pa.array(pids, pa.string()),
+                "did": np.concatenate(dids),
+                "tf": np.concatenate(tfs),
             }
         )
         return spark.createDataFrame(table, _PHRASE_SCHEMA)
@@ -168,31 +174,26 @@ def phrase_match_positional(
     post = index.postings.filter(F.col("term").isin(terms_needed))
     # same span floor as the scorers: runs span many dids, narrow
     # shards duplicate every run (see query_indexed._MIN_SHARD_SPAN)
-    _, span = _did_shards(spark, len(phrases), index.doc_count)
+    n_shards, span = _did_shards(spark, len(phrases), index.doc_count)
 
     rows = [(pid, t, j) for pid, p in phrases for j, t in enumerate(p)]
     phrase_table = pa.Table.from_pandas(
-        pd.DataFrame(rows, columns=["phrase_id", "term", "term_ix"]), preserve_index=False
+        pd.DataFrame(rows, columns=["query_id", "term", "term_ix"]), preserve_index=False
     )
-    pdf_phrases = spark.createDataFrame(phrase_table, "phrase_id string, term string, term_ix int")
+    pdf_phrases = spark.createDataFrame(phrase_table, "query_id string, term string, term_ix int")
     matched = _route_runs(post.join(F.broadcast(pdf_phrases), "term"), span).select(
-        "phrase_id", "shard", "term_ix", "term", *_PHRASE_COLS
+        "query_id", "shard", "term_ix", "term", *_PHRASE_COLS
     )
     phrase_len = {pid: len(p) for pid, p in phrases}
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = pdf["phrase_id"].iloc[0]
-        lo = int(pdf["shard"].iloc[0]) * span
-        dids, tfs = _phrase_tfs(pdf, phrase_len[pid], lo, lo + span)
-        return pd.DataFrame(
-            {
-                "phrase_id": pid,
-                "did": np.asarray(dids, dtype=np.int64),
-                "tf": np.asarray(tfs, dtype=np.int64),
-            }
-        )
+    def score_group(pid: str, shard: int, pdf: pd.DataFrame):
+        lo = shard * span
+        return _phrase_tfs(pdf, phrase_len[pid], lo, lo + span)
 
-    return matched.groupBy("phrase_id", "shard").applyInPandas(score_group, _PHRASE_SCHEMA)
+    scored = _score_groups(spark, matched, len(phrases) * n_shards, score_group)
+    return scored.select(
+        F.col("query_id").alias("phrase_id"), "did", F.col("score").cast("long").alias("tf")
+    )
 
 
 def phrase_unit_rows(

@@ -12,10 +12,9 @@ column pruning are all JVM-side:
    path/length/modificationTime).
  * :func:`load_images_decoded` — ``spark.read.format("image")``: Spark's
    built-in Java ImageIO decode at scan time (JPEG/PNG/GIF/BMP),
-   yielding (height, width, nChannels, mode, data) without any Python
-   codec — the JVM-side alternative to the pure-numpy decoders in
-   functions/imagecodec.py (which exist for the Python-worker
-   mapInPandas path and for formats ImageIO lacks).
+   yielding (height, width, nChannels, mode, data).  It is the only
+   pixel decode in the package, and it runs in the JVM; no Python
+   worker touches the bytes.
 
 Reference parity note: the reference reads documents from archive files
 (TrecCarFile/Kba/Warc readers); media directories are the multimodal

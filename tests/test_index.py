@@ -561,6 +561,31 @@ def test_bm25_indexed_request_job_count(spark, index_dir, tmp_path_factory):
     assert jobs == 0, jobs
 
 
+def test_phrase_positional_repeated_id_raises_without_job(spark, tmp_path_factory, monkeypatch):
+    """A repeated phrase_id is refused before any Spark job, on the
+    driver path and on the Spark path: grouped by id, two phrases would
+    share one (phrase, shard) group and match each other's terms."""
+    from simplir_spark.operators.phrase import phrase_match_positional
+
+    corpus = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "alpha delta"), (3, "gamma delta")], "doc_key long, content string"
+    )
+    out = str(tmp_path_factory.mktemp("phrasedup") / "idx")
+    build_index(spark, corpus, out, n_partitions=2, run_size=8, with_positions=True)
+    pidx = open_index(spark, out)
+    phrases = [("P", ["alpha", "beta"]), ("P", ["gamma", "delta"])]
+
+    def refused():
+        with pytest.raises(ValueError, match="distinct"):
+            phrase_match_positional(spark, pidx, phrases)
+
+    for force in (False, True):
+        if force:
+            _force_spark(monkeypatch)
+        _, jobs = _jobs_run(spark, refused)
+        assert jobs == 0, (force, jobs)
+
+
 def test_indexed_no_match_collects_without_job(spark, index_dir):
     """A request whose queries match nothing returns an empty local
     relation: the collect after the call runs no Spark job."""

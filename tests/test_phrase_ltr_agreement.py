@@ -74,13 +74,13 @@ def test_phrase_match_positional_raw_adjacency(spark, tmp_path_factory, monkeypa
         return df._jdf.queryExecution().executedPlan().toString()
 
     res = phrase_match_positional(spark, idx, phrases)
-    assert "LocalTableScan" in plan(res) and "FlatMapGroupsInPandas" not in plan(res)
+    assert "LocalTableScan" in plan(res) and "MapInArrow" not in plan(res)
     got = sorted(tuple(r) for r in res.collect())
     # did order = doc_key order: doc_key 1..4 -> did 0..3
     assert got == [("P1", 0, 1), ("P1", 2, 1), ("P2", 3, 2)]
     monkeypatch.setattr(qi, "_DRIVER_DF_BUDGET", 0)
     res = phrase_match_positional(spark, idx, phrases)
-    assert "FlatMapGroupsInPandas" in plan(res)
+    assert "MapInArrow" in plan(res)
     assert sorted(tuple(r) for r in res.collect()) == got
 
 

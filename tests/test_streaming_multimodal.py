@@ -2,9 +2,9 @@
 
 from __future__ import annotations
 
+import hashlib
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -105,43 +105,66 @@ def test_windowed_event_counts_streaming_matches_static(spark, tmp_path_factory)
     assert got == want
 
 
-def test_multimodal_fake_decode(spark, monkeypatch, tmp_path_factory):
-    from simplir_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        sample_frames,
-    )
+def _reference_features(payload: bytes, dim: int = 8) -> list[float]:
+    """extract_features' vector in plain Python: component j is the first
+    60 bits of md5(payload || ':j'), mod 1000, over 1000."""
+    return [
+        (int.from_bytes(hashlib.md5(payload + f":{j}".encode()).digest()[:8], "big") >> 4)
+        % 1000
+        / 1000.0
+        for j in range(dim)
+    ]
 
-    monkeypatch.setenv("SIMPLIR_FAKE_DECODE", "1")
+
+def test_multimodal_fake_decode(spark):
+    """extract_features' md5 features, n_bytes and sha256 equal a hashlib
+    reference on media rows of every kind and on the empty payload,
+    non-UTF-8 bytes, a 0..255 ramp and random blobs: the payload is
+    hashed as bytes, never decoded as text."""
+    import random
+
+    from simplir_spark.operators.multimodal import MEDIA_SCHEMA, extract_features
+
     rows = [
         (1, "image", "image/png", b"\x89PNG fake bytes 1", {"width": 8, "height": 8, "duration_ms": None}),
         (2, "image", "image/png", b"\x89PNG fake bytes 2", {"width": 4, "height": 4, "duration_ms": None}),
         (3, "video", "video/mp4", b"\x00mp4 fake", {"width": 16, "height": 9, "duration_ms": 3500}),
     ]
+    rnd = random.Random(20261017)
+    blobs = [b"", b"\x00", b"\xff\xfe\x80\xc3", bytes(range(256))]
+    blobs += [rnd.randbytes(rnd.randint(1, 300)) for _ in range(40)]
+    rows += [(10 + i, "audio", "audio/wav", p, None) for i, p in enumerate(blobs)]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = extract_features(media, dim=8).collect()
-    assert len(feats) == 3
-    by_id = {r.media_id: r for r in feats}
-    assert all(len(r.feature) == 8 for r in feats)
-    assert by_id[1].feature != by_id[2].feature  # payload-dependent
-    # determinism across runs
-    feats2 = {r.media_id: r.feature for r in extract_features(media, dim=8).collect()}
-    assert {r.media_id: r.feature for r in feats} == feats2
+    payloads = {r[0]: r[3] for r in rows}
+    for dim in (8, 3):
+        got = {
+            r.media_id: (r.n_bytes, r.sha256, list(r.feature))
+            for r in extract_features(media, dim=dim).collect()
+        }
+        assert got == {
+            i: (len(p), hashlib.sha256(p).hexdigest(), _reference_features(p, dim))
+            for i, p in payloads.items()
+        }
+    assert got[1][2] != got[2][2]  # payload-dependent
 
-    frames = sample_frames(media.filter(F.col("kind") == "video"), every_ms=1000).collect()
-    assert [f.frame_ts_ms for f in sorted(frames, key=lambda r: r.frame_ts_ms)] == [0, 1000, 2000, 3000]
 
-
-def test_multimodal_without_codecs_raises(spark, monkeypatch):
-    from simplir_spark.operators.multimodal import MEDIA_SCHEMA, extract_features
-
-    monkeypatch.delenv("SIMPLIR_FAKE_DECODE", raising=False)
-    media = spark.createDataFrame(
-        [(1, "image", "image/png", b"x", {"width": 1, "height": 1, "duration_ms": None})],
+def test_extract_features_runs_no_python_worker(spark):
+    """extract_features is one Catalyst projection with FEATURE_SCHEMA's
+    columns and types: its executed plan holds no Python-worker node."""
+    from simplir_spark.operators.multimodal import (
+        FEATURE_SCHEMA,
         MEDIA_SCHEMA,
+        extract_features,
     )
-    with pytest.raises(Exception, match="NotImplementedError|decoding requires"):
-        extract_features(media).collect()
+
+    media = spark.createDataFrame([(1, "audio", "audio/wav", b"RIFF", None)], MEDIA_SCHEMA)
+    out = extract_features(media)
+    out.collect()
+    want = spark.createDataFrame([], FEATURE_SCHEMA).schema
+    assert [(f.name, f.dataType) for f in out.schema] == [(f.name, f.dataType) for f in want]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
+        assert node not in plan, plan
 
 
 def test_stateful_stream_dedup_across_microbatches(spark, tmp_path_factory):
@@ -203,496 +226,20 @@ def test_stateful_dedup_batch_mode(spark):
     assert got == {1, 2}
 
 
-def test_multimodal_resize_plumbing(spark, monkeypatch):
-    from simplir_spark.operators.multimodal import MEDIA_SCHEMA, resize_images
-
-    monkeypatch.setenv("SIMPLIR_FAKE_DECODE", "1")
-    rows = [
-        (1, "image", "image/png", b"\x89PNG fake bytes 1", {"width": 64, "height": 64, "duration_ms": None}),
-        (3, "video", "video/mp4", b"\x00mp4 fake", {"width": 16, "height": 9, "duration_ms": 3500}),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r.media_id: r for r in resize_images(media, 8, 8).collect()}
-    # image: payload rewritten to target-area size, meta updated
-    assert (out[1].meta.width, out[1].meta.height) == (8, 8)
-    assert len(out[1].payload) == 8 * 8 * 3
-    # deterministic
-    again = {r.media_id: bytes(r.payload) for r in resize_images(media, 8, 8).collect()}
-    assert bytes(out[1].payload) == again[1]
-    # non-image rows pass through untouched
-    assert bytes(out[3].payload) == b"\x00mp4 fake"
-    assert out[3].meta.duration_ms == 3500
-
-
-def test_real_bmp_decode_through_spark_plumbing(spark, monkeypatch):
-    """VERDICT r3 #7: a committed real image (24-bit BMP fixture) decodes
-    through the full Spark mapInPandas plumbing WITHOUT the fake-decode
-    env gate — features come from actual pixels, and resize produces a
-    re-encoded BMP with the target geometry."""
-    import os as _os
-
-    import numpy as np
-
-    from simplir_spark.functions.imagecodec import bmp_decode, image_features
-    from simplir_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        resize_images,
-    )
-
-    monkeypatch.delenv("SIMPLIR_FAKE_DECODE", raising=False)
-    payload = open(_os.path.join(_os.path.dirname(__file__), "data", "tiny.bmp"), "rb").read()
-    rgb = bmp_decode(payload)
-    assert rgb.shape == (4, 6, 3)
-
-    media = spark.createDataFrame(
-        [(1, "image", "image/bmp", payload, {"width": 6, "height": 4, "duration_ms": None})],
-        MEDIA_SCHEMA,
-    )
-    row = extract_features(media, dim=8).collect()[0]
-    # the distributed result equals the local pixel-space computation
-    assert row.feature == pytest.approx(image_features(rgb, 8))
-    assert row.feature[0] == 6.0 and row.feature[1] == 4.0  # real geometry
-    px = rgb.reshape(-1, 3).astype(float)
-    assert row.feature[2:5] == pytest.approx(px.mean(axis=0).tolist())
-
-    resized = resize_images(media, width=3, height=2).collect()[0]
-    out = bmp_decode(bytes(resized.payload))
-    assert out.shape == (2, 3, 3)
-    assert resized.meta.width == 3 and resized.meta.height == 2
-    # nearest-neighbor: every output pixel exists in the source
-    src = {tuple(p) for p in rgb.reshape(-1, 3).tolist()}
-    assert all(tuple(p) in src for p in out.reshape(-1, 3).tolist())
-
-
-def test_bmp_codec_roundtrip_properties():
-    import numpy as np
-
-    from simplir_spark.functions.imagecodec import (
-        bmp_decode,
-        bmp_encode,
-        resize_nearest,
-    )
-
-    rng = np.random.RandomState(7)
-    for h, w in [(1, 1), (3, 5), (7, 2), (4, 4)]:
-        rgb = rng.randint(0, 256, size=(h, w, 3)).astype("uint8")
-        assert (bmp_decode(bmp_encode(rgb)) == rgb).all(), (h, w)
-    # resize to same size is identity
-    rgb = rng.randint(0, 256, size=(5, 5, 3)).astype("uint8")
-    assert (resize_nearest(rgb, 5, 5) == rgb).all()
-    with pytest.raises(ValueError):
-        bmp_decode(b"not a bmp")
-
-
-def test_real_png_decode_through_spark_plumbing(spark, monkeypatch):
-    """VERDICT r4 #5: the committed PNG fixture (mixed scanline filters
-    0-4) decodes through the full mapInPandas plumbing without the
-    fake-decode gate — pure numpy + stdlib zlib, no PIL."""
-    import os as _os
-
-    from simplir_spark.functions.imagecodec import image_features, png_decode
-    from simplir_spark.operators.multimodal import MEDIA_SCHEMA, extract_features
-
-    monkeypatch.delenv("SIMPLIR_FAKE_DECODE", raising=False)
-    payload = open(
-        _os.path.join(_os.path.dirname(__file__), "data", "tiny.png"), "rb"
-    ).read()
-    rgb = png_decode(payload)
-    assert rgb.shape == (7, 5, 3)
-    # anchor on the analytic pattern the fixture was generated from, so a
-    # symmetric encode/decode bug cannot self-certify
-    for y in (0, 3, 6):
-        for x in (0, 2, 4):
-            assert tuple(rgb[y, x]) == (
-                (y * 40 + x) % 256, (x * 30) % 256, (255 - y * 35) % 256,
-            ), (y, x)
-
-    media = spark.createDataFrame(
-        [(1, "image", "image/png", payload,
-          {"width": 5, "height": 7, "duration_ms": None})],
-        MEDIA_SCHEMA,
-    )
-    row = extract_features(media, dim=8).collect()[0]
-    assert row.feature == pytest.approx(image_features(rgb, 8))
-    assert row.feature[0] == 5.0 and row.feature[1] == 7.0
-
-
-def test_png_codec_roundtrip_all_filters():
-    """Every PNG filter type (None/Sub/Up/Average/Paeth) and color path:
-    random images encoded with each single filter and with the mixed
-    cycle must decode bit-exactly; RGBA and grayscale sources decode via
-    hand-built chunks."""
-    import struct as _struct
-    import zlib as _zlib
-
-    import numpy as np
-
-    from simplir_spark.functions.imagecodec import PNG_MAGIC, png_decode, png_encode
-
-    rng = np.random.RandomState(11)
-    for f in [[0], [1], [2], [3], [4], [0, 1, 2, 3, 4]]:
-        for h, w in [(1, 1), (2, 7), (5, 3), (8, 8)]:
-            rgb = rng.randint(0, 256, size=(h, w, 3)).astype("uint8")
-            assert (png_decode(png_encode(rgb, filters=f)) == rgb).all(), (f, h, w)
-
-    def chunk(ctype, data):
-        return (_struct.pack(">I", len(data)) + ctype + data
-                + _struct.pack(">I", _zlib.crc32(ctype + data) & 0xFFFFFFFF))
-
-    # RGBA (color type 6): alpha dropped
-    h, w = 3, 2
-    rgba = rng.randint(0, 256, size=(h, w, 4)).astype("uint8")
-    lines = b"".join(b"\x00" + rgba[y].tobytes() for y in range(h))
-    payload = (PNG_MAGIC
-               + chunk(b"IHDR", _struct.pack(">IIBBBBB", w, h, 8, 6, 0, 0, 0))
-               + chunk(b"IDAT", _zlib.compress(lines))
-               + chunk(b"IEND", b""))
-    assert (png_decode(payload) == rgba[:, :, :3]).all()
-
-    # grayscale (color type 0): replicated to RGB
-    gray = rng.randint(0, 256, size=(h, w)).astype("uint8")
-    lines = b"".join(b"\x00" + gray[y].tobytes() for y in range(h))
-    payload = (PNG_MAGIC
-               + chunk(b"IHDR", _struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0))
-               + chunk(b"IDAT", _zlib.compress(lines))
-               + chunk(b"IEND", b""))
-    out = png_decode(payload)
-    assert (out[:, :, 0] == gray).all() and (out[:, :, 1] == gray).all()
-
-    # unsupported stays ValueError (palette type 3, interlaced)
-    bad = (PNG_MAGIC
-           + chunk(b"IHDR", _struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0)))
-    with pytest.raises(ValueError):
-        png_decode(bad)
-    inter = (PNG_MAGIC
-             + chunk(b"IHDR", _struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 1)))
-    with pytest.raises(ValueError):
-        png_decode(inter)
-    with pytest.raises(ValueError):
-        png_decode(b"nope")
-
-
-def test_real_wav_decode_through_spark_plumbing(spark, monkeypatch):
-    """Round-5 audio analog of the BMP/PNG tests: the committed PCM WAV
-    fixture (16-bit stereo, with a LIST chunk before data to exercise
-    RIFF chunk walking) decodes through the full mapInPandas plumbing
-    without the fake-decode gate, and resample_audio re-encodes a real
-    WAV at the target rate."""
-    import os as _os
-
-    import numpy as np
-
-    from simplir_spark.functions.audiocodec import audio_features, wav_decode
-    from simplir_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        resample_audio,
-    )
-
-    monkeypatch.delenv("SIMPLIR_FAKE_DECODE", raising=False)
-    payload = open(
-        _os.path.join(_os.path.dirname(__file__), "data", "tiny.wav"), "rb"
-    ).read()
-    clip = wav_decode(payload)
-    assert (clip.n_frames, clip.n_channels, clip.sample_rate) == (120, 2, 8000)
-    # anchor on the analytic pattern the fixture was generated from
-    for i in (0, 7, 119):
-        for c in (0, 1):
-            want = (((i * 773 + c * 131) % 2001) - 1000) / 32768.0
-            assert clip.samples[i, c] == pytest.approx(want, abs=1e-12), (i, c)
-
-    media = spark.createDataFrame(
-        [(1, "audio", "audio/wav", payload,
-          {"width": None, "height": None, "duration_ms": 15})],
-        MEDIA_SCHEMA,
-    )
-    row = extract_features(media, dim=10).collect()[0]
-    assert row.feature == pytest.approx(audio_features(clip, 10))
-    assert row.feature[0] == pytest.approx(120 / 8000)  # real duration
-    assert row.feature[1] == 8000.0 and row.feature[2] == 2.0
-
-    out = resample_audio(media, target_rate=4000).collect()[0]
-    res = wav_decode(bytes(out.payload))
-    assert res.sample_rate == 4000
-    assert res.n_frames == 60 and res.n_channels == 2
-    assert out.meta.duration_ms == res.duration_ms
-    # linear interp at even indices hits the original samples (up to
-    # 16-bit re-quantization)
-    assert res.samples[0, 0] == pytest.approx(clip.samples[0, 0], abs=2 / 32768)
-
-
-def test_wav_codec_roundtrip_and_resample_properties():
-    import numpy as np
-
-    from simplir_spark.functions.audiocodec import (
-        AudioClip,
-        resample_linear,
-        try_decode_audio,
-        wav_decode,
-        wav_encode,
-    )
-
-    rng = np.random.RandomState(11)
-    for n_frames, n_ch, bits in [(1, 1, 16), (50, 2, 16), (33, 3, 16), (40, 1, 8)]:
-        s = rng.uniform(-1, 1, size=(n_frames, n_ch))
-        clip = AudioClip(s, 16000)
-        back = wav_decode(wav_encode(clip, bits=bits))
-        assert (back.n_frames, back.n_channels, back.sample_rate) == (
-            n_frames, n_ch, 16000,
-        )
-        # encode rounds at x32767, decode divides by 32768 (resp. 127/128):
-        # worst case (0.5 + |s|) / 32768
-        tol = 1.5 / 32768 if bits == 16 else 1.5 / 128
-        assert np.abs(back.samples - np.clip(s, -1, 1)).max() <= tol
-
-    # resampling a linear ramp is exact (np.interp of a line is the line)
-    ramp = np.linspace(-0.5, 0.5, 101).reshape(-1, 1)
-    up = resample_linear(AudioClip(ramp, 1000), 2000)
-    assert up.n_frames == 202
-    assert np.allclose(np.diff(up.samples[:, 0]), np.diff(up.samples[:, 0])[0])
-    same = resample_linear(AudioClip(ramp, 1000), 1000)
-    assert same.samples is ramp  # no-op fast path
-
-    # non-WAV and non-PCM payloads are rejected / return None
-    assert try_decode_audio(b"\x89PNG\r\n\x1a\n") is None
-    with pytest.raises(ValueError):
-        wav_decode(b"RIFFxxxxWAVE")
-
-
-# ---------------------------------------------------------------------------
-# JPEG (pure-numpy baseline codec)
-# ---------------------------------------------------------------------------
-
-def test_jpeg_codec_roundtrip():
-    """Encode->decode at several qualities: smooth content survives with
-    tight error bounds, flat color is exact, non-multiple-of-8 sizes pad
-    and crop correctly."""
-    import numpy as np
-
-    from simplir_spark.functions.jpegcodec import decode_jpeg, encode_jpeg
-
-    for h, w in [(40, 56), (17, 23), (8, 8), (9, 1)]:
-        yy, xx = np.mgrid[0:h, 0:w]
-        img = np.stack(
-            [
-                xx * 255 // max(1, w - 1),
-                yy * 255 // max(1, h - 1),
-                (xx + yy) * 255 // max(1, w + h - 2),
-            ],
-            axis=2,
-        ).astype("uint8")
-        for q in (95, 75):
-            dec = decode_jpeg(encode_jpeg(img, quality=q))
-            assert dec.shape == img.shape
-            err = np.abs(dec.astype(float) - img.astype(float))
-            assert err.mean() < 6.0 and err.max() <= 24, (h, w, q, err.max())
-
-    flat = np.full((16, 24, 3), 137, dtype="uint8")
-    assert (decode_jpeg(encode_jpeg(flat, 90)) == flat).all()
-
-
-def test_jpeg_decoder_vs_java_imageio_reference(spark):
-    """Decode a REAL third-party JPEG (baseline 4:2:0, standard Huffman
-    tables, shipped with the Apache Spark distribution) and compare
-    against Java ImageIO via Spark's built-in `image` data source — an
-    independent reference decoder, so a symmetric codec bug cannot
-    self-certify.  Residual differences are IDCT rounding and chroma
-    upsampling choices, both bounded."""
-    import os as _os
-
-    import numpy as np
-
-    from simplir_spark.functions.jpegcodec import decode_jpeg
-
-    p = (
-        "/opt/spark-4.1.2-bin-hadoop3/data/mllib/images/origin/"
-        "kittens/DP802813.jpg"
-    )
-    if not _os.path.exists(p):
-        pytest.skip("Spark sample images not present")
-    mine = decode_jpeg(open(p, "rb").read())
-    row = spark.read.format("image").load(p).select("image.*").first()
-    ref = np.frombuffer(bytes(row.data), dtype=np.uint8).reshape(
-        row.height, row.width, row.nChannels
-    )[..., ::-1]  # image source yields BGR
-    assert mine.shape == ref.shape
-    diff = np.abs(mine.astype(float) - ref.astype(float))
-    assert diff.mean() < 2.0, diff.mean()
-    assert (diff <= 8).mean() >= 0.99
-
-
-def test_jpeg_progressive_rejected():
-    """Progressive (SOF2) files raise ValueError from decode_jpeg and
-    fall through try_decode_image as None (the honest stub path)."""
-    import os as _os
-
-    from simplir_spark.functions.imagecodec import try_decode_image
-    from simplir_spark.functions.jpegcodec import decode_jpeg
-
-    p = (
-        "/opt/spark-4.1.2-bin-hadoop3/data/mllib/images/origin/"
-        "multi-channel/grayscale.jpg"
-    )
-    if not _os.path.exists(p):
-        pytest.skip("Spark sample images not present")
-    payload = open(p, "rb").read()
-    with pytest.raises(ValueError, match="progressive"):
-        decode_jpeg(payload)
-    assert try_decode_image(payload) is None
-
-
-def test_real_jpeg_decode_through_spark_plumbing(spark, monkeypatch):
-    """The committed JPEG fixture decodes through the full mapInPandas
-    plumbing without the fake-decode gate; decoded pixels stay within
-    lossy-codec tolerance of the analytic pattern the fixture encodes."""
-    import os as _os
-
-    import numpy as np
-
-    from simplir_spark.functions.imagecodec import image_features
-    from simplir_spark.functions.jpegcodec import decode_jpeg
-    from simplir_spark.operators.multimodal import MEDIA_SCHEMA, extract_features
-
-    monkeypatch.delenv("SIMPLIR_FAKE_DECODE", raising=False)
-    payload = open(
-        _os.path.join(_os.path.dirname(__file__), "data", "tiny.jpg"), "rb"
-    ).read()
-    rgb = decode_jpeg(payload)
-    assert rgb.shape == (24, 32, 3)
-    h, w = 24, 32
-    yy, xx = np.mgrid[0:h, 0:w]
-    want = np.stack(
-        [(xx * 8) % 256, (yy * 11) % 256, ((xx + yy) * 5) % 256], axis=2
-    ).astype(float)
-    # the pattern wraps mod 256 (sharp sawtooth edges) — bound the MEAN
-    # error, not the max, and anchor the smooth top-left region tightly
-    assert np.abs(rgb.astype(float) - want).mean() < 8.0
-    assert np.abs(rgb[:8, :8].astype(float) - want[:8, :8]).max() <= 32
-
-    media = spark.createDataFrame(
-        [
-            (
-                1,
-                "image",
-                "image/jpeg",
-                payload,
-                {"width": 32, "height": 24, "duration_ms": None},
-            )
-        ],
-        MEDIA_SCHEMA,
-    )
-    row = extract_features(media, dim=8).collect()[0]
-    assert row.feature == pytest.approx(image_features(rgb, 8))
-    assert row.feature[0] == 32.0 and row.feature[1] == 24.0
-
-
-# ---------------------------------------------------------------------------
-# MJPEG AVI video (pure-python container + own JPEG frames)
-# ---------------------------------------------------------------------------
-
-def test_avi_codec_roundtrip():
-    """Minimal MJPEG AVI writer/reader: frame payloads survive bit-exactly,
-    frame rate and dimensions round-trip, each frame decodes as JPEG."""
-    import numpy as np
-
-    from simplir_spark.functions.avicodec import (
-        avi_decode_mjpeg,
-        avi_encode_mjpeg,
-        is_avi,
-    )
-    from simplir_spark.functions.jpegcodec import decode_jpeg, encode_jpeg
-
-    h, w = 16, 24
-    yy, xx = np.mgrid[0:h, 0:w]
-    frames = [
-        encode_jpeg(
-            np.stack(
-                [(xx * 10 + t * 37) % 256, (yy * 13) % 256,
-                 np.full((h, w), (t * 50) % 256)],
-                axis=2,
-            ).astype("uint8"),
-            quality=90,
-        )
-        for t in range(5)
-    ]
-    avi = avi_encode_mjpeg(frames, fps=4.0, width=w, height=h)
-    assert is_avi(avi)
-    clip = avi_decode_mjpeg(avi)
-    assert clip.frames == frames
-    assert clip.fps == 4.0 and (clip.width, clip.height) == (w, h)
-    assert clip.duration_ms == 1250
-    for f in clip.frames:
-        assert decode_jpeg(f).shape == (h, w, 3)
-
-
-def test_real_video_through_spark_plumbing(spark, monkeypatch):
-    """The committed AVI fixture goes through sample_frames and
-    extract_features WITHOUT the fake gate: sampled timestamps follow the
-    container's real frame rate, every emitted frame_payload is a
-    decodable JPEG, and video features carry (n_frames, fps)."""
-    import os as _os
-
-    import numpy as np
-
-    from simplir_spark.functions.avicodec import avi_decode_mjpeg
-    from simplir_spark.functions.jpegcodec import decode_jpeg
-    from simplir_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        sample_frames,
-    )
-
-    monkeypatch.delenv("SIMPLIR_FAKE_DECODE", raising=False)
-    payload = open(
-        _os.path.join(_os.path.dirname(__file__), "data", "tiny.avi"), "rb"
-    ).read()
-    clip = avi_decode_mjpeg(payload)
-    media = spark.createDataFrame(
-        [(7, "video", "video/x-msvideo", payload,
-          {"width": 24, "height": 16, "duration_ms": 1250})],
-        MEDIA_SCHEMA,
-    )
-    rows = sample_frames(media, every_ms=500).collect()
-    assert [(r.media_id, r.frame_ts_ms) for r in rows] == [
-        (7, 0), (7, 500), (7, 1000)
-    ]
-    # ts -> frame index at 4 fps: 0, 2, 4
-    for r, idx in zip(rows, (0, 2, 4)):
-        assert bytes(r.frame_payload) == clip.frames[idx]
-        assert decode_jpeg(bytes(r.frame_payload)).shape == (16, 24, 3)
-
-    feat = extract_features(media, dim=8).collect()[0]
-    assert feat.feature[0] == 5.0 and feat.feature[1] == 4.0  # n_frames, fps
-    mid = decode_jpeg(clip.frames[2]).reshape(-1, 3).astype(float)
-    assert feat.feature[2] == 24.0 and feat.feature[3] == 16.0
-    assert feat.feature[4] == pytest.approx(mid[:, 0].mean())
-
-    # unsupported payloads still refuse loudly on the real path
-    bad = spark.createDataFrame(
-        [(8, "video", "video/mp4", b"\x00\x01\x02notavideo",
-          {"width": 1, "height": 1, "duration_ms": 100})],
-        MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception, match="no video decoder"):
-        sample_frames(bad, every_ms=50).collect()
-
-
 # ---------------------------------------------------------------------------
 # media sources (binaryFile / image)
 # ---------------------------------------------------------------------------
 
-def test_load_media_binaryfile_to_pipeline(spark, monkeypatch):
-    """binaryFile source -> MEDIA_SCHEMA shape -> real feature extraction:
-    the committed fixtures load straight off disk and every payload
-    decodes through its pure-python codec (image + audio + video in one
-    mixed directory scan)."""
+def test_load_media_binaryfile_to_pipeline(spark):
+    """binaryFile source -> MEDIA_SCHEMA shape -> feature extraction: the
+    committed fixtures (image + audio + video in one mixed directory
+    scan) load straight off disk, and each row's n_bytes and sha256 are
+    those of the file's bytes."""
     import os as _os
 
     from simplir_spark.operators.multimodal import extract_features
     from simplir_spark.sources.media import load_media
 
-    monkeypatch.delenv("SIMPLIR_FAKE_DECODE", raising=False)
     data_dir = _os.path.join(_os.path.dirname(__file__), "data")
     media = load_media(spark, data_dir, glob="tiny.*")
     rows = {r.path.rsplit("/", 1)[-1]: r for r in media.collect()}
@@ -704,6 +251,13 @@ def test_load_media_binaryfile_to_pipeline(spark, monkeypatch):
 
     feats = extract_features(media.drop("path"), dim=8).collect()
     assert len(feats) == 5 and all(len(r.feature) == 8 for r in feats)
+    by_id = {r.media_id: r for r in feats}
+    for r in rows.values():
+        with open(_os.path.join(data_dir, r.path.rsplit("/", 1)[-1]), "rb") as f:
+            data = f.read()
+        got = by_id[r.media_id]
+        assert (got.n_bytes, got.sha256) == (len(data), hashlib.sha256(data).hexdigest())
+        assert got.feature == _reference_features(data)
     # determinism across a re-scan
     feats2 = extract_features(load_media(spark, data_dir, glob="tiny.*").drop("path"), dim=8).collect()
     assert {r.media_id: r.feature for r in feats} == {
@@ -712,8 +266,8 @@ def test_load_media_binaryfile_to_pipeline(spark, monkeypatch):
 
 
 def test_load_images_decoded_jvm_source(spark):
-    """Spark's built-in image source decodes our committed fixtures
-    JVM-side; dimensions agree with the pure-python codecs."""
+    """Spark's built-in image source decodes the committed image fixtures
+    JVM-side (Java ImageIO) with the dimensions they were written with."""
     import os as _os
 
     from simplir_spark.sources.media import load_images_decoded
@@ -727,153 +281,3 @@ def test_load_images_decoded_jvm_source(spark):
     assert rows["tiny.bmp"].height > 0
     assert (rows["tiny.jpg"].height, rows["tiny.jpg"].width) == (24, 32)
     assert (rows["tiny.png"].height, rows["tiny.png"].width) == (7, 5)
-
-
-def test_try_decode_malformed_payloads_return_none():
-    # regression: malformed media used to raise KeyError/struct.error/
-    # zlib.error straight through the try_decode_* wrappers (which caught
-    # only ValueError), killing the whole mapInPandas batch
-    import struct
-    import zlib
-
-    from simplir_spark.functions.audiocodec import try_decode_audio, wav_encode
-    from simplir_spark.functions.avicodec import try_decode_video
-    from simplir_spark.functions.imagecodec import (
-        bmp_encode,
-        png_encode,
-        try_decode_image,
-    )
-    from simplir_spark.functions.jpegcodec import encode_jpeg
-
-    import numpy as np
-
-    rgb = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
-    good = {
-        "bmp": bmp_encode(rgb),
-        "png": png_encode(rgb),
-        "jpg": encode_jpeg(rgb),
-    }
-    for kind, payload in good.items():
-        assert try_decode_image(payload) is not None, kind
-        # truncate at several points inside the structure: early cuts must
-        # degrade to None; ANY cut must never raise (a tail cut may still
-        # decode — e.g. a PNG losing only its IEND CRC)
-        for cut in (8, 16, len(payload) // 2):
-            assert try_decode_image(payload[:cut]) is None, (kind, cut)
-        try_decode_image(payload[: len(payload) - 3])
-    # PNG with corrupt IDAT bytes -> zlib.error internally
-    png = bytearray(good["png"])
-    png[41] ^= 0xFF
-    assert try_decode_image(bytes(png)) is None
-    # WAV: truncated header -> struct.error internally
-    from simplir_spark.functions.audiocodec import AudioClip
-
-    clip = AudioClip(np.zeros((32, 1)), 8000)
-    wav = wav_encode(clip)
-    assert try_decode_audio(wav) is not None
-    for cut in (6, 14, 20):
-        assert try_decode_audio(wav[:cut]) is None, cut
-    try_decode_audio(wav[: len(wav) - 1])  # tail cut: may decode, must not raise
-    # AVI: truncated RIFF walk
-    from simplir_spark.functions.avicodec import avi_encode_mjpeg
-
-    avi = avi_encode_mjpeg([good["jpg"], good["jpg"]], fps=5, width=4, height=4)
-    assert try_decode_video(avi) is not None
-    for cut in (13, 40):
-        assert try_decode_video(avi[:cut]) is None, cut
-    # mid-cut: the RIFF walk may salvage complete leading frames, must not raise
-    try_decode_video(avi[: len(avi) // 2])
-
-
-def test_resample_empty_clip_passes_through():
-    import numpy as np
-
-    from simplir_spark.functions.audiocodec import AudioClip, resample_linear
-
-    clip = AudioClip(np.zeros((0, 2)), 44100)
-    out = resample_linear(clip, 16000)
-    assert out.sample_rate == 16000 and out.n_frames == 0 and out.n_channels == 2
-
-
-def test_jpeg_fill_bytes_before_marker_decode():
-    # regression: legal 0xFF fill padding before a marker (ITU T.81
-    # B.1.1.2) used to abort the marker scan
-    import numpy as np
-
-    from simplir_spark.functions.jpegcodec import decode_jpeg, encode_jpeg
-
-    rgb = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
-    payload = encode_jpeg(rgb)
-    # insert a fill byte right before the SOS marker (FF DA)
-    i = payload.index(b"\xff\xda")
-    padded = payload[:i] + b"\xff" + payload[i:]
-    a = decode_jpeg(payload)
-    b = decode_jpeg(padded)
-    assert (a == b).all()
-
-
-def test_video_features_corrupt_middle_frame_degrades():
-    # regression: a corrupt middle frame escaped the decode error
-    # boundary and killed the whole batch; now the pixel-feature tail
-    # degrades to zeros
-    import numpy as np
-
-    from simplir_spark.functions.avicodec import (
-        avi_encode_mjpeg,
-        try_decode_video,
-        video_features,
-    )
-    from simplir_spark.functions.jpegcodec import encode_jpeg
-
-    rgb = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
-    good = encode_jpeg(rgb)
-    bad = good[: len(good) // 2]
-    avi = avi_encode_mjpeg([good, bad, good], fps=5, width=4, height=4)
-    clip = try_decode_video(avi)
-    feats = video_features(clip, dim=8)
-    assert feats[:2] == [3.0, 5.0]
-    assert feats[2:] == [0.0] * 6
-    # out-of-range dimensions raise a clear error, not struct.error
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="out of range"):
-        avi_encode_mjpeg([good], fps=5, width=40000, height=4)
-
-
-def test_fake_decode_env_restored_after_contract_entry(spark):
-    # regression: the multimodal contract entry permanently set
-    # SIMPLIR_FAKE_DECODE=1, flipping later real-decode paths to fake
-    import os
-
-    import __spark_entry__ as entry
-
-    os.environ.pop("SIMPLIR_FAKE_DECODE", None)
-    df = entry.q_multimodal_features(spark, "/root/testdata/sf0.001")
-    assert df.limit(1).count() >= 0  # plan builds and runs
-    assert "SIMPLIR_FAKE_DECODE" not in os.environ
-
-
-def test_try_decode_never_raises_on_arbitrary_bytes():
-    """Fuzz the whole decode dispatch: arbitrary byte blobs (including
-    ones that start with valid magics) must return None or a decoded
-    object, never raise — one hostile payload must not kill a batch."""
-    import numpy as np
-
-    from simplir_spark.functions.audiocodec import try_decode_audio
-    from simplir_spark.functions.avicodec import try_decode_video
-    from simplir_spark.functions.imagecodec import (
-        BMP_MAGIC,
-        PNG_MAGIC,
-        try_decode_image,
-    )
-
-    rng = np.random.RandomState(20260818)
-    magics = [b"", BMP_MAGIC, PNG_MAGIC, b"\xff\xd8\xff", b"RIFF", b"RIFFxxxxWAVE", b"RIFFxxxxAVI "]
-    for trial in range(200):
-        n = int(rng.randint(0, 512))
-        blob = rng.bytes(n)
-        prefix = magics[trial % len(magics)]
-        payload = prefix + blob
-        try_decode_image(payload)
-        try_decode_audio(payload)
-        try_decode_video(payload)
