@@ -25,6 +25,7 @@ Both encode and decode are fully vectorized:
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 MAX_SMALLNAT = (1 << 62) - 1
 
@@ -73,18 +74,23 @@ def encode_varints(values: np.ndarray) -> bytes:
     return stream.tobytes()
 
 
-def decode_varints(buf: bytes, n_values: int) -> np.ndarray:
-    """Decode ``n_values`` SmallNat naturals from ``buf`` (vectorized).
+def decode_varints(buf, n_values: int) -> np.ndarray:
+    """Decode ``n_values`` SmallNat naturals from ``buf`` (any bytes-like
+    object: bytes, a numpy uint8 array, a pyarrow Buffer), vectorized.
 
     Header positions are found by pointer doubling: treat every byte as a
     hypothetical header with jump length from its tag bits; the true header
     set is the orbit of position 0 under that jump map, which has exactly
     ``n_values`` elements and is generated in ceil(log2(n)) doubling steps.
+    A stream of exactly ``n_values`` bytes holds only 1-byte values, so
+    every byte is a header and no doubling runs.
     """
     if n_values == 0:
         return np.zeros(0, dtype=np.uint64)
     b = np.frombuffer(buf, dtype=np.uint8)
     nb = len(b)
+    if nb == n_values:
+        return (b & 0x3F).astype(np.uint64)
     jump_of_byte = _NBYTES[(b >> 6).astype(np.int64)]  # len if byte were a header
     nxt = np.arange(nb, dtype=np.int64) + jump_of_byte
     np.clip(nxt, 0, nb - 1, out=nxt)  # clamp so gathers stay in range
@@ -97,12 +103,15 @@ def decode_varints(buf: bytes, n_values: int) -> np.ndarray:
         headers = np.concatenate([headers, new])
         jump = jump[jump]
         steps *= 2
-    headers = np.unique(headers)[:n_values]
+    # the orbit's first n_values positions, in byte order (the clamp can
+    # only add the last byte, which sorts after every true header)
+    is_header = np.zeros(nb, dtype=bool)
+    is_header[headers] = True
+    headers = np.flatnonzero(is_header)[:n_values]
 
     hb = b[headers]
     tags = (hb >> 6).astype(np.int64)
     out = (hb & 0x3F).astype(np.uint64)
-    lens = _NBYTES[tags]
     for c, n in ((1, 2), (2, 4), (3, 8)):
         m = tags == c
         if not m.any():
@@ -113,6 +122,66 @@ def decode_varints(buf: bytes, n_values: int) -> np.ndarray:
             acc |= b[base + k].astype(np.uint64) << np.uint64(8 * (n - 1 - k))
         out[m] = acc
     return out
+
+
+def blob_stream(blobs) -> np.ndarray:
+    """The concatenated bytes of a column of blobs, as a uint8 array.
+
+    ``blobs`` is a pyarrow ``BinaryArray`` / ``LargeBinaryArray`` (sliced
+    or not), a ``ChunkedArray`` of them, or one bytes-like object (already
+    a stream).  A single Arrow array's data buffer already IS the
+    concatenation, so its stream is a zero-copy view of the bytes between
+    its first and last offset; chunks are concatenated.
+    """
+    if isinstance(blobs, pa.ChunkedArray):
+        parts = [blob_stream(c) for c in blobs.chunks]
+        if len(parts) == 1:
+            return parts[0]
+        return np.concatenate(parts) if parts else np.zeros(0, dtype=np.uint8)
+    if isinstance(blobs, pa.Array):
+        if len(blobs) == 0:
+            return np.zeros(0, dtype=np.uint8)
+        width = np.int64 if pa.types.is_large_binary(blobs.type) else np.int32
+        _, offsets, data = blobs.buffers()
+        itemsize = np.dtype(width).itemsize
+        offs = np.frombuffer(offsets, dtype=width, count=len(blobs) + 1, offset=blobs.offset * itemsize)
+        if data is None:
+            return np.zeros(0, dtype=np.uint8)
+        return np.frombuffer(data, dtype=np.uint8)[offs[0] : offs[-1]]
+    return np.frombuffer(blobs, dtype=np.uint8)
+
+
+def _segmented_cumsum(values: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Cumulative sum of ``values`` restarting at every segment, the
+    segments being consecutive runs of ``counts`` values."""
+    csum = np.cumsum(values)
+    # the running sum just before each segment's first value
+    before = np.concatenate(([0], csum))[np.cumsum(counts) - counts]
+    return csum - np.repeat(before, counts)
+
+
+def decode_runs(
+    start_did, n, deltas, tfs, dls
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode many posting runs at once to concatenated (dids, tfs, dls).
+
+    ``start_did`` and ``n`` are per-run arrays; ``deltas``, ``tfs`` and
+    ``dls`` are the runs' blob columns in any form ``blob_stream`` takes.
+    Blobs of consecutive runs concatenate to one valid varint stream, so
+    each column is ONE ``decode_varints`` call; dids come back by a
+    segmented cumulative sum (each run's deltas summed from its own
+    ``start_did``).  Equal to concatenating ``decode_run`` over the runs.
+    """
+    start_did = np.asarray(start_did, dtype=np.int64)
+    n = np.asarray(n, dtype=np.int64)
+    total = int(n.sum())
+    d = decode_varints(blob_stream(deltas), total).astype(np.int64)
+    dids = _segmented_cumsum(d, n) + np.repeat(start_did, n)
+    return (
+        dids,
+        decode_varints(blob_stream(tfs), total).astype(np.int64),
+        decode_varints(blob_stream(dls), total).astype(np.int64),
+    )
 
 
 def encode_positions(pos_lists) -> bytes:
@@ -135,23 +204,23 @@ def encode_positions(pos_lists) -> bytes:
     return encode_varints(flat)
 
 
+def decode_positions_flat(blobs, tfs) -> np.ndarray:
+    """Absolute positions of every posting, concatenated, as int64:
+    posting i's positions are ``out[e - tfs[i]:e]`` with ``e`` the sum of
+    ``tfs[:i + 1]``.  ``blobs`` is one positions blob or many runs' blobs
+    in any form ``blob_stream`` takes (``tfs`` then lists all their
+    postings' tfs in order): each posting's positions restart from an
+    absolute first value, so run blobs concatenate.  One varint decode
+    and a segmented cumulative sum; no per-posting Python work."""
+    counts = np.asarray(tfs, dtype=np.int64)
+    flat = decode_varints(blob_stream(blobs), int(counts.sum())).astype(np.int64)
+    return _segmented_cumsum(flat, counts)
+
+
 def decode_positions(buf: bytes, tfs: np.ndarray) -> list[np.ndarray]:
     """Inverse of encode_positions; ``tfs`` gives per-posting counts."""
     counts = np.asarray(tfs, dtype=np.int64)
-    total = int(counts.sum())
-    flat = decode_varints(buf, total).astype(np.int64)
-    # segmented cumsum: absolute positions within each posting
-    ends = np.cumsum(counts)
-    starts = ends - counts
-    csum = np.cumsum(flat)
-    out = []
-    for s, e in zip(starts, ends):
-        if e == s:
-            out.append(np.zeros(0, dtype=np.int64))
-        else:
-            base = csum[s - 1] if s > 0 else 0
-            out.append(csum[s:e] - base)
-    return out
+    return np.split(decode_positions_flat(buf, counts), np.cumsum(counts)[:-1])
 
 
 def encode_run(dids: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> dict:

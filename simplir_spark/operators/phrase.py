@@ -23,7 +23,6 @@ Two implementations:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +35,7 @@ from simplir_spark.operators.query_indexed import (
     _read_runs,
     _route_runs,
     _score_groups,
+    _term_rows,
 )
 
 
@@ -53,70 +53,89 @@ def phrase_match_scan(
     from simplir_spark.functions.tokenize import with_tokens
 
     tokenized = with_tokens(corpus).select(id_col, "terms")
-    plist = [(pid, list(terms)) for pid, terms in phrases]
+    pids = [pid for pid, _ in phrases]
+    plist = [list(terms) for _, terms in phrases]
 
     def kernel(batches):
-        for pdf in batches:
-            ids_out, pid_out, tf_out = [], [], []
-            for doc_id, terms in zip(pdf[id_col], pdf["terms"]):
-                if terms is None or len(terms) == 0:
-                    continue
-                arr = np.asarray(terms, dtype=object)
-                n = len(arr)
-                for pid, p in plist:
-                    m = len(p)
-                    if m == 0 or m > n:
-                        continue
-                    # vectorized sliding equality over the term sequence
-                    hit = arr[: n - m + 1] == p[0]
-                    for j in range(1, m):
-                        hit = hit & (arr[j : n - m + 1 + j] == p[j])
-                    tf = int(hit.sum())
-                    if tf:
-                        ids_out.append(doc_id)
-                        pid_out.append(pid)
-                        tf_out.append(tf)
-            yield pd.DataFrame(
-                {"phrase_id": pid_out, id_col: ids_out, "tf": np.asarray(tf_out, dtype=np.int64)}
+        for batch in batches:
+            rows, which, tfs = _phrase_hits(batch.column("terms").to_pylist(), plist)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([pids[w] for w in which], pa.string()),
+                    batch.column(id_col).take(pa.array(rows, pa.int64())),
+                    pa.array(tfs, pa.int64()),
+                ],
+                names=["phrase_id", id_col, "tf"],
             )
 
     id_type = tokenized.schema[id_col].dataType.simpleString()
-    return tokenized.mapInPandas(kernel, f"phrase_id string, {id_col} {id_type}, tf long")
+    return tokenized.mapInArrow(kernel, f"phrase_id string, {id_col} {id_type}, tf long")
 
 
-def _phrase_tfs(pdf: pd.DataFrame, m: int, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
-    """(dids, phrase tfs), both int64, of one ``m``-term phrase over the
-    dids in [lo, hi): ``pdf`` holds the runs of the phrase's terms,
-    ``term_ix`` being the term's place in the phrase (a term the phrase
-    repeats has its runs once per place).  Each place's position lists
-    are decoded and grouped by did, then intersected with +1 shifts."""
-    per_ix: list[dict[int, np.ndarray]] = [dict() for _ in range(m)]
-    for row in pdf.itertuples(index=False):
-        dids, tfs, _ = codec.decode_run(
-            row.start_did, row.n, bytes(row.deltas), bytes(row.tfs), bytes(row.dls)
-        )
-        plists = codec.decode_positions(bytes(row.pos), tfs)
-        d = per_ix[row.term_ix]
-        for did, pl in zip(dids.tolist(), plists):
-            if did < lo or did >= hi:
+def _phrase_hits(term_lists: list, plist: list[list[str]]) -> tuple[list, list, list]:
+    """(row, phrase number, tf) of every phrase of ``plist`` occurring in
+    each row's term list (None or empty rows have none): a vectorized
+    sliding equality over the term sequence, the trie walk's semantics."""
+    rows, which, tfs = [], [], []
+    for i, terms in enumerate(term_lists):
+        if not terms:
+            continue
+        arr = np.asarray(terms, dtype=object)
+        n = len(arr)
+        for w, p in enumerate(plist):
+            m = len(p)
+            if m == 0 or m > n:
                 continue
-            prev = d.get(did)
-            d[did] = np.concatenate([prev, pl]) if prev is not None else np.asarray(pl)
-    out_did, out_tf = [], []
-    for did, p0 in per_ix[0].items():
-        cand = np.sort(p0)
-        for j in range(1, m):
-            nxt = per_ix[j].get(did)
-            if nxt is None:
-                cand = cand[:0]
-                break
-            cand = cand[np.isin(cand + 1, np.sort(nxt))] + 1
-            if len(cand) == 0:
-                break
-        if len(cand):
-            out_did.append(did)
-            out_tf.append(len(cand))
-    return np.asarray(out_did, dtype=np.int64), np.asarray(out_tf, dtype=np.int64)
+            hit = arr[: n - m + 1] == p[0]
+            for j in range(1, m):
+                hit = hit & (arr[j : n - m + 1 + j] == p[j])
+            tf = int(hit.sum())
+            if tf:
+                rows.append(i)
+                which.append(w)
+                tfs.append(tf)
+    return rows, which, tfs
+
+
+# positions must leave room for the +1 shift inside the low 32 bits of a
+# (did << 32) | position key
+_POS_LIMIT = (1 << 32) - 1
+_NONE = np.zeros(0, dtype=np.int64)
+
+
+def _phrase_tfs(runs: pa.Table, m: int, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
+    """(dids, phrase tfs), both int64, did ascending, of one ``m``-term
+    phrase over the dids in [lo, hi): ``runs`` holds the runs of the
+    phrase's terms, ``term_ix`` being the term's place in the phrase (a
+    term the phrase repeats has its runs once per place).
+
+    Each place's runs are decoded at once (``codec.decode_runs`` +
+    ``codec.decode_positions_flat``) into sorted int64 keys
+    ``(did - lo) << 32 | position``; a phrase occurrence is a place-0 key
+    whose +1, +2, ... shifts are keys of places 1, 2, ...: one ``np.isin``
+    per place, no per-doc work."""
+    place = runs.column("term_ix").to_numpy()
+    keys = []
+    for j in range(m):
+        part = runs.take(np.flatnonzero(place == j))
+        if part.num_rows == 0:
+            return _NONE, _NONE
+        blobs = [part.column(c) for c in ("deltas", "tfs", "dls")]
+        dids, tfs, _ = codec.decode_runs(
+            part.column("start_did").to_numpy(), part.column("n").to_numpy(), *blobs
+        )
+        pos = codec.decode_positions_flat(part.column("pos"), tfs)
+        if len(pos) and int(pos.max()) >= _POS_LIMIT:
+            raise ValueError(f"position {int(pos.max())} does not fit a phrase key (limit 2^32 - 1)")
+        pos_did = np.repeat(dids, tfs)
+        inside = (pos_did >= lo) & (pos_did < hi)
+        # sorted: a place's runs are one term's, in start_did order
+        keys.append(((pos_did[inside] - lo) << 32) | pos[inside])
+    cand = keys[0]
+    for j in range(1, m):
+        cand = cand[np.isin(cand + 1, keys[j])] + 1
+    dids, tfs = np.unique(cand >> 32, return_counts=True)
+    return dids + lo, tfs.astype(np.int64)
 
 
 _PHRASE_COLS = ("start_did", "n", "deltas", "tfs", "dls", "pos")
@@ -129,8 +148,8 @@ def phrase_match_positional(
     phrases: list[tuple[str, list[str]]],
 ) -> DataFrame:
     """(phrase_id, did, tf) via the positional index: decode each phrase
-    term's runs, group by did, intersect position lists with +1 shifts
-    (``_phrase_tfs``).  Adjacency is in raw tokenN space (see module
+    place's runs into (did, position) keys and intersect them with +1
+    shifts (``_phrase_tfs``).  Adjacency is in raw tokenN space (see module
     docstring).  Phrase ids must be distinct.
 
     The indexed scorers' path rule (``query_indexed._on_driver``) picks
@@ -151,14 +170,15 @@ def phrase_match_positional(
         raise ValueError("index was not built with_positions=True")
     terms_needed = sorted({t for _, p in phrases for t in p})
     if _on_driver(index, phrases):
-        runs = _read_runs(index, terms_needed, _PHRASE_COLS)
-        none = np.zeros(0, dtype=np.int64)
-        pids, dids, tfs = [], [none], [none]
+        runs, rows_of = _term_rows(_read_runs(index, terms_needed, _PHRASE_COLS))
+        pids, dids, tfs = [], [_NONE], [_NONE]
         for pid, p in phrases:
-            if not p:
+            if not p or not all(t in rows_of for t in p):  # a term is not indexed
                 continue
-            by_ix = [runs[runs["term"] == t].assign(term_ix=j) for j, t in enumerate(p)]
-            d, tf = _phrase_tfs(pd.concat(by_ix), len(p), 0, index.doc_count)
+            places = [rows_of[t] for t in p]
+            term_ix = np.repeat(np.arange(len(p), dtype=np.int32), [len(r) for r in places])
+            by_ix = runs.take(np.concatenate(places)).append_column("term_ix", pa.array(term_ix))
+            d, tf = _phrase_tfs(by_ix, len(p), 0, index.doc_count)
             pids += [pid] * len(d)
             dids.append(d)
             tfs.append(tf)
@@ -177,8 +197,12 @@ def phrase_match_positional(
     n_shards, span = _did_shards(spark, len(phrases), index.doc_count)
 
     rows = [(pid, t, j) for pid, p in phrases for j, t in enumerate(p)]
-    phrase_table = pa.Table.from_pandas(
-        pd.DataFrame(rows, columns=["query_id", "term", "term_ix"]), preserve_index=False
+    phrase_table = pa.table(
+        {
+            "query_id": pa.array([r[0] for r in rows], pa.string()),
+            "term": pa.array([r[1] for r in rows], pa.string()),
+            "term_ix": pa.array([r[2] for r in rows], pa.int32()),
+        }
     )
     pdf_phrases = spark.createDataFrame(phrase_table, "query_id string, term string, term_ix int")
     matched = _route_runs(post.join(F.broadcast(pdf_phrases), "term"), span).select(
@@ -186,9 +210,9 @@ def phrase_match_positional(
     )
     phrase_len = {pid: len(p) for pid, p in phrases}
 
-    def score_group(pid: str, shard: int, pdf: pd.DataFrame):
+    def score_group(pid: str, shard: int, runs: pa.Table):
         lo = shard * span
-        return _phrase_tfs(pdf, phrase_len[pid], lo, lo + span)
+        return _phrase_tfs(runs, phrase_len[pid], lo, lo + span)
 
     scored = _score_groups(spark, matched, len(phrases) * n_shards, score_group)
     return scored.select(
@@ -217,37 +241,23 @@ def phrase_unit_rows(
     """
     cols = [id_col, *carry_cols]
     tok = tokenized.select(*cols, "terms")
-    plist = [(" ".join(p), list(p)) for p in phrases]
+    names = [" ".join(p) for p in phrases]
+    plist = [list(p) for p in phrases]
 
     def kernel(batches):
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            name_out, tf_out = [], []
-            for row in pdf.itertuples(index=False):
-                terms = getattr(row, "terms")
-                if terms is None or len(terms) == 0:
-                    continue
-                arr = np.asarray(terms, dtype=object)
-                n = len(arr)
-                for name, p in plist:
-                    m = len(p)
-                    if m == 0 or m > n:
-                        continue
-                    hit = arr[: n - m + 1] == p[0]
-                    for j in range(1, m):
-                        hit = hit & (arr[j : n - m + 1 + j] == p[j])
-                    tf = int(hit.sum())
-                    if tf:
-                        for c in cols:
-                            out[c].append(getattr(row, c))
-                        name_out.append(name)
-                        tf_out.append(tf)
-            out_pdf = pd.DataFrame(out, columns=cols)
-            out_pdf["term"] = name_out
-            out_pdf["tf"] = np.asarray(tf_out, dtype=np.int64)
-            yield out_pdf
+        for batch in batches:
+            rows, which, tfs = _phrase_hits(batch.column("terms").to_pylist(), plist)
+            take = pa.array(rows, pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    *(batch.column(c).take(take) for c in cols),
+                    pa.array([names[w] for w in which], pa.string()),
+                    pa.array(tfs, pa.int64()),
+                ],
+                names=[*cols, "term", "tf"],
+            )
 
     carry_schema = ", ".join(
         f"{c} {tokenized.schema[c].dataType.simpleString()}" for c in cols
     )
-    return tok.mapInPandas(kernel, f"{carry_schema}, term string, tf long")
+    return tok.mapInArrow(kernel, f"{carry_schema}, term string, tf long")

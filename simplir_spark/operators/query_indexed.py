@@ -36,10 +36,21 @@ doc_key array are the ``IndexHandle``'s resident parts, each built on its
 first use; the postings themselves are read per request.
 
 One kernel, ``_daat_topk``, scores every query (or, on Spark, every
-(query, did-shard) group) for both models.  It is document-at-a-time
-over decoded runs (collectPostings' k-way union,
-Posting2/Collect.hs:53-82, vectorized) with an exact block-max skip rule in the spirit of Block-Max WAND [Ding & Suel 2011]
-and the reference's lazily-thresholded top-k fold (TopK.hs:36-70):
+(query, did-shard) group) for both models.  Its input is columnar: the
+query's runs as a ``pa.Table`` sorted by (term, start_did), so each term
+is one row range.  Both paths hand it Arrow: the driver sorts the
+request's read once and gives each query a ``take`` of its terms' rows;
+a Spark partition sorts its record batches once by (query_id, shard,
+term, start_did) and gives each group a zero-copy slice.  Per term it
+decodes the selected runs with ONE ``codec.decode_runs`` (one varint
+decode per blob column over the Arrow data buffer, dids by a segmented
+cumulative sum), as the reference decodes a term's chunks in one batch
+(``SimplIR.EncodedList``), and calls the model once per term; no pandas
+and no per-run Python loop.  It is document-at-a-time over decoded runs
+(collectPostings' k-way union, Posting2/Collect.hs:53-82, vectorized)
+with an exact block-max skip rule in the spirit of Block-Max WAND [Ding &
+Suel 2011] and the reference's lazily-thresholded top-k fold
+(TopK.hs:36-70):
 
   * terms processed in descending score upper bound, ties by term, so a
     score's last bits never depend on the order the runs arrive in;
@@ -66,7 +77,6 @@ import math
 from typing import Callable, NamedTuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -94,15 +104,29 @@ _MIN_SHARD_SPAN = 1 << 16
 _MAX_SPAN = 1 << 22
 # Driver-path budget of a request (``_on_driver``), in postings: each
 # query counts its distinct terms' df plus ``_DRIVER_QUERY_POSTINGS`` for
-# its fixed cost.  Measured on the 2,000-file perfbench index, 4 vCPU:
-# the driver spends ~4 ms per query (~2,500 postings' worth, rounded up
-# here) plus ~1.6 us per posting on one thread; the Spark path pays
-# ~0.7-1.2 s of jobs and spreads that work over all cores.  Driver vs
-# Spark, by this count: 128 tail queries (0.64M) 0.73 s vs 1.06 s; 64
-# head-term queries (0.54M) 0.71 s vs 0.92 s; 256 tail queries (1.28M)
-# 1.65 s vs 1.17 s; 256 head-term queries (2.2M) 2.87 s vs 1.40 s.
+# its fixed cost.  Measured with the columnar kernel on the 2,000-file
+# perfbench index (seed 1), 4 vCPU, BM25 k=10, 3-term queries drawn from
+# the head (top 50 terms by df), torso (next 1,950) or tail (the rest),
+# min of 3 per request in each of two runs (the lower shown; the runs
+# differ by up to 50% on Spark).  A least-squares fit of the driver
+# wall gives 1.0-1.3 ms per query and 0.29-0.40 us per posting, i.e. a
+# query's fixed cost is ~2,600-4,400 postings (2^12 here); the Spark
+# path pays ~0.8-1.3 s of jobs and spreads the work over all cores.
+# Driver vs forced Spark, by this count (work = queries * 2^12 + df):
+#   tail   64 (0.26M) 0.08 vs 1.14 s   tail 1024 (4.20M) 1.02 vs 3.84 s
+#   tail 2048 (8.40M) 1.46 vs 4.75 s   torso 512 (2.17M) 0.64 vs 1.56 s
+#   torso 1024 (4.35M) 1.23 vs 2.05 s  torso 2048 (8.70M) 2.95 vs 2.74 s
+#   head  64 (0.46M) 0.18 vs 0.82 s    head 256 (1.83M) 0.63 vs 1.38 s
+#   head 512 (3.63M) 1.18 vs 1.41 s    head 768 (5.48M) 1.84 vs 1.81 s
+#   head 1024 (7.28M) 2.12 vs 1.60 s
+# The budget sits between the largest requests the driver won in both
+# runs (torso 1024, head 512) and the head-term requests where Spark
+# caught up (768) or won (1024).  Tail-only batches favour the driver
+# more than this count says (with thousands of distinct terms the Spark
+# path slows per query), so past the budget they are the rule's worst
+# case: 2,048 tail queries take Spark, 3x slower than the driver.
 _DRIVER_QUERY_POSTINGS = 1 << 12
-_DRIVER_DF_BUDGET = 1 << 20
+_DRIVER_DF_BUDGET = 6 << 20
 
 
 def _pick_n_shards(par: int, n_queries: int, doc_count: int) -> int:
@@ -139,15 +163,18 @@ def _route_runs(runs: DataFrame, span: int) -> DataFrame:
 
 
 _NO_HITS = (np.zeros(0, dtype=np.int64), np.zeros(0))
+# the kernel's row order: each term's runs one row range, in did order
+_RUN_ORDER = ("term", "start_did")
 
 
 class _Model(NamedTuple):
     """What a retrieval model supplies to ``_daat_topk``.
 
     ``ub(term, max_tf)`` bounds one posting's contribution from above,
-    given its run's ``max_tf``; ``add(term, off, tfs, dls)`` adds the
-    postings at shard offsets ``off`` (each offset at most once per term)
-    to the model's dense accumulator; ``scores(ix)`` is the current score
+    given its run's ``max_tf``; ``add(term, off, tfs, dls)`` adds all of
+    a term's decoded postings at shard offsets ``off`` (distinct, since a
+    term's runs cover disjoint dids; called once per term) to the model's
+    dense accumulator; ``scores(ix)`` is the current score
     of the seen docs at offsets ``ix``; ``unseen(rest)`` bounds the score
     of a doc no term has matched yet, ``rest`` being the upper bounds of
     the terms still to come; ``prune`` is False when a partial score is
@@ -161,8 +188,32 @@ class _Model(NamedTuple):
     prune: bool
 
 
+def _as_runs(runs) -> pa.Table:
+    """``runs`` as an Arrow table sorted by (term, start_did).  A pandas
+    DataFrame (any row order and index) is converted once, its index
+    dropped; the scoring kernel itself only sees Arrow."""
+    if not isinstance(runs, pa.Table):
+        runs = pa.Table.from_pandas(runs, preserve_index=False)
+    return runs.sort_by([(c, "ascending") for c in _RUN_ORDER])
+
+
+def _term_bounds(runs: pa.Table) -> tuple[np.ndarray, np.ndarray]:
+    """(terms, bounds) of ``runs`` sorted by term: the distinct terms in
+    row order, term i's rows being [bounds[i], bounds[i + 1])."""
+    term = runs.column("term").to_numpy(zero_copy_only=False)
+    if len(term) == 0:
+        return term, np.zeros(1, dtype=np.int64)
+    cut = np.flatnonzero(term[1:] != term[:-1]) + 1
+    bounds = np.concatenate(([0], cut, [len(term)]))
+    return term[bounds[:-1]], bounds
+
+
+def _column(runs: pa.Table, name: str) -> np.ndarray:
+    return np.asarray(runs.column(name).to_numpy(), dtype=np.int64)
+
+
 def _daat_topk(
-    runs: pd.DataFrame,
+    runs: pa.Table,
     k: int,
     lo: int,
     hi: int,
@@ -174,38 +225,47 @@ def _daat_topk(
     in [lo, hi), scored by ``model``: the block-max DAAT loop of both
     retrieval models (see the module docstring for the skip rule).
 
+    ``runs`` is an Arrow table sorted by (term, start_did) (``_as_runs``),
+    so each term's runs are one row range.  Per term, in (descending
+    upper bound, term) order, the block-max rule masks the runs worth
+    decoding; all of them are decoded by ONE ``codec.decode_runs`` (one
+    varint decode per blob column, zero-copy when no run is skipped), and
+    the model gets ONE ``add`` per term.  That is exact: a term's runs
+    have disjoint did ranges, so a doc gets at most one posting per term,
+    and its score does not depend on the row order of ``runs``.
+
     Every run overlapping [lo, hi) must be present; postings outside it
-    are dropped after decode.  A term's runs have disjoint did ranges, so
-    a doc gets at most one ``add`` per term, in (descending upper bound,
-    term) order, so its score does not depend on the row order of
-    ``runs``.  ``order_tf`` (term -> max_tf over the whole index) makes
-    that the order of the terms' whole-index upper bounds: a did-shard
-    then sums a doc's score exactly as the whole-range scorer does.
-    Ties rank by did ascending.  ``decode_counter`` (tests) receives
-    [decoded_runs, total_runs].
+    are dropped after decode.  ``order_tf`` (term -> max_tf over the
+    whole index) makes the sum order that of the terms' whole-index upper
+    bounds: a did-shard then sums a doc's score exactly as the
+    whole-range scorer does.  Ties rank by did ascending.
+    ``decode_counter`` (tests) receives [decoded_runs, total_runs].
     """
-    if len(runs) == 0:
+    if runs.num_rows == 0:
         return _NO_HITS
-    terms = runs["term"].to_numpy()
-    by_term = {t: runs[terms == t].sort_values("start_did") for t in pd.unique(runs["term"])}
-    ub = {t: model.ub(t, float(trun["max_tf"].max())) for t, trun in by_term.items()}
+    names, bounds = _term_bounds(runs)
+    starts, ends = _column(runs, "start_did"), _column(runs, "end_did")
+    counts = _column(runs, "n")
+    blobs = [runs.column(c) for c in ("deltas", "tfs", "dls")]
+    term_max_tf = np.maximum.reduceat(_column(runs, "max_tf"), bounds[:-1])
+    ub = {t: model.ub(t, float(m)) for t, m in zip(names, term_max_tf)}
     # a total order: terms tied on ub are summed in term order, not in the
     # order their runs arrived in (float addition is not associative)
-    key = ub if order_tf is None else {t: model.ub(t, float(order_tf[t])) for t in by_term}
-    order = sorted(by_term, key=lambda t: (-key[t], t))
+    key = ub if order_tf is None else {t: model.ub(t, float(order_tf[t])) for t in names}
+    order = sorted(range(len(names)), key=lambda i: (-key[names[i]], names[i]))
     rest_after = {}
     acc = 0.0
-    for t in reversed(order):
-        acc += ub[t]
-        rest_after[t] = acc  # ub of t + all later terms
+    for i in reversed(order):
+        acc += ub[names[i]]
+        rest_after[i] = acc  # ub of term i + all later terms
 
     seen = np.zeros(hi - lo, dtype=bool)
     seen_count = 0
     decoded = 0
-    for t in order:
-        rest = rest_after[t]
-        trun = by_term[t]
-        decode_mask = np.ones(len(trun), dtype=bool)
+    for i in order:
+        t, a, b = names[i], int(bounds[i]), int(bounds[i + 1])
+        rest = rest_after[i]
+        keep = None  # the term's runs to decode; None = all
         # theta exists once k docs are seen
         if model.prune and seen_count >= k:
             ix = np.nonzero(seen)[0]
@@ -218,26 +278,30 @@ def _daat_topk(
             if theta > model.unseen(rest):
                 # then only runs overlapping live candidates matter
                 live = (ix + lo)[scores + rest >= theta]
-                starts = trun["start_did"].to_numpy(dtype=np.int64)
-                ends = trun["end_did"].to_numpy(dtype=np.int64)
-                first = np.searchsorted(live, starts, side="left")
-                decode_mask = np.searchsorted(live, ends, side="right") > first
-
-        for row, dec in zip(trun.itertuples(index=False), decode_mask):
-            if not dec:
-                continue
-            decoded += 1
-            dids, tfs, dls = codec.decode_run(row.start_did, row.n, row.deltas, row.tfs, row.dls)
+                first = np.searchsorted(live, starts[a:b], side="left")
+                keep = np.searchsorted(live, ends[a:b], side="right") > first
+        if keep is None or keep.all():
+            rows, cols = slice(a, b), [c.slice(a, b - a) for c in blobs]
+        elif keep.any():
+            rows = a + np.flatnonzero(keep)
+            cols = [c.take(rows) for c in blobs]
+        else:
+            continue
+        run_starts = starts[rows]
+        decoded += len(run_starts)
+        dids, tfs, dls = codec.decode_runs(run_starts, counts[rows], *cols)
+        if run_starts[0] < lo or ends[rows][-1] >= hi:
             m = (dids >= lo) & (dids < hi)
-            if not m.any():
+            dids, tfs, dls = dids[m], tfs[m], dls[m]
+            if len(dids) == 0:
                 continue
-            off = dids[m] - lo
-            model.add(t, off, tfs[m], dls[m])
-            seen_count += int(np.count_nonzero(~seen[off]))
-            seen[off] = True
+        off = dids - lo
+        model.add(t, off, tfs, dls)
+        seen_count += int(np.count_nonzero(~seen[off]))
+        seen[off] = True
 
     if decode_counter is not None:
-        decode_counter[:] = [decoded, len(runs)]
+        decode_counter[:] = [decoded, runs.num_rows]
     ix = np.nonzero(seen)[0]
     if len(ix) == 0:
         return _NO_HITS
@@ -248,7 +312,7 @@ def _daat_topk(
 
 
 def score_query_runs(
-    runs: pd.DataFrame,
+    runs: pa.Table,
     doc_count: int,
     avg_doc_len: float,
     k: int,
@@ -265,18 +329,21 @@ def score_query_runs(
     over the did range; the term upper bound takes tf=max_tf, dl→0.
 
     ``runs`` columns: term, start_did, end_did, n, max_tf, deltas, tfs, dls
-    plus per-term ``df``.  ``decode_counter`` (tests) receives
-    [decoded_runs, total_runs].  ``did_lo``/``did_hi`` restrict scoring to
+    plus per-term ``df``, as a ``pa.Table`` or a pandas DataFrame, in any
+    row order (converted and sorted once, ``_as_runs``).
+    ``decode_counter`` (tests) receives [decoded_runs, total_runs].  ``did_lo``/``did_hi`` restrict scoring to
     dids in [lo, hi) — the shard contract: every run overlapping the range
     must be present, postings outside it are dropped after decode.  They
     default to the whole index, [0, doc_count).  ``order_tf``: see
     ``_daat_topk``.
     """
+    runs = _as_runs(runs)
     lo = 0 if did_lo is None else did_lo
     hi = doc_count if did_hi is None else did_hi
+    df_of = dict(zip(runs.column("term").to_pylist(), runs.column("df").to_pylist()))
     idf = {
         t: float(np.log(1.0 + (doc_count - int(df_t) + 0.5) / (int(df_t) + 0.5)))
-        for t, df_t in runs.drop_duplicates("term")[["term", "df"]].itertuples(index=False)
+        for t, df_t in df_of.items()
     }
     acc = np.zeros(hi - lo)
 
@@ -293,7 +360,7 @@ def score_query_runs(
 
 
 def score_query_runs_ql(
-    runs: pd.DataFrame,
+    runs: pa.Table,
     term_w: dict,
     term_bg: dict,
     mu: float,
@@ -323,9 +390,10 @@ def score_query_runs_ql(
     which breaks the partial-is-a-lower-bound invariant — pruning is
     DISABLED for such queries (decode everything; results unchanged).
 
-    Returns (dids, scores) of the shard-local top-k; ``decode_counter``
-    (tests) receives [decoded_runs, total_runs]; ``order_tf``: see
-    ``_daat_topk``.
+    ``runs``: a ``pa.Table`` or a pandas DataFrame, in any row order, as
+    for ``score_query_runs`` but without ``df``.  Returns (dids, scores)
+    of the shard-local top-k; ``decode_counter`` (tests) receives
+    [decoded_runs, total_runs]; ``order_tf``: see ``_daat_topk``.
     """
     c0 = 0.0
     q_total = 0.0
@@ -365,24 +433,24 @@ def score_query_runs_ql(
         return s
 
     model = _Model(ub, add, scores, lambda rest: c0 + rest - unseen_norm, n_cf0 == 0)
-    return _daat_topk(runs, k, did_lo, did_hi, model, decode_counter, order_tf)
+    return _daat_topk(_as_runs(runs), k, did_lo, did_hi, model, decode_counter, order_tf)
 
 
 def _score_groups(
     spark: SparkSession, matched: DataFrame, n_groups: int, score_group
 ) -> DataFrame:
-    """Run ``score_group(query_id, shard, pdf)`` once per (query_id, shard)
-    group of ``matched``; returns the (query_id, did, score) rows of the
-    (dids, scores) it returns.
+    """Run ``score_group(query_id, shard, runs)`` once per (query_id,
+    shard) group of ``matched``; returns the (query_id, did, score) rows
+    of the (dids, scores) it returns.
 
     The rows are hash-partitioned by (query_id, shard) into
     n = min(defaultParallelism, ``n_groups``) partitions — AQE never
     coalesces an explicit-count ``repartition``, so a sub-MB scoring
     shuffle still runs on every core instead of one coalesced task — and
-    one ``mapInArrow`` kernel per partition converts to pandas ONCE and
-    splits it into its groups, instead of one pandas conversion per group.
-    ``n_groups`` may be an upper bound; hashing leaves some partitions
-    empty either way.
+    one ``mapInArrow`` kernel per partition sorts its record batches ONCE
+    by (query_id, shard, term, start_did) and hands each group its
+    zero-copy row slice as a ``pa.Table``.  ``n_groups`` may be an upper
+    bound; hashing leaves some partitions empty either way.
     """
     n = max(1, min(spark.sparkContext.defaultParallelism, n_groups))
     keys = ["query_id", "shard"]
@@ -391,10 +459,17 @@ def _score_groups(
         batches = list(batches)
         if not batches:  # an empty hash partition
             return
-        pdf = pa.Table.from_batches(batches).to_pandas()
+        table = pa.Table.from_batches(batches).sort_by(
+            [(c, "ascending") for c in (*keys, *_RUN_ORDER)]
+        )
+        qid_col = table.column("query_id").to_numpy(zero_copy_only=False)
+        shard_col = table.column("shard").to_numpy()
+        cut = np.flatnonzero((qid_col[1:] != qid_col[:-1]) | (shard_col[1:] != shard_col[:-1])) + 1
+        bounds = [0, *cut.tolist(), table.num_rows]
         qids, dids, scores = [], [], []
-        for (qid, shard), grp in pdf.groupby(keys, sort=False):
-            d, s = score_group(qid, int(shard), grp)
+        for a, b in zip(bounds[:-1], bounds[1:]):
+            qid = qid_col[a]
+            d, s = score_group(qid, int(shard_col[a]), table.slice(a, b - a))
             qids.extend([qid] * len(d))
             dids.append(d)
             scores.append(s)
@@ -463,31 +538,38 @@ def _on_driver(index: IndexHandle, queries: list[tuple[str, list[str]]]) -> bool
     return work <= _DRIVER_DF_BUDGET
 
 
-def _read_runs(index: IndexHandle, terms: list[str], cols: tuple[str, ...]) -> pd.DataFrame:
+def _read_runs(index: IndexHandle, terms: list[str], cols: tuple[str, ...]) -> pa.Table:
     """The posting runs of ``terms``, read on the driver.  The term filter
     is pushed into the parquet reader; the postings are range-partitioned
     and sorted on (term, start_did), so file and row-group statistics
     prune all but the terms' own row groups."""
-    return index.postings_dataset.to_table(
-        columns=["term", *cols], filter=pc.field("term").isin(terms)
-    ).to_pandas()
+    return index.postings_dataset.to_table(columns=["term", *cols], filter=pc.field("term").isin(terms))
+
+
+def _term_rows(runs: pa.Table) -> tuple[pa.Table, dict[str, np.ndarray]]:
+    """``runs`` sorted by (term, start_did), and each term's row indices
+    in it: a query's runs are then one ``take`` of its terms' rows."""
+    runs = _as_runs(runs)
+    names, bounds = _term_bounds(runs)
+    return runs, {t: np.arange(bounds[i], bounds[i + 1]) for i, t in enumerate(names)}
 
 
 def _driver_topk(
     spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], score_one
 ) -> DataFrame:
-    """The driver path: every query's runs from one pushdown read, each
-    query scored by ``score_one`` over the whole did range (the kernel's
-    top-k is already ranked), dids mapped to doc_keys through the did-
+    """The driver path: every query's runs from one pushdown read, sorted
+    once by (term, start_did); each query gets one ``take`` of its terms'
+    rows, scored by ``score_one`` over the whole did range (the kernel's
+    top-k is already ranked); dids map to doc_keys through the did-
     indexed doc_key array.  The result is an Arrow-built LocalRelation:
     no Spark job runs, now or at collect."""
-    runs = _read_runs(index, _query_terms(queries), _RUN_COLS)
+    runs, rows_of = _term_rows(_read_runs(index, _query_terms(queries), _RUN_COLS))
     qids, dids, ranks, scores = [], [_NO_HITS[0]], [np.zeros(0, dtype=np.int32)], [_NO_HITS[1]]
     for qid, terms in queries:
-        sub = runs[runs["term"].isin(terms)]
-        if len(sub) == 0:
+        rows = [rows_of[t] for t in sorted(set(terms)) if t in rows_of]
+        if not rows:
             continue
-        d, s = score_one(qid, sub, 0, index.doc_count, None)
+        d, s = score_one(qid, runs.take(np.concatenate(rows)), 0, index.doc_count, None)
         qids += [qid] * len(d)
         dids.append(d)
         ranks.append(np.arange(1, len(d) + 1, dtype=np.int32))
@@ -529,10 +611,10 @@ def _spark_topk(
     post = runs.join(F.broadcast(queries_df(spark, queries)), "term")
     matched = _route_runs(post, span).select("query_id", "shard", "term", *_RUN_COLS)
 
-    def score_group(qid: str, shard: int, pdf: pd.DataFrame):
+    def score_group(qid: str, shard: int, runs: pa.Table):
         lo = shard * span
         # the last shard ends at doc_count; a range is never empty
-        return score_one(qid, pdf, lo, max(min(lo + span, doc_count), lo + 1), order_tf)
+        return score_one(qid, runs, lo, max(min(lo + span, doc_count), lo + 1), order_tf)
 
     scored = _score_groups(spark, matched, len(queries) * n_shards, score_group)
     return _finish_topk(index, scored, k)
@@ -549,7 +631,8 @@ def _indexed_topk(
     doc_key, rank, score) — the one planner of the indexed request path.
 
     ``scorer(stats, merged)`` returns the model's ``score_one(query_id,
-    pdf, lo, hi, order_tf)``, which scores one query's runs over the dids
+    runs, lo, hi, order_tf)``, which scores one query's runs (a
+    ``pa.Table``) over the dids
     in [lo, hi) (``order_tf``: see ``_daat_topk``) and returns its top-k
     there as (dids, scores); ``stats`` maps
     the request's indexed terms to (df, cf) and ``merged`` is ``queries``
@@ -593,10 +676,11 @@ def bm25_indexed(
     def scorer(stats: dict, merged):
         df_of = {t: df for t, (df, _) in stats.items()}
 
-        def score_one(qid: str, pdf: pd.DataFrame, lo: int, hi: int, order_tf):
-            runs = pdf.assign(df=pdf["term"].map(df_of))
+        def score_one(qid: str, runs: pa.Table, lo: int, hi: int, order_tf):
+            df = pa.array([df_of[t] for t in runs.column("term").to_pylist()], pa.int64())
             return score_query_runs(
-                runs, doc_count, avg_doc_len, k, k1, b, did_lo=lo, did_hi=hi, order_tf=order_tf
+                runs.append_column("df", df), doc_count, avg_doc_len, k, k1, b,
+                did_lo=lo, did_hi=hi, order_tf=order_tf,
             )
 
         return score_one
@@ -653,9 +737,9 @@ def ql_dirichlet_indexed(
                 },
             )
 
-        def score_one(qid: str, pdf: pd.DataFrame, lo: int, hi: int, order_tf):
+        def score_one(qid: str, runs: pa.Table, lo: int, hi: int, order_tf):
             term_w, term_bg = weights[qid]
-            return score_query_runs_ql(pdf, term_w, term_bg, mu, k, lo, hi, order_tf=order_tf)
+            return score_query_runs_ql(runs, term_w, term_bg, mu, k, lo, hi, order_tf=order_tf)
 
         return score_one
 

@@ -5,12 +5,14 @@ posting-run round-trip; ports the reference's QuickCheck properties
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from simplir_spark.functions.codec import (
     MAX_SMALLNAT,
     decode_run,
+    decode_runs,
     decode_varints,
     encode_run,
     encode_varints,
@@ -99,3 +101,54 @@ def test_rebase_run_without_reencode():
     d2, t2, l2 = decode_run(run["start_did"] + off, run["n"], run["deltas"], run["tfs"], run["dls"])
     assert d2.tolist() == (dids + off).tolist()
     assert t2.tolist() == tfs.tolist() and l2.tolist() == dls.tolist()
+
+
+# one strategy per SmallNat size class (1, 2, 4 and 8 bytes)
+_CLASSES = [(0, 2**6 - 1), (2**6, 2**14 - 1), (2**14, 2**30 - 1), (2**30, MAX_SMALLNAT)]
+
+
+@st.composite
+def _runs(draw):
+    """Posting runs as (start_did, n, deltas, tfs, dls) with every value
+    drawn from a random size class; deltas are capped below 2^57 so a
+    run's dids stay int64, and a run's first delta is 0 as in an index."""
+    def value(cap=MAX_SMALLNAT):
+        lo, hi = _CLASSES[draw(st.integers(0, 3))]
+        return draw(st.integers(lo, min(hi, cap)))
+
+    runs = []
+    for _ in range(draw(st.integers(0, 6))):
+        n = draw(st.sampled_from([1, 1, 2, 3, 9, 40]))
+        deltas = [0] + [value(2**57 - 1) for _ in range(n - 1)]
+        tfs = [value() for _ in range(n)]
+        dls = [value() for _ in range(n)]
+        blobs = [encode_varints(np.array(v, dtype=np.uint64)) for v in (deltas, tfs, dls)]
+        runs.append((draw(st.integers(0, 2**40)), n, *blobs))
+    return runs
+
+
+@settings(max_examples=300, deadline=None, derandomize=True)
+@given(runs=_runs(), form=st.sampled_from(["array", "sliced", "chunked"]), cut=st.integers(0, 6))
+def test_decode_runs_equals_per_run_decode(runs, form, cut):
+    """``decode_runs`` over many runs equals the concatenation of
+    ``decode_run`` per run, for blob columns given as a BinaryArray, a
+    sliced BinaryArray (nonzero offset) and a ChunkedArray (whose first
+    chunk may be empty), including zero runs and single-posting runs."""
+    want = [decode_run(*r) for r in runs]
+    starts = np.array([r[0] for r in runs], dtype=np.int64)
+    ns = np.array([r[1] for r in runs], dtype=np.int64)
+
+    def column(i):
+        blobs = [r[i] for r in runs]
+        if form == "sliced":
+            return pa.array([b"\x7f\x01", *blobs, b"\x02"], pa.binary()).slice(1, len(blobs))
+        if form == "chunked":
+            c = min(cut, len(blobs))
+            return pa.chunked_array([pa.array(blobs[:c], pa.binary()), pa.array(blobs[c:], pa.binary())])
+        return pa.array(blobs, pa.binary())
+
+    got = decode_runs(starts, ns, column(2), column(3), column(4))
+    for j, g in enumerate(got):
+        assert g.dtype == np.int64
+        expect = np.concatenate([w[j] for w in want]) if want else np.zeros(0, dtype=np.int64)
+        assert g.tolist() == expect.tolist()

@@ -7,6 +7,9 @@
 * Every ``simplir_spark`` import resolves, function-local ones included,
   so a lazy import of deleted code fails here rather than only when its
   branch runs.
+* The indexed scoring path (``operators/query_indexed.py`` and
+  ``operators/phrase.py``) runs on Arrow and numpy only: no pandas
+  import, conversion, row iteration or groupby.
 """
 
 from __future__ import annotations
@@ -110,3 +113,17 @@ def test_package_imports_resolve():
                 target = f"{module}.{name}"
             unresolved.append(f"{path.relative_to(ROOT).as_posix()}:{line} {target}")
     assert not unresolved, unresolved
+
+
+SCORING_PATH = ("operators/query_indexed.py", "operators/phrase.py")
+PANDAS_IDIOMS = ("to_pandas", "itertuples", ".groupby(", "import pandas", "from pandas")
+
+
+def test_scoring_path_has_no_pandas():
+    found = {}
+    for rel in SCORING_PATH:
+        text = (PACKAGE / rel).read_text()
+        hits = [s for s in PANDAS_IDIOMS if s in text]
+        if hits:
+            found[rel] = hits
+    assert not found, found

@@ -1316,6 +1316,82 @@ def test_path_selection_declines_oversized_requests(spark, index_dir, monkeypatc
     assert "lexicon" not in vars(big)  # the Spark path never builds it
 
 
+def _input_form_runs():
+    """Synthetic runs of three terms where block-max pruning skips some
+    of a term's runs but not all (so the kernel decodes both whole row
+    ranges and ``take``s), plus a did range that cuts runs."""
+    rng = np.random.RandomState(3)
+    n_docs, run_size = 3000, 100
+    doc_len = rng.randint(20, 200, size=n_docs)
+    rows = []
+    for term, sel, tf_hi in [
+        ("common", np.arange(n_docs), 3),
+        ("mid", np.arange(0, n_docs, 7), 6),
+        ("rare", np.arange(5, 400, 13), 40),
+    ]:
+        dids = sel.astype(np.int64)
+        tfs = rng.randint(1, tf_hi + 1, size=len(dids)).astype(np.int64)
+        for s in range(0, len(dids), run_size):
+            sl = slice(s, s + run_size)
+            run = codec.encode_run(dids[sl], tfs[sl], doc_len[dids[sl]])
+            rows.append({"term": term, "df": len(dids), **run})
+    return pd.DataFrame(rows), n_docs
+
+
+def test_daat_kernel_input_forms_agree():
+    """``score_query_runs`` and ``score_query_runs_ql`` give the same
+    dids, the same ``repr`` of every score and the same decode counts
+    for the same runs as a pandas frame in index order, as a pandas
+    frame in shuffled row order with a non-default index, and as a
+    ``pa.Table`` in yet another row order; with and without a did range
+    that cuts runs, and with pruning engaged."""
+    import pyarrow as pa
+
+    from simplir_spark.operators.query_indexed import score_query_runs_ql
+
+    runs, n_docs = _input_form_runs()
+    shuffled = runs.sample(frac=1.0, random_state=11)
+    shuffled.index = [f"row{i}" for i in range(len(shuffled))]
+    table = pa.Table.from_pandas(runs.iloc[::-1], preserve_index=False)
+    term_w = {"common": 1.0, "mid": 2.0, "rare": 1.0}
+    term_bg = {"common": 0.01, "mid": 0.002, "rare": 0.0001}
+
+    def bm25(r, lo, hi, cnt):
+        return score_query_runs(r, n_docs, 110.0, 10, did_lo=lo, did_hi=hi, decode_counter=cnt)
+
+    def ql(r, lo, hi, cnt):
+        r = r.drop(columns=["df"]) if isinstance(r, pd.DataFrame) else r.drop(["df"])
+        return score_query_runs_ql(r, term_w, term_bg, 1000.0, 10, lo, hi, decode_counter=cnt)
+
+    for model in (bm25, ql):
+        for lo, hi in ((0, n_docs), (150, 2650)):
+            outs = set()
+            for r in (runs, shuffled, table):
+                cnt = [0, 0]
+                d, s = model(r, lo, hi, cnt)
+                outs.add((tuple(d.tolist()), tuple(map(repr, s.tolist())), tuple(cnt)))
+            assert len(outs) == 1, (model.__name__, lo, outs)
+            (_, _, cnt), = outs
+            assert 0 < cnt[0] < cnt[1], (model.__name__, lo, cnt)  # pruning engaged
+
+
+def test_empty_index_and_no_match_run_no_job(spark, index_dir, tmp_path_factory):
+    """An empty index, and a request whose terms match nothing, give
+    empty results for both models: neither the request nor its collect
+    runs a Spark job."""
+    from simplir_spark.operators.query_indexed import ql_dirichlet_indexed
+
+    corpus = spark.createDataFrame([], "doc_key string, content string")
+    empty = str(tmp_path_factory.mktemp("empty_jobs") / "idx")
+    build_index(spark, corpus, empty, n_partitions=2)
+    cases = [(open_index(spark, empty), QUERIES[:3]), (open_index(spark, index_dir), [("Q08", ["zebra"])])]
+    for idx, queries in cases:
+        idx.lexicon, idx.postings_dataset, idx.doc_key_array  # resident parts, built once
+        for fn in (bm25_indexed, ql_dirichlet_indexed):
+            rows, jobs = _jobs_run(spark, lambda: fn(spark, idx, queries, k=K).collect())
+            assert rows == [] and jobs == 0, (fn.__name__, idx.doc_count, jobs)
+
+
 def test_daat_score_independent_of_run_order():
     """A doc's score is summed in a total term order: two terms with
     equal upper bounds (same df, same max_tf) and a third, chosen so
