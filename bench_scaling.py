@@ -31,6 +31,10 @@ wildly understates cluster scaling.  Corrections, all reported:
 Writes BENCH/BASELINE.md with files/sec at both widths and
   efficiency = throughput_hi / ((hi/lo) × throughput_lo).
 
+The raw corpus (5,000 docs) is within ``build_index``'s driver-build
+bounds, so its timed builds run on the driver and do not scale with the
+width; the amplified corpus takes the Spark build.
+
 ``query_sec`` times one ``bm25_indexed`` request over QUERIES on the
 fresh index.  On an index of at most 2^22 docs (the raw sf0.1 corpus)
 the driver serves that request, so ``query_sec`` measures the driver
@@ -129,7 +133,10 @@ def one_run(
 
     ``warmup_replicate`` runs one small UNTIMED build first so that even
     a single timed repeat (the paired interleaved mode) excludes JIT and
-    worker-spawn — per-executor-lifetime costs on a cluster.
+    worker-spawn — per-executor-lifetime costs on a cluster.  It passes
+    the width's ``n_partitions``: left automatic, a warm-up corpus within
+    the driver-build bounds would build on the driver, start no Python
+    worker and leave the timed Spark builds cold.
     """
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
@@ -180,7 +187,9 @@ def one_run(
         )
         wdir = tempfile.mkdtemp(prefix=f"simplir_warm_{cores}_")
         shutil.rmtree(wdir, ignore_errors=True)
-        build_index(spark, wcorpus, wdir)  # untimed: JIT + codegen warmup
+        # untimed: JIT + codegen + Python-worker warmup; the width's
+        # n_partitions keeps it on the Spark build the timed runs take
+        build_index(spark, wcorpus, wdir, n_partitions=cores)
         shutil.rmtree(wdir, ignore_errors=True)
 
     builds, queries, probes, stages_best = [], [], [], {}

@@ -298,7 +298,12 @@ def main(argv: list[str] | None = None) -> None:
     sp = sub.add_parser("index")
     sp.add_argument("--corpus", required=True)
     sp.add_argument("--out", required=True)
-    sp.add_argument("--partitions", type=int, default=None)
+    sp.add_argument(
+        "--partitions", type=int, default=None,
+        help="build with Spark into N bucket partitions; by default a corpus "
+        "within the driver-build bounds builds on the driver and a larger one "
+        "gets one partition per 64,000 docs",
+    )
     sp.set_defaults(fn=cmd_index)
 
     sp = sub.add_parser("merge")

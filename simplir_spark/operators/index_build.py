@@ -48,14 +48,30 @@ simplir-disk-index/src/SimplIR/DiskIndex/Build.hs:34-135):
 
 * term_stats/corpus_stats come from run *metadata* (n, sum_tf) — no
   blob decode, no second pass over tokens.
+
+Two paths, chosen by ``build_index`` from the input alone:
+
+* Driver build: when ``n_partitions`` is not given and the column-pruned
+  doc count and the content bytes are within ``_DRIVER_BUILD_MAX_DOCS``
+  / ``_DRIVER_BUILD_MAX_BYTES`` (one reference chunk or less), one Spark
+  job collects the integrity and cleaned-text columns over Arrow, the
+  unchanged chunk kernel runs in-process as the single bucket 0, and
+  pyarrow writes the four tables in Spark's schema with the same five
+  lineage manifests — exactly the Spark build at ``n_partitions=1``,
+  with no shuffle, no Python worker and no chunks checkpoint.  At this
+  size the Spark build's cost is almost all fixed per-job and
+  Python-worker start-up cost.
+* Spark build: everything else, including any explicit
+  ``n_partitions`` — the partitioned layout described above.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 from dataclasses import dataclass
-from functools import cached_property
+from functools import cache, cached_property
 
 import numpy as np
 import pandas as pd
@@ -986,6 +1002,142 @@ _CHUNKS_ARROW_BATCH = 16384
 _TAIL_WORKERS = 4
 
 
+# Driver build: a corpus this small is collected once over Arrow and run
+# through the same chunk kernel in-process, as one bucket (exactly the
+# Spark build at n_partitions=1).  Selected when n_partitions is not
+# given, the column-pruned doc count is at most _DRIVER_BUILD_MAX_DOCS
+# and the corpus's content is at most _DRIVER_BUILD_MAX_BYTES (UTF-8).
+# The bytes bound also keeps the collect (cleaned text + docmeta, about
+# the content size) far below spark.driver.maxResultSize (1g default).
+#
+# Crossover, driver build vs the automatic Spark build: the perfbench
+# seed-1 corpus replicated with distinct doc_keys, local[4] on 4 vCPU,
+# driver memory 1g, min of 3 fresh sessions; cold = first build after
+# load + count, warm = third build in the session (seconds):
+#
+#   docs    content MB   driver cold   Spark cold   driver warm   Spark warm
+#   2,000        3.4         3.44        10.51         1.50          3.51
+#   8,000       13.7         5.22        12.48         3.02          4.19
+#   16,000      27.5         8.99        12.73         4.93          4.25
+#   32,000      55.0        11.17        15.15         8.39          5.78
+#   64,000     110.0        19.20        16.63        15.61          8.33
+#
+# The driver wins both columns at 8k docs and loses warm from 16k (one
+# thread against four); the linear fits cross warm near 13k docs, 1.7 KB
+# per doc.  Both bounds sit between: 12,000 docs and 20 MiB.
+_DRIVER_BUILD_MAX_DOCS = 12_000
+_DRIVER_BUILD_MAX_BYTES = 20 << 20
+
+
+def _carry_cols(columns: list[str]) -> list[str]:
+    """docmeta columns carried from the corpus, in table order."""
+    return ["doc_key"] + [
+        c for c in ("repo", "path", "commit", "lang") if c in columns
+    ] + ["sha256"]
+
+
+def _content_bytes(corpus: DataFrame) -> int:
+    """UTF-8 bytes of ``content``: one Arrow collect of a length per doc
+    (called with at most _DRIVER_BUILD_MAX_DOCS docs), so one Spark job
+    where a global sum would add a shuffle stage."""
+    lens = corpus.select(F.octet_length("content").alias("n")).toArrow()["n"]
+    return int(pc.sum(lens).as_py() or 0)
+
+
+def _driver_chunks(
+    corpus: DataFrame, carry: list[str], schema: str, run_size: int, with_positions: bool
+) -> pa.Table:
+    """The Spark build's chunks table at n_partitions=1, made on the
+    driver: one Arrow collect of the integrity and cleaned-text columns
+    (JVM expressions, no Python worker), the rows sorted by doc_key the
+    way Spark sorts them (bytewise, nulls first), then the unchanged
+    chunk kernel over the batches as the single bucket 0."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    from simplir_spark.functions.tokenize import jvm_clean_text_expr
+
+    t = (
+        with_integrity(corpus)
+        .withColumn("_clean", jvm_clean_text_expr("content"))
+        .select(*carry, "_clean")
+        .toArrow()
+    )
+    t = t.take(pc.sort_indices(t, [("doc_key", "ascending")], null_placement="at_start"))
+    t = t.append_column("_bucket", pa.array(np.zeros(t.num_rows, dtype=np.int32)))
+    kernel = make_chunk_kernel({0: 0}, carry, run_size, with_positions)
+    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
+    return pa.Table.from_batches(
+        [b.cast(arrow_schema) for b in kernel(t.to_batches(_CHUNKS_ARROW_BATCH))],
+        schema=arrow_schema,
+    )
+
+
+def _build_on_driver(
+    corpus: DataFrame, out_dir: str, run_size: int, with_positions: bool, params_fp: dict | None
+) -> IndexPaths:
+    """The driver build (see ``_DRIVER_BUILD_MAX_DOCS``): the same five
+    stages and manifests as the Spark build, each table written by
+    pyarrow in the schema Spark writes.  The chunks stage records its
+    manifest only; a stage re-run on resume recollects it."""
+    carry = _carry_cols(corpus.columns)
+    carry_types = {f.name: f.dataType.simpleString() for f in with_integrity(corpus).schema.fields}
+    schema = chunk_schema(carry, carry_types)
+    runner = PipelineRunner(
+        out_dir,
+        params={
+            "run_size": run_size,
+            "layout": "driver",
+            "with_positions": with_positions,
+            **(params_fp or {}),
+        },
+    )
+    # the Spark build's chunk checkpoint and cuts describe another layout
+    shutil.rmtree(os.path.join(out_dir, "chunks"), ignore_errors=True)
+    if os.path.exists(os.path.join(out_dir, "_bucket_cuts.json")):
+        os.remove(os.path.join(out_dir, "_bucket_cuts.json"))
+
+    @cache
+    def chunks() -> pa.Table:
+        return _driver_chunks(corpus, carry, schema, run_size, with_positions)
+
+    def rows(kind: int) -> pa.Table:
+        t = chunks()
+        return t.filter(pc.equal(t["row_kind"], kind))
+
+    doc_cols = ["did", *carry, "doc_len", "doc_len_alnum"]
+    runner.run_table_stage("chunks", chunks, write=False)
+    runner.run_table_stage(
+        "docmeta", lambda: rows(0).select(doc_cols).sort_by("did"), upstream=["chunks"]
+    )
+    runner.run_table_stage(
+        "postings",
+        lambda: rows(1).select(_RUN_COLS).sort_by([("term", "ascending"), ("start_did", "ascending")]),
+        upstream=["chunks"],
+    )
+    runner.run_table_stage(
+        "term_stats",
+        lambda: rows(1)
+        .group_by("term")
+        .aggregate([("n", "sum"), ("sum_tf", "sum")])
+        .select(["term", "n_sum", "sum_tf_sum"])
+        .rename_columns(["term", "df", "cf"])
+        .sort_by("term"),
+        upstream=["chunks"],
+    )
+
+    def stats() -> dict:
+        docs = rows(0)
+        return {
+            "doc_count": docs.num_rows,
+            "token_count": int(pc.sum(docs["doc_len"]).as_py() or 0),
+            "token_count_alnum": int(pc.sum(docs["doc_len_alnum"]).as_py() or 0),
+        }
+
+    runner.run_json_stage("corpus_stats", stats, upstream=["chunks"])
+    return IndexPaths(out_dir)
+
+
 def build_index(
     spark: SparkSession,
     corpus: DataFrame,
@@ -1007,26 +1159,39 @@ def build_index(
 
     Resumable: each stage is skipped when its lineage fingerprint matches
     a previous run (kill/re-run safe); a wiped downstream stage rebuilds
-    from the chunks checkpoint without re-tokenizing.  ``with_positions``
-    builds the positional payload (per-posting occurrence positions) —
-    DiskIndex's payload genericity (Types.hs:139-158).
+    from the chunks checkpoint without re-tokenizing (the driver build
+    keeps no checkpoint and re-collects).  ``with_positions`` builds the
+    positional payload (per-posting occurrence positions) — DiskIndex's
+    payload genericity (Types.hs:139-158).
 
-    When ``n_partitions`` is not given it SCALES WITH THE CORPUS:
-    ceil(n_docs / docs_per_bucket) buckets (floor: shuffle partitions,
-    cap: MAX_AUTO_PARTITIONS) — bounding the per-task memory of the
-    chunk kernel regardless of corpus size, like the reference's fixed
-    64000-doc chunks.
+    When ``n_partitions`` is not given, the column-pruned doc count picks
+    the path.  A corpus of at most ``_DRIVER_BUILD_MAX_DOCS`` docs and
+    ``_DRIVER_BUILD_MAX_BYTES`` content bytes (checked only once the
+    count qualifies, before anything is collected) builds on the driver:
+    one Arrow collect, the same chunk kernel as one bucket, tables
+    written by pyarrow; its output equals the Spark build's at
+    ``n_partitions=1`` row for row.  A larger corpus SCALES the Spark
+    build WITH THE CORPUS: ceil(n_docs / docs_per_bucket) buckets
+    (floor: shuffle partitions, cap: MAX_AUTO_PARTITIONS) — bounding the
+    per-task memory of the chunk kernel regardless of corpus size, like
+    the reference's fixed 64000-doc chunks.  An explicit ``n_partitions``
+    always means the partitioned Spark layout.
 
-    While it runs, the build sets ``spark.sql.execution.arrow.
+    While it runs, the Spark build sets ``spark.sql.execution.arrow.
     maxRecordsPerBatch`` and ``spark.sql.files.openCostInBytes``
     SESSION-WIDE (restored on exit, also on error): it assumes it has the
     SparkSession to itself, since any query planned on the same session
-    meanwhile inherits both settings.
+    meanwhile inherits both settings.  The driver build sets no conf.
     """
     n_docs_known: int | None = None
     if n_partitions is None:
         shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
         n_docs_known = corpus.select("doc_key").count()  # column-pruned
+        if (
+            n_docs_known <= _DRIVER_BUILD_MAX_DOCS
+            and _content_bytes(corpus) <= _DRIVER_BUILD_MAX_BYTES
+        ):
+            return _build_on_driver(corpus, out_dir, run_size, with_positions, params_fp)
         need = -(-n_docs_known // docs_per_bucket) if n_docs_known else 1
         n_partitions = max(shuffle_p, min(MAX_AUTO_PARTITIONS, need))
     paths = IndexPaths(out_dir)
@@ -1051,9 +1216,7 @@ def build_index(
         # probe modulus MUST equal the repartition partition count, else
         # buckets scatter (collision skew)
         xkeys = probe_shuffle_keys(n_buckets, n_buckets)
-        carry = ["doc_key"] + [
-            c for c in ("repo", "path", "commit", "lang") if c in src.columns
-        ] + ["sha256"]
+        carry = _carry_cols(src.columns)
         carry_types = {f.name: f.dataType.simpleString() for f in src.schema.fields}
         schema = chunk_schema(carry, carry_types)
         from simplir_spark.functions.tokenize import jvm_clean_text_expr

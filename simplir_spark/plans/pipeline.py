@@ -15,10 +15,13 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass, field
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
 
@@ -66,41 +69,27 @@ class PipelineRunner:
             {"stage": name, "params": self.params, "upstream": ups, "extra": extra or {}}
         )
 
-    def run_df_stage(
-        self,
-        name: str,
-        build: Callable[[], DataFrame],
-        upstream: list[str] = (),
-        extra_fp: dict | None = None,
-        sort_within_partitions: list[str] | None = None,
-    ) -> StageResult:
-        """Materialize a DataFrame stage to parquet with resume + lineage."""
-        out = os.path.join(self.out_dir, name)
-        fp = self._stage_fp(name, list(upstream), extra_fp)
+    def _skip(self, name: str, fp: str, marker: str | None) -> StageResult | None:
+        """The stage's result if its manifest holds ``fp`` and its output
+        ``marker`` file exists (``None``: a stage with no output)."""
         mp = self._manifest_path(name)
-        if os.path.exists(mp) and os.path.exists(os.path.join(out, "_SUCCESS")):
-            with open(mp) as f:
-                m = json.load(f)
-            if m.get("fingerprint") == fp:
-                r = StageResult(name, out, True, 0.0, m.get("rows"))
-                self.results.append(r)
-                return r
+        if not os.path.exists(mp) or (marker is not None and not os.path.exists(marker)):
+            return None
+        with open(mp) as f:
+            m = json.load(f)
+        if m.get("fingerprint") != fp:
+            return None
+        r = StageResult(name, os.path.join(self.out_dir, name), True, 0.0, m.get("rows"))
+        self.results.append(r)
+        return r
 
-        t0 = time.time()
-        df = build()
-        if sort_within_partitions:
-            df = df.sortWithinPartitions(*sort_within_partitions)
-        df.write.mode("overwrite").parquet(out)
-        wall = time.time() - t0
-
+    def _record(self, name: str, fp: str, wall: float, out: str | None, rows: int | None = None) -> StageResult:
+        """Write the stage's manifest; a parquet ``out`` contributes its
+        rows and per-part-file rows/bytes from the footers (one part file
+        per partition, so file metadata IS the per-partition lineage; no
+        Spark job)."""
         metrics: dict = {}
-        rows = None
-        if self.collect_partition_metrics:
-            # per-partition rows/bytes from parquet footers, driver-side —
-            # one output file per partition, so file metadata IS the
-            # per-partition lineage; no Spark job
-            import pyarrow.parquet as pq
-
+        if out is not None and self.collect_partition_metrics:
             parts: dict[int, int] = {}
             sizes = []
             # enumerate ONLY the parquet part files: _SUCCESS/.crc entries
@@ -114,6 +103,8 @@ class PipelineRunner:
             metrics["partitions"] = parts
             metrics["files"] = len(sizes)
             metrics["bytes"] = int(sum(sizes))
+        elif out is None:
+            metrics = {"partitions": {}, "files": 0, "bytes": 0}
 
         manifest = {
             "stage": name,
@@ -123,11 +114,62 @@ class PipelineRunner:
             "metrics": metrics,
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        with open(mp, "w") as f:
+        with open(self._manifest_path(name), "w") as f:
             json.dump(manifest, f, indent=1)
-        r = StageResult(name, out, False, wall, rows, metrics)
+        r = StageResult(name, out or os.path.join(self.out_dir, name), False, wall, rows, metrics)
         self.results.append(r)
         return r
+
+    def run_df_stage(
+        self,
+        name: str,
+        build: Callable[[], DataFrame],
+        upstream: list[str] = (),
+        extra_fp: dict | None = None,
+        sort_within_partitions: list[str] | None = None,
+    ) -> StageResult:
+        """Materialize a DataFrame stage to parquet with resume + lineage."""
+        out = os.path.join(self.out_dir, name)
+        fp = self._stage_fp(name, list(upstream), extra_fp)
+        skipped = self._skip(name, fp, os.path.join(out, "_SUCCESS"))
+        if skipped:
+            return skipped
+
+        t0 = time.time()
+        df = build()
+        if sort_within_partitions:
+            df = df.sortWithinPartitions(*sort_within_partitions)
+        df.write.mode("overwrite").parquet(out)
+        return self._record(name, fp, time.time() - t0, out)
+
+    def run_table_stage(
+        self,
+        name: str,
+        build: Callable[[], pa.Table],
+        upstream: list[str] = (),
+        write: bool = True,
+    ) -> StageResult:
+        """Driver-side twin of :meth:`run_df_stage`: ``build`` returns a
+        pyarrow Table, written as one parquet part file plus ``_SUCCESS``
+        (the layout Spark's writer leaves, replacing whatever the output
+        directory held) under the same resume rule and manifest.
+        ``write=False`` records the manifest only: the stage lives in
+        memory, and a consumer re-run on resume rebuilds it."""
+        out = os.path.join(self.out_dir, name)
+        fp = self._stage_fp(name, list(upstream), None)
+        skipped = self._skip(name, fp, os.path.join(out, "_SUCCESS") if write else None)
+        if skipped:
+            return skipped
+
+        t0 = time.time()
+        table = build()
+        if not write:
+            return self._record(name, fp, time.time() - t0, None, table.num_rows)
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        pq.write_table(table, os.path.join(out, "part-00000.snappy.parquet"), compression="snappy")
+        open(os.path.join(out, "_SUCCESS"), "w").close()
+        return self._record(name, fp, time.time() - t0, out)
 
     def run_json_stage(
         self, name: str, build: Callable[[], dict], upstream: list[str] = (), extra_fp: dict | None = None

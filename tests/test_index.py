@@ -7,6 +7,7 @@ plus BASELINE.json invariants: dense ids, sha256 integrity, resume.
 
 from __future__ import annotations
 
+import os
 import re
 
 import numpy as np
@@ -1420,3 +1421,207 @@ def test_daat_score_independent_of_run_order():
         d, s = score_query_runs(runs.iloc[list(perm)], n_docs, avgdl, 10, k1, b)
         outs.add((tuple(d.tolist()), tuple(s.tolist())))
     assert len(outs) == 1, outs
+
+
+# ---------------------------------------------------------------------------
+# Driver build: a corpus within the driver-build bounds, built without
+# n_partitions, is collected once and chunk-encoded in-process.
+# ---------------------------------------------------------------------------
+
+
+def _index_tables(root) -> dict:
+    """Every table of an index directory, in a canonical row order."""
+    import json
+
+    import pyarrow.dataset as pds
+
+    def table(name, keys):
+        t = pds.dataset(os.path.join(root, name), format="parquet").to_table()
+        return t.sort_by([(k, "ascending") for k in keys])
+
+    with open(os.path.join(root, "corpus_stats.json")) as f:
+        stats = json.load(f)
+    return {
+        "docmeta": table("docmeta", ["did"]),
+        "postings": table("postings", ["term", "start_did"]),
+        "term_stats": table("term_stats", ["term"]),
+        "corpus_stats": stats,
+    }
+
+
+def _assert_same_index(a, b) -> None:
+    ta, tb = _index_tables(a), _index_tables(b)
+    for name in ("docmeta", "postings", "term_stats"):
+        assert ta[name].schema == tb[name].schema, name
+        assert ta[name].equals(tb[name]), name
+    assert ta["corpus_stats"] == tb["corpus_stats"]
+
+
+def _assert_driver_built(root) -> None:
+    """No chunks checkpoint: the driver build records the chunks stage's
+    manifest only."""
+    import json
+
+    assert not os.path.exists(os.path.join(root, "chunks"))
+    with open(os.path.join(root, "_lineage", "chunks.json")) as f:
+        assert json.load(f)["metrics"]["files"] == 0
+    for table in ("docmeta", "postings", "term_stats"):
+        parts = [f for f in os.listdir(os.path.join(root, table)) if f.endswith(".parquet")]
+        assert len(parts) == 1, (table, parts)
+
+
+_DRIVER_CASES = {
+    "empty": [],
+    "all_empty_content": [("k2", ""), ("k0", ""), ("k1", None)],
+    "non_ascii_and_duplicate_keys": [
+        ("ключ", "привет мир hello"),
+        ("Zeta", "zeta word"),
+        ("zeta", "lower zeta"),
+        ("dup", "first copy shared"),
+        ("émile", "çağrı ÇAĞRI straße"),
+        ("dup", "second copy shared words"),
+        ("日本", "日本語 text here"),
+        ("dup", ""),
+        ("á", "combining accent key"),
+        ("á", "precomposed accent key"),
+    ],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_DRIVER_CASES))
+def test_driver_build_equals_one_partition_spark_build(spark, tmp_path, case):
+    """The driver build writes the tables the Spark build writes at
+    n_partitions=1, row for row: doc_key byte order (non-ASCII keys,
+    keys differing only by case or normalization), duplicate keys in
+    input order, empty and null content, an empty corpus."""
+    corpus = spark.createDataFrame(_DRIVER_CASES[case], "doc_key string, content string")
+    build_index(spark, corpus, str(tmp_path / "driver"))
+    build_index(spark, corpus, str(tmp_path / "spark"), n_partitions=1)
+    _assert_driver_built(str(tmp_path / "driver"))
+    _assert_same_index(str(tmp_path / "driver"), str(tmp_path / "spark"))
+
+
+@pytest.mark.parametrize("with_positions", [False, True])
+def test_driver_build_equals_spark_build_corpus_small(spark, corpus_small, tmp_path, with_positions):
+    """corpus_small with its native carry columns (repo, path, commit,
+    lang, sha256), tf and positional payloads, a run size that splits
+    terms into several runs."""
+    build_index(spark, corpus_small, str(tmp_path / "driver"), run_size=64, with_positions=with_positions)
+    build_index(
+        spark, corpus_small, str(tmp_path / "spark"), n_partitions=1, run_size=64,
+        with_positions=with_positions,
+    )
+    _assert_driver_built(str(tmp_path / "driver"))
+    _assert_same_index(str(tmp_path / "driver"), str(tmp_path / "spark"))
+
+
+def test_driver_built_index_ranks_like_spark_built(spark, corpus_small, tmp_path, monkeypatch):
+    """The ranked-results matrix on corpus_small: BM25 on QUERIES, QL on
+    the QL set and on all of QUERIES, k in {10, 30}, on the driver
+    serving path and at forced 1/2/5/8 Spark shards.  The auto-built
+    (driver) index and an auto-built Spark index (driver build bounds
+    forced to 0) give identical (query_id, doc_key, rank, repr(score))."""
+    import simplir_spark.operators.index_build as ib
+    import simplir_spark.operators.query_indexed as qi
+
+    build_index(spark, corpus_small, str(tmp_path / "driver"))
+    with monkeypatch.context() as m:
+        m.setattr(ib, "_DRIVER_BUILD_MAX_DOCS", -1)
+        build_index(spark, corpus_small, str(tmp_path / "spark"))
+    _assert_driver_built(str(tmp_path / "driver"))
+    assert os.path.isdir(str(tmp_path / "spark" / "chunks"))
+
+    ql_set = [q for q in QUERIES if q[0] not in ("Q08", "Q09", "Q14")]
+    requests = [
+        (qi.bm25_indexed, QUERIES), (qi.ql_dirichlet_indexed, ql_set),
+        (qi.ql_dirichlet_indexed, QUERIES),
+    ]
+
+    def rows(root):
+        idx = open_index(spark, root)
+        return [
+            sorted((r.query_id, r.doc_key, r.rank, repr(r.score)) for r in fn(spark, idx, qs, k=k).collect())
+            for fn, qs in requests
+            for k in (10, 30)
+        ]
+
+    def matrix(root):
+        out = [rows(root)]
+        for n_shards in (1, 2, 5, 8):
+            with monkeypatch.context() as m:
+                _force_shards(m, n_shards)
+                out.append(rows(root))
+        return out
+
+    got, want = matrix(str(tmp_path / "driver")), matrix(str(tmp_path / "spark"))
+    assert got == want
+    assert all(got[0])
+
+
+def test_driver_build_jobs_and_no_python_worker(spark, corpus_small, tmp_path, monkeypatch):
+    """A driver build runs the column-pruned count, the content-bytes
+    check and the Arrow collect, and nothing else: the count's jobs plus
+    at most 2, and no plan of those three actions holds a Python-worker
+    node."""
+    import re
+
+    DataFrame = type(corpus_small)  # the concrete (classic) DataFrame class
+    plans = []
+    for action in ("collect", "count", "toArrow"):
+        orig = getattr(DataFrame, action)
+
+        def spy(self, *a, _orig=orig, **kw):
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(DataFrame, action, spy)
+    out = str(tmp_path / "idx")
+    _, n_jobs = _jobs_run(spark, lambda: build_index(spark, corpus_small, out))
+    _assert_driver_built(out)
+    assert len(plans) == 3
+    # an AQE aggregate submits its map stage as a job of its own
+    _, n_count_jobs = _jobs_run(spark, lambda: corpus_small.select("doc_key").count())
+    assert n_jobs <= n_count_jobs + 2, (n_jobs, n_count_jobs)
+    for plan in plans:
+        assert not re.search(r"Python|InPandas|InArrow", plan), plan
+
+
+def test_driver_build_resume_is_a_no_op(spark, corpus_small, tmp_path):
+    """A second driver build over the same input skips all five stages:
+    no manifest is rewritten, and no table is recollected."""
+    out = str(tmp_path / "idx")
+    build_index(spark, corpus_small, out)
+    before = _manifest_mtimes(out)
+    assert set(before) == _STAGE_MANIFESTS
+    build_index(spark, corpus_small, out)
+    assert _manifest_mtimes(out) == before
+
+
+def test_driver_build_over_partitioned_index_leaves_no_stale_parts(spark, corpus_small, tmp_path):
+    """Building on the driver into a directory that holds a 4-partition
+    Spark index replaces every table: one part file each, no chunks
+    checkpoint or bucket cuts left, tables equal a fresh driver build's."""
+    out = str(tmp_path / "idx")
+    build_index(spark, corpus_small, out, n_partitions=4, run_size=64)
+    assert len([f for f in os.listdir(os.path.join(out, "postings")) if f.endswith(".parquet")]) > 1
+    build_index(spark, corpus_small, out, run_size=64)
+    _assert_driver_built(out)
+    assert not os.path.exists(os.path.join(out, "_bucket_cuts.json"))
+    build_index(spark, corpus_small, str(tmp_path / "fresh"), run_size=64)
+    _assert_same_index(out, str(tmp_path / "fresh"))
+
+
+def test_merge_of_driver_and_spark_chunks(spark, corpus_small, tmp_path):
+    """merge_indexes over one driver-built and one Spark-built chunk
+    equals the merge of the two chunks both built by Spark: the
+    pyarrow-written tables read and union like Spark-written ones."""
+    keys = sorted(r.doc_key for r in corpus_small.select("doc_key").collect())
+    cut = keys[len(keys) // 2]
+    lo, hi = corpus_small.filter(F.col("doc_key") < cut), corpus_small.filter(F.col("doc_key") >= cut)
+    build_index(spark, lo, str(tmp_path / "lo_driver"), run_size=64)
+    _assert_driver_built(str(tmp_path / "lo_driver"))
+    build_index(spark, lo, str(tmp_path / "lo_spark"), n_partitions=1, run_size=64)
+    build_index(spark, hi, str(tmp_path / "hi_spark"), n_partitions=2, run_size=64)
+    merge_indexes(spark, [str(tmp_path / "lo_driver"), str(tmp_path / "hi_spark")], str(tmp_path / "mixed"))
+    merge_indexes(spark, [str(tmp_path / "lo_spark"), str(tmp_path / "hi_spark")], str(tmp_path / "spark"))
+    _assert_same_index(str(tmp_path / "mixed"), str(tmp_path / "spark"))

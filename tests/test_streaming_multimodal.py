@@ -281,3 +281,36 @@ def test_load_images_decoded_jvm_source(spark):
     assert rows["tiny.bmp"].height > 0
     assert (rows["tiny.jpg"].height, rows["tiny.jpg"].width) == (24, 32)
     assert (rows["tiny.png"].height, rows["tiny.png"].width) == (7, 5)
+
+
+def test_stream_micro_batches_build_on_driver(spark, tmp_path_factory):
+    """Each micro-batch of stream_index_build is small enough to build on
+    the driver: its chunk index has no chunks checkpoint and one part
+    file per table, and the merged stream answers like the batch build."""
+    import json
+
+    from simplir_spark.operators.index_build import build_index, open_index
+    from simplir_spark.operators.merge import merge_indexes
+    from simplir_spark.streaming.ingest import stream_index_build
+
+    base = tmp_path_factory.mktemp("stream_driver")
+    src = spark.read.parquet(f"{SF}/documents.parquet")
+    in_dir = str(base / "input")
+    src.filter(F.col("doc_id") < 200).coalesce(1).write.parquet(in_dir)
+    src.filter(F.col("doc_id") >= 200).coalesce(1).write.mode("append").parquet(in_dir)
+    chunks = stream_index_build(
+        spark, in_dir, str(base / "stream_idx"), schema=src.schema, max_files_per_trigger=1,
+    )
+    assert len(chunks) == 2
+    for chunk in chunks:
+        assert not os.path.exists(os.path.join(chunk, "chunks"))
+        with open(os.path.join(chunk, "_lineage", "chunks.json")) as f:
+            assert json.load(f)["metrics"]["files"] == 0
+        for table in ("docmeta", "postings", "term_stats"):
+            parts = [p for p in os.listdir(os.path.join(chunk, table)) if p.endswith(".parquet")]
+            assert len(parts) == 1, (chunk, table)
+    merged = open_index(spark, str(merge_indexes(spark, chunks, str(base / "merged")).root))
+    corpus = src.select(F.col("doc_id").alias("doc_key"), F.col("text").alias("content"))
+    full = open_index(spark, str(build_index(spark, corpus, str(base / "full")).root))
+    assert (merged.doc_count, merged.token_count) == (full.doc_count, full.token_count)
+    assert sorted(map(tuple, merged.term_stats.collect())) == sorted(map(tuple, full.term_stats.collect()))
