@@ -1059,8 +1059,7 @@ EMB_DIM = 4
 
 def q_doc_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """tf-weighted mean term-vector document embeddings (WordEmbedding.hs
-    embedTerms; general operator: simplir_spark/operators/embedding.py,
-    exercised in tests) over deterministic md5-derived term vectors.
+    embedTerms) over deterministic md5-derived term vectors.
 
     Cross-engine exactness: components are integers k in [0,1000), the
     weighted sums are BIGINT (order-independent), and the single double

@@ -300,7 +300,7 @@ def main(argv: list[str] | None = None) -> None:
     sp.add_argument("--out", required=True)
     sp.add_argument(
         "--partitions", type=int, default=None,
-        help="build with Spark into N bucket partitions; by default a corpus "
+        help="build with Spark into N range partitions; by default a corpus "
         "within the driver-build bounds builds on the driver and a larger one "
         "gets one partition per 64,000 docs",
     )

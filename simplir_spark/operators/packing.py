@@ -14,7 +14,7 @@ task, so instead pass 1 aggregates per-range totals (tiny: one row per
 ``range_size`` ids), the driver exclusive-scans them (O(n_ranges)), and
 pass 2 adds a range-local window cumsum to the broadcast range offset —
 the same shape as the index build's dense-id assignment
-(index_build.bucket_offsets, Document.hs:62-76's mapAccumL analog).
+(index_build._partition_offsets, Document.hs:62-76's mapAccumL analog).
 """
 
 from __future__ import annotations

@@ -212,9 +212,8 @@ def _centroid_structs(cents: list[tuple[int, list[float], float]]):
 
 # above this many lists, per-centroid literal column expressions stop
 # being the right assignment plan (Catalyst tree size grows linearly with
-# n_lists — same trade-off the index build's bucket routing hit, see
-# with_bucket_and_xb / BENCH/bucket_udf_route.json) and assignment moves
-# to one broadcast-matrix matmul per Arrow batch
+# n_lists, BENCH/bucket_udf_route.json) and assignment moves to one
+# broadcast-matrix matmul per Arrow batch
 _IVF_UDF_MIN_LISTS = 256
 
 
@@ -444,8 +443,8 @@ def ivf_kmeans_topk(
     ``sample_size`` rows regardless of corpus size; the search stage
     shuffles on list id only; assignment auto-routes from literal column
     expressions to the broadcast-matrix pandas UDF at
-    ``_IVF_UDF_MIN_LISTS`` (same trade-off as the index build's bucket
-    UDF path, with_bucket_and_xb)."""
+    ``_IVF_UDF_MIN_LISTS``, where a plan-sized literal per list stops
+    paying."""
     base = with_norm(emb, vec_col).select(F.col(id_col), "_v", "_norm")
     rows = _deterministic_sample(base.select(F.col(id_col), "_v"), sample_size, id_col)
     sample = np.asarray([list(r["_v"]) for r in rows], dtype=np.float64)

@@ -8,7 +8,8 @@
   so a lazy import of deleted code fails here rather than only when its
   branch runs.
 * The indexed scoring path (``operators/query_indexed.py`` and
-  ``operators/phrase.py``) runs on Arrow and numpy only: no pandas
+  ``operators/phrase.py``) and the index build
+  (``operators/index_build.py``) run on Arrow and numpy only: no pandas
   import, conversion, row iteration or groupby.
 """
 
@@ -115,13 +116,13 @@ def test_package_imports_resolve():
     assert not unresolved, unresolved
 
 
-SCORING_PATH = ("operators/query_indexed.py", "operators/phrase.py")
+ARROW_ONLY = ("operators/query_indexed.py", "operators/phrase.py", "operators/index_build.py")
 PANDAS_IDIOMS = ("to_pandas", "itertuples", ".groupby(", "import pandas", "from pandas")
 
 
 def test_scoring_path_has_no_pandas():
     found = {}
-    for rel in SCORING_PATH:
+    for rel in ARROW_ONLY:
         text = (PACKAGE / rel).read_text()
         hits = [s for s in PANDAS_IDIOMS if s in text]
         if hits:

@@ -256,25 +256,6 @@ def test_blockmax_pruning_skips_runs_and_preserves_topk():
     assert cnt[0] < cnt[1], f"no pruning happened: {cnt}"
 
 
-def test_murmur3_matches_spark_hash(spark):
-    """probe_shuffle_keys relies on the pure-Python murmur3 equaling
-    Spark's Murmur3Hash (F.hash / HashPartitioning) on int32 inputs."""
-    from simplir_spark.operators.index_build import murmur3_int32, probe_shuffle_keys
-
-    xs = list(range(0, 200)) + [2**31 - 1, -1, -2**31, 123456789]
-    df = spark.createDataFrame([(x,) for x in xs], "x int")
-    got = {r["x"]: r["h"] for r in df.select("x", F.hash("x").alias("h")).collect()}
-    for x in xs:
-        assert murmur3_int32(x) == got[x], x
-    # and the probed keys really land one bucket per partition
-    keys = probe_shuffle_keys(8, 8)
-    kdf = spark.createDataFrame([(k,) for k in keys], "k int").repartition(8, "k")
-    parts = kdf.select(F.spark_partition_id().alias("p"), "k").collect()
-    placed = {r["k"]: r["p"] for r in parts}
-    assert sorted(placed.values()) == list(range(8))
-    assert [placed[k] for k in keys] == list(range(8))
-
-
 def test_partial_resume_rebuilds_only_downstream(spark, corpus_small, oracle_idx, tmp_path_factory):
     """Kill/resume: wipe the postings stage's output and re-run the build —
     the chunks and docmeta stages are skipped (same fingerprints, nothing
@@ -292,7 +273,6 @@ def test_partial_resume_rebuilds_only_downstream(spark, corpus_small, oracle_idx
     assert after["docmeta.json"] == before["docmeta.json"]  # skipped
     assert after["postings.json"] > before["postings.json"]  # rebuilt
     _assert_bm25_rank_identical(spark, out, oracle_idx)
-
 
 
 def test_postings_scan_prunes_on_term(spark, index_dir):
@@ -603,47 +583,6 @@ def test_indexed_no_match_collects_without_job(spark, index_dir):
         assert max([-1, *sc.statusTracker().getJobIdsForGroup(None)]) == last, fn.__name__
 
 
-def test_bucket_expr_forms_agree(spark):
-    """The sqrt-decomposed two-level bucket assignment (the default) must
-    agree with the O(n_cuts) linear-scan reference on every key,
-    including keys equal to a cut
-    (boundary inclusivity), keys outside the cut range, and cut counts
-    straddling the sqrt-path threshold."""
-    from simplir_spark.operators.index_build import (
-        _bucket_expr_linear,
-        _term_did_bucket_expr_linear,
-        bucket_expr,
-        term_did_bucket_expr,
-    )
-
-    rng = np.random.RandomState(7)
-    keys = sorted({f"doc{int(x):012d}" for x in rng.randint(0, 10_000, 400)})
-    for n_cuts in (1, 2, 3, 7, 64, 127, 128, 129, 255, 360):
-        cuts = sorted(rng.choice(keys, size=min(n_cuts, len(keys)), replace=False).tolist())
-        df = spark.createDataFrame([(k,) for k in keys] + [("", ), ("zzzz",)], "doc_key string")
-        got = df.select(
-            bucket_expr("doc_key", cuts).alias("bs"),
-            _bucket_expr_linear("doc_key", cuts).alias("lin"),
-        ).collect()
-        for r in got:
-            assert r["bs"] == r["lin"], (n_cuts, r)
-
-    # (term, did) lexicographic variant, boundary did inclusive — one
-    # small-cut case and one crossing the sqrt threshold
-    terms = ["alpha", "beta", "gamma", "delta"]
-    rows = [(t, int(d)) for t in terms for d in rng.randint(0, 50, 30)]
-    small = sorted({("beta", 10), ("beta", 25), ("delta", 0), ("gamma", 49)})
-    big = sorted({(t, int(d)) for t in terms for d in rng.randint(0, 50, 40)})
-    df = spark.createDataFrame(rows, "term string, did long")
-    for td_cuts in (small, big):
-        got = df.select(
-            term_did_bucket_expr(td_cuts).alias("bs"),
-            _term_did_bucket_expr_linear(td_cuts).alias("lin"),
-        ).collect()
-        for r in got:
-            assert r["bs"] == r["lin"], (len(td_cuts), r)
-
-
 def test_compact_postings_rejects_mixed_pos_buffers(spark):
     """A term whose short runs mix positional and non-positional blobs
     cannot be merged without misaligning positions — the kernel must
@@ -711,42 +650,6 @@ def test_build_with_many_buckets_exercises_sqrt_path(spark, corpus_small, oracle
         assert [(r.rank, r.doc_key) for r in have] == [(rk, ky) for rk, ky, _ in want], qid
 
 
-def test_boundary_sketch_is_corpus_size_independent(spark):
-    """The distributed splitter sketch collects O(budget) weighted
-    candidates no matter how large the input is (VERDICT r3 #1): for a
-    corpus far bigger than budget, the driver-side candidate count stays
-    <= budget, and the resulting cuts still give balanced buckets."""
-    from simplir_spark.operators.index_build import (
-        _boundary_sketch,
-        bucket_offsets,
-        sample_boundaries,
-    )
-
-    n = 50_000
-    df = spark.range(n).select(
-        F.format_string("key%08d", (F.col("id") * 2654435761) % n).alias("k")
-    )
-    budget = 256
-    cand = _boundary_sketch(df, "k", budget=budget, seed=42, frac=1.0)
-    assert 0 < len(cand) <= budget
-    # every candidate carries positive weight and weights sum ~ n
-    assert all(w > 0 for _, w in cand)
-    assert abs(sum(w for _, w in cand) - n) < 1e-6 * n
-
-    n_buckets = 16
-    cuts = sample_boundaries(df, "k", n_buckets, n=n)
-    assert 0 < len(cuts) <= n_buckets - 1
-    offsets = bucket_offsets(df, "k", cuts)
-    # derive per-bucket counts from the exclusive-scan offsets
-    ordered = [offsets[b] for b in sorted(offsets)] + [n]
-    sizes = [b - a for a, b in zip(ordered, ordered[1:])]
-    mean = n / len(sizes)
-    assert max(sizes) < 2.0 * mean, sizes
-
-    # deterministic: same input, same cuts
-    assert cuts == sample_boundaries(df, "k", n_buckets, n=n)
-
-
 def test_hot_term_balance(spark, tmp_path_factory):
     """Skew gate (BASELINE.json salted skew splitting): one term in 50%
     of docs must not pile its posting mass into one partition file — the
@@ -782,19 +685,6 @@ def test_hot_term_balance(spark, tmp_path_factory):
     assert [(r.doc_key, r.rank) for r in sorted(got, key=lambda r: r.rank)] == [
         (r.doc_key, r.rank) for r in sorted(want, key=lambda r: r.rank)
     ]
-
-
-def test_bucket_expr_selects_sqrt_form_past_threshold(spark):
-    """Past _BUCKET_SQRT_MIN cuts the default bucket expression must be
-    the sqrt-decomposed two-level form (element_at over nested array
-    literals), and below it the flat scan (regression guard for the
-    BENCH/bucket_search.json A/B)."""
-    from simplir_spark.operators.index_build import _BUCKET_SQRT_MIN, bucket_expr
-
-    big = [f"c{i:06d}" for i in range(_BUCKET_SQRT_MIN)]
-    small = big[: _BUCKET_SQRT_MIN - 1]
-    assert "element_at" in repr(bucket_expr("k", big))
-    assert "element_at" not in repr(bucket_expr("k", small))
 
 
 def test_ql_blockmax_pruning_skips_runs_and_preserves_topk():
@@ -1058,113 +948,6 @@ def test_hot_query_shard_mass_balance(spark, tmp_path, monkeypatch):
         _force_shards(monkeypatch, n)
         rows[n] = sorted(tuple(r) for r in bm25_indexed(spark, idx, queries, k=10).collect())
     assert rows[n_shards] == rows[1] == driver and len(rows[1]) == 40
-
-
-# ---------------------------------------------------------------------------
-# UDF bucket routing (>32k-bucket path)
-# ---------------------------------------------------------------------------
-
-def test_murmur3_np_matches_scalar():
-    import numpy as np
-
-    from simplir_spark.operators.index_build import _murmur3_int32_np, murmur3_int32
-
-    xs = np.concatenate([np.arange(0, 2000, dtype=np.uint64),
-                         np.array([2**31 - 1, 2**31, 2**32 - 1], dtype=np.uint64)])
-    got = _murmur3_int32_np(xs)
-    want = [murmur3_int32(int(x)) for x in xs]
-    assert got.tolist() == want
-
-
-def test_probe_shuffle_keys_matches_scalar_loop(spark):
-    """The vectorized chunked probe must produce exactly the scalar
-    first-x-wins assignment."""
-    from simplir_spark.operators.index_build import murmur3_int32, probe_shuffle_keys
-
-    for n_buckets, n_parts in [(7, 7), (128, 128), (1000, 1000), (5, 16)]:
-        found: dict[int, int] = {}
-        x = 0
-        while len(found) < n_buckets:
-            p = murmur3_int32(x) % n_parts
-            if p < n_buckets and p not in found:
-                found[p] = x
-            x += 1
-        want = [found[b] for b in range(n_buckets)]
-        assert probe_shuffle_keys(n_buckets, n_parts) == want, (n_buckets, n_parts)
-
-
-def test_udf_bucket_routing_matches_jvm(spark, monkeypatch):
-    """The broadcast-searchsorted UDF route (the >32k-bucket path) must
-    assign the same (bucket, xb) as the JVM array-literal route — string
-    keys, long keys, boundary-equal keys, and the lexicographic
-    (term, did) space with duplicate cut terms."""
-    from pyspark.sql import functions as F
-
-    from simplir_spark.operators import index_build as ib
-
-    keys_s = ["a", "ba", "bb", "bz", "c", "dd", "zz"]
-    cuts_s = ["bb", "c", "m"]
-    keys_l = [0, 5, 6, 7, 99, 100, 101]
-    cuts_l = [6, 100]
-    for keys, cuts in [(keys_s, cuts_s), (keys_l, cuts_l)]:
-        df = spark.createDataFrame([(k,) for k in keys], ["doc_key"])
-        xkeys = ib.probe_shuffle_keys(len(cuts) + 1, len(cuts) + 1)
-        jvm = {
-            r["doc_key"]: (r["_bucket"], r["_xb"])
-            for r in ib.with_bucket_and_xb(df, "doc_key", cuts, xkeys).collect()
-        }
-        monkeypatch.setattr(ib, "_BUCKET_UDF_MIN", 0)
-        udf = {
-            r["doc_key"]: (r["_bucket"], r["_xb"])
-            for r in ib.with_bucket_and_xb(df, "doc_key", cuts, xkeys).collect()
-        }
-        monkeypatch.undo()
-        assert jvm == udf, (cuts, jvm, udf)
-
-    # (term, did): duplicate cut terms exercise the tie-group searchsorted
-    rows = [("apple", 3), ("apple", 10), ("apple", 99), ("beta", 0),
-            ("beta", 7), ("zeta", 1), ("aa", 5)]
-    cuts_td = [("apple", 10), ("apple", 50), ("beta", 7)]
-    df = spark.createDataFrame(rows, ["term", "start_did"])
-    xkeys = ib.probe_shuffle_keys(len(cuts_td) + 1, len(cuts_td) + 1)
-    jvm = {
-        (r["term"], r["start_did"]): (r["_b"], r["_xb"])
-        for r in ib.with_term_did_bucket_and_xb(df, cuts_td, xkeys).collect()
-    }
-    monkeypatch.setattr(ib, "_BUCKET_UDF_MIN", 0)
-    udf = {
-        (r["term"], r["start_did"]): (r["_b"], r["_xb"])
-        for r in ib.with_term_did_bucket_and_xb(df, cuts_td, xkeys).collect()
-    }
-    monkeypatch.undo()
-    assert jvm == udf
-
-
-def test_udf_routed_build_matches_default(spark, corpus_small, index_dir, monkeypatch):
-    """A full build forced onto the UDF routing path (as if >32k buckets)
-    must produce a value-identical index to the default literal-routed
-    build: same docmeta, postings bytes, term stats."""
-    from simplir_spark.operators import index_build as ib
-
-    monkeypatch.setattr(ib, "_BUCKET_UDF_MIN", 0)
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="udfroute_idx_")
-    build_index(spark, corpus_small, d, n_partitions=8, run_size=64)
-    monkeypatch.undo()
-    ui = open_index(spark, d)
-    ti = open_index(spark, index_dir)
-    assert ui.doc_count == ti.doc_count and ui.token_count == ti.token_count
-    assert {(r.term, r.df, r.cf) for r in ui.term_stats.collect()} == {
-        (r.term, r.df, r.cf) for r in ti.term_stats.collect()
-    }
-    assert _postings_map(spark, d) == _postings_map(spark, index_dir)
-    a = {(r.did, r.doc_key, r.doc_len) for r in ui.docmeta.collect()}
-    b = {(r.did, r.doc_key, r.doc_len) for r in ti.docmeta.collect()}
-    assert a == b
-    import shutil
-
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_merge_indexes_cleans_level_temporaries(spark, tmp_path):
@@ -1625,3 +1408,84 @@ def test_merge_of_driver_and_spark_chunks(spark, corpus_small, tmp_path):
     merge_indexes(spark, [str(tmp_path / "lo_driver"), str(tmp_path / "hi_spark")], str(tmp_path / "mixed"))
     merge_indexes(spark, [str(tmp_path / "lo_spark"), str(tmp_path / "hi_spark")], str(tmp_path / "spark"))
     _assert_same_index(str(tmp_path / "mixed"), str(tmp_path / "spark"))
+
+
+# ---------------------------------------------------------------------------
+# Spark build: Spark's range exchange places the docs and the runs.
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def driver_built(spark, corpus_small, tmp_path_factory):
+    """The driver build of corpus_small, tf and positional, run_size 64."""
+    roots = {}
+    for with_positions in (False, True):
+        root = str(tmp_path_factory.mktemp("driver_ref") / "idx")
+        build_index(spark, corpus_small, root, run_size=64, with_positions=with_positions)
+        _assert_driver_built(root)
+        roots[with_positions] = root
+    return roots
+
+
+def _run_payloads(root) -> dict[tuple[str, int], tuple]:
+    """{(term, did): (doc_len, positions or None)} over every run, each
+    run's end_did checked against its last decoded did."""
+    import pyarrow.dataset as pds
+
+    out = {}
+    for r in pds.dataset(os.path.join(root, "postings"), format="parquet").to_table().to_pylist():
+        dids, tfs, dls = codec.decode_run(r["start_did"], r["n"], r["deltas"], r["tfs"], r["dls"])
+        assert dids[-1] == r["end_did"], r["term"]
+        pos = codec.decode_positions(r["pos"], tfs) if r["pos"] is not None else [None] * len(dids)
+        for did, dl, p in zip(dids.tolist(), dls.tolist(), pos):
+            out[(r["term"], did)] = (dl, None if p is None else tuple(p.tolist()))
+    return out
+
+
+@pytest.mark.parametrize("with_positions", [False, True])
+@pytest.mark.parametrize("n_partitions", [2, 3, 8, 200])
+def test_range_partitioned_build_equals_driver_build(
+    spark, corpus_small, driver_built, tmp_path, n_partitions, with_positions
+):
+    """Whatever bounds Spark's range sample picks, a Spark build has the
+    driver build's docmeta rows, decoded postings, term_stats and
+    corpus_stats (partition-local dids re-based by the partitions' doc
+    counts), and its postings part files are in (term, start_did) order
+    across files."""
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "idx")
+    build_index(
+        spark, corpus_small, out, n_partitions=n_partitions, run_size=64, with_positions=with_positions
+    )
+    ref = driver_built[with_positions]
+    got, want = _index_tables(out), _index_tables(ref)
+    for name in ("docmeta", "term_stats"):
+        assert got[name].equals(want[name]), name
+    assert got["corpus_stats"] == want["corpus_stats"]
+    assert _postings_map(spark, out) == _postings_map(spark, ref)
+    assert _run_payloads(out) == _run_payloads(ref)
+
+    post = os.path.join(out, "postings")
+    keys = []
+    for f in sorted(f for f in os.listdir(post) if f.endswith(".parquet")):
+        t = pq.read_table(os.path.join(post, f), columns=["term", "start_did"])
+        keys.extend(zip(t["term"].to_pylist(), t["start_did"].to_pylist()))
+    assert len(keys) == got["postings"].num_rows
+    assert keys == sorted(keys)
+
+
+def test_build_index_rejects_sizes_below_one(spark, corpus_small, tmp_path):
+    """n_partitions, run_size and docs_per_bucket below 1 raise ValueError
+    before any Spark job runs and before the index directory exists."""
+    out = str(tmp_path / "idx")
+
+    def call(arg, bad):
+        with pytest.raises(ValueError, match=arg):
+            build_index(spark, corpus_small, out, **{arg: bad})
+
+    for arg in ("n_partitions", "run_size", "docs_per_bucket"):
+        for bad in (0, -1):
+            _, n_jobs = _jobs_run(spark, lambda: call(arg, bad))
+            assert n_jobs == 0, (arg, bad)
+    assert not os.path.exists(out)

@@ -245,40 +245,6 @@ def test_fleiss_kappa_wikipedia_example(spark):
     assert r.kappa == pytest.approx(0.2099, abs=2e-3)
 
 
-# ---------------------------------------------------------------------------
-# Word embeddings
-# ---------------------------------------------------------------------------
-
-
-def test_load_glove_and_doc_embeddings(spark, tmp_path_factory):
-    from simplir_spark.operators.embedding import doc_embeddings, load_glove
-
-    base = tmp_path_factory.mktemp("glove")
-    p = str(base / "vectors.txt")
-    with open(p, "w") as f:
-        f.write("alpha 1.0 0.0\n")
-        f.write("beta 0.0 1.0\n")
-        f.write("gamma 0.5 0.5\n")
-        f.write("malformed 1.0\n")  # wrong arity -> dropped
-    vecs = load_glove(spark, p, dim=2)
-    got = {r.term: list(r.vec) for r in vecs.collect()}
-    assert got == {"alpha": [1.0, 0.0], "beta": [0.0, 1.0], "gamma": [0.5, 0.5]}
-
-    pairs = spark.createDataFrame(
-        [
-            ("d1", "alpha", 3), ("d1", "beta", 1),
-            ("d2", "gamma", 2), ("d2", "oov", 5),
-            ("d3", "oov", 1),   # all-OOV doc -> absent from output
-        ],
-        "doc_key string, term string, tf long",
-    )
-    out = {r.doc_key: (list(r.vec), r.n_terms) for r in doc_embeddings(pairs, vecs, 2).collect()}
-    # d1: (3*[1,0] + 1*[0,1]) / 4 = [0.75, 0.25]
-    assert out["d1"] == ([0.75, 0.25], 2)
-    assert out["d2"] == ([0.5, 0.5], 1)
-    assert "d3" not in out
-
-
 def _mixed_scale_fixture(spark, scale=1000.0):
     """f0 noise, f1 informative but TINY scale, f2 anti-correlated HUGE
     scale — the mixed-scale set that defeats an absolute delta grid."""

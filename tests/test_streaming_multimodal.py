@@ -167,65 +167,6 @@ def test_extract_features_runs_no_python_worker(spark):
         assert node not in plan, plan
 
 
-def test_stateful_stream_dedup_across_microbatches(spark, tmp_path_factory):
-    """applyInPandasWithState: a hash first seen in micro-batch 1 must be
-    suppressed when it reappears in micro-batch 2 (state persists across
-    batches)."""
-    import os
-
-    from simplir_spark.streaming.stateful import dedup_stream
-
-    base = tmp_path_factory.mktemp("statefuldedup")
-    src = str(base / "src")
-    os.makedirs(src)
-    # two files -> two micro-batches with maxFilesPerTrigger=1
-    spark.createDataFrame(
-        [(1, "alpha"), (2, "beta"), (3, "alpha")], "doc_id long, content string"
-    ).coalesce(1).write.parquet(os.path.join(src, "f1"))
-    spark.createDataFrame(
-        [(4, "alpha"), (5, "gamma"), (6, "beta"), (7, "gamma")],
-        "doc_id long, content string",
-    ).coalesce(1).write.parquet(os.path.join(src, "f2"))
-
-    stream = (
-        spark.readStream.schema("doc_id long, content string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*")
-    )
-    out_dir = str(base / "out")
-    ckpt = str(base / "ckpt")
-    q = (
-        dedup_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = {r.doc_id: r.sha256 for r in spark.read.parquet(out_dir).collect()}
-    # first occurrence of each distinct content only; batch files may be
-    # consumed in either order, so accept either batch's winner per hash
-    import hashlib
-
-    h = lambda s: hashlib.sha256(s.encode()).hexdigest()
-    assert len(rows) == 3
-    assert set(rows.values()) == {h("alpha"), h("beta"), h("gamma")}
-    assert sum(1 for k in rows if k in (1, 4)) == 1  # one alpha winner
-    assert sum(1 for k in rows if k in (2, 6)) == 1  # one beta winner
-    assert 5 in rows or 7 in rows
-
-
-def test_stateful_dedup_batch_mode(spark):
-    from simplir_spark.streaming.stateful import dedup_stream
-
-    docs = spark.createDataFrame(
-        [(3, "x"), (1, "x"), (2, "y")], "doc_id long, content string"
-    )
-    got = {r.doc_id for r in dedup_stream(docs).collect()}
-    assert got == {1, 2}
-
-
 # ---------------------------------------------------------------------------
 # media sources (binaryFile / image)
 # ---------------------------------------------------------------------------

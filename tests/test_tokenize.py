@@ -199,19 +199,3 @@ def test_tokenize_tf_from_raw_null_docs():
     assert list(out["terms"].iloc[1]) == []
     all_null = tokenize_tf_from_raw(pd.Series([None, None], dtype=object))
     assert list(all_null["doc_len"]) == [0, 0]
-
-
-def test_glove_loader_rejects_wrong_arity(spark, tmp_path):
-    # regression: slice(parts, 2, dim) returned dim elements for any
-    # LONGER line, silently truncating a higher-dimensional file instead
-    # of dropping the wrong-arity rows as documented
-    from simplir_spark.operators.embedding import load_glove
-
-    p = tmp_path / "vecs.txt"
-    p.write_text(
-        "good 1.0 2.0 3.0\n"
-        "overarity 1.0 2.0 3.0 4.0 5.0\n"
-        "short 1.0 2.0\n"
-    )
-    rows = {r["term"]: list(r["vec"]) for r in load_glove(spark, str(p), dim=3).collect()}
-    assert rows == {"good": [1.0, 2.0, 3.0]}
