@@ -26,7 +26,8 @@ simplir-disk-index/src/SimplIR/DiskIndex/Build.hs:34-135):
   order.  The kernel numbers each partition's docs from 0, as the
   reference numbers each chunk's; every row carries its partition id
   (JVM ``spark_partition_id()``).  After the chunks checkpoint, one slim
-  ``groupBy(part).count()`` and a window give each partition's
+  ``groupBy(part).count()`` and a join of those counts to the earlier
+  partitions' give each partition's
   exclusive-scan offset (Document.hs:62-76's mapAccumL), and docmeta and
   postings add it to
   ``did`` / ``start_did`` / ``end_did`` through a broadcast join: the
@@ -80,10 +81,11 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simplir_spark.functions import codec
+from simplir_spark.operators import score_pool
 from simplir_spark.operators.stats import corpus_stats as corpus_stats_agg
 from simplir_spark.plans.pipeline import PipelineRunner
 from simplir_spark.sources.corpus import with_integrity
@@ -651,13 +653,17 @@ def _build_on_driver(
 def _partition_offsets(doc_rows: DataFrame) -> DataFrame:
     """``(part, off)`` of every chunk partition: the exclusive scan of the
     partitions' doc counts in partition order (Document.hs:62-76's
-    mapAccumL).  One slim aggregation over ``part``; the scan is a
-    window over one row per partition."""
-    before = Window.orderBy("part").rowsBetween(Window.unboundedPreceding, -1)
+    mapAccumL).  One slim aggregation over ``part``; the scan joins each
+    partition to the partitions before it and sums their counts, over
+    one row per partition.  It is not a window: an unpartitioned one makes
+    Spark warn on every build that it moves all rows to one task, and the
+    optimizer removes a literal partition key."""
+    counts = doc_rows.groupBy("part").count()
+    before = counts.select(F.col("part").alias("p"), F.col("count").alias("c"))
     return (
-        doc_rows.groupBy("part")
-        .count()
-        .select("part", F.coalesce(F.sum("count").over(before), F.lit(0)).alias("off"))
+        counts.join(before, F.col("p") < F.col("part"), "left")
+        .groupBy("part")
+        .agg(F.coalesce(F.sum("c"), F.lit(0)).alias("off"))
     )
 
 
@@ -892,6 +898,13 @@ class IndexHandle:
         """doc_key of every did, indexed by did (dids are dense)."""
         t = ds.dataset(self.paths.docmeta, format="parquet").to_table(columns=["did", "doc_key"])
         return t["doc_key"].take(pc.sort_indices(t["did"])).combine_chunks()
+
+    def close(self) -> None:
+        """Release this handle's use of the scoring pool
+        (``score_pool``), which stops with its last user, as it does when
+        the last handle that used it is collected.  Idempotent; a later
+        request on the handle still works."""
+        score_pool.release(self)
 
 
 def open_index(spark: SparkSession, root: str) -> IndexHandle:

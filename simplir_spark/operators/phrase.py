@@ -26,6 +26,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from simplir_spark.functions import codec
 from simplir_spark.operators.index_build import IndexHandle
@@ -139,7 +140,21 @@ def _phrase_tfs(runs: pa.Table, m: int, lo: int, hi: int) -> tuple[np.ndarray, n
 
 
 _PHRASE_COLS = ("start_did", "n", "deltas", "tfs", "dls", "pos")
-_PHRASE_SCHEMA = "phrase_id string, did long, tf long"
+# built once: ``createDataFrame`` parses a DDL string through the JVM
+_PHRASE_SCHEMA = T.StructType(
+    [
+        T.StructField("phrase_id", T.StringType()),
+        T.StructField("did", T.LongType()),
+        T.StructField("tf", T.LongType()),
+    ]
+)
+_PHRASE_TERMS_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.StringType()),
+        T.StructField("term", T.StringType()),
+        T.StructField("term_ix", T.IntegerType()),
+    ]
+)
 
 
 def phrase_match_positional(
@@ -204,7 +219,7 @@ def phrase_match_positional(
             "term_ix": pa.array([r[2] for r in rows], pa.int32()),
         }
     )
-    pdf_phrases = spark.createDataFrame(phrase_table, "query_id string, term string, term_ix int")
+    pdf_phrases = spark.createDataFrame(phrase_table, _PHRASE_TERMS_SCHEMA)
     matched = _route_runs(post.join(F.broadcast(pdf_phrases), "term"), span).select(
         "query_id", "shard", "term_ix", "term", *_PHRASE_COLS
     )

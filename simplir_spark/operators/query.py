@@ -20,6 +20,7 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pyspark import StorageLevel
 
@@ -54,6 +55,14 @@ def merge_query_entries(
     return list(merged.items())
 
 
+# query tables' schemas, built once: ``createDataFrame`` parses a DDL
+# string through the JVM on every call
+_QUERY_TERMS_SCHEMA = T.StructType(
+    [T.StructField("query_id", T.StringType()), T.StructField("term", T.StringType())]
+)
+_QUERY_QTF_SCHEMA = T.StructType([*_QUERY_TERMS_SCHEMA.fields, T.StructField("qtf", T.LongType())])
+
+
 def queries_df(spark: SparkSession, queries: list[tuple[str, list[str]]]) -> DataFrame:
     """(query_id, term) rows, deduped per query_id (SimpleIndex.hs:142).
 
@@ -67,7 +76,7 @@ def queries_df(spark: SparkSession, queries: list[tuple[str, list[str]]]) -> Dat
     # an Arrow table becomes a LocalRelation, so broadcasts of the query
     # table fold on the driver with no job
     table = pa.Table.from_pandas(pd.DataFrame(rows, columns=["query_id", "term"]), preserve_index=False)
-    return spark.createDataFrame(table, "query_id string, term string")
+    return spark.createDataFrame(table, _QUERY_TERMS_SCHEMA)
 
 
 def topk_ranked(scored: DataFrame, k: int, doc_col: str = "doc_key") -> DataFrame:
@@ -140,7 +149,7 @@ def bm25_scan(
     qtf_table = pa.Table.from_pandas(
         pd.DataFrame(qtf_rows, columns=["query_id", "term", "qtf"]), preserve_index=False
     )
-    qdf_qtf = spark.createDataFrame(qtf_table, "query_id string, term string, qtf long")
+    qdf_qtf = spark.createDataFrame(qtf_table, _QUERY_QTF_SCHEMA)
     # stats only for query terms — the analog of the reference's upfront
     # background-stats memoization (Search.hs:253-260); filtering pairs by
     # term first leaves cf/df values identical to the full aggregation.

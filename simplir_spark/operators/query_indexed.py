@@ -16,10 +16,11 @@ request and the index alone:
     come from the index's lexicon, the query terms' runs from one pyarrow
     read with the term filter pushed into the parquet reader (the
     reference's term -> postings lookup, TermIndex.hs:26-34), each query
-    is scored over [0, doc_count) on the driver thread, and dids map to
-    doc_keys through the did-indexed doc_key array.  The result is an
-    Arrow-built LocalRelation: the request and its collect run no Spark
-    job (``_driver_topk``).
+    is scored over [0, doc_count) on the driver's cores (``score_pool``:
+    shares of whole queries, the caller scoring one and forked workers
+    the rest), and dids map to doc_keys through the did-indexed doc_key
+    array.  The result is an Arrow-built LocalRelation: the request and
+    its collect run no Spark job (``_driver_topk``).
   * Spark — every other request.  Postings scan with ``term IN (query
     terms)`` pushed down → broadcast join with the (query_id, term)
     table → each run routed to every did-shard its did range overlaps
@@ -74,6 +75,8 @@ pruning holds.  ``score_query_runs`` (BM25) and ``score_query_runs_ql``
 from __future__ import annotations
 
 import math
+import os
+from functools import cache
 from typing import Callable, NamedTuple
 
 import numpy as np
@@ -81,9 +84,11 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from simplir_spark.functions import codec
 from simplir_spark.functions.scoring import B_DEFAULT, K1_DEFAULT
+from simplir_spark.operators import score_pool
 from simplir_spark.operators.index_build import IndexHandle
 from simplir_spark.operators.query import merge_query_entries, queries_df
 
@@ -124,7 +129,10 @@ _MAX_SPAN = 1 << 22
 # caught up (768) or won (1024).  Tail-only batches favour the driver
 # more than this count says (with thousands of distinct terms the Spark
 # path slows per query), so past the budget they are the rule's worst
-# case: 2,048 tail queries take Spark, 3x slower than the driver.
+# case: 2,048 tail queries take Spark, 3x slower than the driver.  The
+# table was measured with the driver scoring on one thread; now that
+# ``score_pool`` scores a request on every core, re-measuring it belongs
+# with the Spark-side crossovers (ROADMAP item 4).
 _DRIVER_QUERY_POSTINGS = 1 << 12
 _DRIVER_DF_BUDGET = 6 << 20
 
@@ -523,19 +531,21 @@ def _term_stats(index: IndexHandle, terms: list[str]) -> dict[str, tuple[int, in
     return {t: lexicon[t] for t in terms if t in lexicon}
 
 
+def _query_work(lexicon: dict, terms: list[str]) -> int:
+    """A query's driver work: the postings it decodes, the lexicon ``df``
+    of its distinct terms, plus ``_DRIVER_QUERY_POSTINGS`` for its fixed
+    cost."""
+    return _DRIVER_QUERY_POSTINGS + sum(lexicon.get(t, (0, 0))[0] for t in set(terms))
+
+
 def _on_driver(index: IndexHandle, queries: list[tuple[str, list[str]]]) -> bool:
     """Whether the driver serves the request: the index fits one dense
-    accumulator (doc_count <= ``_MAX_SPAN``) and the request's work is
-    within ``_DRIVER_DF_BUDGET`` — the postings each query decodes, the
-    lexicon ``df`` of its distinct terms, plus ``_DRIVER_QUERY_POSTINGS``
-    per query."""
+    accumulator (doc_count <= ``_MAX_SPAN``) and the request's work, the
+    sum of its queries' ``_query_work``, is within ``_DRIVER_DF_BUDGET``."""
     if index.doc_count > _MAX_SPAN:
         return False
     lexicon = index.lexicon
-    work = sum(
-        _DRIVER_QUERY_POSTINGS + sum(lexicon.get(t, (0, 0))[0] for t in set(q)) for _, q in queries
-    )
-    return work <= _DRIVER_DF_BUDGET
+    return sum(_query_work(lexicon, q) for _, q in queries) <= _DRIVER_DF_BUDGET
 
 
 def _read_runs(index: IndexHandle, terms: list[str], cols: tuple[str, ...]) -> pa.Table:
@@ -554,22 +564,43 @@ def _term_rows(runs: pa.Table) -> tuple[pa.Table, dict[str, np.ndarray]]:
     return runs, {t: np.arange(bounds[i], bounds[i + 1]) for i, t in enumerate(names)}
 
 
+@cache
+def _result_schema(key_type: T.DataType) -> T.StructType:
+    """The driver path's result schema for a doc_key type, built once:
+    ``createDataFrame`` parses a DDL string through the JVM every call."""
+    return T.StructType(
+        [
+            T.StructField("query_id", T.StringType()),
+            T.StructField("doc_key", key_type),
+            T.StructField("rank", T.IntegerType()),
+            T.StructField("score", T.DoubleType()),
+        ]
+    )
+
+
 def _driver_topk(
-    spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], score_one
+    spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], scorer
 ) -> DataFrame:
     """The driver path: every query's runs from one pushdown read, sorted
-    once by (term, start_did); each query gets one ``take`` of its terms'
-    rows, scored by ``score_one`` over the whole did range (the kernel's
-    top-k is already ranked); dids map to doc_keys through the did-
-    indexed doc_key array.  The result is an Arrow-built LocalRelation:
-    no Spark job runs, now or at collect."""
+    once by (term, start_did); each query is one ``take`` of its terms'
+    rows, scored by ``scorer`` over the whole did range (the kernel's
+    top-k is already ranked).  ``score_pool.score_queries`` spreads the
+    queries over the driver's cores in shares balanced by ``_query_work``.
+    dids map to doc_keys through the did-indexed doc_key array.  The
+    result is an Arrow-built LocalRelation: no Spark job runs, now or at
+    collect."""
     runs, rows_of = _term_rows(_read_runs(index, _query_terms(queries), _RUN_COLS))
-    qids, dids, ranks, scores = [], [_NO_HITS[0]], [np.zeros(0, dtype=np.int32)], [_NO_HITS[1]]
+    lexicon = index.lexicon
+    jobs, work = [], []
     for qid, terms in queries:
         rows = [rows_of[t] for t in sorted(set(terms)) if t in rows_of]
-        if not rows:
-            continue
-        d, s = score_one(qid, runs.take(np.concatenate(rows)), 0, index.doc_count, None)
+        if rows:
+            jobs.append((qid, np.concatenate(rows)))
+            work.append(_query_work(lexicon, terms))
+    cores = min(spark.sparkContext.defaultParallelism, len(os.sched_getaffinity(0)))
+    hits = score_pool.score_queries(scorer, runs, jobs, work, index.doc_count, cores, index)
+    qids, dids, ranks, scores = [], [_NO_HITS[0]], [np.zeros(0, dtype=np.int32)], [_NO_HITS[1]]
+    for (qid, _), (d, s) in zip(jobs, hits):
         qids += [qid] * len(d)
         dids.append(d)
         ranks.append(np.arange(1, len(d) + 1, dtype=np.int32))
@@ -582,12 +613,11 @@ def _driver_topk(
             "score": pa.array(np.concatenate(scores), pa.float64()),
         }
     )
-    key_type = index.docmeta.schema["doc_key"].dataType.simpleString()
-    return spark.createDataFrame(table, f"query_id string, doc_key {key_type}, rank int, score double")
+    return spark.createDataFrame(table, _result_schema(index.docmeta.schema["doc_key"].dataType))
 
 
 def _spark_topk(
-    spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], k: int, score_one
+    spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], k: int, scorer
 ) -> DataFrame:
     """The Spark path: (query, did-shard) scoring groups, per-shard top-k,
     then the lazy window finish (``_finish_topk``).
@@ -614,10 +644,44 @@ def _spark_topk(
     def score_group(qid: str, shard: int, runs: pa.Table):
         lo = shard * span
         # the last shard ends at doc_count; a range is never empty
-        return score_one(qid, runs, lo, max(min(lo + span, doc_count), lo + 1), order_tf)
+        return scorer(qid, runs, lo, max(min(lo + span, doc_count), lo + 1), order_tf)
 
     scored = _score_groups(spark, matched, len(queries) * n_shards, score_group)
     return _finish_topk(index, scored, k)
+
+
+class Bm25Scorer(NamedTuple):
+    """BM25's per-query scorer, ``score_query_runs`` with each term's
+    ``df`` from the request's term stats.  A module-level NamedTuple, so
+    it pickles to a scoring-pool worker and to a Spark task."""
+
+    df: dict[str, int]
+    doc_count: int
+    avg_doc_len: float
+    k: int
+    k1: float
+    b: float
+
+    def __call__(self, qid: str, runs: pa.Table, lo: int, hi: int, order_tf):
+        df = pa.array([self.df[t] for t in runs.column("term").to_pylist()], pa.int64())
+        return score_query_runs(
+            runs.append_column("df", df), self.doc_count, self.avg_doc_len, self.k, self.k1, self.b,
+            did_lo=lo, did_hi=hi, order_tf=order_tf,
+        )
+
+
+class QlScorer(NamedTuple):
+    """Dirichlet QL's per-query scorer, ``score_query_runs_ql`` with each
+    query's term weights and background probabilities; picklable like
+    ``Bm25Scorer``."""
+
+    weights: dict[str, tuple[dict, dict]]  # query_id -> (term_w, term_bg)
+    mu: float
+    k: int
+
+    def __call__(self, qid: str, runs: pa.Table, lo: int, hi: int, order_tf):
+        term_w, term_bg = self.weights[qid]
+        return score_query_runs_ql(runs, term_w, term_bg, self.mu, self.k, lo, hi, order_tf=order_tf)
 
 
 def _indexed_topk(
@@ -625,27 +689,27 @@ def _indexed_topk(
     index: IndexHandle,
     queries: list[tuple[str, list[str]]],
     k: int,
-    scorer,
+    make_scorer,
 ) -> DataFrame:
     """Top-k of every query under one retrieval model, as (query_id,
     doc_key, rank, score) — the one planner of the indexed request path.
 
-    ``scorer(stats, merged)`` returns the model's ``score_one(query_id,
-    runs, lo, hi, order_tf)``, which scores one query's runs (a
-    ``pa.Table``) over the dids
-    in [lo, hi) (``order_tf``: see ``_daat_topk``) and returns its top-k
-    there as (dids, scores); ``stats`` maps
-    the request's indexed terms to (df, cf) and ``merged`` is ``queries``
-    after ``merge_query_entries``.  ``_on_driver`` picks the path: the
-    driver (``_driver_topk``) or Spark (``_spark_topk``).
+    ``make_scorer(stats, merged)`` returns the model's scorer
+    (``Bm25Scorer``, ``QlScorer``): ``scorer(query_id, runs, lo, hi,
+    order_tf)`` scores one query's runs (a ``pa.Table``) over the dids in
+    [lo, hi) (``order_tf``: see ``_daat_topk``) and returns its top-k
+    there as (dids, scores); ``stats`` maps the request's indexed terms
+    to (df, cf) and ``merged`` is ``queries`` after
+    ``merge_query_entries``.  ``_on_driver`` picks the path: the driver
+    (``_driver_topk``) or Spark (``_spark_topk``).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     queries = merge_query_entries(queries)
-    score_one = scorer(_term_stats(index, _query_terms(queries)), queries)
+    scorer = make_scorer(_term_stats(index, _query_terms(queries)), queries)
     if _on_driver(index, queries):
-        return _driver_topk(spark, index, queries, score_one)
-    return _spark_topk(spark, index, queries, k, score_one)
+        return _driver_topk(spark, index, queries, scorer)
+    return _spark_topk(spark, index, queries, k, scorer)
 
 
 def bm25_indexed(
@@ -658,7 +722,7 @@ def bm25_indexed(
 ) -> DataFrame:
     """BM25 top-k of all queries against the index in one scoring pass
     (``_indexed_topk``); the scorer is ``score_query_runs`` with each
-    term's ``df`` from the request's term stats.
+    term's ``df`` from the request's term stats (``Bm25Scorer``).
 
     Returns (query_id, doc_key, rank, score).  Rank ties break by did,
     which by construction equals doc_key order (dense ids are assigned in
@@ -666,26 +730,18 @@ def bm25_indexed(
 
     A request the driver serves (doc_count <= ``_MAX_SPAN`` and its
     postings within ``_DRIVER_DF_BUDGET``, see ``_on_driver``) is
-    scored before return and comes back as a local DataFrame whose
-    collect runs no Spark job.  Any other request returns a lazy plan: did-sharded
-    scoring on the cluster, ranked with a window and joined to docmeta
-    there.  Both paths give the same rows.
+    scored before return, on the driver's cores (``score_pool``), and
+    comes back as a local DataFrame whose collect runs no Spark job.  Any
+    other request returns a lazy plan: did-sharded scoring on the
+    cluster, ranked with a window and joined to docmeta there.  Both
+    paths give the same rows.
     """
-    doc_count, avg_doc_len = index.doc_count, index.avg_doc_len
 
-    def scorer(stats: dict, merged):
-        df_of = {t: df for t, (df, _) in stats.items()}
+    def make_scorer(stats: dict, merged) -> Bm25Scorer:
+        df = {t: df for t, (df, _) in stats.items()}
+        return Bm25Scorer(df, index.doc_count, index.avg_doc_len, k, k1, b)
 
-        def score_one(qid: str, runs: pa.Table, lo: int, hi: int, order_tf):
-            df = pa.array([df_of[t] for t in runs.column("term").to_pylist()], pa.int64())
-            return score_query_runs(
-                runs.append_column("df", df), doc_count, avg_doc_len, k, k1, b,
-                did_lo=lo, did_hi=hi, order_tf=order_tf,
-            )
-
-        return score_one
-
-    return _indexed_topk(spark, index, queries, k, scorer)
+    return _indexed_topk(spark, index, queries, k, make_scorer)
 
 
 def ql_dirichlet_indexed(
@@ -721,12 +777,12 @@ def ql_dirichlet_indexed(
     The request runs through the planner ``bm25_indexed`` uses
     (``_indexed_topk``), on the driver or on Spark by the same rule; the
     background probabilities bg_t = cf_t / |C| come from the request's
-    term stats.
+    term stats (``QlScorer``).
     """
     token_count = index.token_count
 
-    def scorer(stats: dict, merged):
-        weights: dict[str, tuple[dict, dict]] = {}  # query_id -> (term_w, term_bg)
+    def make_scorer(stats: dict, merged) -> QlScorer:
+        weights: dict[str, tuple[dict, dict]] = {}
         for qid, terms in merged:
             term_w = {t: float(terms.count(t)) for t in sorted(set(terms))}
             weights[qid] = (
@@ -736,11 +792,6 @@ def ql_dirichlet_indexed(
                     for t in term_w
                 },
             )
+        return QlScorer(weights, mu, k)
 
-        def score_one(qid: str, runs: pa.Table, lo: int, hi: int, order_tf):
-            term_w, term_bg = weights[qid]
-            return score_query_runs_ql(runs, term_w, term_bg, mu, k, lo, hi, order_tf=order_tf)
-
-        return score_one
-
-    return _indexed_topk(spark, index, queries, k, scorer)
+    return _indexed_topk(spark, index, queries, k, make_scorer)

@@ -7,10 +7,11 @@
 * Every ``simplir_spark`` import resolves, function-local ones included,
   so a lazy import of deleted code fails here rather than only when its
   branch runs.
-* The indexed scoring path (``operators/query_indexed.py`` and
-  ``operators/phrase.py``) and the index build
-  (``operators/index_build.py``) run on Arrow and numpy only: no pandas
-  import, conversion, row iteration or groupby.
+* The indexed scoring path (``operators/query_indexed.py``,
+  ``operators/phrase.py`` and ``operators/score_pool.py``) and the index
+  build (``operators/index_build.py``) run on Arrow and numpy only: no
+  pandas import, conversion, row iteration or groupby; the scoring pool
+  imports no pyspark.
 """
 
 from __future__ import annotations
@@ -116,7 +117,9 @@ def test_package_imports_resolve():
     assert not unresolved, unresolved
 
 
-ARROW_ONLY = ("operators/query_indexed.py", "operators/phrase.py", "operators/index_build.py")
+ARROW_ONLY = (
+    "operators/query_indexed.py", "operators/phrase.py", "operators/index_build.py", "operators/score_pool.py",
+)
 PANDAS_IDIOMS = ("to_pandas", "itertuples", ".groupby(", "import pandas", "from pandas")
 
 
@@ -128,3 +131,12 @@ def test_scoring_path_has_no_pandas():
         if hits:
             found[rel] = hits
     assert not found, found
+
+
+def test_score_pool_imports_no_pyspark():
+    """The scoring pool's workers run numpy and Arrow only; the module
+    that forks them imports nothing of pyspark."""
+    tree = _tree(PACKAGE / "operators" / "score_pool.py")
+    names = [a.name for n in ast.walk(tree) if isinstance(n, ast.Import) for a in n.names]
+    names += [n.module or "" for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)]
+    assert not [m for m in names if m.split(".")[0] == "pyspark"]

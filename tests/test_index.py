@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import os
 import re
+from pathlib import Path
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -25,6 +27,7 @@ from simplir_spark.operators.query_indexed import bm25_indexed, score_query_runs
 from simplir_spark.queryset import QUERIES
 from tests.oracle import build_oracle_index, bm25_topk
 
+ROOT = Path(__file__).resolve().parent.parent
 SF = "/root/testdata/sf0.001"
 K = 10
 REL_TOL = 1e-9
@@ -630,10 +633,10 @@ def test_load_corpus_bare_relative_directory(spark, tmp_path_factory):
         os.chdir(cwd)
 
 
-def test_build_with_many_buckets_exercises_sqrt_path(spark, corpus_small, oracle_idx, tmp_path_factory):
-    """A build whose cut count crosses the sqrt-decomposition threshold
-    (>= 128 cuts) must still produce dense ids and rank-identical BM25 —
-    the end-to-end gate for the two-level bucket assignment."""
+def test_build_with_200_range_partitions_ranks_like_oracle(spark, corpus_small, oracle_idx, tmp_path_factory):
+    """A Spark build over 200 range partitions, many of them holding a
+    few docs or none, still gives dense ids in doc_key order and BM25
+    ranks identical to the oracle's."""
     d = str(tmp_path_factory.mktemp("manybuckets") / "idx")
     build_index(spark, corpus_small, d, n_partitions=200, run_size=64)
     idx = open_index(spark, d)
@@ -1489,3 +1492,285 @@ def test_build_index_rejects_sizes_below_one(spark, corpus_small, tmp_path):
             _, n_jobs = _jobs_run(spark, lambda: call(arg, bad))
             assert n_jobs == 0, (arg, bad)
     assert not os.path.exists(out)
+
+
+# -- the scoring pool (operators/score_pool.py) --------------------------------------
+
+
+class _FailInWorker(NamedTuple):
+    """A scorer that raises in any process but ``parent``."""
+
+    parent: int
+
+    def __call__(self, qid, runs, lo, hi, order_tf):
+        if os.getpid() != self.parent:
+            raise ValueError(f"worker failed on {qid}")
+        return np.zeros(0, dtype=np.int64), np.zeros(0)
+
+
+class _Owner:
+    """A stand-in index handle: anything weak-referenceable owns pool use."""
+
+
+def _force_pool_shares(monkeypatch, n: int) -> None:
+    """Split every driver-path request into ``n`` shares (fewer if the
+    request has fewer queries or the pool fewer workers)."""
+    import simplir_spark.operators.score_pool as sp
+
+    monkeypatch.setattr(sp, "_n_shares", lambda work, cores: min(n, len(work)))
+
+
+def _bm25_rows(spark, idx) -> list[tuple]:
+    from simplir_spark.operators.query_indexed import bm25_indexed
+
+    rows = bm25_indexed(spark, idx, QUERIES).collect()
+    return sorted((r.query_id, r.doc_key, r.rank, repr(r.score)) for r in rows)
+
+
+def _gone(pid: int) -> bool:
+    """The process has exited (reaped, or a zombie awaiting its parent)."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()[0] == "Z"
+    except OSError:
+        return True
+
+
+def test_pooled_rows_equal_one_share_and_spark_rows(spark, index_dir, monkeypatch):
+    """The corpus_small matrix (BM25 on QUERIES, QL on the QL set and on
+    all of QUERIES, k in {10, 30}) gives identical (query_id, doc_key,
+    rank, repr(score)) in one share (the in-process loop), at forced 2 and
+    3 shares, at the default split and on forced Spark at 1/2/5/8
+    shards; the split runs really ship shares to the pool."""
+    import simplir_spark.operators.query_indexed as qi
+    import simplir_spark.operators.score_pool as sp
+
+    idx = open_index(spark, index_dir)
+    ql_set = [q for q in QUERIES if q[0] not in ("Q08", "Q09", "Q14")]
+    requests = [
+        (qi.bm25_indexed, QUERIES), (qi.ql_dirichlet_indexed, ql_set),
+        (qi.ql_dirichlet_indexed, QUERIES),
+    ]
+    shipped = []
+    sub_request = sp._sub_request
+
+    def counted(runs, jobs):
+        shipped.append(len(jobs))
+        return sub_request(runs, jobs)
+
+    monkeypatch.setattr(sp, "_sub_request", counted)
+
+    def matrix():
+        return [
+            sorted((r.query_id, r.doc_key, r.rank, repr(r.score)) for r in fn(spark, idx, qs, k=k).collect())
+            for fn, qs in requests
+            for k in (10, 30)
+        ]
+
+    with monkeypatch.context() as m:
+        _force_pool_shares(m, 1)
+        want = matrix()
+    assert all(want) and not shipped
+    for n in (2, 3, None):
+        with monkeypatch.context() as m:
+            if n is not None:
+                _force_pool_shares(m, n)
+            del shipped[:]
+            assert matrix() == want, n
+            assert len(shipped) == 6 * ((n or len(sp._pool.conns) + 1) - 1), n
+    for n_shards in (1, 2, 5, 8):
+        with monkeypatch.context() as m:
+            _force_shards(m, n_shards)
+            assert matrix() == want, n_shards
+    idx.close()
+
+
+def test_pool_reraises_worker_exception_then_serves(spark, index_dir, monkeypatch):
+    """An exception raised in a worker is re-raised by the request, with
+    the worker's traceback chained; the pool stays in step and the next
+    request returns the one-share rows."""
+    import pyarrow as pa
+
+    import simplir_spark.operators.score_pool as sp
+
+    idx = open_index(spark, index_dir)
+    _force_pool_shares(monkeypatch, 2)
+    jobs = [("a", np.array([0, 1])), ("b", np.array([2, 3]))]
+    with pytest.raises(ValueError, match="worker failed") as err:
+        sp.score_queries(_FailInWorker(os.getpid()), pa.table({"x": [0, 1, 2, 3]}), jobs, [1, 1], 4, 4, idx)
+    assert "Traceback" in str(err.value.__cause__)
+    pids = [p.pid for p in sp._pool.procs]
+    got = _bm25_rows(spark, idx)
+    assert [p.pid for p in sp._pool.procs] == pids
+    _force_pool_shares(monkeypatch, 1)
+    want = _bm25_rows(spark, idx)
+    assert got == want and got
+    idx.close()
+
+
+def test_pool_restarts_after_worker_killed(spark, index_dir, monkeypatch):
+    """After a worker is SIGKILLed, the next request returns the one-share
+    rows on a fresh pool."""
+    import signal
+
+    import simplir_spark.operators.score_pool as sp
+
+    idx = open_index(spark, index_dir)
+    with monkeypatch.context() as m:
+        _force_pool_shares(m, 1)
+        want = _bm25_rows(spark, idx)
+    _force_pool_shares(monkeypatch, 3)
+    assert _bm25_rows(spark, idx) == want
+    old = sp._pool.procs
+    os.kill(old[0].pid, signal.SIGKILL)
+    old[0].join(timeout=10)
+    assert not old[0].is_alive()
+    assert _bm25_rows(spark, idx) == want
+    assert not {p.pid for p in sp._pool.procs} & {p.pid for p in old}
+    assert all(_gone(p.pid) for p in old)
+    idx.close()
+
+
+def test_pool_stops_with_its_last_handle(spark, index_dir, monkeypatch):
+    """Closing (idempotently) or collecting the last handle that used the
+    pool stops and joins every worker; a request after close still works."""
+    import gc
+    import multiprocessing
+
+    import simplir_spark.operators.query_indexed as qi
+    import simplir_spark.operators.score_pool as sp
+
+    gc.collect()
+    for key in list(sp._users):  # this test's handles are the only users
+        sp._release(key)
+    assert sp._pool is None
+    _force_pool_shares(monkeypatch, 3)
+    a, b = open_index(spark, index_dir), open_index(spark, index_dir)
+    qi.bm25_indexed(spark, a, QUERIES).collect()
+    qi.bm25_indexed(spark, b, QUERIES).collect()
+    procs = list(sp._pool.procs)
+    assert len(procs) >= 2
+    a.close()
+    a.close()
+    assert sp._pool is not None and sp._pool.procs == procs  # b still uses it
+    b.close()
+    assert sp._pool is None and all(_gone(p.pid) for p in procs)
+    assert not any(p.name == "score-worker" for p in multiprocessing.active_children())
+
+    assert qi.bm25_indexed(spark, a, QUERIES).collect()  # a fresh pool
+    procs = list(sp._pool.procs)
+    del a
+    gc.collect()
+    assert sp._pool is None and all(_gone(p.pid) for p in procs)
+
+
+def test_pool_workers_exit_when_parent_dies(tmp_path):
+    """A worker exits on EOF of its pipe: SIGKILL the process that started
+    the pool, and every worker ends without being told."""
+    import signal
+    import subprocess
+    import sys
+    import time
+
+    script = tmp_path / "start_pool.py"
+    script.write_text(
+        "import sys, time\n"
+        f"sys.path.insert(0, {str(ROOT)!r})\n"
+        "import numpy as np, pyarrow as pa\n"
+        "from simplir_spark.operators import score_pool as sp\n"
+        "def scorer(qid, runs, lo, hi, order_tf):\n"
+        "    return np.zeros(0, dtype=np.int64), np.zeros(0)\n"
+        "class Owner: pass\n"
+        "owner = Owner()\n"
+        "jobs = [('a', np.array([0])), ('b', np.array([1])), ('c', np.array([0, 1]))]\n"
+        "sp.score_queries(scorer, pa.table({'x': [0, 1]}), jobs, [1 << 20] * 3, 2, 3, owner)\n"
+        "print(' '.join(str(p.pid) for p in sp._pool.procs), flush=True)\n"
+        "time.sleep(120)\n"
+    )
+    proc = subprocess.Popen([sys.executable, str(script)], stdout=subprocess.PIPE, text=True)
+    try:
+        pids = [int(p) for p in proc.stdout.readline().split()]
+    finally:
+        proc.send_signal(signal.SIGKILL)
+        proc.wait(timeout=30)
+    assert len(pids) == 2
+    deadline = time.monotonic() + 20
+    while not all(_gone(p) for p in pids) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert all(_gone(p) for p in pids)
+
+
+def test_pool_shared_by_concurrent_requests(monkeypatch):
+    """Requests from more threads than cores, with a short switch
+    interval: the thread that holds the pool splits its request, the
+    others score in-process, and every result equals the one-share
+    result."""
+    import sys
+    import threading
+
+    import pyarrow as pa
+
+    import simplir_spark.operators.query_indexed as qi
+    import simplir_spark.operators.score_pool as sp
+
+    runs, n_docs = _input_form_runs()
+    table = pa.Table.from_pandas(runs.drop(columns=["df"]), preserve_index=False).sort_by(
+        [("term", "ascending"), ("start_did", "ascending")]
+    )
+    scorer = qi.Bm25Scorer(dict(zip(runs["term"], runs["df"].astype(int))), n_docs, 110.0, 10, 1.2, 0.75)
+    terms = table.column("term").to_numpy(zero_copy_only=False)
+    rows = {t: np.flatnonzero(terms == t) for t in ("common", "mid", "rare")}
+    jobs = [(f"q{i}", np.concatenate([rows[t] for t in sel]))
+            for i, sel in enumerate([("common", "mid"), ("mid", "rare"), ("common", "rare"), ("rare",)] * 2)]
+    want = [(d.tolist(), list(map(repr, s))) for d, s in sp._score_share(scorer, table, jobs, n_docs)]
+    owner = _Owner()
+    _force_pool_shares(monkeypatch, 3)
+    got, errors = [], []
+
+    def client():
+        try:
+            for _ in range(5):
+                out = sp.score_queries(scorer, table, jobs, [1] * len(jobs), n_docs, 4, owner)
+                got.append([(d.tolist(), list(map(repr, s))) for d, s in out])
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=client) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors and not any(t.is_alive() for t in threads)
+    assert len(got) == 40 and all(g == want for g in got)
+    sp.release(owner)
+
+
+def test_scorers_pickle():
+    """The model scorers are module-level NamedTuples: they pickle (to a
+    pool worker or a Spark task) and score the same after a round trip."""
+    import pickle
+
+    import pyarrow as pa
+
+    import simplir_spark.operators.query_indexed as qi
+
+    runs, n_docs = _input_form_runs()
+    table = pa.Table.from_pandas(runs.drop(columns=["df"]), preserve_index=False).sort_by(
+        [("term", "ascending"), ("start_did", "ascending")]
+    )
+    df = dict(zip(runs["term"], runs["df"].astype(int)))
+    scorers = [
+        qi.Bm25Scorer(df, n_docs, 110.0, 10, 1.2, 0.75),
+        qi.QlScorer({"q": ({"common": 1.0, "mid": 2.0, "rare": 1.0},
+                           {"common": 0.01, "mid": 0.002, "rare": 0.0001})}, 1000.0, 10),
+    ]
+    for scorer in scorers:
+        back = pickle.loads(pickle.dumps(scorer))
+        assert back == scorer and type(back) is type(scorer)
+        (d1, s1), (d2, s2) = scorer("q", table, 0, n_docs, None), back("q", table, 0, n_docs, None)
+        assert d1.tolist() == d2.tolist() and list(map(repr, s1)) == list(map(repr, s2)) and len(d1)
