@@ -97,13 +97,12 @@ RUN_SIZE_DEFAULT = 1 << 14  # postings per run chunk — DiskIndex.hs:117-119
 # working set — make_chunk_kernel holds ONE partition's postings in numpy
 # while encoding, so partition size must scale with this constant, not
 # with corpus/shuffle-partitions.
-DOCS_PER_BUCKET_DEFAULT = 64_000
+DOCS_PER_PARTITION = 64_000
 # Auto partition-count cap.  The per-partition state outside the tasks is
 # one range bound in each exchange's partitioner (Spark samples at most 1e6
 # keys whatever the count) and one row of the broadcast offset table — 1M
 # partitions (~67B docs at the default 64k docs per partition) keeps them
-# in the tens of MB; pass n_partitions / docs_per_bucket consciously
-# beyond that.
+# in the tens of MB; pass n_partitions consciously beyond that.
 MAX_AUTO_PARTITIONS = 1 << 20
 
 
@@ -588,7 +587,7 @@ def _driver_chunks(
 
 
 def _build_on_driver(
-    corpus: DataFrame, out_dir: str, run_size: int, with_positions: bool, params_fp: dict | None
+    corpus: DataFrame, out_dir: str, run_size: int, with_positions: bool
 ) -> IndexPaths:
     """The driver build (see ``_DRIVER_BUILD_MAX_DOCS``): the same five
     stages and manifests as the Spark build, each table written by
@@ -599,12 +598,7 @@ def _build_on_driver(
     schema = chunk_schema(carry, carry_types)
     runner = PipelineRunner(
         out_dir,
-        params={
-            "run_size": run_size,
-            "layout": "driver",
-            "with_positions": with_positions,
-            **(params_fp or {}),
-        },
+        params={"run_size": run_size, "layout": "driver", "with_positions": with_positions},
     )
     # the Spark build's chunk checkpoint describes another layout
     shutil.rmtree(os.path.join(out_dir, "chunks"), ignore_errors=True)
@@ -673,9 +667,7 @@ def build_index(
     out_dir: str,
     n_partitions: int | None = None,
     run_size: int = RUN_SIZE_DEFAULT,
-    params_fp: dict | None = None,
     with_positions: bool = False,
-    docs_per_bucket: int = DOCS_PER_BUCKET_DEFAULT,
 ) -> IndexPaths:
     """Build a complete index directory from a corpus DataFrame.
 
@@ -701,12 +693,12 @@ def build_index(
     one Arrow collect, the same chunk kernel as partition 0, tables
     written by pyarrow; its output equals the Spark build's at
     ``n_partitions=1`` row for row.  A larger corpus SCALES the Spark
-    build WITH THE CORPUS: ceil(n_docs / docs_per_bucket) range
+    build WITH THE CORPUS: ceil(n_docs / DOCS_PER_PARTITION) range
     partitions (floor: shuffle partitions, cap: MAX_AUTO_PARTITIONS) —
     bounding the per-task memory of the chunk kernel regardless of corpus
     size, like the reference's fixed 64000-doc chunks.  An explicit
     ``n_partitions`` always means the partitioned Spark layout.
-    ``n_partitions``, ``run_size`` and ``docs_per_bucket`` must be >= 1.
+    ``n_partitions`` and ``run_size`` must be >= 1.
 
     Spark seeds its range-exchange sample by RDD id, so the partition
     bounds, the split of a term's postings into runs and the file layout
@@ -720,17 +712,15 @@ def build_index(
     SparkSession to itself, since any query planned on the same session
     meanwhile inherits both settings.  The driver build sets no conf.
     """
-    for name, value in (
-        ("n_partitions", n_partitions), ("run_size", run_size), ("docs_per_bucket", docs_per_bucket)
-    ):
+    for name, value in (("n_partitions", n_partitions), ("run_size", run_size)):
         if value is not None and value < 1:
             raise ValueError(f"build_index: {name} must be >= 1, got {value}")
     if n_partitions is None:
         shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
         n_docs = corpus.select("doc_key").count()  # column-pruned
         if n_docs <= _DRIVER_BUILD_MAX_DOCS and _content_bytes(corpus) <= _DRIVER_BUILD_MAX_BYTES:
-            return _build_on_driver(corpus, out_dir, run_size, with_positions, params_fp)
-        need = -(-n_docs // docs_per_bucket) if n_docs else 1
+            return _build_on_driver(corpus, out_dir, run_size, with_positions)
+        need = -(-n_docs // DOCS_PER_PARTITION) if n_docs else 1
         n_partitions = max(shuffle_p, min(MAX_AUTO_PARTITIONS, need))
     paths = IndexPaths(out_dir)
     runner = PipelineRunner(
@@ -740,7 +730,6 @@ def build_index(
             "n_partitions": n_partitions,
             "layout": "range",
             "with_positions": with_positions,
-            **(params_fp or {}),
         },
     )
 
@@ -885,6 +874,20 @@ class IndexHandle:
     def postings_dataset(self) -> ds.Dataset:
         """The postings as a pyarrow dataset, files discovered once."""
         return ds.dataset(self.paths.postings, format="parquet")
+
+    @cached_property
+    def positional(self) -> bool:
+        """Whether every posting run carries positions.  Both builds write
+        a ``pos`` column, null when built without positions, so this reads
+        the null counts in the postings files' parquet footers: no Spark
+        job and no data page."""
+        metas = [frag.metadata for frag in self.postings_dataset.get_fragments()]
+        stats = (
+            m.row_group(i).column(m.schema.names.index("pos")).statistics
+            for m in metas
+            for i in range(m.num_row_groups)
+        )
+        return not any(s is not None and s.null_count for s in stats)
 
     @cached_property
     def lexicon(self) -> dict[str, tuple[int, int]]:

@@ -38,20 +38,19 @@ from simplir_spark.schema import POSTINGS_SCHEMA
 MERGE_FAN_IN = 64  # Build.hs:41
 
 
-def merge_indexes(
-    spark: SparkSession, sources: list[str], out_dir: str, fan_in: int = MERGE_FAN_IN
-) -> IndexPaths:
-    """Merge index directories into ``out_dir`` (hierarchically if needed)."""
+def merge_indexes(spark: SparkSession, sources: list[str], out_dir: str) -> IndexPaths:
+    """Merge index directories into ``out_dir``, ``MERGE_FAN_IN`` sources
+    at a time (hierarchically past that)."""
     if not sources:
         raise ValueError("no sources")
     level = 0
     current = list(sources)
     levels = []
-    while len(current) > fan_in:
+    while len(current) > MERGE_FAN_IN:
         next_level = []
-        for gi in range(0, len(current), fan_in):
-            group = current[gi : gi + fan_in]
-            dst = os.path.join(out_dir, f"_level{level}", f"g{gi // fan_in}")
+        for gi in range(0, len(current), MERGE_FAN_IN):
+            group = current[gi : gi + MERGE_FAN_IN]
+            dst = os.path.join(out_dir, f"_level{level}", f"g{gi // MERGE_FAN_IN}")
             next_level.append(str(_merge_group(spark, group, dst).root))
         current = next_level
         levels.append(os.path.join(out_dir, f"_level{level}"))
@@ -113,17 +112,13 @@ def _merge_group(spark: SparkSession, sources: list[str], out_dir: str) -> Index
     return paths
 
 
-def compact_postings(
-    postings: DataFrame,
-    run_size: int = RUN_SIZE_DEFAULT,
-    min_run: int | None = None,
-) -> DataFrame:
+def compact_postings(postings: DataFrame, run_size: int = RUN_SIZE_DEFAULT) -> DataFrame:
     """Merge adjacent SHORT posting runs of a term into full-size runs —
     the maintenance pass of ``compactPostings`` (Search2.hs:104-113,
     kernel simplir-leveldb-index/src/SimplIR/LevelDbIndex.hs:200-258):
-    runs already >= ``min_run`` postings are passed through untouched
-    (the reference's collapseThresh skip), short neighbors are decoded,
-    concatenated and re-encoded into ``run_size`` chunks.
+    runs of at least half ``run_size`` postings are passed through
+    untouched (the reference's collapseThresh skip), short neighbors are
+    decoded, concatenated and re-encoded into ``run_size`` chunks.
 
     Input partitions must be (term, start_did)-sorted (the on-disk
     postings layout) — compaction happens within a partition, exactly as
@@ -132,8 +127,7 @@ def compact_postings(
     Streaming ingest and hierarchical merges are the producers of short
     runs; one compact pass restores query-time run geometry.
     """
-    if min_run is None:
-        min_run = max(1, run_size // 2)
+    min_run = max(1, run_size // 2)
     has_pos = "pos" in postings.columns
 
     def kernel(batches):
@@ -210,11 +204,7 @@ def compact_postings(
 
 
 def compact_index(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    run_size: int = RUN_SIZE_DEFAULT,
-    min_run: int | None = None,
+    spark: SparkSession, src_dir: str, dst_dir: str, run_size: int = RUN_SIZE_DEFAULT
 ) -> IndexPaths:
     """Rewrite an index directory with compacted postings (parquet is
     immutable, so compaction produces a new directory rather than the
@@ -233,9 +223,9 @@ def compact_index(
     sorted_postings = h.postings.repartitionByRange(
         "term", "start_did"
     ).sortWithinPartitions("term", "start_did")
-    compact_postings(sorted_postings, run_size=run_size, min_run=min_run).write.mode(
-        "overwrite"
-    ).option("maxRecordsPerFile", 0).parquet(paths.postings)
+    compact_postings(sorted_postings, run_size=run_size).write.mode("overwrite").option(
+        "maxRecordsPerFile", 0
+    ).parquet(paths.postings)
     h.docmeta.write.mode("overwrite").parquet(paths.docmeta)
     h.term_stats.write.mode("overwrite").parquet(paths.term_stats)
     shutil.copyfile(h.paths.corpus_stats, paths.corpus_stats)

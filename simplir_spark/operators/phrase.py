@@ -17,10 +17,15 @@ Two implementations:
   posting runs and intersected with +1 shifts.  Positions are raw tokenN
   (Position.tokenN, Tokenise.hs:46-82), so adjacency here is RAW-token
   adjacency — stricter than the trie walk when filtered tokens sit inside
-  the phrase; the right semantics for exact code-token sequences.
+  the phrase; the right semantics for exact code-token sequences.  Each
+  phrase is a query to the indexed planner of BM25 and QL
+  (``query_indexed``): the same path rule, driver read, scoring pool and
+  Spark plan; this module adds only its scorer and its result shape.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -31,12 +36,10 @@ from pyspark.sql import types as T
 from simplir_spark.functions import codec
 from simplir_spark.operators.index_build import IndexHandle
 from simplir_spark.operators.query_indexed import (
-    _did_shards,
+    _driver_scores,
     _on_driver,
-    _read_runs,
-    _route_runs,
-    _score_groups,
-    _term_rows,
+    _spark_scores,
+    _term_bounds,
 )
 
 
@@ -104,23 +107,26 @@ _POS_LIMIT = (1 << 32) - 1
 _NONE = np.zeros(0, dtype=np.int64)
 
 
-def _phrase_tfs(runs: pa.Table, m: int, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
-    """(dids, phrase tfs), both int64, did ascending, of one ``m``-term
-    phrase over the dids in [lo, hi): ``runs`` holds the runs of the
-    phrase's terms, ``term_ix`` being the term's place in the phrase (a
-    term the phrase repeats has its runs once per place).
+def _phrase_tfs(runs: pa.Table, phrase: list[str], lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
+    """(dids, phrase tfs), both int64, did ascending, of ``phrase`` over
+    the dids in [lo, hi).  ``runs`` holds the runs of the phrase's
+    distinct terms sorted by (term, start_did), so place j's runs are term
+    ``phrase[j]``'s row range (``_term_bounds``); a term the phrase
+    repeats is decoded once.
 
-    Each place's runs are decoded at once (``codec.decode_runs`` +
+    Each term's runs are decoded at once (``codec.decode_runs`` +
     ``codec.decode_positions_flat``) into sorted int64 keys
     ``(did - lo) << 32 | position``; a phrase occurrence is a place-0 key
     whose +1, +2, ... shifts are keys of places 1, 2, ...: one ``np.isin``
     per place, no per-doc work."""
-    place = runs.column("term_ix").to_numpy()
-    keys = []
-    for j in range(m):
-        part = runs.take(np.flatnonzero(place == j))
-        if part.num_rows == 0:
-            return _NONE, _NONE
+    names, bounds = _term_bounds(runs)
+    row_of = {t: i for i, t in enumerate(names)}
+    if not phrase or any(t not in row_of for t in phrase):  # a term has no runs here
+        return _NONE, _NONE
+    keys = {}
+    for t in dict.fromkeys(phrase):
+        a, b = int(bounds[row_of[t]]), int(bounds[row_of[t] + 1])
+        part = runs.slice(a, b - a)
         blobs = [part.column(c) for c in ("deltas", "tfs", "dls")]
         dids, tfs, _ = codec.decode_runs(
             part.column("start_did").to_numpy(), part.column("n").to_numpy(), *blobs
@@ -130,13 +136,25 @@ def _phrase_tfs(runs: pa.Table, m: int, lo: int, hi: int) -> tuple[np.ndarray, n
             raise ValueError(f"position {int(pos.max())} does not fit a phrase key (limit 2^32 - 1)")
         pos_did = np.repeat(dids, tfs)
         inside = (pos_did >= lo) & (pos_did < hi)
-        # sorted: a place's runs are one term's, in start_did order
-        keys.append(((pos_did[inside] - lo) << 32) | pos[inside])
-    cand = keys[0]
-    for j in range(1, m):
-        cand = cand[np.isin(cand + 1, keys[j])] + 1
+        # sorted: a term's runs are in start_did order
+        keys[t] = ((pos_did[inside] - lo) << 32) | pos[inside]
+    cand = keys[phrase[0]]
+    for t in phrase[1:]:
+        cand = cand[np.isin(cand + 1, keys[t])] + 1
     dids, tfs = np.unique(cand >> 32, return_counts=True)
     return dids + lo, tfs.astype(np.int64)
+
+
+class PhraseScorer(NamedTuple):
+    """A phrase's scorer for the indexed planner: ``_phrase_tfs`` of the
+    phrase's terms, its values being phrase tfs.  A module-level
+    NamedTuple like ``query_indexed.Bm25Scorer``, so it pickles to a
+    scoring-pool worker and to a Spark task."""
+
+    phrases: dict[str, list[str]]  # phrase_id -> terms
+
+    def __call__(self, pid: str, runs: pa.Table, lo: int, hi: int, order_tf):
+        return _phrase_tfs(runs, self.phrases[pid], lo, hi)
 
 
 _PHRASE_COLS = ("start_did", "n", "deltas", "tfs", "dls", "pos")
@@ -148,13 +166,6 @@ _PHRASE_SCHEMA = T.StructType(
         T.StructField("tf", T.LongType()),
     ]
 )
-_PHRASE_TERMS_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.StringType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("term_ix", T.IntegerType()),
-    ]
-)
 
 
 def phrase_match_positional(
@@ -163,73 +174,40 @@ def phrase_match_positional(
     phrases: list[tuple[str, list[str]]],
 ) -> DataFrame:
     """(phrase_id, did, tf) via the positional index: decode each phrase
-    place's runs into (did, position) keys and intersect them with +1
+    term's runs into (did, position) keys and intersect them with +1
     shifts (``_phrase_tfs``).  Adjacency is in raw tokenN space (see module
-    docstring).  Phrase ids must be distinct.
+    docstring).  Phrase ids must be distinct, and the index must hold
+    positions (``IndexHandle.positional``); both are checked before any
+    Spark job.
 
-    The indexed scorers' path rule (``query_indexed._on_driver``) picks
-    where it runs.  On the driver: one pushdown read of the phrase
-    terms' runs, each phrase intersected over the whole did range, and an
-    Arrow-built LocalRelation returned — no Spark job.  On Spark: the
-    postings scan pruned to the phrase terms → runs routed to every
-    did-range shard they overlap (``_did_shards`` / ``_route_runs``) →
-    the scorers' (query_id, shard) ``mapInArrow`` pass
-    (``_score_groups``), one intersection per (phrase, shard) group (a
-    doc's complete position data lives in one shard, so shard outputs
-    union exactly), which bounds per-task memory to one shard's postings.
+    A phrase is a query to the indexed planner that BM25 and QL use
+    (``query_indexed``), with ``PhraseScorer`` as its scorer; the planner's
+    path rule (``_on_driver``) picks where it runs.  On the driver
+    (``_driver_scores``): one pushdown read of the phrase terms' runs,
+    each phrase intersected over the whole did range on the driver's
+    cores, and an Arrow-built LocalRelation returned: no Spark job.  On
+    Spark (``_spark_scores``): one intersection per (phrase, did-shard)
+    group; a doc's complete position data lives in one shard, so shard
+    outputs union exactly, and per-task memory is bounded by one shard's
+    postings.
     """
     ids = [pid for pid, _ in phrases]
     if len(set(ids)) != len(ids):
         raise ValueError(f"phrase ids must be distinct, got {ids}")
-    if "pos" not in index.postings.columns:
+    if not index.positional:
         raise ValueError("index was not built with_positions=True")
-    terms_needed = sorted({t for _, p in phrases for t in p})
+    scorer = PhraseScorer(dict(phrases))
     if _on_driver(index, phrases):
-        runs, rows_of = _term_rows(_read_runs(index, terms_needed, _PHRASE_COLS))
-        pids, dids, tfs = [], [_NONE], [_NONE]
-        for pid, p in phrases:
-            if not p or not all(t in rows_of for t in p):  # a term is not indexed
-                continue
-            places = [rows_of[t] for t in p]
-            term_ix = np.repeat(np.arange(len(p), dtype=np.int32), [len(r) for r in places])
-            by_ix = runs.take(np.concatenate(places)).append_column("term_ix", pa.array(term_ix))
-            d, tf = _phrase_tfs(by_ix, len(p), 0, index.doc_count)
-            pids += [pid] * len(d)
-            dids.append(d)
-            tfs.append(tf)
+        hits = _driver_scores(spark, index, phrases, scorer, _PHRASE_COLS)
         table = pa.table(
             {
-                "phrase_id": pa.array(pids, pa.string()),
-                "did": np.concatenate(dids),
-                "tf": np.concatenate(tfs),
+                "phrase_id": pa.array([pid for pid, d, _ in hits for _ in range(len(d))], pa.string()),
+                "did": np.concatenate([_NONE, *(d for _, d, _ in hits)]),
+                "tf": np.concatenate([_NONE, *(tf for _, _, tf in hits)]),
             }
         )
         return spark.createDataFrame(table, _PHRASE_SCHEMA)
-
-    post = index.postings.filter(F.col("term").isin(terms_needed))
-    # same span floor as the scorers: runs span many dids, narrow
-    # shards duplicate every run (see query_indexed._MIN_SHARD_SPAN)
-    n_shards, span = _did_shards(spark, len(phrases), index.doc_count)
-
-    rows = [(pid, t, j) for pid, p in phrases for j, t in enumerate(p)]
-    phrase_table = pa.table(
-        {
-            "query_id": pa.array([r[0] for r in rows], pa.string()),
-            "term": pa.array([r[1] for r in rows], pa.string()),
-            "term_ix": pa.array([r[2] for r in rows], pa.int32()),
-        }
-    )
-    pdf_phrases = spark.createDataFrame(phrase_table, _PHRASE_TERMS_SCHEMA)
-    matched = _route_runs(post.join(F.broadcast(pdf_phrases), "term"), span).select(
-        "query_id", "shard", "term_ix", "term", *_PHRASE_COLS
-    )
-    phrase_len = {pid: len(p) for pid, p in phrases}
-
-    def score_group(pid: str, shard: int, runs: pa.Table):
-        lo = shard * span
-        return _phrase_tfs(runs, phrase_len[pid], lo, lo + span)
-
-    scored = _score_groups(spark, matched, len(phrases) * n_shards, score_group)
+    scored = _spark_scores(spark, index, phrases, scorer, _PHRASE_COLS)
     return scored.select(
         F.col("query_id").alias("phrase_id"), "did", F.col("score").cast("long").alias("tf")
     )

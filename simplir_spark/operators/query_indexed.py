@@ -1,13 +1,18 @@
 """Indexed top-k retrieval (EP2: SimpleIndex.score, SURVEY.md §3) with
-block-max pruning, for BM25 and Dirichlet QL.
+block-max pruning, for BM25 and Dirichlet QL, and the request planner
+that positional phrase matching (``phrase.phrase_match_positional``)
+shares with them.
 
-One planner, ``_indexed_topk``, runs every request, as the reference runs
-every retrieval model through one scorer and one top-k fold
-(SimpleIndex.hs:159-165, TopK.hs:36-70).  A model wrapper supplies only
-its per-query scorer, built from the request's term stats (df, cf).
+One planner runs every indexed request, as the reference runs every
+retrieval model and phrase node through one per-query fold
+(SimpleIndex.hs:159-165, TopK.hs:36-70, Streaming.hs:472-480).  An
+operator supplies only its per-query scorer and the shape of its result:
+BM25 and QL build theirs from the request's term stats (df, cf) and rank
+its top-k (``_indexed_topk``); a phrase returns its (did, tf) rows.
 
 Two paths run the same scorer, and ``_on_driver`` picks one from the
-request and the index alone:
+request and the index alone; each has one scoring step that all three
+operators share (``_driver_scores``, ``_spark_scores``):
 
   * driver — when doc_count <= ``_MAX_SPAN`` (one dense accumulator holds
     the whole did range) and the request's work is within
@@ -548,22 +553,6 @@ def _on_driver(index: IndexHandle, queries: list[tuple[str, list[str]]]) -> bool
     return sum(_query_work(lexicon, q) for _, q in queries) <= _DRIVER_DF_BUDGET
 
 
-def _read_runs(index: IndexHandle, terms: list[str], cols: tuple[str, ...]) -> pa.Table:
-    """The posting runs of ``terms``, read on the driver.  The term filter
-    is pushed into the parquet reader; the postings are range-partitioned
-    and sorted on (term, start_did), so file and row-group statistics
-    prune all but the terms' own row groups."""
-    return index.postings_dataset.to_table(columns=["term", *cols], filter=pc.field("term").isin(terms))
-
-
-def _term_rows(runs: pa.Table) -> tuple[pa.Table, dict[str, np.ndarray]]:
-    """``runs`` sorted by (term, start_did), and each term's row indices
-    in it: a query's runs are then one ``take`` of its terms' rows."""
-    runs = _as_runs(runs)
-    names, bounds = _term_bounds(runs)
-    return runs, {t: np.arange(bounds[i], bounds[i + 1]) for i, t in enumerate(names)}
-
-
 @cache
 def _result_schema(key_type: T.DataType) -> T.StructType:
     """The driver path's result schema for a doc_key type, built once:
@@ -578,18 +567,24 @@ def _result_schema(key_type: T.DataType) -> T.StructType:
     )
 
 
-def _driver_topk(
-    spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], scorer
-) -> DataFrame:
-    """The driver path: every query's runs from one pushdown read, sorted
-    once by (term, start_did); each query is one ``take`` of its terms'
-    rows, scored by ``scorer`` over the whole did range (the kernel's
-    top-k is already ranked).  ``score_pool.score_queries`` spreads the
-    queries over the driver's cores in shares balanced by ``_query_work``.
-    dids map to doc_keys through the did-indexed doc_key array.  The
-    result is an Arrow-built LocalRelation: no Spark job runs, now or at
-    collect."""
-    runs, rows_of = _term_rows(_read_runs(index, _query_terms(queries), _RUN_COLS))
+def _driver_scores(
+    spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], scorer, cols: tuple[str, ...]
+) -> list[tuple[str, np.ndarray, np.ndarray]]:
+    """The driver path's scoring step, shared by every indexed operator:
+    the request's runs (``cols``) from one pyarrow read, sorted once by
+    (term, start_did); each query is one ``take`` of its distinct terms'
+    rows, scored by ``scorer`` over the whole did range.
+    ``score_pool.score_queries`` spreads the queries over the driver's
+    cores in shares balanced by ``_query_work``.  Returns (query_id,
+    dids, values) of every query that has an indexed term, in request
+    order; no Spark job runs."""
+    # the term filter is pushed into the parquet reader; the postings are
+    # range-partitioned and sorted on (term, start_did), so file and
+    # row-group statistics prune all but the terms' own row groups
+    terms = pc.field("term").isin(_query_terms(queries))
+    runs = _as_runs(index.postings_dataset.to_table(columns=["term", *cols], filter=terms))
+    names, bounds = _term_bounds(runs)
+    rows_of = {t: np.arange(bounds[i], bounds[i + 1]) for i, t in enumerate(names)}
     lexicon = index.lexicon
     jobs, work = [], []
     for qid, terms in queries:
@@ -599,8 +594,18 @@ def _driver_topk(
             work.append(_query_work(lexicon, terms))
     cores = min(spark.sparkContext.defaultParallelism, len(os.sched_getaffinity(0)))
     hits = score_pool.score_queries(scorer, runs, jobs, work, index.doc_count, cores, index)
+    return [(qid, d, v) for (qid, _), (d, v) in zip(jobs, hits)]
+
+
+def _driver_topk(
+    spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], scorer
+) -> DataFrame:
+    """The ranked finish of the driver path (``_driver_scores``): the
+    kernel's top-k is already ranked, and dids map to doc_keys through the
+    did-indexed doc_key array.  The result is an Arrow-built
+    LocalRelation: no Spark job runs, now or at collect."""
     qids, dids, ranks, scores = [], [_NO_HITS[0]], [np.zeros(0, dtype=np.int32)], [_NO_HITS[1]]
-    for (qid, _), (d, s) in zip(jobs, hits):
+    for qid, d, s in _driver_scores(spark, index, queries, scorer, _RUN_COLS):
         qids += [qid] * len(d)
         dids.append(d)
         ranks.append(np.arange(1, len(d) + 1, dtype=np.int32))
@@ -616,38 +621,50 @@ def _driver_topk(
     return spark.createDataFrame(table, _result_schema(index.docmeta.schema["doc_key"].dataType))
 
 
-def _spark_topk(
-    spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], k: int, scorer
+def _spark_scores(
+    spark: SparkSession,
+    index: IndexHandle,
+    queries: list[tuple[str, list[str]]],
+    scorer,
+    cols: tuple[str, ...],
+    order_tf: dict | None = None,
 ) -> DataFrame:
-    """The Spark path: (query, did-shard) scoring groups, per-shard top-k,
-    then the lazy window finish (``_finish_topk``).
-
-    Each run row is routed to every shard its [start_did, end_did] range
-    overlaps (``_route_runs``) and a shard scores only dids inside its
-    range — a doc's complete score lives in exactly one shard, so
-    per-shard top-k then a global rank is exact (the distributed form of
-    collectPostings' doc-at-a-time union, Posting2/Collect.hs:53-82).
-    Every shard orders the terms by their whole-index upper bounds (one
-    collect of each term's max ``max_tf``), so a doc's score is summed
-    as on the driver path, to the last bit.
-    """
+    """The Spark path's scoring step, shared by every indexed operator:
+    the (query_id, did, score) rows ``scorer`` returns for each (query,
+    did-shard) group of the request's runs (``cols``).  Each run row is
+    routed to every shard its [start_did, end_did] range overlaps
+    (``_route_runs``) and a shard scores only dids inside its range, so a
+    doc's complete data lives in exactly one shard and shard outputs
+    union exactly (the distributed form of collectPostings' doc-at-a-time
+    union, Posting2/Collect.hs:53-82).  ``order_tf``: see ``_daat_topk``."""
     doc_count = index.doc_count
     n_shards, span = _did_shards(spark, len(queries), doc_count)
     runs = index.postings.filter(F.col("term").isin(_query_terms(queries)))  # parquet pushdown
-    order_tf = {
-        r["term"]: int(r["max_tf"])
-        for r in runs.groupBy("term").agg(F.max("max_tf").alias("max_tf")).collect()
-    }
     post = runs.join(F.broadcast(queries_df(spark, queries)), "term")
-    matched = _route_runs(post, span).select("query_id", "shard", "term", *_RUN_COLS)
+    matched = _route_runs(post, span).select("query_id", "shard", "term", *cols)
 
     def score_group(qid: str, shard: int, runs: pa.Table):
         lo = shard * span
         # the last shard ends at doc_count; a range is never empty
         return scorer(qid, runs, lo, max(min(lo + span, doc_count), lo + 1), order_tf)
 
-    scored = _score_groups(spark, matched, len(queries) * n_shards, score_group)
-    return _finish_topk(index, scored, k)
+    return _score_groups(spark, matched, len(queries) * n_shards, score_group)
+
+
+def _spark_topk(
+    spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], k: int, scorer
+) -> DataFrame:
+    """The ranked finish of the Spark path: per-shard top-k
+    (``_spark_scores``), then the lazy window finish (``_finish_topk``).
+    Every shard orders the terms by their whole-index upper bounds (one
+    collect of each term's max ``max_tf``), so a doc's score is summed
+    as on the driver path, to the last bit."""
+    runs = index.postings.filter(F.col("term").isin(_query_terms(queries)))
+    order_tf = {
+        r["term"]: int(r["max_tf"])
+        for r in runs.groupBy("term").agg(F.max("max_tf").alias("max_tf")).collect()
+    }
+    return _finish_topk(index, _spark_scores(spark, index, queries, scorer, _RUN_COLS, order_tf), k)
 
 
 class Bm25Scorer(NamedTuple):

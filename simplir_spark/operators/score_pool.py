@@ -1,4 +1,5 @@
-"""Scores a driver-path request's queries on every core.
+"""Scores a driver-path request's queries on every core, for every
+indexed operator (BM25, QL and positional phrases).
 
 The scoring kernel (``query_indexed._daat_topk``) is many small numpy and
 Arrow calls that hold the GIL, so threads do not speed it up; processes
@@ -12,7 +13,9 @@ order.  With one share no worker is involved: that is the in-process loop
 every request ran before, so there is one code path.
 
 A scorer is any picklable ``scorer(qid, runs, lo, hi, order_tf) ->
-(dids, scores)``.  This module imports no pyspark.
+(dids, values)``: a model's top-k scores (``query_indexed.Bm25Scorer``,
+``QlScorer``) or a phrase's tfs (``phrase.PhraseScorer``).  This module
+imports no pyspark.
 
 Workers are forked, not spawned: a spawned worker would import pyspark,
 numpy and pyarrow afresh and hold its own copy of them, while a forked

@@ -44,10 +44,9 @@ class StageResult:
 class PipelineRunner:
     """Runs named stages; each stage writes `out_dir/<name>` + lineage."""
 
-    def __init__(self, out_dir: str, params: dict | None = None, collect_partition_metrics: bool = True):
+    def __init__(self, out_dir: str, params: dict | None = None):
         self.out_dir = out_dir
         self.params = params or {}
-        self.collect_partition_metrics = collect_partition_metrics
         self.lineage_dir = os.path.join(out_dir, "_lineage")
         os.makedirs(self.lineage_dir, exist_ok=True)
         self.results: list[StageResult] = []
@@ -56,7 +55,7 @@ class PipelineRunner:
     def _manifest_path(self, name: str) -> str:
         return os.path.join(self.lineage_dir, f"{name}.json")
 
-    def _stage_fp(self, name: str, upstream: list[str], extra: dict | None) -> str:
+    def _stage_fp(self, name: str, upstream: list[str]) -> str:
         ups = []
         for u in upstream:
             p = self._manifest_path(u)
@@ -65,9 +64,10 @@ class PipelineRunner:
                     ups.append(json.load(f).get("fingerprint"))
             else:
                 ups.append(None)
-        return _fingerprint(
-            {"stage": name, "params": self.params, "upstream": ups, "extra": extra or {}}
-        )
+        # "extra" once held per-stage parameters; no stage has any, and the
+        # constant entry keeps the fingerprints of existing index
+        # directories, so they still resume
+        return _fingerprint({"stage": name, "params": self.params, "upstream": ups, "extra": {}})
 
     def _skip(self, name: str, fp: str, marker: str | None) -> StageResult | None:
         """The stage's result if its manifest holds ``fp`` and its output
@@ -89,7 +89,7 @@ class PipelineRunner:
         per partition, so file metadata IS the per-partition lineage; no
         Spark job)."""
         metrics: dict = {}
-        if out is not None and self.collect_partition_metrics:
+        if out is not None:
             parts: dict[int, int] = {}
             sizes = []
             # enumerate ONLY the parquet part files: _SUCCESS/.crc entries
@@ -103,7 +103,7 @@ class PipelineRunner:
             metrics["partitions"] = parts
             metrics["files"] = len(sizes)
             metrics["bytes"] = int(sum(sizes))
-        elif out is None:
+        else:
             metrics = {"partitions": {}, "files": 0, "bytes": 0}
 
         manifest = {
@@ -125,12 +125,11 @@ class PipelineRunner:
         name: str,
         build: Callable[[], DataFrame],
         upstream: list[str] = (),
-        extra_fp: dict | None = None,
         sort_within_partitions: list[str] | None = None,
     ) -> StageResult:
         """Materialize a DataFrame stage to parquet with resume + lineage."""
         out = os.path.join(self.out_dir, name)
-        fp = self._stage_fp(name, list(upstream), extra_fp)
+        fp = self._stage_fp(name, list(upstream))
         skipped = self._skip(name, fp, os.path.join(out, "_SUCCESS"))
         if skipped:
             return skipped
@@ -156,7 +155,7 @@ class PipelineRunner:
         ``write=False`` records the manifest only: the stage lives in
         memory, and a consumer re-run on resume rebuilds it."""
         out = os.path.join(self.out_dir, name)
-        fp = self._stage_fp(name, list(upstream), None)
+        fp = self._stage_fp(name, list(upstream))
         skipped = self._skip(name, fp, os.path.join(out, "_SUCCESS") if write else None)
         if skipped:
             return skipped
@@ -171,11 +170,9 @@ class PipelineRunner:
         open(os.path.join(out, "_SUCCESS"), "w").close()
         return self._record(name, fp, time.time() - t0, out)
 
-    def run_json_stage(
-        self, name: str, build: Callable[[], dict], upstream: list[str] = (), extra_fp: dict | None = None
-    ) -> StageResult:
+    def run_json_stage(self, name: str, build: Callable[[], dict], upstream: list[str] = ()) -> StageResult:
         out = os.path.join(self.out_dir, f"{name}.json")
-        fp = self._stage_fp(name, list(upstream), extra_fp)
+        fp = self._stage_fp(name, list(upstream))
         mp = self._manifest_path(name)
         if os.path.exists(mp) and os.path.exists(out):
             with open(mp) as f:

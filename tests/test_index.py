@@ -570,6 +570,88 @@ def test_phrase_positional_repeated_id_raises_without_job(spark, tmp_path_factor
         assert jobs == 0, (force, jobs)
 
 
+def test_phrase_positional_refuses_non_positional_index(spark, corpus_small, tmp_path, monkeypatch):
+    """A phrase request on an index built without positions (driver- and
+    Spark-built: both write a null ``pos`` column) raises ValueError
+    before any Spark job, on the default path and on forced Spark."""
+    from simplir_spark.operators.phrase import phrase_match_positional
+
+    for name, kw in (("driver", {}), ("spark", {"n_partitions": 2})):
+        build_index(spark, corpus_small, str(tmp_path / name), run_size=64, **kw)
+    handles = [open_index(spark, str(tmp_path / name)) for name in ("driver", "spark")]
+
+    def refused(h):
+        with pytest.raises(ValueError, match="with_positions"):
+            phrase_match_positional(spark, h, [("P", ["hash", "join"])])
+
+    for force in (False, True):
+        if force:
+            _force_spark(monkeypatch)
+        for h in handles:
+            _, jobs = _jobs_run(spark, lambda: refused(h))
+            assert jobs == 0, (force, h.paths.root, jobs)
+
+
+def test_phrase_rows_equal_on_every_path(spark, corpus_small, tmp_path, monkeypatch):
+    """Phrases (a repeated term, an unindexed term, an empty phrase, one
+    term, three terms) over a positional corpus_small index give the
+    oracle's (phrase_id, did, tf) rows in one share, at forced 2 and 3
+    shares, at the default split (no Spark job on the driver path) and
+    on forced Spark at 1/2/5/8 shards; the split runs really ship
+    shares to the scoring pool."""
+    import simplir_spark.operators.score_pool as sp
+    from simplir_spark.operators.phrase import phrase_match_positional
+    from tests.oracle import oracle_positions
+
+    root = str(tmp_path / "pidx")
+    build_index(spark, corpus_small, root, run_size=64, with_positions=True)
+    idx = open_index(spark, root)
+    phrases = [
+        ("P1", ["hash", "join"]), ("P2", ["batch", "batch"]), ("P3", ["batch", "batch", "batch"]),
+        ("P4", ["join", "zebra"]), ("P5", []), ("P6", ["order", "sort"]), ("P7", ["spark"]),
+        ("P8", ["customer", "customer", "small"]),
+    ]
+    docs = sorted(corpus_small.select("doc_key", "content").collect())
+    want = []
+    for did, (_, content) in enumerate(docs):
+        at = set(oracle_positions(content))
+        for pid, p in phrases:
+            tf = sum(all((t, i + j) in at for j, t in enumerate(p)) for _, i in at) if p else 0
+            if tf:
+                want.append((pid, did, tf))
+    assert {r[0] for r in want} == {"P1", "P2", "P3", "P6", "P7", "P8"}
+
+    shipped = []
+    sub_request = sp._sub_request
+
+    def counted(runs, jobs):
+        shipped.append(len(jobs))
+        return sub_request(runs, jobs)
+
+    monkeypatch.setattr(sp, "_sub_request", counted)
+
+    def rows():
+        return sorted(tuple(r) for r in phrase_match_positional(spark, idx, phrases).collect())
+
+    for n in (1, 2, 3, None):
+        with monkeypatch.context() as m:
+            if n is not None:
+                _force_pool_shares(m, n)
+            del shipped[:]
+            got, jobs = _jobs_run(spark, rows)
+            assert got == sorted(want), n
+            assert jobs == 0, (n, jobs)
+            if n is None:
+                assert shipped, "the default split ships no share"
+            else:
+                assert len(shipped) == n - 1, n
+    for n_shards in (1, 2, 5, 8):
+        with monkeypatch.context() as m:
+            _force_shards(m, n_shards)
+            assert rows() == sorted(want), n_shards
+    idx.close()
+
+
 def test_indexed_no_match_collects_without_job(spark, index_dir):
     """A request whose queries match nothing returns an empty local
     relation: the collect after the call runs no Spark job."""
@@ -607,7 +689,7 @@ def test_compact_postings_rejects_mixed_pos_buffers(spark):
         "sum_tf long, deltas binary, tfs binary, dls binary, pos binary",
     ).coalesce(1)
     with pytest.raises(Exception, match="mixes positional"):
-        compact_postings(df, run_size=64, min_run=32).collect()
+        compact_postings(df, run_size=64).collect()
 
 
 def test_load_corpus_bare_relative_directory(spark, tmp_path_factory):
@@ -953,12 +1035,13 @@ def test_hot_query_shard_mass_balance(spark, tmp_path, monkeypatch):
     assert rows[n_shards] == rows[1] == driver and len(rows[1]) == 40
 
 
-def test_merge_indexes_cleans_level_temporaries(spark, tmp_path):
-    """Hierarchical merge (fan_in exceeded) must not leave the _level
+def test_merge_indexes_cleans_level_temporaries(spark, tmp_path, monkeypatch):
+    """Hierarchical merge (fan-in exceeded) must not leave the _level
     intermediate index trees inside out_dir — they double the footprint
     and masquerade as sibling indexes."""
     import os
 
+    from simplir_spark.operators import merge
     from simplir_spark.operators.merge import merge_indexes
     from simplir_spark.sources.corpus import load_corpus
 
@@ -978,7 +1061,8 @@ def test_merge_indexes_cleans_level_temporaries(spark, tmp_path):
         srcs.append(d)
 
     out = str(tmp_path / "merged")
-    merge_indexes(spark, srcs, out, fan_in=2)  # 5 -> 3 -> 2 -> 1: two levels
+    monkeypatch.setattr(merge, "MERGE_FAN_IN", 2)
+    merge_indexes(spark, srcs, out)  # 5 -> 3 -> 2 -> 1: two levels
     leftovers = [e for e in os.listdir(out) if e.startswith("_level")]
     assert leftovers == []
     merged = open_index(spark, out)
@@ -1479,7 +1563,7 @@ def test_range_partitioned_build_equals_driver_build(
 
 
 def test_build_index_rejects_sizes_below_one(spark, corpus_small, tmp_path):
-    """n_partitions, run_size and docs_per_bucket below 1 raise ValueError
+    """n_partitions and run_size below 1 raise ValueError
     before any Spark job runs and before the index directory exists."""
     out = str(tmp_path / "idx")
 
@@ -1487,7 +1571,7 @@ def test_build_index_rejects_sizes_below_one(spark, corpus_small, tmp_path):
         with pytest.raises(ValueError, match=arg):
             build_index(spark, corpus_small, out, **{arg: bad})
 
-    for arg in ("n_partitions", "run_size", "docs_per_bucket"):
+    for arg in ("n_partitions", "run_size"):
         for bad in (0, -1):
             _, n_jobs = _jobs_run(spark, lambda: call(arg, bad))
             assert n_jobs == 0, (arg, bad)
