@@ -86,11 +86,28 @@ from pyspark.sql import functions as F
 
 from simplir_spark.functions import codec
 from simplir_spark.operators import score_pool
+from simplir_spark.operators.postings_store import PostingsDirectory
 from simplir_spark.operators.stats import corpus_stats as corpus_stats_agg
 from simplir_spark.plans.pipeline import PipelineRunner
 from simplir_spark.sources.corpus import with_integrity
 
 RUN_SIZE_DEFAULT = 1 << 14  # postings per run chunk — DiskIndex.hs:117-119
+
+# Runs per postings row group, in every postings writer (both builds,
+# ``merge_indexes``, ``compact_index``): a driver-path request decodes
+# only the row groups that hold its terms (``postings_store``), so a
+# cold term costs one small decode.  Measured on the seed-1 perfbench
+# query_serve postings (61,703 runs, zstd), 4 vCPU, the driver path's 8
+# columns, min of 5 reads per row group (median over the row groups):
+#   runs/group   groups   file MB   one cold row group
+#        1,024       61      1.81       0.87 ms
+#        2,048       31      1.68       1.08 ms
+#        8,192        8      1.51       2.25 ms
+#    (one group)      1      1.47      14.5 ms
+# A 3-term query touches a median of 3 row groups at each size up to
+# 4,096 runs.  2,048 keeps a cold term near 1 ms with the file within
+# 15% of its one-row-group size.
+POSTINGS_ROW_GROUP_RUNS = 2048
 
 # Target docs per range partition: the reference's chunkSize
 # (SimpleIndex.hs:100, 64000 docs/chunk).  Bounds the chunk kernel's
@@ -620,6 +637,7 @@ def _build_on_driver(
         "postings",
         lambda: rows(1).select(_RUN_COLS).sort_by([("term", "ascending"), ("start_did", "ascending")]),
         upstream=["chunks"],
+        row_group_rows=POSTINGS_ROW_GROUP_RUNS,
     )
     runner.run_table_stage(
         "term_stats",
@@ -832,6 +850,7 @@ def build_index(
                 pool.submit(
                     runner.run_df_stage, "postings", build_postings,
                     upstream=["chunks"], sort_within_partitions=["term", "start_did"],
+                    row_group_rows=POSTINGS_ROW_GROUP_RUNS,
                 ),
                 pool.submit(
                     runner.run_df_stage,
@@ -868,26 +887,22 @@ class IndexHandle:
 
     # Driver-side parts of the indexed request path (query_indexed), each
     # built on its first use: opening, merging or compacting an index
-    # never pays for them.  Postings stay on disk and are read per request.
+    # never pays for them.  Postings stay on disk; their decoded row
+    # groups are cached process-wide (``postings_store.ROW_GROUPS``).
 
     @cached_property
-    def postings_dataset(self) -> ds.Dataset:
-        """The postings as a pyarrow dataset, files discovered once."""
-        return ds.dataset(self.paths.postings, format="parquet")
+    def postings_directory(self) -> PostingsDirectory:
+        """The postings' row groups, addressed by term from the parquet
+        footers (one footer read per file, no Spark job and no data
+        page)."""
+        return PostingsDirectory(self.paths.postings)
 
-    @cached_property
+    @property
     def positional(self) -> bool:
         """Whether every posting run carries positions.  Both builds write
-        a ``pos`` column, null when built without positions, so this reads
-        the null counts in the postings files' parquet footers: no Spark
-        job and no data page."""
-        metas = [frag.metadata for frag in self.postings_dataset.get_fragments()]
-        stats = (
-            m.row_group(i).column(m.schema.names.index("pos")).statistics
-            for m in metas
-            for i in range(m.num_row_groups)
-        )
-        return not any(s is not None and s.null_count for s in stats)
+        a ``pos`` column, null when built without positions, so this is
+        read from the null counts in the postings' parquet footers."""
+        return self.postings_directory.positional
 
     @cached_property
     def lexicon(self) -> dict[str, tuple[int, int]]:

@@ -32,7 +32,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simplir_spark.functions import codec
-from simplir_spark.operators.index_build import RUN_SIZE_DEFAULT, IndexPaths, open_index
+from simplir_spark.operators.index_build import (
+    POSTINGS_ROW_GROUP_RUNS,
+    RUN_SIZE_DEFAULT,
+    IndexPaths,
+    open_index,
+)
+from simplir_spark.plans.pipeline import parquet_writer
 from simplir_spark.schema import POSTINGS_SCHEMA
 
 MERGE_FAN_IN = 64  # Build.hs:41
@@ -81,7 +87,7 @@ def _merge_group(spark: SparkSession, sources: list[str], out_dir: str) -> Index
     for h, off in zip(handles, offsets):
         part = h.docmeta.withColumn("did", F.col("did") + F.lit(off))
         docmeta = part if docmeta is None else docmeta.unionByName(part)
-    docmeta.write.mode("overwrite").parquet(paths.docmeta)
+    parquet_writer(docmeta).parquet(paths.docmeta)
 
     postings = None
     for h, off in zip(handles, offsets):
@@ -89,17 +95,13 @@ def _merge_group(spark: SparkSession, sources: list[str], out_dir: str) -> Index
             "start_did", F.col("start_did") + F.lit(off)
         ).withColumn("end_did", F.col("end_did") + F.lit(off))
         postings = part if postings is None else postings.unionByName(part)
-    postings.write.mode("overwrite").parquet(paths.postings)
+    parquet_writer(postings, POSTINGS_ROW_GROUP_RUNS).parquet(paths.postings)
 
     ts = None
     for h in handles:
         ts = h.term_stats if ts is None else ts.unionByName(h.term_stats)
-    (
-        ts.groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        .write.mode("overwrite")
-        .parquet(paths.term_stats)
-    )
+    term_stats = ts.groupBy("term").agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+    parquet_writer(term_stats).parquet(paths.term_stats)
 
     stats = {"doc_count": 0, "token_count": 0, "token_count_alnum": 0}
     for h in handles:
@@ -223,10 +225,10 @@ def compact_index(
     sorted_postings = h.postings.repartitionByRange(
         "term", "start_did"
     ).sortWithinPartitions("term", "start_did")
-    compact_postings(sorted_postings, run_size=run_size).write.mode("overwrite").option(
+    parquet_writer(compact_postings(sorted_postings, run_size=run_size), POSTINGS_ROW_GROUP_RUNS).option(
         "maxRecordsPerFile", 0
     ).parquet(paths.postings)
-    h.docmeta.write.mode("overwrite").parquet(paths.docmeta)
-    h.term_stats.write.mode("overwrite").parquet(paths.term_stats)
+    parquet_writer(h.docmeta).parquet(paths.docmeta)
+    parquet_writer(h.term_stats).parquet(paths.term_stats)
     shutil.copyfile(h.paths.corpus_stats, paths.corpus_stats)
     return paths

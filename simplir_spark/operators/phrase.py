@@ -183,7 +183,7 @@ def phrase_match_positional(
     A phrase is a query to the indexed planner that BM25 and QL use
     (``query_indexed``), with ``PhraseScorer`` as its scorer; the planner's
     path rule (``_on_driver``) picks where it runs.  On the driver
-    (``_driver_scores``): one pushdown read of the phrase terms' runs,
+    (``_driver_scores``): the phrase terms' runs from their row groups,
     each phrase intersected over the whole did range on the driver's
     cores, and an Arrow-built LocalRelation returned: no Spark job.  On
     Spark (``_spark_scores``): one intersection per (phrase, did-shard)

@@ -18,14 +18,15 @@ operators share (``_driver_scores``, ``_spark_scores``):
     the whole did range) and the request's work is within
     ``_DRIVER_DF_BUDGET``: the postings its queries decode (each query's
     distinct terms' ``df``) plus a fixed cost per query.  The term stats
-    come from the index's lexicon, the query terms' runs from one pyarrow
-    read with the term filter pushed into the parquet reader (the
-    reference's term -> postings lookup, TermIndex.hs:26-34), each query
-    is scored over [0, doc_count) on the driver's cores (``score_pool``:
-    shares of whole queries, the caller scoring one and forked workers
-    the rest), and dids map to doc_keys through the did-indexed doc_key
-    array.  The result is an Arrow-built LocalRelation: the request and
-    its collect run no Spark job (``_driver_topk``).
+    come from the index's lexicon, the query terms' runs from the postings
+    row groups whose ``term`` [min, max] in the parquet footers holds them
+    (``postings_store``, the reference's term -> postings lookup,
+    TermIndex.hs:18-34), each query is scored over [0, doc_count) on
+    the driver's cores (``score_pool``: shares of whole queries, the
+    caller scoring one and forked workers the rest), and dids map to
+    doc_keys through the did-indexed doc_key array.  The result is an
+    Arrow-built LocalRelation: the request and its collect run no Spark
+    job (``_driver_topk``).
   * Spark — every other request.  Postings scan with ``term IN (query
     terms)`` pushed down → broadcast join with the (query_id, term)
     table → each run routed to every did-shard its did range overlaps
@@ -37,9 +38,11 @@ operators share (``_driver_scores``, ``_spark_scores``):
     query term's whole-index max ``max_tf``, and its term stats past the
     accumulator cap); no intermediate is cached (``_spark_topk``).
 
-The lexicon (term -> df, cf), the pyarrow postings dataset and the
+The lexicon (term -> df, cf), the postings' row-group directory and the
 doc_key array are the ``IndexHandle``'s resident parts, each built on its
-first use; the postings themselves are read per request.
+first use.  A row group is decoded on a request's first read of it and
+kept in a process-wide LRU within a byte budget
+(``postings_store.ROW_GROUPS``), so a repeated term decodes nothing.
 
 One kernel, ``_daat_topk``, scores every query (or, on Spark, every
 (query, did-shard) group) for both models.  Its input is columnar: the
@@ -86,7 +89,6 @@ from typing import Callable, NamedTuple
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -571,18 +573,15 @@ def _driver_scores(
     spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], scorer, cols: tuple[str, ...]
 ) -> list[tuple[str, np.ndarray, np.ndarray]]:
     """The driver path's scoring step, shared by every indexed operator:
-    the request's runs (``cols``) from one pyarrow read, sorted once by
-    (term, start_did); each query is one ``take`` of its distinct terms'
-    rows, scored by ``scorer`` over the whole did range.
-    ``score_pool.score_queries`` spreads the queries over the driver's
-    cores in shares balanced by ``_query_work``.  Returns (query_id,
-    dids, values) of every query that has an indexed term, in request
-    order; no Spark job runs."""
-    # the term filter is pushed into the parquet reader; the postings are
-    # range-partitioned and sorted on (term, start_did), so file and
-    # row-group statistics prune all but the terms' own row groups
-    terms = pc.field("term").isin(_query_terms(queries))
-    runs = _as_runs(index.postings_dataset.to_table(columns=["term", *cols], filter=terms))
+    the request's runs (``cols``) from the row groups that hold its terms
+    (``IndexHandle.postings_directory``, each row group decoded once into
+    the process-wide cache), sorted once by (term, start_did); each query
+    is one ``take`` of its distinct terms' rows, scored by ``scorer``
+    over the whole did range.  ``score_pool.score_queries`` spreads the
+    queries over the driver's cores in shares balanced by
+    ``_query_work``.  Returns (query_id, dids, values) of every query
+    that has an indexed term, in request order; no Spark job runs."""
+    runs = _as_runs(index.postings_directory.runs(_query_terms(queries), ("term", *cols)))
     names, bounds = _term_bounds(runs)
     rows_of = {t: np.arange(bounds[i], bounds[i + 1]) for i, t in enumerate(names)}
     lexicon = index.lexicon

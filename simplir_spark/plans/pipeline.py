@@ -22,7 +22,21 @@ from typing import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, DataFrameWriter
+
+# Every table a stage writes is zstd-compressed, by pyarrow and by Spark
+# alike.
+PARQUET_CODEC = "zstd"
+
+
+def parquet_writer(df: DataFrame, row_group_rows: int | None = None) -> DataFrameWriter:
+    """``df``'s overwriting parquet writer in ``PARQUET_CODEC``, with row
+    groups of at most ``row_group_rows`` rows when given (parquet-mr's
+    ``parquet.block.row.count.limit``; its byte bound still applies)."""
+    writer = df.write.mode("overwrite").option("compression", PARQUET_CODEC)
+    if row_group_rows is not None:
+        writer = writer.option("parquet.block.row.count.limit", row_group_rows)
+    return writer
 
 
 def _fingerprint(obj) -> str:
@@ -126,8 +140,10 @@ class PipelineRunner:
         build: Callable[[], DataFrame],
         upstream: list[str] = (),
         sort_within_partitions: list[str] | None = None,
+        row_group_rows: int | None = None,
     ) -> StageResult:
-        """Materialize a DataFrame stage to parquet with resume + lineage."""
+        """Materialize a DataFrame stage to parquet with resume + lineage,
+        in row groups of at most ``row_group_rows`` rows when given."""
         out = os.path.join(self.out_dir, name)
         fp = self._stage_fp(name, list(upstream))
         skipped = self._skip(name, fp, os.path.join(out, "_SUCCESS"))
@@ -138,7 +154,7 @@ class PipelineRunner:
         df = build()
         if sort_within_partitions:
             df = df.sortWithinPartitions(*sort_within_partitions)
-        df.write.mode("overwrite").parquet(out)
+        parquet_writer(df, row_group_rows).parquet(out)
         return self._record(name, fp, time.time() - t0, out)
 
     def run_table_stage(
@@ -147,11 +163,13 @@ class PipelineRunner:
         build: Callable[[], pa.Table],
         upstream: list[str] = (),
         write: bool = True,
+        row_group_rows: int | None = None,
     ) -> StageResult:
         """Driver-side twin of :meth:`run_df_stage`: ``build`` returns a
         pyarrow Table, written as one parquet part file plus ``_SUCCESS``
         (the layout Spark's writer leaves, replacing whatever the output
-        directory held) under the same resume rule and manifest.
+        directory held) under the same resume rule and manifest, in the
+        same codec and row-group bound.
         ``write=False`` records the manifest only: the stage lives in
         memory, and a consumer re-run on resume rebuilds it."""
         out = os.path.join(self.out_dir, name)
@@ -166,7 +184,12 @@ class PipelineRunner:
             return self._record(name, fp, time.time() - t0, None, table.num_rows)
         shutil.rmtree(out, ignore_errors=True)
         os.makedirs(out)
-        pq.write_table(table, os.path.join(out, "part-00000.snappy.parquet"), compression="snappy")
+        pq.write_table(
+            table,
+            os.path.join(out, f"part-00000.{PARQUET_CODEC}.parquet"),
+            compression=PARQUET_CODEC,
+            row_group_size=row_group_rows,
+        )
         open(os.path.join(out, "_SUCCESS"), "w").close()
         return self._record(name, fp, time.time() - t0, out)
 

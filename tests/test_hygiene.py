@@ -8,10 +8,11 @@
   so a lazy import of deleted code fails here rather than only when its
   branch runs.
 * The indexed scoring path (``operators/query_indexed.py``,
-  ``operators/phrase.py`` and ``operators/score_pool.py``) and the index
-  build (``operators/index_build.py``) run on Arrow and numpy only: no
-  pandas import, conversion, row iteration or groupby; the scoring pool
-  imports no pyspark.
+  ``operators/phrase.py``, ``operators/score_pool.py`` and
+  ``operators/postings_store.py``) and the index build
+  (``operators/index_build.py``) run on Arrow and numpy only: no pandas
+  import, conversion, row iteration or groupby; the scoring pool and the
+  postings reads import no pyspark.
 """
 
 from __future__ import annotations
@@ -119,6 +120,7 @@ def test_package_imports_resolve():
 
 ARROW_ONLY = (
     "operators/query_indexed.py", "operators/phrase.py", "operators/index_build.py", "operators/score_pool.py",
+    "operators/postings_store.py",
 )
 PANDAS_IDIOMS = ("to_pandas", "itertuples", ".groupby(", "import pandas", "from pandas")
 
@@ -133,10 +135,20 @@ def test_scoring_path_has_no_pandas():
     assert not found, found
 
 
+def _imports_pyspark(rel: str) -> list[str]:
+    tree = _tree(PACKAGE / rel)
+    names = [a.name for n in ast.walk(tree) if isinstance(n, ast.Import) for a in n.names]
+    names += [n.module or "" for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)]
+    return [m for m in names if m.split(".")[0] == "pyspark"]
+
+
 def test_score_pool_imports_no_pyspark():
     """The scoring pool's workers run numpy and Arrow only; the module
     that forks them imports nothing of pyspark."""
-    tree = _tree(PACKAGE / "operators" / "score_pool.py")
-    names = [a.name for n in ast.walk(tree) if isinstance(n, ast.Import) for a in n.names]
-    names += [n.module or "" for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)]
-    assert not [m for m in names if m.split(".")[0] == "pyspark"]
+    assert not _imports_pyspark("operators/score_pool.py")
+
+
+def test_postings_store_imports_no_pyspark():
+    """The driver path's postings reads (row-group directory and cache)
+    run on pyarrow alone."""
+    assert not _imports_pyspark("operators/postings_store.py")

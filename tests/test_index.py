@@ -1257,7 +1257,7 @@ def test_empty_index_and_no_match_run_no_job(spark, index_dir, tmp_path_factory)
     build_index(spark, corpus, empty, n_partitions=2)
     cases = [(open_index(spark, empty), QUERIES[:3]), (open_index(spark, index_dir), [("Q08", ["zebra"])])]
     for idx, queries in cases:
-        idx.lexicon, idx.postings_dataset, idx.doc_key_array  # resident parts, built once
+        idx.lexicon, idx.postings_directory, idx.doc_key_array  # resident parts, built once
         for fn in (bm25_indexed, ql_dirichlet_indexed):
             rows, jobs = _jobs_run(spark, lambda: fn(spark, idx, queries, k=K).collect())
             assert rows == [] and jobs == 0, (fn.__name__, idx.doc_count, jobs)
@@ -1858,3 +1858,231 @@ def test_scorers_pickle():
         assert back == scorer and type(back) is type(scorer)
         (d1, s1), (d2, s2) = scorer("q", table, 0, n_docs, None), back("q", table, 0, n_docs, None)
         assert d1.tolist() == d2.tolist() and list(map(repr, s1)) == list(map(repr, s2)) and len(d1)
+
+
+# -- driver-path postings reads (operators/postings_store.py) ----------------------
+
+
+_READ_COLS = ("term", "start_did", "end_did", "n", "max_tf", "deltas", "tfs", "dls", "pos")
+
+
+# runs per postings row group in the tests below: corpus_small at run_size
+# 64 has 195 runs of 30 terms, one row group at the writers' 2,048
+_SMALL_GROUPS = 16
+
+
+def _small_groups(m) -> None:
+    """Make every postings writer use ``_SMALL_GROUPS``-run row groups."""
+    import simplir_spark.operators.index_build as ib
+    import simplir_spark.operators.merge as mg
+
+    m.setattr(ib, "POSTINGS_ROW_GROUP_RUNS", _SMALL_GROUPS)
+    m.setattr(mg, "POSTINGS_ROW_GROUP_RUNS", _SMALL_GROUPS)
+
+
+@pytest.fixture(scope="module")
+def small_groups(spark, corpus_small, tmp_path_factory):
+    """corpus_small built on the driver at run_size 64, its postings in
+    ``_SMALL_GROUPS``-run row groups."""
+    root = str(tmp_path_factory.mktemp("small_groups") / "idx")
+    with pytest.MonkeyPatch.context() as m:
+        _small_groups(m)
+        build_index(spark, corpus_small, root, run_size=64)
+    return root
+
+
+def _filtered_read(root, terms):
+    """The postings rows of ``terms`` by a filtered pyarrow dataset read,
+    sorted by (term, start_did): what the directory read must return."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pds
+
+    t = pds.dataset(os.path.join(root, "postings"), format="parquet").to_table(
+        columns=list(_READ_COLS), filter=pc.field("term").isin(pa.array(terms, pa.string()))
+    )
+    return t.sort_by([("term", "ascending"), ("start_did", "ascending")])
+
+
+def _group_terms(root) -> list[set]:
+    """The distinct terms of every (file, row group) of the postings."""
+    import pyarrow.parquet as pq
+
+    post = os.path.join(root, "postings")
+    out = []
+    for f in sorted(f for f in os.listdir(post) if f.endswith(".parquet") and not f.startswith((".", "_"))):
+        pf = pq.ParquetFile(os.path.join(post, f))
+        out += [set(pf.read_row_group(i, columns=["term"])["term"].to_pylist()) for i in range(pf.num_row_groups)]
+    return out
+
+
+def _without_statistics(src, dst) -> str:
+    """A copy of index ``src`` whose postings are one file written with
+    ``write_statistics=False``, in ``_SMALL_GROUPS``-run row groups."""
+    import shutil
+
+    import pyarrow.dataset as pds
+    import pyarrow.parquet as pq
+
+    shutil.copytree(src, dst)
+    post = os.path.join(dst, "postings")
+    t = pds.dataset(post, format="parquet").to_table()
+    shutil.rmtree(post)
+    os.makedirs(post)
+    pq.write_table(t, os.path.join(post, "part-00000.parquet"), row_group_size=_SMALL_GROUPS, write_statistics=False)
+    return dst
+
+
+def test_directory_read_equals_filtered_read(spark, corpus_small, small_groups, tmp_path, monkeypatch):
+    """The row-group directory's read returns exactly the filtered dataset
+    read's rows for present terms, absent terms (below, between and above
+    every row group's range), terms straddling two row groups or files,
+    and the empty set; on driver builds (tf and positional), Spark builds
+    at 2/5/8 partitions, a 3-source merge, a compacted index and postings
+    written without statistics, all in small row groups."""
+    from simplir_spark.operators.merge import compact_index
+    from simplir_spark.operators.query_indexed import _as_runs
+
+    _small_groups(monkeypatch)
+
+    keys = sorted(r.doc_key for r in corpus_small.select("doc_key").collect())
+    cuts = [keys[len(keys) // 3], keys[2 * len(keys) // 3]]
+    parts = [
+        corpus_small.filter(F.col("doc_key") < cuts[0]),
+        corpus_small.filter((F.col("doc_key") >= cuts[0]) & (F.col("doc_key") < cuts[1])),
+        corpus_small.filter(F.col("doc_key") >= cuts[1]),
+    ]
+    roots = {"driver": small_groups, "driver_pos": str(tmp_path / "driver_pos")}
+    build_index(spark, corpus_small, roots["driver_pos"], run_size=64, with_positions=True)
+    for n in (2, 5, 8):
+        roots[f"spark{n}"] = str(tmp_path / f"spark{n}")
+        build_index(spark, corpus_small, roots[f"spark{n}"], n_partitions=n, run_size=64)
+    srcs = []
+    for i, p in enumerate(parts):
+        srcs.append(str(tmp_path / f"src{i}"))
+        build_index(spark, p, srcs[-1], run_size=64)
+    roots["merged"] = str(tmp_path / "merged")
+    merge_indexes(spark, srcs, roots["merged"])
+    roots["compacted"] = str(tmp_path / "compacted")
+    compact_index(spark, roots["spark8"], roots["compacted"], run_size=256)
+    roots["no_stats"] = _without_statistics(small_groups, str(tmp_path / "no_stats"))
+
+    present = sorted({t for _, q in QUERIES for t in q})
+    for name, root in roots.items():
+        idx = open_index(spark, root)
+        d = idx.postings_directory
+        groups = _group_terms(root)
+        assert len(d) == len(groups) > 1, name
+        straddling = sorted({t for g in groups for t in g if sum(t in h for h in groups) > 1})
+        assert straddling, name
+        lo, hi = min(min(g) for g in groups if g), max(max(g) for g in groups if g)
+        absent = ["", lo[:-1] or "!", lo + "\x00", hi + "z", "\U0010ffff", "zebraq"]
+        cases = [present, absent, straddling[:5], straddling[-5:], present + absent + straddling[:3], []]
+        for terms in cases:
+            got = _as_runs(d.runs(sorted(set(terms)), _READ_COLS))
+            want = _filtered_read(root, terms)
+            assert got.num_rows == want.num_rows, (name, terms[:3])
+            assert all(got[c].equals(want[c]) for c in _READ_COLS), (name, terms[:3])
+        idx.close()
+
+
+def test_single_term_request_decodes_its_row_groups_once(spark, small_groups, monkeypatch):
+    """A one-term request decodes only the row groups whose footer [min,
+    max] holds its term, and repeating it decodes none.  With the cache
+    budget below one row group (and then at about one row group), the
+    rows are unchanged and the cache never holds more than its budget."""
+    import pyarrow.parquet as pq
+
+    import simplir_spark.operators.postings_store as ps
+    from simplir_spark.operators.query_indexed import ql_dirichlet_indexed
+
+    post = os.path.join(small_groups, "postings")
+    (name,) = [f for f in os.listdir(post) if f.endswith(".parquet")]
+    meta = pq.read_metadata(os.path.join(post, name))
+    spans = [(meta.row_group(i).column(0).statistics.min, meta.row_group(i).column(0).statistics.max)
+             for i in range(meta.num_row_groups)]
+    assert len(spans) > 2
+    term = "join"
+    holds = {i for i, (a, b) in enumerate(spans) if a <= term <= b}
+    assert 0 < len(holds) < len(spans)
+
+    decoded = []
+    read = ps._read_row_group
+
+    def counted(path, metadata, i, cols):
+        decoded.append(i)
+        return read(path, metadata, i, cols)
+
+    monkeypatch.setattr(ps, "_read_row_group", counted)
+    ps.ROW_GROUPS.clear()
+    idx = open_index(spark, small_groups)
+
+    def rows(queries):
+        out = []
+        for fn in (bm25_indexed, ql_dirichlet_indexed):
+            out += sorted(
+                (r.query_id, r.doc_key, r.rank, repr(r.score)) for r in fn(spark, idx, queries, k=K).collect()
+            )
+        return out
+
+    single = [("Q", [term])]
+    want_single = rows(single)
+    assert want_single and set(decoded) == holds
+    del decoded[:]
+    assert rows(single) == want_single and decoded == []
+    want_all = rows(QUERIES)
+
+    sizes = [read(os.path.join(post, name), meta, i, _READ_COLS[:-1]).nbytes for i in range(len(spans))]
+    for budget in (min(sizes) - 1, max(sizes) + min(sizes) // 2):
+        monkeypatch.setattr(ps, "ROW_GROUP_CACHE_BYTES", budget)
+        ps.ROW_GROUPS.clear()
+        for queries, want in ((single, want_single), (QUERIES, want_all), (single, want_single)):
+            del decoded[:]
+            assert rows(queries) == want, budget
+            assert ps.ROW_GROUPS.nbytes <= budget, budget
+            if budget < min(sizes):  # nothing stays cached
+                assert ps.ROW_GROUPS.nbytes == 0 and set(decoded) >= holds, budget
+    idx.close()
+
+
+def test_concurrent_requests_on_one_handle(spark, small_groups):
+    """Four threads sending driver-path requests on one handle, from a
+    cold row-group cache, each get the single-thread rows."""
+    import sys
+    import threading
+
+    import simplir_spark.operators.postings_store as ps
+    from simplir_spark.operators.query_indexed import ql_dirichlet_indexed
+
+    idx = open_index(spark, small_groups)
+    requests = [(bm25_indexed, QUERIES[:5]), (ql_dirichlet_indexed, QUERIES[5:]), (bm25_indexed, QUERIES)]
+
+    def rows(fn, queries):
+        return sorted((r.query_id, r.doc_key, r.rank, repr(r.score)) for r in fn(spark, idx, queries, k=K).collect())
+
+    want = [rows(fn, qs) for fn, qs in requests]
+    got, errors = [], []
+
+    def client(shift):
+        try:
+            for j in range(len(requests)):
+                i = (j + shift) % len(requests)
+                got.append((i, rows(*requests[i])))
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    ps.ROW_GROUPS.clear()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=client, args=(s,)) for s in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors and not any(t.is_alive() for t in threads), errors
+    assert len(got) == 4 * len(requests)
+    assert all(g == want[i] for i, g in got)
+    idx.close()
