@@ -83,6 +83,7 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from simplir_spark.functions import codec
 from simplir_spark.operators import score_pool
@@ -880,6 +881,9 @@ class IndexHandle:
     term_stats: DataFrame
     doc_count: int
     token_count: int
+    #: Spark's type of docmeta's ``doc_key``, read once at open, so that a
+    #: driver-path request builds its result schema without the JVM
+    doc_key_type: T.DataType
 
     @property
     def avg_doc_len(self) -> float:
@@ -929,11 +933,13 @@ def open_index(spark: SparkSession, root: str) -> IndexHandle:
     paths = IndexPaths(root)
     with open(paths.corpus_stats) as f:
         cs = json.load(f)
+    docmeta = spark.read.parquet(paths.docmeta)
     return IndexHandle(
         paths=paths,
-        docmeta=spark.read.parquet(paths.docmeta),
+        docmeta=docmeta,
         postings=spark.read.parquet(paths.postings),
         term_stats=spark.read.parquet(paths.term_stats),
         doc_count=int(cs["doc_count"]),
         token_count=int(cs["token_count"]),
+        doc_key_type=docmeta.schema["doc_key"].dataType,
     )

@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 
 from simplir_spark.functions import codec
 from simplir_spark.operators.index_build import IndexHandle
+from simplir_spark.operators.local_frame import LocalFrame
 from simplir_spark.operators.query_indexed import (
     _driver_scores,
     _on_driver,
@@ -158,7 +159,7 @@ class PhraseScorer(NamedTuple):
 
 
 _PHRASE_COLS = ("start_did", "n", "deltas", "tfs", "dls", "pos")
-# built once: ``createDataFrame`` parses a DDL string through the JVM
+# the driver path's result schema, built once
 _PHRASE_SCHEMA = T.StructType(
     [
         T.StructField("phrase_id", T.StringType()),
@@ -185,7 +186,8 @@ def phrase_match_positional(
     path rule (``_on_driver``) picks where it runs.  On the driver
     (``_driver_scores``): the phrase terms' runs from their row groups,
     each phrase intersected over the whole did range on the driver's
-    cores, and an Arrow-built LocalRelation returned: no Spark job.  On
+    cores, and a driver-local DataFrame returned (``LocalFrame``): no
+    Spark job and no JVM call, at the call or at its collect.  On
     Spark (``_spark_scores``): one intersection per (phrase, did-shard)
     group; a doc's complete position data lives in one shard, so shard
     outputs union exactly, and per-task memory is bounded by one shard's
@@ -206,7 +208,7 @@ def phrase_match_positional(
                 "tf": np.concatenate([_NONE, *(tf for _, _, tf in hits)]),
             }
         )
-        return spark.createDataFrame(table, _PHRASE_SCHEMA)
+        return LocalFrame(spark, table, _PHRASE_SCHEMA)
     scored = _spark_scores(spark, index, phrases, scorer, _PHRASE_COLS)
     return scored.select(
         F.col("query_id").alias("phrase_id"), "did", F.col("score").cast("long").alias("tf")

@@ -15,9 +15,10 @@ Two parts:
 * ``ROW_GROUPS``, a process-wide, thread-safe LRU of decoded row groups,
   bounded by ``ROW_GROUP_CACHE_BYTES``.  An entry is keyed by its file's
   path, size and mtime, its row group and the columns read, so a
-  rewritten index directory never serves stale rows.  A request filters
-  its terms' rows out of the cached tables with one vectorized ``is_in``:
-  no per-run Python objects.
+  rewritten index directory never serves stale rows.  A row group is
+  sorted by term once, as it enters the cache, so a request slices each
+  of its terms' rows out by binary search over the group's distinct
+  terms: it touches only the rows it returns.
 
 This module imports no pyspark.
 """
@@ -25,52 +26,55 @@ This module imports no pyspark.
 from __future__ import annotations
 
 import os
+import sys
 import threading
 from bisect import bisect_left, bisect_right
 from collections import OrderedDict
 from itertools import accumulate
-from typing import Callable
+from typing import Callable, NamedTuple
 
+import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-# Decoded row groups kept resident, in Arrow bytes.  The seed-1 perfbench
-# query_serve index (2,000 docs, 61,703 runs) decodes to ~4 MB in all, so
-# the budget holds some thirty times that index's postings.
+# Decoded row groups kept resident, in bytes (``_Group.nbytes``).  The
+# seed-1 perfbench query_serve index (2,000 docs, 61,703 runs) decodes to
+# ~4.3 MB of Arrow data and ~4.6 MB of term strings for binary search, so
+# the budget holds some fourteen times that index's postings.
 ROW_GROUP_CACHE_BYTES = 128 << 20
 
 
 class _RowGroupCache:
-    """An LRU of decoded row groups within ``ROW_GROUP_CACHE_BYTES`` (read
-    at every insert).  A row group larger than the budget is served but
-    not kept.  Two threads missing the same key may both decode it; the
-    first insert wins."""
+    """An LRU of decoded row groups (``_Group``) within
+    ``ROW_GROUP_CACHE_BYTES`` (read at every insert) by their ``nbytes``.
+    A row group larger than the budget is served but not kept.  Two
+    threads missing the same key may both decode it; the first insert
+    wins."""
 
     def __init__(self) -> None:
         self._lock = threading.Lock()
-        self._tables: OrderedDict[tuple, pa.Table] = OrderedDict()
+        self._groups: OrderedDict[tuple, _Group] = OrderedDict()
         self.nbytes = 0
 
-    def get(self, key: tuple, read: Callable[[], pa.Table]) -> pa.Table:
+    def get(self, key: tuple, read: Callable[[], _Group]) -> _Group:
         with self._lock:
-            table = self._tables.get(key)
-            if table is not None:
-                self._tables.move_to_end(key)
-                return table
-        table = read()
+            group = self._groups.get(key)
+            if group is not None:
+                self._groups.move_to_end(key)
+                return group
+        group = read()
         with self._lock:
-            if key not in self._tables and table.nbytes <= ROW_GROUP_CACHE_BYTES:
-                self._tables[key] = table
-                self.nbytes += table.nbytes
+            if key not in self._groups and group.nbytes <= ROW_GROUP_CACHE_BYTES:
+                self._groups[key] = group
+                self.nbytes += group.nbytes
             while self.nbytes > ROW_GROUP_CACHE_BYTES:
-                _, old = self._tables.popitem(last=False)
+                _, old = self._groups.popitem(last=False)
                 self.nbytes -= old.nbytes
-        return table
+        return group
 
     def clear(self) -> None:
         with self._lock:
-            self._tables.clear()
+            self._groups.clear()
             self.nbytes = 0
 
 
@@ -82,6 +86,28 @@ def _read_row_group(path: str, metadata: pq.FileMetaData, i: int, cols: tuple[st
     parsed: ``metadata``), columns ``cols``."""
     with pq.ParquetFile(path, metadata=metadata) as f:
         return f.read_row_group(i, columns=list(cols))
+
+
+class _Group(NamedTuple):
+    """A decoded row group sorted by ``term`` (stably: a term's rows keep
+    their file order), with its distinct terms and their row bounds: term
+    ``names[j]`` is rows [bounds[j], bounds[j + 1]).  ``nbytes`` counts
+    the table's Arrow bytes, ``names`` with its strings, and ``bounds``."""
+
+    table: pa.Table
+    names: list[str]  # ascending
+    bounds: np.ndarray
+    nbytes: int
+
+    @classmethod
+    def read(cls, path: str, metadata: pq.FileMetaData, i: int, cols: tuple[str, ...]) -> "_Group":
+        table = _read_row_group(path, metadata, i, cols).sort_by("term")
+        term = table.column("term").to_numpy(zero_copy_only=False)
+        cut = np.flatnonzero(term[1:] != term[:-1]) + 1
+        bounds = np.concatenate(([0], cut, [len(term)])) if len(term) else np.zeros(1, dtype=np.int64)
+        names = term[bounds[:-1]].tolist()
+        nbytes = table.nbytes + bounds.nbytes + sum(map(sys.getsizeof, (names, *names)))
+        return cls(table, names, bounds, nbytes)
 
 
 class PostingsDirectory:
@@ -136,27 +162,40 @@ class PostingsDirectory:
     def __len__(self) -> int:
         return len(self._groups)
 
-    def row_groups(self, terms: list[str]) -> list[int]:
-        """The row groups that may hold a row of any of ``terms``, in file
-        and row-group order: those whose [min, max] holds a term, and
-        those without statistics."""
-        hit = set(self._blind)
-        for t in terms:
-            lo, hi = bisect_left(self._reach, t), bisect_right(self._lows, t)
-            hit.update(g for g in self._order[lo:hi] if self._highs[g] >= t)
-        return sorted(hit)
+    def row_groups(self, term: str) -> list[int]:
+        """The row groups that may hold a row of ``term``: those whose
+        [min, max] holds it, and those without statistics."""
+        lo, hi = bisect_left(self._reach, term), bisect_right(self._lows, term)
+        return [*self._blind, *(g for g in self._order[lo:hi] if self._highs[g] >= term)]
 
     def runs(self, terms: list[str], cols: tuple[str, ...]) -> pa.Table:
         """Every row of ``terms`` in columns ``cols`` (which hold
-        ``term``), in file and row order: the row groups that may hold
-        them (``row_groups``), each from ``ROW_GROUPS`` or decoded into it,
-        filtered by one ``is_in`` over their concatenation."""
-        tables = []
-        for g in self.row_groups(terms):
+        ``term``), by row group and then by term: each row group that may
+        hold one of them (``row_groups``) is taken from ``ROW_GROUPS``, or
+        decoded and sorted by term into it, each term's row range is found
+        by binary search over the group's distinct terms, and one ``take``
+        gathers the ranges."""
+        wanted: dict[int, list[str]] = {}
+        for t in sorted(set(terms)):
+            for g in self.row_groups(t):
+                wanted.setdefault(g, []).append(t)
+        tables, lo, hi, base = [], [], [], 0
+        for g in sorted(wanted):
             f, i = self._groups[g]
             path, size, mtime, meta = self._files[f]
-            tables.append(ROW_GROUPS.get((path, size, mtime, i, cols), lambda: _read_row_group(path, meta, i, cols)))
+            group = ROW_GROUPS.get((path, size, mtime, i, cols), lambda: _Group.read(path, meta, i, cols))
+            names, bounds = group.names, group.bounds
+            for t in wanted[g]:
+                j = bisect_left(names, t)
+                if j < len(names) and names[j] == t:
+                    lo.append(base + bounds[j])
+                    hi.append(base + bounds[j + 1])
+            tables.append(group.table)
+            base += group.table.num_rows
         if not tables:
             return self.schema.empty_table().select(list(cols))
-        table = pa.concat_tables(tables, promote_options="default")
-        return table.filter(pc.is_in(table["term"], value_set=pa.array(terms, pa.string())))
+        lo, hi = np.array(lo, dtype=np.int64), np.array(hi, dtype=np.int64)
+        n = hi - lo
+        # the rows of the ranges [lo, hi) in order: arange(total), each range shifted
+        rows = np.arange(n.sum()) + np.repeat(lo - (np.cumsum(n) - n), n)
+        return pa.concat_tables(tables, promote_options="default").take(rows)

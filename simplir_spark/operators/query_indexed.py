@@ -24,9 +24,10 @@ operators share (``_driver_scores``, ``_spark_scores``):
     TermIndex.hs:18-34), each query is scored over [0, doc_count) on
     the driver's cores (``score_pool``: shares of whole queries, the
     caller scoring one and forked workers the rest), and dids map to
-    doc_keys through the did-indexed doc_key array.  The result is an
-    Arrow-built LocalRelation: the request and its collect run no Spark
-    job (``_driver_topk``).
+    doc_keys through the did-indexed doc_key array.  The result is a
+    driver-local DataFrame over the Arrow table the request built
+    (``local_frame.LocalFrame``): the request and its collect run no
+    Spark job and make no JVM call (``_driver_topk``).
   * Spark — every other request.  Postings scan with ``term IN (query
     terms)`` pushed down → broadcast join with the (query_id, term)
     table → each run routed to every did-shard its did range overlaps
@@ -84,6 +85,7 @@ from __future__ import annotations
 
 import math
 import os
+import weakref
 from functools import cache
 from typing import Callable, NamedTuple
 
@@ -97,6 +99,7 @@ from simplir_spark.functions import codec
 from simplir_spark.functions.scoring import B_DEFAULT, K1_DEFAULT
 from simplir_spark.operators import score_pool
 from simplir_spark.operators.index_build import IndexHandle
+from simplir_spark.operators.local_frame import LocalFrame
 from simplir_spark.operators.query import merge_query_entries, queries_df
 
 # Minimum did-span per shard.  A posting run covers up to 2^14 postings
@@ -557,8 +560,7 @@ def _on_driver(index: IndexHandle, queries: list[tuple[str, list[str]]]) -> bool
 
 @cache
 def _result_schema(key_type: T.DataType) -> T.StructType:
-    """The driver path's result schema for a doc_key type, built once:
-    ``createDataFrame`` parses a DDL string through the JVM every call."""
+    """The driver path's result schema for a doc_key type, built once."""
     return T.StructType(
         [
             T.StructField("query_id", T.StringType()),
@@ -567,6 +569,22 @@ def _result_schema(key_type: T.DataType) -> T.StructType:
             T.StructField("score", T.DoubleType()),
         ]
     )
+
+
+# the driver's scoring cores per SparkContext (``_driver_cores``)
+_DRIVER_CORES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _driver_cores(spark: SparkSession) -> int:
+    """The cores a driver-path request scores on: min(defaultParallelism,
+    the CPUs this process may run on).  Both are properties of the driver,
+    so they are read once per SparkContext, and a request makes no JVM
+    call for them."""
+    sc = spark.sparkContext
+    cores = _DRIVER_CORES.get(sc)
+    if cores is None:
+        cores = _DRIVER_CORES[sc] = min(sc.defaultParallelism, len(os.sched_getaffinity(0)))
+    return cores
 
 
 def _driver_scores(
@@ -591,8 +609,7 @@ def _driver_scores(
         if rows:
             jobs.append((qid, np.concatenate(rows)))
             work.append(_query_work(lexicon, terms))
-    cores = min(spark.sparkContext.defaultParallelism, len(os.sched_getaffinity(0)))
-    hits = score_pool.score_queries(scorer, runs, jobs, work, index.doc_count, cores, index)
+    hits = score_pool.score_queries(scorer, runs, jobs, work, index.doc_count, _driver_cores(spark), index)
     return [(qid, d, v) for (qid, _), (d, v) in zip(jobs, hits)]
 
 
@@ -601,8 +618,10 @@ def _driver_topk(
 ) -> DataFrame:
     """The ranked finish of the driver path (``_driver_scores``): the
     kernel's top-k is already ranked, and dids map to doc_keys through the
-    did-indexed doc_key array.  The result is an Arrow-built
-    LocalRelation: no Spark job runs, now or at collect."""
+    did-indexed doc_key array.  The result is a driver-local DataFrame
+    over the Arrow table (``LocalFrame``): no Spark job runs and no JVM
+    call is made, now or at collect; a composed use (``select``,
+    ``join``, ...) builds its LocalRelation once."""
     qids, dids, ranks, scores = [], [_NO_HITS[0]], [np.zeros(0, dtype=np.int32)], [_NO_HITS[1]]
     for qid, d, s in _driver_scores(spark, index, queries, scorer, _RUN_COLS):
         qids += [qid] * len(d)
@@ -617,7 +636,7 @@ def _driver_topk(
             "score": pa.array(np.concatenate(scores), pa.float64()),
         }
     )
-    return spark.createDataFrame(table, _result_schema(index.docmeta.schema["doc_key"].dataType))
+    return LocalFrame(spark, table, _result_schema(index.doc_key_type))
 
 
 def _spark_scores(
@@ -747,7 +766,8 @@ def bm25_indexed(
     A request the driver serves (doc_count <= ``_MAX_SPAN`` and its
     postings within ``_DRIVER_DF_BUDGET``, see ``_on_driver``) is
     scored before return, on the driver's cores (``score_pool``), and
-    comes back as a local DataFrame whose collect runs no Spark job.  Any
+    comes back as a driver-local DataFrame (``LocalFrame``) whose collect
+    runs no Spark job and makes no JVM call.  Any
     other request returns a lazy plan: did-sharded scoring on the
     cluster, ranked with a window and joined to docmeta there.  Both
     paths give the same rows.

@@ -517,20 +517,57 @@ def _jobs_run(spark, fn) -> tuple[object, int]:
     return out, len(jobs)
 
 
-def test_bm25_indexed_request_job_count(spark, index_dir, tmp_path_factory):
-    """A request the driver serves runs NO Spark job, neither in the call
-    nor in the collect of the local DataFrame it returns: BM25 and QL at
-    1 and 4 queries (the first request also builds the index's resident
-    parts), and a positional phrase request."""
-    from simplir_spark.operators.phrase import phrase_match_positional
-    from simplir_spark.operators.query_indexed import ql_dirichlet_indexed
+def _py4j_calls(monkeypatch, fn) -> tuple[object, list[str]]:
+    """(fn(), the py4j commands it sent to the JVM).  py4j's release of a
+    JVM object whose Python proxy was collected (``m``emory ``d``elete) is
+    not counted: the garbage collector may send it during any call, for a
+    proxy that earlier code dropped."""
+    from py4j.clientserver import ClientServerConnection
 
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def spy(self, command):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", spy)
+        out = fn()
+    return out, sent
+
+
+def _relations_built(spark, monkeypatch) -> list:
+    """A list that gets one entry per ``spark.createDataFrame`` call from
+    now on: each driver-local result builds its relation through it."""
+    built = []
+    create = spark.createDataFrame
+    monkeypatch.setattr(spark, "createDataFrame", lambda *a, **kw: built.append(a) or create(*a, **kw))
+    return built
+
+
+def test_bm25_indexed_request_job_count(spark, index_dir, tmp_path_factory, monkeypatch):
+    """A request the driver serves runs NO Spark job and makes NO py4j
+    call, neither in the call nor in the collect of the driver-local
+    DataFrame it returns: BM25 and QL at 1 and 4 queries (the first
+    request also builds the index's resident parts), and a positional
+    phrase request.  The first composed use of a result builds its JVM
+    relation, exactly once."""
+    import simplir_spark.operators.query_indexed as qi
+    from simplir_spark.operators.phrase import phrase_match_positional
+
+    def counted(request):
+        (rows, sent), jobs = _jobs_run(spark, lambda: _py4j_calls(monkeypatch, lambda: request().collect()))
+        return rows, sent, jobs
+
+    qi._driver_cores(spark)  # the session's first driver request reads this, once
     idx = open_index(spark, index_dir)
-    for fn in (bm25_indexed, ql_dirichlet_indexed):
+    for fn in (bm25_indexed, qi.ql_dirichlet_indexed):
         for n_queries in (1, 4):
-            rows, jobs = _jobs_run(spark, lambda: fn(spark, idx, QUERIES[:n_queries], k=K).collect())
+            rows, sent, jobs = counted(lambda: fn(spark, idx, QUERIES[:n_queries], k=K))
             assert rows
-            assert jobs == 0, (fn.__name__, n_queries, jobs)
+            assert jobs == 0 and sent == [], (fn.__name__, n_queries, jobs, sent)
 
     corpus = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "beta gamma alpha beta")], "doc_key long, content string"
@@ -538,11 +575,14 @@ def test_bm25_indexed_request_job_count(spark, index_dir, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("phrasejobs") / "idx")
     build_index(spark, corpus, out, n_partitions=2, run_size=8, with_positions=True)
     pidx = open_index(spark, out)
-    rows, jobs = _jobs_run(
-        spark, lambda: phrase_match_positional(spark, pidx, [("P1", ["alpha", "beta"])]).collect()
-    )
+    rows, sent, jobs = counted(lambda: phrase_match_positional(spark, pidx, [("P1", ["alpha", "beta"])]))
     assert sorted(tuple(r) for r in rows) == [("P1", 0, 1), ("P1", 1, 1)]
-    assert jobs == 0, jobs
+    assert jobs == 0 and sent == [], (jobs, sent)
+
+    res = bm25_indexed(spark, idx, QUERIES[:4], k=K)
+    built = _relations_built(spark, monkeypatch)
+    assert res.select("query_id").distinct().count() == 4 and len(built) == 1
+    assert res.join(idx.docmeta, "doc_key").count() == res.count() and len(built) == 1
 
 
 def test_phrase_positional_repeated_id_raises_without_job(spark, tmp_path_factory, monkeypatch):
@@ -666,6 +706,94 @@ def test_indexed_no_match_collects_without_job(spark, index_dir):
         assert df.collect() == []
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         assert max([-1, *sc.statusTracker().getJobIdsForGroup(None)]) == last, fn.__name__
+
+
+def _assert_local_equals_relation(spark, res) -> None:
+    """``res``, a driver-path result, answers ``collect``, ``toArrow``,
+    ``toPandas``, ``count``, ``schema`` and ``columns`` as the relation
+    ``spark.createDataFrame`` builds of its table does, without building
+    its own relation."""
+    import pyspark.sql
+
+    from simplir_spark.operators.local_frame import LocalFrame
+
+    assert isinstance(res, LocalFrame) and isinstance(res, pyspark.sql.DataFrame)
+    ref = spark.createDataFrame(res._table, res.schema)
+    got, want = res.collect(), ref.collect()
+    assert got == want
+    assert [(type(r.__fields__), r.__fields__) for r in got] == [(type(r.__fields__), r.__fields__) for r in want]
+    assert [[(type(v), repr(v)) for v in r] for r in got] == [[(type(v), repr(v)) for v in r] for r in want]
+    got_arrow, want_arrow = res.toArrow(), ref.toArrow()
+    assert got_arrow.schema.equals(want_arrow.schema) and got_arrow.equals(want_arrow)
+    pd.testing.assert_frame_equal(res.toPandas(), ref.toPandas())
+    assert res.count() == ref.count() == len(want)
+    assert res.schema == ref.schema and res.columns == ref.columns
+    assert "_jdf" not in vars(res)
+
+
+def test_driver_local_result_equals_relation(spark, index_dir, corpus_small, tmp_path):
+    """A driver-path result (BM25, QL, a positional phrase request and a
+    request with no hit) gives the rows, Arrow table, pandas frame, count
+    and schema of ``spark.createDataFrame`` of its table, the relation it
+    stands for."""
+    from simplir_spark.operators.phrase import phrase_match_positional
+    from simplir_spark.operators.query_indexed import ql_dirichlet_indexed
+
+    idx = open_index(spark, index_dir)
+    build_index(spark, corpus_small, str(tmp_path / "pidx"), run_size=64, with_positions=True)
+    pidx = open_index(spark, str(tmp_path / "pidx"))
+    results = {
+        "bm25": bm25_indexed(spark, idx, QUERIES, k=K),
+        "ql": ql_dirichlet_indexed(spark, idx, QUERIES, k=30),
+        "phrase": phrase_match_positional(spark, pidx, [("P1", ["hash", "join"]), ("P2", ["order", "sort"])]),
+        "no_hit": bm25_indexed(spark, idx, [("Q08", ["zebra"])], k=K),
+    }
+    for name, res in results.items():
+        assert (res.count() == 0) == (name == "no_hit"), name
+        _assert_local_equals_relation(spark, res)
+
+
+def test_driver_local_result_composes_like_the_relation(spark, index_dir, tmp_path, monkeypatch):
+    """Every composed use of a driver-path result gives the rows of the
+    relation ``spark.createDataFrame`` builds of its table:
+    ``__spark_entry__``'s round-and-rerank ``select``, a (broadcast)
+    ``join`` with docmeta, ``unionByName`` with a Spark-path result, a
+    temp view queried by SQL, and ``cli query``'s ``write_trec_run``
+    file.  All of them share one relation, built on the first use."""
+    from simplir_spark.operators.query import topk_ranked
+    from simplir_spark.sources.trec import write_trec_run
+
+    idx = open_index(spark, index_dir)
+    with monkeypatch.context() as m:
+        _force_spark(m)
+        on_spark = bm25_indexed(spark, idx, QUERIES[:2], k=K)
+    res = bm25_indexed(spark, idx, QUERIES, k=K + 20)
+    ref = spark.createDataFrame(res._table, res.schema)
+    built = _relations_built(spark, monkeypatch)
+
+    def rerank(df):
+        scored = df.select("query_id", "doc_key", F.round("score", 6).alias("score"))
+        return sorted(topk_ranked(scored, K).select("query_id", "doc_key", "rank", "score").collect())
+
+    assert rerank(res) == rerank(ref) and rerank(ref)
+    assert len(built) == 1
+    docmeta = idx.docmeta.select("doc_key", "did")
+    for join in (lambda df: df.join(docmeta, "doc_key"), lambda df: docmeta.join(F.broadcast(df), "doc_key")):
+        assert sorted(join(res).collect()) == sorted(join(ref).collect())
+    assert sorted(res.unionByName(on_spark).collect()) == sorted(ref.unionByName(on_spark).collect())
+    sql = "select query_id, count(*) n, max(score) s, min(rank) r from {} group by query_id"
+    views = {}
+    for name, df in (("local_res", res), ("ref_res", ref)):
+        df.createOrReplaceTempView(name)
+        views[name] = sorted(spark.sql(sql.format(name)).collect())
+    assert views["local_res"] == views["ref_res"]
+    runs = {}
+    for name, df in (("local", res), ("ref", ref)):
+        write_trec_run(df, str(tmp_path / name), method="bm25")
+        (part,) = [p for p in (tmp_path / name).iterdir() if p.name.startswith("part-")]
+        runs[name] = part.read_text()
+    assert runs["local"] == runs["ref"] and runs["ref"].count("\n") == ref.count() > 0
+    assert len(built) == 1
 
 
 def test_compact_postings_rejects_mixed_pos_buffers(spark):
@@ -1984,6 +2112,43 @@ def test_directory_read_equals_filtered_read(spark, corpus_small, small_groups, 
             assert got.num_rows == want.num_rows, (name, terms[:3])
             assert all(got[c].equals(want[c]) for c in _READ_COLS), (name, terms[:3])
         idx.close()
+
+
+def test_directory_read_of_unsorted_row_groups(spark, small_groups, tmp_path):
+    """Row groups whose rows are not in term order (postings rewritten in
+    a shuffled row order, in ``_SMALL_GROUPS``-run row groups with
+    statistics) give the filtered dataset read's rows: each row group is
+    sorted by term as it is decoded."""
+    import shutil
+
+    import pyarrow.dataset as pds
+    import pyarrow.parquet as pq
+
+    from simplir_spark.operators.query_indexed import _as_runs
+
+    root = str(tmp_path / "shuffled")
+    shutil.copytree(small_groups, root)
+    post = os.path.join(root, "postings")
+    t = pds.dataset(post, format="parquet").to_table()
+    shutil.rmtree(post)
+    os.makedirs(post)
+    t = t.take(np.random.default_rng(7).permutation(t.num_rows))
+    pq.write_table(t, os.path.join(post, "part-00000.parquet"), row_group_size=_SMALL_GROUPS)
+    f = pq.ParquetFile(os.path.join(post, "part-00000.parquet"))
+    assert any((g := f.read_row_group(i, columns=["term"])["term"].to_pylist()) != sorted(g) for i in range(f.num_row_groups))
+    idx = open_index(spark, root)
+    present = sorted({t for _, q in QUERIES for t in q})
+    for terms in (present, present[:3], ["zebraq", *present[-2:]]):
+        got = _as_runs(idx.postings_directory.runs(terms, _READ_COLS))
+        want = _filtered_read(root, terms)
+        assert got.num_rows == want.num_rows > 0 and all(got[c].equals(want[c]) for c in _READ_COLS), terms[:3]
+    rows = sorted((r.query_id, r.doc_key, r.rank, repr(r.score)) for r in bm25_indexed(spark, idx, QUERIES, k=K).collect())
+    ref = open_index(spark, small_groups)
+    assert rows == sorted(
+        (r.query_id, r.doc_key, r.rank, repr(r.score)) for r in bm25_indexed(spark, ref, QUERIES, k=K).collect()
+    )
+    idx.close()
+    ref.close()
 
 
 def test_single_term_request_decodes_its_row_groups_once(spark, small_groups, monkeypatch):
