@@ -84,6 +84,7 @@ import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 from simplir_spark.functions import codec
 from simplir_spark.operators import score_pool
@@ -875,15 +876,30 @@ def build_index(
 
 @dataclass
 class IndexHandle:
+    spark: SparkSession
     paths: IndexPaths
-    docmeta: DataFrame
-    postings: DataFrame
-    term_stats: DataFrame
     doc_count: int
     token_count: int
-    #: Spark's type of docmeta's ``doc_key``, read once at open, so that a
-    #: driver-path request builds its result schema without the JVM
+    #: Spark's type of docmeta's ``doc_key``, read from a docmeta parquet
+    #: footer at open, so that a driver-path request builds its result
+    #: schema without the JVM
     doc_key_type: T.DataType
+
+    # The index's tables as Spark DataFrames, each built on its first use
+    # (the Spark request path, merging, compaction): opening the index and
+    # serving driver-path requests make no JVM call for them.
+
+    @cached_property
+    def docmeta(self) -> DataFrame:
+        return self.spark.read.parquet(self.paths.docmeta)
+
+    @cached_property
+    def postings(self) -> DataFrame:
+        return self.spark.read.parquet(self.paths.postings)
+
+    @cached_property
+    def term_stats(self) -> DataFrame:
+        return self.spark.read.parquet(self.paths.term_stats)
 
     @property
     def avg_doc_len(self) -> float:
@@ -930,16 +946,17 @@ class IndexHandle:
 
 
 def open_index(spark: SparkSession, root: str) -> IndexHandle:
+    """A handle on the index at ``root``: its corpus stats and doc_key
+    type, read on the driver with no JVM call; every other part is built
+    on first use."""
     paths = IndexPaths(root)
     with open(paths.corpus_stats) as f:
         cs = json.load(f)
-    docmeta = spark.read.parquet(paths.docmeta)
+    key_type = ds.dataset(paths.docmeta, format="parquet").schema.field("doc_key").type
     return IndexHandle(
+        spark=spark,
         paths=paths,
-        docmeta=docmeta,
-        postings=spark.read.parquet(paths.postings),
-        term_stats=spark.read.parquet(paths.term_stats),
         doc_count=int(cs["doc_count"]),
         token_count=int(cs["token_count"]),
-        doc_key_type=docmeta.schema["doc_key"].dataType,
+        doc_key_type=from_arrow_type(key_type),
     )

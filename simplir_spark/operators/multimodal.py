@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video are carried as ``binary`` columns with a metadata
-struct (``MEDIA_SCHEMA``); ``sources/media.py`` loads media directories
-into it.  simplir is a text IR system and decodes no media: the one
+struct (``MEDIA_SCHEMA``).  simplir is a text IR system and decodes no
+media: the one
 operator here, ``extract_features``, derives a deterministic feature
 vector from the payload bytes with Catalyst expressions only (md5/sha2),
 so the plan is a single codegen ``Project`` with no Python worker and

@@ -12,13 +12,20 @@ Two parts:
   driver- and Spark-built, merged, compacted and older indexes alike.
   The writers keep row groups small (``index_build.POSTINGS_ROW_GROUP_RUNS``),
   so a cold term costs one small decode.
-* ``ROW_GROUPS``, a process-wide, thread-safe LRU of decoded row groups,
-  bounded by ``ROW_GROUP_CACHE_BYTES``.  An entry is keyed by its file's
-  path, size and mtime, its row group and the columns read, so a
-  rewritten index directory never serves stale rows.  A row group is
-  sorted by term once, as it enters the cache, so a request slices each
-  of its terms' rows out by binary search over the group's distinct
-  terms: it touches only the rows it returns.
+* ``ROW_GROUPS``, a process-wide, thread-safe LRU of decoded row groups
+  and decoded term postings, bounded by ``ROW_GROUP_CACHE_BYTES``.
+  A row group's entry is keyed by its file's path, size and mtime, its
+  row group and the columns read, so a rewritten index directory never
+  serves stale rows.  A row group is sorted by term once, as it enters
+  the cache, so a request slices each of its terms' rows out by binary
+  search over the group's distinct terms: it touches only the rows it
+  returns.
+* ``PostingsDirectory.postings``: each term's runs decoded into
+  ``(dids, tfs, dls)`` (``TermPostings``), the input of the batch
+  kernel, kept in the same LRU under the same budget and keyed by the
+  term and every file's path, size and mtime.  A request fills all its
+  misses with one ``runs`` read and one ``codec.decode_runs`` call, so a
+  term is decoded once while it stays cached, not once per query.
 
 This module imports no pyspark.
 """
@@ -37,48 +44,107 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-# Decoded row groups kept resident, in bytes (``_Group.nbytes``).  The
-# seed-1 perfbench query_serve index (2,000 docs, 61,703 runs) decodes to
-# ~4.3 MB of Arrow data and ~4.6 MB of term strings for binary search, so
-# the budget holds some fourteen times that index's postings.
+from simplir_spark.functions import codec
+
+# Decoded row groups and term postings kept resident, in bytes
+# (``_Group.nbytes``, ``TermPostings.nbytes``).  The seed-1 perfbench
+# query_serve index (2,000 docs, 61,703 runs) decodes to ~4.3 MB of Arrow
+# data and ~4.6 MB of term strings for binary search, and all its terms'
+# postings to 27.3 MB of ``TermPostings`` (3.1 MB of int32 arrays, the
+# rest each term's array headers and string), so the budget holds that
+# index in both forms some three times over.
 ROW_GROUP_CACHE_BYTES = 128 << 20
 
 
 class _RowGroupCache:
-    """An LRU of decoded row groups (``_Group``) within
-    ``ROW_GROUP_CACHE_BYTES`` (read at every insert) by their ``nbytes``.
-    A row group larger than the budget is served but not kept.  Two
-    threads missing the same key may both decode it; the first insert
-    wins."""
+    """An LRU of decoded row groups (``_Group``) and decoded term postings
+    (``TermPostings``) within ``ROW_GROUP_CACHE_BYTES`` (read at every
+    insert) by their ``nbytes``.  An entry larger than the budget is
+    served but not kept.  Two threads missing the same key may both
+    decode it; the first insert wins."""
 
     def __init__(self) -> None:
         self._lock = threading.Lock()
-        self._groups: OrderedDict[tuple, _Group] = OrderedDict()
+        self._entries: OrderedDict[tuple, _Group | TermPostings] = OrderedDict()
         self.nbytes = 0
 
-    def get(self, key: tuple, read: Callable[[], _Group]) -> _Group:
+    def peek(self, key: tuple):
+        """The entry of ``key`` (now the most recent), or None."""
         with self._lock:
-            group = self._groups.get(key)
-            if group is not None:
-                self._groups.move_to_end(key)
-                return group
-        group = read()
+            entry = self._entries.get(key)
+            if entry is not None:
+                self._entries.move_to_end(key)
+            return entry
+
+    def put(self, key: tuple, entry) -> None:
+        """Keep ``entry`` under ``key`` if it fits the budget, evicting the
+        least recent entries past it."""
         with self._lock:
-            if key not in self._groups and group.nbytes <= ROW_GROUP_CACHE_BYTES:
-                self._groups[key] = group
-                self.nbytes += group.nbytes
+            if key not in self._entries and entry.nbytes <= ROW_GROUP_CACHE_BYTES:
+                self._entries[key] = entry
+                self.nbytes += entry.nbytes
             while self.nbytes > ROW_GROUP_CACHE_BYTES:
-                _, old = self._groups.popitem(last=False)
+                _, old = self._entries.popitem(last=False)
                 self.nbytes -= old.nbytes
+
+    def get(self, key: tuple, read: Callable[[], _Group]) -> _Group:
+        group = self.peek(key)
+        if group is None:
+            group = read()
+            self.put(key, group)
         return group
+
+    def entries(self) -> list:
+        """The resident entries, least recent first."""
+        with self._lock:
+            return list(self._entries.values())
 
     def clear(self) -> None:
         with self._lock:
-            self._groups.clear()
+            self._entries.clear()
             self.nbytes = 0
 
 
 ROW_GROUPS = _RowGroupCache()
+
+
+class TermPostings(NamedTuple):
+    """A term's decoded postings over the whole index, did ascending, as
+    int32 where the values fit (int64 otherwise), with the largest
+    ``max_tf`` of its runs.  ``nbytes`` counts the arrays and the term."""
+
+    dids: np.ndarray
+    tfs: np.ndarray
+    dls: np.ndarray
+    max_tf: int
+    nbytes: int
+
+    @classmethod
+    def of(cls, term: str, dids: np.ndarray, tfs: np.ndarray, dls: np.ndarray, max_tf: int) -> "TermPostings":
+        arrays = [a.astype(np.int32) if len(a) == 0 or a.max() < 1 << 31 else a.copy() for a in (dids, tfs, dls)]
+        return cls(*arrays, max_tf, sys.getsizeof(term) + sum(map(sys.getsizeof, arrays)))
+
+
+# the run columns decoded into ``TermPostings``
+_DECODE_COLS = ("term", "start_did", "n", "max_tf", "deltas", "tfs", "dls")
+
+
+class _Files:
+    """The (path, size, mtime_ns) of every file of a postings directory,
+    hashed once: the part of a decoded-postings key that a rewritten file
+    changes."""
+
+    __slots__ = ("files", "_hash")
+
+    def __init__(self, files: tuple) -> None:
+        self.files = files
+        self._hash = hash(files)
+
+    def __hash__(self) -> int:
+        return self._hash
+
+    def __eq__(self, other) -> bool:
+        return isinstance(other, _Files) and self.files == other.files
 
 
 def _read_row_group(path: str, metadata: pq.FileMetaData, i: int, cols: tuple[str, ...]) -> pa.Table:
@@ -158,6 +224,7 @@ class PostingsDirectory:
         #: every row carries positions (the ``pos`` null counts; a row
         #: group without statistics counts as positional)
         self.positional = not pos_nulls
+        self._ident = _Files(tuple((path, size, mtime) for path, size, mtime, _ in self._files))
 
     def __len__(self) -> int:
         return len(self._groups)
@@ -199,3 +266,36 @@ class PostingsDirectory:
         # the rows of the ranges [lo, hi) in order: arange(total), each range shifted
         rows = np.arange(n.sum()) + np.repeat(lo - (np.cumsum(n) - n), n)
         return pa.concat_tables(tables, promote_options="default").take(rows)
+
+    def postings(self, terms: list[str]) -> dict[str, TermPostings]:
+        """The decoded postings of each of ``terms`` that has rows.  Each
+        comes from ``ROW_GROUPS`` (keyed by the term and every file's path,
+        size and mtime, so a rewritten directory never serves old
+        postings), or, for the terms missing there, from ONE ``runs`` read
+        and ONE ``codec.decode_runs`` call, and is kept there."""
+        out, missing = {}, []
+        for t in terms:
+            entry = ROW_GROUPS.peek((self._ident, t))
+            if entry is None:
+                missing.append(t)
+            else:
+                out[t] = entry
+        if not missing:
+            return out
+        runs = self.runs(missing, _DECODE_COLS).sort_by([("term", "ascending"), ("start_did", "ascending")])
+        if runs.num_rows == 0:
+            return out
+        n = runs.column("n").to_numpy()
+        dids, tfs, dls = codec.decode_runs(
+            runs.column("start_did").to_numpy(), n, *(runs.column(c) for c in ("deltas", "tfs", "dls"))
+        )
+        term = runs.column("term").to_numpy(zero_copy_only=False)
+        bounds = np.concatenate(([0], np.flatnonzero(term[1:] != term[:-1]) + 1, [len(term)]))
+        ends = np.concatenate(([0], np.cumsum(n)))[bounds]  # each term's postings range
+        max_tf = np.maximum.reduceat(runs.column("max_tf").to_numpy(), bounds[:-1])
+        for i, t in enumerate(term[bounds[:-1]].tolist()):
+            a, b = ends[i], ends[i + 1]
+            entry = TermPostings.of(t, dids[a:b], tfs[a:b], dls[a:b], int(max_tf[i]))
+            ROW_GROUPS.put((self._ident, t), entry)
+            out[t] = entry
+        return out

@@ -18,16 +18,22 @@ operators share (``_driver_scores``, ``_spark_scores``):
     the whole did range) and the request's work is within
     ``_DRIVER_DF_BUDGET``: the postings its queries decode (each query's
     distinct terms' ``df``) plus a fixed cost per query.  The term stats
-    come from the index's lexicon, the query terms' runs from the postings
-    row groups whose ``term`` [min, max] in the parquet footers holds them
+    come from the index's lexicon.  A BM25 or QL request is scored in ONE
+    batch pass (``batch_kernel.batch_topk``) over its terms' decoded
+    postings: each distinct term is decoded once, from the postings row
+    groups whose ``term`` [min, max] in the parquet footers holds it
     (``postings_store``, the reference's term -> postings lookup,
-    TermIndex.hs:18-34), each query is scored over [0, doc_count) on
-    the driver's cores (``score_pool``: shares of whole queries, the
-    caller scoring one and forked workers the rest), and dids map to
-    doc_keys through the did-indexed doc_key array.  The result is a
-    driver-local DataFrame over the Arrow table the request built
-    (``local_frame.LocalFrame``): the request and its collect run no
-    Spark job and make no JVM call (``_driver_topk``).
+    TermIndex.hs:18-34), and kept decoded in the process-wide cache, and
+    its per-posting contribution is computed once per request; a request
+    past ``score_pool.BATCH_SHARE_WORK_FLOOR`` is split into sub-batches
+    over the driver's cores.  A phrase request, which needs positions,
+    scores each phrase over its encoded runs on the driver's cores
+    (``score_pool``: shares of whole queries, the caller scoring one and
+    forked workers the rest).  Dids map to doc_keys through the
+    did-indexed doc_key array.  The result is a driver-local DataFrame
+    over the Arrow table the request built (``local_frame.LocalFrame``):
+    the request and its collect run no Spark job and make no JVM call
+    (``_driver_topk``).
   * Spark — every other request.  Postings scan with ``term IN (query
     terms)`` pushed down → broadcast join with the (query_id, term)
     table → each run routed to every did-shard its did range overlaps
@@ -41,22 +47,24 @@ operators share (``_driver_scores``, ``_spark_scores``):
 
 The lexicon (term -> df, cf), the postings' row-group directory and the
 doc_key array are the ``IndexHandle``'s resident parts, each built on its
-first use.  A row group is decoded on a request's first read of it and
-kept in a process-wide LRU within a byte budget
-(``postings_store.ROW_GROUPS``), so a repeated term decodes nothing.
+first use.  Row groups and each term's decoded postings are kept in one
+process-wide LRU within a byte budget (``postings_store.ROW_GROUPS``),
+so a repeated term decodes nothing.
 
-One kernel, ``_daat_topk``, scores every query (or, on Spark, every
-(query, did-shard) group) for both models.  Its input is columnar: the
-query's runs as a ``pa.Table`` sorted by (term, start_did), so each term
-is one row range.  Both paths hand it Arrow: the driver sorts the
-request's read once and gives each query a ``take`` of its terms' rows;
-a Spark partition sorts its record batches once by (query_id, shard,
-term, start_did) and gives each group a zero-copy slice.  Per term it
-decodes the selected runs with ONE ``codec.decode_runs`` (one varint
-decode per blob column over the Arrow data buffer, dids by a segmented
-cumulative sum), as the reference decodes a term's chunks in one batch
-(``SimplIR.EncodedList``), and calls the model once per term; no pandas
-and no per-run Python loop.  It is document-at-a-time over decoded runs
+One per-query kernel, ``_daat_topk``, scores every (query, did-shard)
+group on the Spark path for both models, and backs the public
+``score_query_runs`` / ``score_query_runs_ql``; the batch kernel gives
+the same rows and bit-identical scores (same per-posting formulas, from
+``batch_kernel``, summed in the same term order).  Its input is
+columnar: the query's runs as a ``pa.Table`` sorted by (term,
+start_did), so each term is one row range.  A Spark partition sorts its
+record batches once by (query_id, shard, term, start_did) and gives each
+group a zero-copy slice.  Per term it decodes the selected runs with ONE
+``codec.decode_runs`` (one varint decode per blob column over the Arrow
+data buffer, dids by a segmented cumulative sum), as the reference
+decodes a term's chunks in one batch (``SimplIR.EncodedList``), and
+calls the model once per term; no pandas and no per-run Python loop.
+It is document-at-a-time over decoded runs
 (collectPostings' k-way union, Posting2/Collect.hs:53-82, vectorized)
 with an exact block-max skip rule in the spirit of Block-Max WAND [Ding &
 Suel 2011] and the reference's lazily-thresholded top-k fold
@@ -78,7 +86,8 @@ reference (SimpleIndex.hs:159-165): its per-term upper bound, its
 per-posting contribution into a dense accumulator over the scored did
 range, the score of the seen docs, the bound of an unseen doc and whether
 pruning holds.  ``score_query_runs`` (BM25) and ``score_query_runs_ql``
-(Dirichlet QL) build the two adapters.
+(Dirichlet QL) build the two adapters; ``_bm25_topk`` and ``_ql_topk``
+take runs already sorted.
 """
 
 from __future__ import annotations
@@ -86,7 +95,7 @@ from __future__ import annotations
 import math
 import os
 import weakref
-from functools import cache
+from functools import cache, partial
 from typing import Callable, NamedTuple
 
 import numpy as np
@@ -97,6 +106,7 @@ from pyspark.sql import types as T
 
 from simplir_spark.functions import codec
 from simplir_spark.functions.scoring import B_DEFAULT, K1_DEFAULT
+from simplir_spark.operators import batch_kernel as bk
 from simplir_spark.operators import score_pool
 from simplir_spark.operators.index_build import IndexHandle
 from simplir_spark.operators.local_frame import LocalFrame
@@ -209,7 +219,10 @@ class _Model(NamedTuple):
 def _as_runs(runs) -> pa.Table:
     """``runs`` as an Arrow table sorted by (term, start_did).  A pandas
     DataFrame (any row order and index) is converted once, its index
-    dropped; the scoring kernel itself only sees Arrow."""
+    dropped; the scoring kernel itself only sees Arrow.  Only the public
+    ``score_query_runs`` / ``score_query_runs_ql`` take runs in any form
+    and order; the request paths hand ``_bm25_topk`` / ``_ql_topk`` runs
+    already sorted."""
     if not isinstance(runs, pa.Table):
         runs = pa.Table.from_pandas(runs, preserve_index=False)
     return runs.sort_by([(c, "ascending") for c in _RUN_ORDER])
@@ -344,7 +357,8 @@ def score_query_runs(
     """BM25 top-k of one query's posting runs; returns (top dids, top
     scores).  The BM25 adapter of ``_daat_topk``: a posting scores
     idf·tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) into a dense accumulator
-    over the did range; the term upper bound takes tf=max_tf, dl→0.
+    over the did range; the term upper bound takes tf=max_tf, dl→0
+    (``batch_kernel.bm25_contrib``, ``bm25_ub``).
 
     ``runs`` columns: term, start_did, end_did, n, max_tf, deltas, tfs, dls
     plus per-term ``df``, as a ``pa.Table`` or a pandas DataFrame, in any
@@ -356,24 +370,36 @@ def score_query_runs(
     ``_daat_topk``.
     """
     runs = _as_runs(runs)
+    df = dict(zip(runs.column("term").to_pylist(), runs.column("df").to_pylist()))
     lo = 0 if did_lo is None else did_lo
     hi = doc_count if did_hi is None else did_hi
-    df_of = dict(zip(runs.column("term").to_pylist(), runs.column("df").to_pylist()))
-    idf = {
-        t: float(np.log(1.0 + (doc_count - int(df_t) + 0.5) / (int(df_t) + 0.5)))
-        for t, df_t in df_of.items()
-    }
+    return _bm25_topk(runs, df, doc_count, avg_doc_len, k, k1, b, lo, hi, decode_counter, order_tf)
+
+
+def _bm25_topk(
+    runs: pa.Table,
+    df: dict,
+    doc_count: int,
+    avg_doc_len: float,
+    k: int,
+    k1: float,
+    b: float,
+    lo: int,
+    hi: int,
+    decode_counter: list | None = None,
+    order_tf: dict | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """``score_query_runs`` of runs already sorted by (term, start_did),
+    each term's df from ``df``, over the dids in [lo, hi)."""
+    idf = {t: bk.bm25_idf(doc_count, int(df[t])) for t in _term_bounds(runs)[0].tolist()}
     acc = np.zeros(hi - lo)
 
-    def ub(t: str, max_tf: float) -> float:
-        return idf[t] * max_tf * (k1 + 1.0) / (max_tf + k1 * (1.0 - b))
-
     def add(t: str, off: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> None:
-        tf = tfs.astype(np.float64)
-        denom = tf + k1 * (1.0 - b + b * dls.astype(np.float64) / avg_doc_len)
-        acc[off] += idf[t] * tf * (k1 + 1.0) / denom
+        acc[off] += bk.bm25_contrib(idf[t], tfs, dls, k1, b, avg_doc_len)
 
-    model = _Model(ub, add, lambda ix: acc[ix], lambda rest: rest, True)
+    model = _Model(
+        lambda t, max_tf: bk.bm25_ub(idf[t], max_tf, k1, b), add, lambda ix: acc[ix], lambda rest: rest, True
+    )
     return _daat_topk(runs, k, lo, hi, model, decode_counter, order_tf)
 
 
@@ -402,7 +428,8 @@ def score_query_runs_ql(
       * a seen doc's partial score already holds its dl normalization
         (a doc's dl is the same in every posting of it).
     corr, each doc's dl and its count of cf=0 hits live in dense arrays
-    over the did range.
+    over the did range.  The formulas are ``batch_kernel``'s (``ql_ub``,
+    ``ql_contrib``, ``ql_consts``, ``ql_scores``).
 
     Terms with cf = 0 (bg = 0) make matched docs lacking them score -inf,
     which breaks the partial-is-a-lower-bound invariant — pruning is
@@ -413,13 +440,22 @@ def score_query_runs_ql(
     of the shard-local top-k; ``decode_counter`` (tests) receives
     [decoded_runs, total_runs]; ``order_tf``: see ``_daat_topk``.
     """
-    c0 = 0.0
-    q_total = 0.0
-    for t in sorted(term_w):
-        q_total += term_w[t]
-        if term_bg.get(t, 0.0) > 0:
-            c0 += term_w[t] * math.log(mu * term_bg[t])
-    n_cf0 = sum(1 for t in term_w if term_bg.get(t, 0.0) <= 0)
+    return _ql_topk(_as_runs(runs), term_w, term_bg, mu, k, did_lo, did_hi, decode_counter, order_tf)
+
+
+def _ql_topk(
+    runs: pa.Table,
+    term_w: dict,
+    term_bg: dict,
+    mu: float,
+    k: int,
+    did_lo: int,
+    did_hi: int,
+    decode_counter: list | None = None,
+    order_tf: dict | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """``score_query_runs_ql`` of runs already sorted by (term, start_did)."""
+    c0, q_total, n_cf0 = bk.ql_consts(term_w, term_bg, mu)
     unseen_norm = q_total * math.log(mu)  # dl >= 0 maximizes -Q*ln(dl+mu)
 
     span = did_hi - did_lo
@@ -427,31 +463,27 @@ def score_query_runs_ql(
     dl = np.zeros(span, dtype=np.int64)
     cf0_hits = np.zeros(span, dtype=np.int32)
 
-    def ub(t: str, max_tf: float) -> float:
-        bg = term_bg.get(t, 0.0)
-        if bg > 0:
-            return term_w[t] * (math.log(max_tf + mu * bg) - math.log(mu * bg))
-        # unused when pruning is disabled, but keep it a finite bound
-        return term_w[t] * max(math.log(max(max_tf, 1.0)), 0.0)
-
     def add(t: str, off: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> None:
-        tf = tfs.astype(np.float64)
         bg = term_bg.get(t, 0.0)
-        if bg > 0:
-            corr[off] += term_w[t] * (np.log(tf + mu * bg) - math.log(mu * bg))
-        else:
-            corr[off] += term_w[t] * np.log(tf)
+        corr[off] += term_w[t] * bk.ql_contrib(tfs, bg, mu)
+        if bg <= 0:
             cf0_hits[off] += 1
         dl[off] = dls
 
     def scores(ix: np.ndarray) -> np.ndarray:
-        s = c0 + corr[ix] - q_total * np.log(dl[ix] + mu)
+        s = bk.ql_scores(c0, corr[ix], q_total, dl[ix], mu)
         if n_cf0:
             s = np.where(cf0_hits[ix] == n_cf0, s, float("-inf"))
         return s
 
-    model = _Model(ub, add, scores, lambda rest: c0 + rest - unseen_norm, n_cf0 == 0)
-    return _daat_topk(_as_runs(runs), k, did_lo, did_hi, model, decode_counter, order_tf)
+    model = _Model(
+        lambda t, max_tf: bk.ql_ub(term_w[t], term_bg.get(t, 0.0), max_tf, mu),
+        add,
+        scores,
+        lambda rest: c0 + rest - unseen_norm,
+        n_cf0 == 0,
+    )
+    return _daat_topk(runs, k, did_lo, did_hi, model, decode_counter, order_tf)
 
 
 def _score_groups(
@@ -590,19 +622,42 @@ def _driver_cores(spark: SparkSession) -> int:
 def _driver_scores(
     spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], scorer, cols: tuple[str, ...]
 ) -> list[tuple[str, np.ndarray, np.ndarray]]:
-    """The driver path's scoring step, shared by every indexed operator:
-    the request's runs (``cols``) from the row groups that hold its terms
-    (``IndexHandle.postings_directory``, each row group decoded once into
-    the process-wide cache), sorted once by (term, start_did); each query
-    is one ``take`` of its distinct terms' rows, scored by ``scorer``
-    over the whole did range.  ``score_pool.score_queries`` spreads the
-    queries over the driver's cores in shares balanced by
-    ``_query_work``.  Returns (query_id, dids, values) of every query
-    that has an indexed term, in request order; no Spark job runs."""
-    runs = _as_runs(index.postings_directory.runs(_query_terms(queries), ("term", *cols)))
+    """The driver path's scoring step, shared by every indexed operator.
+    Returns (query_id, dids, values) of every query that has an indexed
+    term, in request order; no Spark job runs.
+
+    A BM25 or QL request (a scorer with a ``batch`` model) is scored in
+    one batch pass (``batch_kernel.batch_topk``) over its terms' decoded
+    postings, which ``IndexHandle.postings_directory`` keeps in the
+    process-wide cache (``postings_store.ROW_GROUPS``).
+
+    Any other request (a phrase, which needs positions) reads its runs
+    (``cols``) from the row groups that hold its terms, sorted once by
+    (term, start_did); each query is one ``take`` of its distinct terms'
+    rows, scored by ``scorer`` over the whole did range, and
+    ``score_pool.score_queries`` spreads the queries over the driver's
+    cores in shares balanced by ``_query_work``."""
+    lexicon = index.lexicon
+    batch = getattr(scorer, "batch", None)
+    if batch is not None:
+        postings = index.postings_directory.postings([t for t in _query_terms(queries) if t in lexicon])
+        jobs = [(qid, ts) for qid, terms in queries if (ts := sorted(set(terms) & postings.keys()))]
+        model, n_docs = batch(), index.doc_count
+
+        def share(sub, here):
+            if here:
+                return partial(bk.batch_topk, sub, postings, n_docs, scorer.k, model)
+            return partial(bk.topk_packed, *bk.pack(sub, postings), n_docs, scorer.k, model)
+
+        work = [_query_work(lexicon, ts) for _, ts in jobs]
+        hits = score_pool.score_shares(
+            share, jobs, work, _driver_cores(spark), index, score_pool.BATCH_SHARE_WORK_FLOOR
+        )
+        return [(qid, d, v) for (qid, _), (d, v) in zip(jobs, hits)]
+    runs = index.postings_directory.runs(_query_terms(queries), ("term", *cols))
+    runs = runs.sort_by([(c, "ascending") for c in _RUN_ORDER])
     names, bounds = _term_bounds(runs)
     rows_of = {t: np.arange(bounds[i], bounds[i + 1]) for i, t in enumerate(names)}
-    lexicon = index.lexicon
     jobs, work = [], []
     for qid, terms in queries:
         rows = [rows_of[t] for t in sorted(set(terms)) if t in rows_of]
@@ -686,9 +741,10 @@ def _spark_topk(
 
 
 class Bm25Scorer(NamedTuple):
-    """BM25's per-query scorer, ``score_query_runs`` with each term's
-    ``df`` from the request's term stats.  A module-level NamedTuple, so
-    it pickles to a scoring-pool worker and to a Spark task."""
+    """BM25's scorer, with each term's ``df`` from the request's term
+    stats: per query (``score_query_runs`` over sorted runs) on the Spark
+    path, per request (``batch_kernel.batch_topk``, ``batch``) on the
+    driver.  A module-level NamedTuple, so it pickles to a Spark task."""
 
     df: dict[str, int]
     doc_count: int
@@ -698,16 +754,19 @@ class Bm25Scorer(NamedTuple):
     b: float
 
     def __call__(self, qid: str, runs: pa.Table, lo: int, hi: int, order_tf):
-        df = pa.array([self.df[t] for t in runs.column("term").to_pylist()], pa.int64())
-        return score_query_runs(
-            runs.append_column("df", df), self.doc_count, self.avg_doc_len, self.k, self.k1, self.b,
-            did_lo=lo, did_hi=hi, order_tf=order_tf,
+        return _bm25_topk(
+            runs, self.df, self.doc_count, self.avg_doc_len, self.k, self.k1, self.b, lo, hi, order_tf=order_tf
         )
+
+    def batch(self) -> bk.Bm25Batch:
+        idf = {t: bk.bm25_idf(self.doc_count, df) for t, df in self.df.items()}
+        return bk.Bm25Batch(idf, self.k1, self.b, self.avg_doc_len)
 
 
 class QlScorer(NamedTuple):
-    """Dirichlet QL's per-query scorer, ``score_query_runs_ql`` with each
-    query's term weights and background probabilities; picklable like
+    """Dirichlet QL's scorer, with each query's term weights and
+    background probabilities (``score_query_runs_ql`` per query,
+    ``batch_kernel.QlBatch`` per request); picklable like
     ``Bm25Scorer``."""
 
     weights: dict[str, tuple[dict, dict]]  # query_id -> (term_w, term_bg)
@@ -716,7 +775,11 @@ class QlScorer(NamedTuple):
 
     def __call__(self, qid: str, runs: pa.Table, lo: int, hi: int, order_tf):
         term_w, term_bg = self.weights[qid]
-        return score_query_runs_ql(runs, term_w, term_bg, self.mu, self.k, lo, hi, order_tf=order_tf)
+        return _ql_topk(runs, term_w, term_bg, self.mu, self.k, lo, hi, order_tf=order_tf)
+
+    def batch(self) -> bk.QlBatch:
+        bg = {t: p for _, term_bg in self.weights.values() for t, p in term_bg.items()}
+        return bk.QlBatch(self.weights, bg, self.mu)
 
 
 def _indexed_topk(
@@ -765,12 +828,13 @@ def bm25_indexed(
 
     A request the driver serves (doc_count <= ``_MAX_SPAN`` and its
     postings within ``_DRIVER_DF_BUDGET``, see ``_on_driver``) is
-    scored before return, on the driver's cores (``score_pool``), and
-    comes back as a driver-local DataFrame (``LocalFrame``) whose collect
-    runs no Spark job and makes no JVM call.  Any
-    other request returns a lazy plan: did-sharded scoring on the
-    cluster, ranked with a window and joined to docmeta there.  Both
-    paths give the same rows.
+    scored before return, in one batch pass over its terms' cached
+    decoded postings (``batch_kernel``), split over the driver's cores
+    when it is large (``score_pool``), and comes back as a driver-local
+    DataFrame (``LocalFrame``) whose collect runs no Spark job and makes
+    no JVM call.  Any other request returns a lazy plan: did-sharded
+    scoring on the cluster, ranked with a window and joined to docmeta
+    there.  Both paths give the same rows.
     """
 
     def make_scorer(stats: dict, merged) -> Bm25Scorer:

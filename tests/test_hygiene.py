@@ -8,11 +8,12 @@
   so a lazy import of deleted code fails here rather than only when its
   branch runs.
 * The indexed scoring path (``operators/query_indexed.py``,
-  ``operators/phrase.py``, ``operators/score_pool.py`` and
-  ``operators/postings_store.py``) and the index build
-  (``operators/index_build.py``) run on Arrow and numpy only: no pandas
-  import, conversion, row iteration or groupby; the scoring pool and the
-  postings reads import no pyspark.
+  ``operators/phrase.py``, ``operators/score_pool.py``,
+  ``operators/postings_store.py`` and ``operators/batch_kernel.py``) and
+  the index build (``operators/index_build.py``) run on Arrow and numpy
+  only: no pandas import, conversion, row iteration or groupby; the
+  scoring pool, the postings reads and the batch kernel import no
+  pyspark.
 """
 
 from __future__ import annotations
@@ -120,7 +121,7 @@ def test_package_imports_resolve():
 
 ARROW_ONLY = (
     "operators/query_indexed.py", "operators/phrase.py", "operators/index_build.py", "operators/score_pool.py",
-    "operators/postings_store.py",
+    "operators/postings_store.py", "operators/batch_kernel.py",
 )
 PANDAS_IDIOMS = ("to_pandas", "itertuples", ".groupby(", "import pandas", "from pandas")
 
@@ -152,3 +153,9 @@ def test_postings_store_imports_no_pyspark():
     """The driver path's postings reads (row-group directory and cache)
     run on pyarrow alone."""
     assert not _imports_pyspark("operators/postings_store.py")
+
+
+def test_batch_kernel_imports_no_pyspark():
+    """The batch kernel and the model formulas it shares with the
+    per-query kernel run on numpy alone, as a pool worker runs them."""
+    assert not _imports_pyspark("operators/batch_kernel.py")

@@ -585,6 +585,48 @@ def test_bm25_indexed_request_job_count(spark, index_dir, tmp_path_factory, monk
     assert res.join(idx.docmeta, "doc_key").count() == res.count() and len(built) == 1
 
 
+def test_open_and_driver_request_make_no_jvm_call(spark, index_dir, small_groups, monkeypatch):
+    """Opening an index builds no Spark DataFrame: open + a driver-path
+    BM25 or QL request + its collect make no py4j call, on a Spark-built
+    and a driver-built index.  The Spark frames are built on first use,
+    and the forced-Spark path over them gives the driver path's rows."""
+    import simplir_spark.operators.query_indexed as qi
+
+    qi._driver_cores(spark)  # the session's first driver request reads this, once
+    for root in (index_dir, small_groups):
+        for fn in (bm25_indexed, qi.ql_dirichlet_indexed):
+            def request():
+                idx = open_index(spark, root)
+                return idx, fn(spark, idx, QUERIES, k=K).collect()
+
+            (idx, rows), sent = _py4j_calls(monkeypatch, request)
+            assert rows and sent == [], (root, fn.__name__, sent)
+            assert not {"docmeta", "postings", "term_stats"} & idx.__dict__.keys()
+            with monkeypatch.context() as m:
+                _force_spark(m)
+                on_spark = fn(spark, idx, QUERIES, k=K).collect()
+            key = lambda rs: sorted((r.query_id, r.doc_key, r.rank, repr(r.score)) for r in rs)  # noqa: E731
+            assert key(on_spark) == key(rows), (root, fn.__name__)
+            idx.close()
+
+
+def test_doc_key_type_equals_spark_read(spark, index_dir, small_groups, tmp_path):
+    """``doc_key_type``, read from a docmeta parquet footer, is the type
+    Spark's own read of docmeta gives, for string and long doc_keys on
+    Spark-built and driver-built indexes."""
+    corpus = spark.createDataFrame([(7, "alpha beta"), (3, "beta gamma")], "doc_key long, content string")
+    roots = [index_dir, small_groups]
+    for name, kw in (("long_driver", {}), ("long_spark", {"n_partitions": 2})):
+        roots.append(str(tmp_path / name))
+        build_index(spark, corpus, roots[-1], **kw)
+    types = set()
+    for root in roots:
+        idx = open_index(spark, root)
+        assert idx.doc_key_type == spark.read.parquet(idx.paths.docmeta).schema["doc_key"].dataType, root
+        types.add(idx.doc_key_type.simpleString())
+    assert types == {"string", "bigint"}
+
+
 def test_phrase_positional_repeated_id_raises_without_job(spark, tmp_path_factory, monkeypatch):
     """A repeated phrase_id is refused before any Spark job, on the
     driver path and on the Spark path: grouped by id, two phrases would
@@ -1010,6 +1052,78 @@ def test_daat_kernel_pruned_topk_equals_unpruned(case, b, cf0):
         assert d.tolist() == d_all[:k].tolist(), model.__name__
         assert s.tolist() == s_all[:k].tolist(), model.__name__
         assert ((d_all >= lo) & (d_all < hi)).all()
+
+
+@st.composite
+def _batch_case(draw):
+    """Posting runs of 1-5 terms over a small did space (small tf and dl
+    ranges, so scores tie), and 1-5 queries over those terms, an absent
+    term and repeats; plus k and the queries a batch chunk holds."""
+    n_docs = draw(st.integers(2, 50))
+    doc_len = np.array(draw(st.lists(st.integers(1, 3), min_size=n_docs, max_size=n_docs)))
+    rows, postings = [], {}
+    for ti in range(draw(st.integers(1, 5))):
+        t = f"t{ti}"
+        dids = np.array(sorted(draw(st.sets(st.integers(0, n_docs - 1), min_size=1))), dtype=np.int64)
+        tfs = np.array(draw(st.lists(st.integers(1, 3), min_size=len(dids), max_size=len(dids))))
+        run_size = draw(st.integers(1, 8))
+        for a in range(0, len(dids), run_size):
+            sl = slice(a, a + run_size)
+            rows.append({"term": t, "df": len(dids), **codec.encode_run(dids[sl], tfs[sl], doc_len[dids[sl]])})
+        postings[t] = (dids, tfs, doc_len[dids])
+    vocab = [*postings, "absent"]
+    queries = [
+        (f"q{i}", draw(st.lists(st.sampled_from(vocab), min_size=1, max_size=5)))
+        for i in range(draw(st.integers(1, 5)))
+    ]
+    return pd.DataFrame(rows), postings, n_docs, queries, draw(st.integers(1, 6)), draw(st.integers(1, 3))
+
+
+@settings(max_examples=300, deadline=None, derandomize=True)
+@given(case=_batch_case(), b=st.sampled_from([0.4, 0.0]), cf0=st.booleans())
+def test_batch_kernel_equals_per_query_kernel(case, b, cf0):
+    """The batch kernel's rows equal the per-query block-max kernel's for
+    every query of a request: the same dids and bit-identical scores,
+    under BM25 at b in {0.4, 0} and Dirichlet QL, with absent and
+    repeated query terms, tied scores, chunks of 1-3 queries, and QL cf=0
+    terms (one with postings when ``cf0``, and the absent term)."""
+    import simplir_spark.operators.batch_kernel as bk
+    from simplir_spark.operators.postings_store import TermPostings
+    from simplir_spark.operators.query_indexed import score_query_runs_ql
+
+    runs, raw, n_docs, queries, k, per_chunk = case
+    postings = {t: TermPostings.of(t, d, tf, dl, int(tf.max())) for t, (d, tf, dl) in raw.items()}
+    df = {t: len(d) for t, (d, _, _) in raw.items()}
+    avgdl, k1, mu = 2.5, 1.2, 10.0
+    bg = {t: 0.0 if cf0 and i == 0 else 0.001 * (i + 1) for i, t in enumerate(sorted(raw))}
+    weights = {
+        qid: ({t: float(terms.count(t)) for t in sorted(set(terms))}, {t: bg.get(t, 0.0) for t in terms})
+        for qid, terms in queries
+    }
+    jobs = [(qid, ts) for qid, terms in queries if (ts := sorted(set(terms) & postings.keys()))]
+
+    def per_query(qid, ts, model):
+        sub = runs[runs["term"].isin(ts)]
+        if model == "bm25":
+            return score_query_runs(sub, n_docs, avgdl, k, k1, b)
+        term_w, term_bg = weights[qid]
+        return score_query_runs_ql(sub.drop(columns=["df"]), term_w, term_bg, mu, k, 0, n_docs)
+
+    models = {
+        "bm25": bk.Bm25Batch({t: bk.bm25_idf(n_docs, df[t]) for t in df}, k1, b, avgdl),
+        "ql": bk.QlBatch(weights, bg, mu),
+    }
+    cells = bk.BATCH_CELLS
+    bk.BATCH_CELLS = per_chunk * n_docs
+    try:
+        for name, model in models.items():
+            got = bk.batch_topk(jobs, postings, n_docs, k, model)
+            for (qid, ts), (d, s) in zip(jobs, got):
+                want_d, want_s = per_query(qid, ts, name)
+                assert d.tolist() == want_d.tolist(), (name, qid)
+                assert list(map(repr, s.tolist())) == list(map(repr, want_s.tolist())), (name, qid)
+    finally:
+        bk.BATCH_CELLS = cells
 
 
 def test_ql_indexed_small_k_matches_scan(spark, index_dir, corpus_small, monkeypatch):
@@ -1729,7 +1843,7 @@ def _force_pool_shares(monkeypatch, n: int) -> None:
     request has fewer queries or the pool fewer workers)."""
     import simplir_spark.operators.score_pool as sp
 
-    monkeypatch.setattr(sp, "_n_shares", lambda work, cores: min(n, len(work)))
+    monkeypatch.setattr(sp, "_n_shares", lambda work, cores, floor: min(n, len(work)))
 
 
 def _bm25_rows(spark, idx) -> list[tuple]:
@@ -1751,9 +1865,11 @@ def _gone(pid: int) -> bool:
 def test_pooled_rows_equal_one_share_and_spark_rows(spark, index_dir, monkeypatch):
     """The corpus_small matrix (BM25 on QUERIES, QL on the QL set and on
     all of QUERIES, k in {10, 30}) gives identical (query_id, doc_key,
-    rank, repr(score)) in one share (the in-process loop), at forced 2 and
-    3 shares, at the default split and on forced Spark at 1/2/5/8
-    shards; the split runs really ship shares to the pool."""
+    rank, repr(score)) in one share (the in-process batch), at forced 2
+    and 3 shares, at the default split, at forced 1- and 2-query batch
+    chunks and on forced Spark at 1/2/5/8 shards; the split runs really
+    ship shares (sub-batches) to the pool, as many as the split decided."""
+    import simplir_spark.operators.batch_kernel as bk
     import simplir_spark.operators.query_indexed as qi
     import simplir_spark.operators.score_pool as sp
 
@@ -1763,14 +1879,18 @@ def test_pooled_rows_equal_one_share_and_spark_rows(spark, index_dir, monkeypatc
         (qi.bm25_indexed, QUERIES), (qi.ql_dirichlet_indexed, ql_set),
         (qi.ql_dirichlet_indexed, QUERIES),
     ]
-    shipped = []
-    sub_request = sp._sub_request
+    shipped, decided = [], []
+    pack, n_shares = bk.pack, sp._n_shares
 
-    def counted(runs, jobs):
-        shipped.append(len(jobs))
-        return sub_request(runs, jobs)
+    def counted(queries, postings):
+        shipped.append(len(queries))
+        return pack(queries, postings)
 
-    monkeypatch.setattr(sp, "_sub_request", counted)
+    def deciding(work, cores, floor):
+        decided.append(n_shares(work, cores, floor))
+        return decided[-1]
+
+    monkeypatch.setattr(bk, "pack", counted)
 
     def matrix():
         return [
@@ -1787,9 +1907,17 @@ def test_pooled_rows_equal_one_share_and_spark_rows(spark, index_dir, monkeypatc
         with monkeypatch.context() as m:
             if n is not None:
                 _force_pool_shares(m, n)
+            else:
+                m.setattr(sp, "_n_shares", deciding)
             del shipped[:]
             assert matrix() == want, n
-            assert len(shipped) == 6 * ((n or len(sp._pool.conns) + 1) - 1), n
+            assert len(shipped) == (6 * (n - 1) if n else sum(d - 1 for d in decided)), n
+    n_docs = idx.doc_count
+    for per_chunk in (1, 2):
+        with monkeypatch.context() as m:
+            _force_pool_shares(m, 1)
+            m.setattr(bk, "BATCH_CELLS", per_chunk * n_docs)
+            assert matrix() == want, per_chunk
     for n_shards in (1, 2, 5, 8):
         with monkeypatch.context() as m:
             _force_shards(m, n_shards)
@@ -2155,7 +2283,9 @@ def test_single_term_request_decodes_its_row_groups_once(spark, small_groups, mo
     """A one-term request decodes only the row groups whose footer [min,
     max] holds its term, and repeating it decodes none.  With the cache
     budget below one row group (and then at about one row group), the
-    rows are unchanged and the cache never holds more than its budget."""
+    rows are unchanged, the cache never holds more than its budget, and
+    below one row group no row group stays cached (the term's decoded
+    postings, smaller, may)."""
     import pyarrow.parquet as pq
 
     import simplir_spark.operators.postings_store as ps
@@ -2203,11 +2333,106 @@ def test_single_term_request_decodes_its_row_groups_once(spark, small_groups, mo
         ps.ROW_GROUPS.clear()
         for queries, want in ((single, want_single), (QUERIES, want_all), (single, want_single)):
             del decoded[:]
+            term_cached = ps.ROW_GROUPS.peek((idx.postings_directory._ident, term)) is not None
             assert rows(queries) == want, budget
             assert ps.ROW_GROUPS.nbytes <= budget, budget
-            if budget < min(sizes):  # nothing stays cached
-                assert ps.ROW_GROUPS.nbytes == 0 and set(decoded) >= holds, budget
+            if budget < min(sizes):  # no row group stays cached
+                assert not any(isinstance(e, ps._Group) for e in ps.ROW_GROUPS.entries()), budget
+                if queries is single:  # its term's decoded postings are cached, or its row groups decoded
+                    assert decoded == [] if term_cached else set(decoded) >= holds, budget
     idx.close()
+
+
+def _decodes(monkeypatch) -> list:
+    """A list that gets one entry per ``codec.decode_runs`` call of the
+    postings store (each fills a request's decoded-postings misses)."""
+    import simplir_spark.operators.postings_store as ps
+
+    calls = []
+    decode = ps.codec.decode_runs
+    monkeypatch.setattr(ps.codec, "decode_runs", lambda *a: calls.append(len(a[0])) or decode(*a))
+    return calls
+
+
+def test_decoded_postings_share_the_row_group_budget(spark, small_groups, monkeypatch):
+    """Decoded term postings are entries of the row-group cache: they count
+    in ``ROW_GROUPS.nbytes``, which never passes the budget, and the rows
+    do not depend on it.  A request fills its misses with one runs read
+    and one decode, a repeated request decodes nothing, and a request
+    that adds one term decodes only that term's runs."""
+    import simplir_spark.operators.postings_store as ps
+    from simplir_spark.operators.query_indexed import ql_dirichlet_indexed
+
+    idx = open_index(spark, small_groups)
+
+    def rows(queries):
+        return [
+            sorted((r.query_id, r.doc_key, r.rank, repr(r.score)) for r in fn(spark, idx, queries, k=K).collect())
+            for fn in (bm25_indexed, ql_dirichlet_indexed)
+        ]
+
+    ps.ROW_GROUPS.clear()
+    want = rows(QUERIES)
+    entries = ps.ROW_GROUPS.entries()
+    terms = [e for e in entries if isinstance(e, ps.TermPostings)]
+    assert terms and ps.ROW_GROUPS.nbytes == sum(e.nbytes for e in entries)
+    assert sum(e.nbytes for e in terms) >= sum(e.dids.nbytes + e.tfs.nbytes + e.dls.nbytes for e in terms)
+
+    decodes = _decodes(monkeypatch)
+    runs_read = []
+    read = ps.PostingsDirectory.runs
+    monkeypatch.setattr(ps.PostingsDirectory, "runs", lambda self, t, cols: runs_read.append(list(t)) or read(self, t, cols))
+    assert rows(QUERIES) == want and decodes == [] and runs_read == []
+    indexed = sorted({t for _, q in QUERIES for t in q} & idx.lexicon.keys())
+    extra = sorted(set(idx.lexicon) - set(indexed))[0]
+    assert rows([("X", [indexed[0], extra])])
+    assert runs_read == [[extra]] and len(decodes) == 1
+
+    per_term = sorted(e.nbytes for e in terms)
+    for budget in (per_term[0] - 1, per_term[len(per_term) // 2], sum(per_term) // 3):
+        monkeypatch.setattr(ps, "ROW_GROUP_CACHE_BYTES", budget)
+        ps.ROW_GROUPS.clear()
+        for _ in range(2):
+            assert rows(QUERIES) == want, budget
+            assert ps.ROW_GROUPS.nbytes <= budget, budget
+    idx.close()
+
+
+def test_rewritten_postings_never_serve_cached_rows(spark, corpus_small, tmp_path):
+    """An index directory rewritten in place with another index's files
+    (same file names) is served with the new files' rows by a new handle,
+    never with the decoded postings cached from the old files."""
+    import shutil
+
+    import simplir_spark.operators.postings_store as ps
+    from simplir_spark.operators.query_indexed import ql_dirichlet_indexed
+
+    keys = sorted(r.doc_key for r in corpus_small.select("doc_key").collect())
+    old, new, live = (str(tmp_path / n) for n in ("old", "new", "live"))
+    build_index(spark, corpus_small.filter(F.col("doc_key") < keys[len(keys) // 2]), old, run_size=64)
+    build_index(spark, corpus_small, new, run_size=64)
+
+    def rows(root):
+        idx = open_index(spark, root)
+        out = [
+            sorted((r.query_id, r.doc_key, r.rank, repr(r.score)) for r in fn(spark, idx, QUERIES, k=K).collect())
+            for fn in (bm25_indexed, ql_dirichlet_indexed)
+        ]
+        idx.close()
+        return out
+
+    ps.ROW_GROUPS.clear()
+    shutil.copytree(old, live)
+    want_old = rows(live)
+    assert want_old == rows(old)
+    for part in ("postings", "docmeta", "term_stats"):
+        assert sorted(os.listdir(os.path.join(old, part))) == sorted(os.listdir(os.path.join(new, part)))
+        shutil.copytree(os.path.join(new, part), os.path.join(live, part), dirs_exist_ok=True)
+    shutil.copy(os.path.join(new, "corpus_stats.json"), os.path.join(live, "corpus_stats.json"))
+    assert any(isinstance(e, ps.TermPostings) for e in ps.ROW_GROUPS.entries())  # the old rows are still cached
+    want_new = rows(new)
+    assert want_new != want_old
+    assert rows(live) == want_new
 
 
 def test_concurrent_requests_on_one_handle(spark, small_groups):

@@ -167,63 +167,6 @@ def test_extract_features_runs_no_python_worker(spark):
         assert node not in plan, plan
 
 
-# ---------------------------------------------------------------------------
-# media sources (binaryFile / image)
-# ---------------------------------------------------------------------------
-
-def test_load_media_binaryfile_to_pipeline(spark):
-    """binaryFile source -> MEDIA_SCHEMA shape -> feature extraction: the
-    committed fixtures (image + audio + video in one mixed directory
-    scan) load straight off disk, and each row's n_bytes and sha256 are
-    those of the file's bytes."""
-    import os as _os
-
-    from simplir_spark.operators.multimodal import extract_features
-    from simplir_spark.sources.media import load_media
-
-    data_dir = _os.path.join(_os.path.dirname(__file__), "data")
-    media = load_media(spark, data_dir, glob="tiny.*")
-    rows = {r.path.rsplit("/", 1)[-1]: r for r in media.collect()}
-    assert set(rows) == {"tiny.bmp", "tiny.png", "tiny.jpg", "tiny.wav", "tiny.avi"}
-    assert rows["tiny.jpg"].kind == "image" and rows["tiny.jpg"].mime == "image/jpeg"
-    assert rows["tiny.wav"].kind == "audio" and rows["tiny.avi"].kind == "video"
-    ids = [r.media_id for r in rows.values()]
-    assert len(set(ids)) == 5  # xxhash64(path) stable + distinct
-
-    feats = extract_features(media.drop("path"), dim=8).collect()
-    assert len(feats) == 5 and all(len(r.feature) == 8 for r in feats)
-    by_id = {r.media_id: r for r in feats}
-    for r in rows.values():
-        with open(_os.path.join(data_dir, r.path.rsplit("/", 1)[-1]), "rb") as f:
-            data = f.read()
-        got = by_id[r.media_id]
-        assert (got.n_bytes, got.sha256) == (len(data), hashlib.sha256(data).hexdigest())
-        assert got.feature == _reference_features(data)
-    # determinism across a re-scan
-    feats2 = extract_features(load_media(spark, data_dir, glob="tiny.*").drop("path"), dim=8).collect()
-    assert {r.media_id: r.feature for r in feats} == {
-        r.media_id: r.feature for r in feats2
-    }
-
-
-def test_load_images_decoded_jvm_source(spark):
-    """Spark's built-in image source decodes the committed image fixtures
-    JVM-side (Java ImageIO) with the dimensions they were written with."""
-    import os as _os
-
-    from simplir_spark.sources.media import load_images_decoded
-
-    data_dir = _os.path.join(_os.path.dirname(__file__), "data")
-    rows = {
-        r.origin.rsplit("/", 1)[-1]: r
-        for r in load_images_decoded(spark, data_dir).collect()
-        if r.height != -1  # ImageIO skips formats it can't read
-    }
-    assert rows["tiny.bmp"].height > 0
-    assert (rows["tiny.jpg"].height, rows["tiny.jpg"].width) == (24, 32)
-    assert (rows["tiny.png"].height, rows["tiny.png"].width) == (7, 5)
-
-
 def test_stream_micro_batches_build_on_driver(spark, tmp_path_factory):
     """Each micro-batch of stream_index_build is small enough to build on
     the driver: its chunk index has no chunks checkpoint and one part
