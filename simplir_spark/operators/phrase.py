@@ -20,7 +20,8 @@ Two implementations:
   the phrase; the right semantics for exact code-token sequences.  Each
   phrase is a query to the indexed planner of BM25 and QL
   (``query_indexed``): the same path rule, driver read, scoring pool and
-  Spark plan; this module adds only its scorer and its result shape.
+  Spark tile tasks; this module adds only its scorer (``scorer(pid,
+  runs, lo, hi)``) and its result shape.
 """
 
 from __future__ import annotations
@@ -39,8 +40,11 @@ from simplir_spark.operators.local_frame import LocalFrame
 from simplir_spark.operators.query_indexed import (
     _driver_scores,
     _on_driver,
+    _query_terms,
     _spark_scores,
     _term_bounds,
+    _term_stats,
+    _tile_rows,
 )
 
 
@@ -110,9 +114,10 @@ _NONE = np.zeros(0, dtype=np.int64)
 
 def _phrase_tfs(runs: pa.Table, phrase: list[str], lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
     """(dids, phrase tfs), both int64, did ascending, of ``phrase`` over
-    the dids in [lo, hi).  ``runs`` holds the runs of the phrase's
+    the dids in [lo, hi).  ``runs`` holds every run of the phrase's
     distinct terms sorted by (term, start_did), so place j's runs are term
-    ``phrase[j]``'s row range (``_term_bounds``); a term the phrase
+    ``phrase[j]``'s row range (``_term_bounds``); only its runs that
+    overlap [lo, hi) are decoded (``_tile_rows``), and a term the phrase
     repeats is decoded once.
 
     Each term's runs are decoded at once (``codec.decode_runs`` +
@@ -124,9 +129,12 @@ def _phrase_tfs(runs: pa.Table, phrase: list[str], lo: int, hi: int) -> tuple[np
     row_of = {t: i for i, t in enumerate(names)}
     if not phrase or any(t not in row_of for t in phrase):  # a term has no runs here
         return _NONE, _NONE
+    starts, ends = (runs.column(c).to_numpy() for c in ("start_did", "end_did"))
     keys = {}
     for t in dict.fromkeys(phrase):
-        a, b = int(bounds[row_of[t]]), int(bounds[row_of[t] + 1])
+        a, b = _tile_rows(starts, ends, int(bounds[row_of[t]]), int(bounds[row_of[t] + 1]), lo, hi)
+        if a == b:  # no run of the term in the tile
+            return _NONE, _NONE
         part = runs.slice(a, b - a)
         blobs = [part.column(c) for c in ("deltas", "tfs", "dls")]
         dids, tfs, _ = codec.decode_runs(
@@ -154,11 +162,11 @@ class PhraseScorer(NamedTuple):
 
     phrases: dict[str, list[str]]  # phrase_id -> terms
 
-    def __call__(self, pid: str, runs: pa.Table, lo: int, hi: int, order_tf):
+    def __call__(self, pid: str, runs: pa.Table, lo: int, hi: int):
         return _phrase_tfs(runs, self.phrases[pid], lo, hi)
 
 
-_PHRASE_COLS = ("start_did", "n", "deltas", "tfs", "dls", "pos")
+_PHRASE_COLS = ("start_did", "end_did", "n", "deltas", "tfs", "dls", "pos")
 # the driver path's result schema, built once
 _PHRASE_SCHEMA = T.StructType(
     [
@@ -187,11 +195,12 @@ def phrase_match_positional(
     (``_driver_scores``): the phrase terms' runs from their row groups,
     each phrase intersected over the whole did range on the driver's
     cores, and a driver-local DataFrame returned (``LocalFrame``): no
-    Spark job and no JVM call, at the call or at its collect.  On
-    Spark (``_spark_scores``): one intersection per (phrase, did-shard)
-    group; a doc's complete position data lives in one shard, so shard
-    outputs union exactly, and per-task memory is bounded by one shard's
-    postings.
+    Spark job and no JVM call, at the call or at its collect.  On Spark
+    (``_spark_scores``): tasks of (phrase share x did tile), each reading
+    its phrases' runs through the index's row-group directory and
+    intersecting each phrase over its tile, decoding only the runs that
+    overlap it; a doc's complete position data lies in one tile, so tile
+    outputs union exactly.
     """
     ids = [pid for pid, _ in phrases]
     if len(set(ids)) != len(ids):
@@ -209,7 +218,8 @@ def phrase_match_positional(
             }
         )
         return LocalFrame(spark, table, _PHRASE_SCHEMA)
-    scored = _spark_scores(spark, index, phrases, scorer, _PHRASE_COLS)
+    stats = _term_stats(index, _query_terms(phrases))
+    scored = _spark_scores(spark, index, phrases, scorer, _PHRASE_COLS, stats)
     return scored.select(
         F.col("query_id").alias("phrase_id"), "did", F.col("score").cast("long").alias("tf")
     )

@@ -1,6 +1,8 @@
-"""Driver-side reads of an index's posting runs by term, with no Spark
-job: the reference finds a term's postings through its in-memory term
-index and reads only those bytes (TermIdx.build, Posting2/TermIndex.hs:18-34).
+"""Reads of an index's posting runs by term, with no Spark job, on the
+driver and in each Spark-path scoring task (a ``PostingsDirectory``
+pickles with the task): the reference finds a term's postings through
+its in-memory term index and reads only those bytes (TermIdx.build,
+Posting2/TermIndex.hs:18-34).
 
 Two parts:
 
@@ -145,6 +147,11 @@ class _Files:
 
     def __eq__(self, other) -> bool:
         return isinstance(other, _Files) and self.files == other.files
+
+    def __reduce__(self):
+        # by the tuple alone: str hashes are salted per process
+        # (PYTHONHASHSEED), so a copy rehashes where it is loaded
+        return _Files, (self.files,)
 
 
 def _read_row_group(path: str, metadata: pq.FileMetaData, i: int, cols: tuple[str, ...]) -> pa.Table:

@@ -34,16 +34,16 @@ operators share (``_driver_scores``, ``_spark_scores``):
     over the Arrow table the request built (``local_frame.LocalFrame``):
     the request and its collect run no Spark job and make no JVM call
     (``_driver_topk``).
-  * Spark — every other request.  Postings scan with ``term IN (query
-    terms)`` pushed down → broadcast join with the (query_id, term)
-    table → each run routed to every did-shard its did range overlaps
-    (``_route_runs``) → ONE ``repartition(n, query_id, shard)`` exchange,
-    n = min(defaultParallelism, groups) → one ``mapInArrow`` kernel per
-    partition scoring its (query, did-shard) groups (``_score_groups``)
-    → per-shard top-k candidates → window rank joined to docmeta lazily
-    (``_finish_topk``).  The driver collects only per-term values (each
-    query term's whole-index max ``max_tf``, and its term stats past the
-    accumulator cap); no intermediate is cached (``_spark_topk``).
+  * Spark — every other request.  ONE stage of (query share x did tile)
+    tasks: a share is a set of whole queries (``score_pool._split`` over
+    ``_query_work``), a tile a [lo, hi) did range (``_did_tiles``), and
+    the job is ``spark.range`` over the tasks feeding one ``mapInArrow``.
+    Each task reads every run of its share's terms through the handle's
+    ``PostingsDirectory``, as the driver does, and scores each query over
+    its tile (``_spark_scores``); the per-tile top-k candidates are
+    ranked by a window and joined to docmeta lazily (``_finish_topk``).
+    No scan, join or exchange feeds the scoring, and nothing is collected
+    on the driver but, past the accumulator cap, the request's term stats.
 
 The lexicon (term -> df, cf), the postings' row-group directory and the
 doc_key array are the ``IndexHandle``'s resident parts, each built on its
@@ -51,27 +51,27 @@ first use.  Row groups and each term's decoded postings are kept in one
 process-wide LRU within a byte budget (``postings_store.ROW_GROUPS``),
 so a repeated term decodes nothing.
 
-One per-query kernel, ``_daat_topk``, scores every (query, did-shard)
-group on the Spark path for both models, and backs the public
+One per-query kernel, ``_daat_topk``, scores every (query, did tile) of
+the Spark path for both models, and backs the public
 ``score_query_runs`` / ``score_query_runs_ql``; the batch kernel gives
 the same rows and bit-identical scores (same per-posting formulas, from
 ``batch_kernel``, summed in the same term order).  Its input is
-columnar: the query's runs as a ``pa.Table`` sorted by (term,
-start_did), so each term is one row range.  A Spark partition sorts its
-record batches once by (query_id, shard, term, start_did) and gives each
-group a zero-copy slice.  Per term it decodes the selected runs with ONE
-``codec.decode_runs`` (one varint decode per blob column over the Arrow
-data buffer, dids by a segmented cumulative sum), as the reference
-decodes a term's chunks in one batch (``SimplIR.EncodedList``), and
-calls the model once per term; no pandas and no per-run Python loop.
+columnar: every run of the query's terms as a ``pa.Table`` sorted by
+(term, start_did), so each term is one row range, and the runs that
+overlap the tile one sub-range of it.  Per term it decodes the selected
+runs with ONE ``codec.decode_runs`` (one varint decode per blob column
+over the Arrow data buffer, dids by a segmented cumulative sum), as the
+reference decodes a term's chunks in one batch (``SimplIR.EncodedList``),
+and calls the model once per term; no pandas and no per-run Python loop.
 It is document-at-a-time over decoded runs
 (collectPostings' k-way union, Posting2/Collect.hs:53-82, vectorized)
 with an exact block-max skip rule in the spirit of Block-Max WAND [Ding &
 Suel 2011] and the reference's lazily-thresholded top-k fold
 (TopK.hs:36-70):
 
-  * terms processed in descending score upper bound, ties by term, so a
-    score's last bits never depend on the order the runs arrive in;
+  * terms processed in descending score upper bound over all of a term's
+    runs, ties by term, so a score's last bits depend neither on the
+    order the runs arrive in nor on the tile;
   * a run is decoded only if (a) undiscovered docs could still reach the
     current kth score via the remaining terms' upper bounds, or (b) the
     run's did range contains a *live* candidate (current score + remaining
@@ -96,6 +96,7 @@ import math
 import os
 import weakref
 from functools import cache, partial
+from itertools import accumulate
 from typing import Callable, NamedTuple
 
 import numpy as np
@@ -110,21 +111,20 @@ from simplir_spark.operators import batch_kernel as bk
 from simplir_spark.operators import score_pool
 from simplir_spark.operators.index_build import IndexHandle
 from simplir_spark.operators.local_frame import LocalFrame
-from simplir_spark.operators.query import merge_query_entries, queries_df
+from simplir_spark.operators.query import merge_query_entries
 
-# Minimum did-span per shard.  A posting run covers up to 2^14 postings
-# whose did range routinely spans tens of thousands of dids, so shards
-# narrower than that duplicate EVERY run into many shards (explode of the
-# [start_did, end_did] overlap): at 5k docs the old default of 2 x
-# parallelism shards gave span 79 and shipped/decoded each run up to 63
+# Minimum did-span per tile on the Spark path.  A posting run covers up
+# to 2^14 postings whose did range routinely spans tens of thousands of
+# dids, so narrower tiles decode the same runs in many tasks, each of
+# which also reads all of its share's runs: at 5k docs the old default of
+# 2 x parallelism shards gave span 79 and decoded each run up to 63
 # times.  Floor the span at 2^16 dids — r6 interleaved A/B at 5k docs
 # measured indexed BM25/QL requests 1.3-1.4x faster
 # (BENCH/shard_span.json); at >= 4M docs every term of the old formula is
-# unchanged, so cluster-scale sharding is unaffected.  Shard count never
-# affects results (per-shard top-k + global rank is exact at any
-# sharding).
+# unchanged, so cluster-scale tiling is unaffected.  The tile count never
+# affects results (per-tile top-k + global rank is exact at any tiling).
 _MIN_SHARD_SPAN = 1 << 16
-# Maximum did-span one dense accumulator covers: a shard's, and the whole
+# Maximum did-span one dense accumulator covers: a tile's, and the whole
 # index's on the driver path.
 _MAX_SPAN = 1 << 22
 # Driver-path budget of a request (``_on_driver``), in postings: each
@@ -158,36 +158,22 @@ _DRIVER_DF_BUDGET = 6 << 20
 
 
 def _pick_n_shards(par: int, n_queries: int, doc_count: int) -> int:
-    """Default did-shard count: enough shards to use the cluster, never so
-    many that spans drop under ``_MIN_SHARD_SPAN`` (run-duplication wall),
-    always enough to keep spans dense-accumulator-sized (<= ``_MAX_SPAN``)."""
+    """Default did-tile count: enough tiles to use the cluster, never so
+    many that spans drop under ``_MIN_SHARD_SPAN``, always enough to keep
+    spans dense-accumulator-sized (<= ``_MAX_SPAN``)."""
     per_q = (2 * par) // max(1, n_queries)
     hi = -(-max(1, doc_count) // _MIN_SHARD_SPAN)
     lo = -(-doc_count // _MAX_SPAN)
     return max(1, min(max(1, per_q), hi), lo)
 
 
-def _did_shards(spark: SparkSession, n_queries: int, doc_count: int) -> tuple[int, int]:
-    """(n_shards, span) of a request: ``_pick_n_shards``'s count and the
-    did width of each shard (ceil, so the shards cover every did)."""
-    par = spark.sparkContext.defaultParallelism
-    n_shards = _pick_n_shards(par, n_queries, doc_count)
-    return n_shards, max(1, -(-max(1, doc_count) // n_shards))
-
-
-def _route_runs(runs: DataFrame, span: int) -> DataFrame:
-    """``runs`` with a ``shard`` column: each run row once per did-shard of
-    width ``span`` that its [start_did, end_did] range overlaps (at most
-    2 per run in practice, since spans are floored at ``_MIN_SHARD_SPAN``)."""
-    return runs.withColumn(
-        "shard",
-        F.explode(
-            F.sequence(
-                (F.col("start_did") / span).cast("long"),
-                (F.col("end_did") / span).cast("long"),
-            )
-        ),
-    )
+def _did_tiles(spark: SparkSession, n_queries: int, doc_count: int) -> list[tuple[int, int]]:
+    """The [lo, hi) did tiles of a request: ``_pick_n_shards``'s count of
+    equal spans (ceil, so they cover every did), those past the last did
+    dropped."""
+    n = _pick_n_shards(spark.sparkContext.defaultParallelism, n_queries, doc_count)
+    span = max(1, -(-doc_count // n))
+    return [(lo, min(lo + span, doc_count)) for lo in range(0, doc_count, span)]
 
 
 _NO_HITS = (np.zeros(0, dtype=np.int64), np.zeros(0))
@@ -200,7 +186,7 @@ class _Model(NamedTuple):
 
     ``ub(term, max_tf)`` bounds one posting's contribution from above,
     given its run's ``max_tf``; ``add(term, off, tfs, dls)`` adds all of
-    a term's decoded postings at shard offsets ``off`` (distinct, since a
+    a term's decoded postings at tile offsets ``off`` (distinct, since a
     term's runs cover disjoint dids; called once per term) to the model's
     dense accumulator; ``scores(ix)`` is the current score
     of the seen docs at offsets ``ix``; ``unseen(rest)`` bounds the score
@@ -243,6 +229,13 @@ def _column(runs: pa.Table, name: str) -> np.ndarray:
     return np.asarray(runs.column(name).to_numpy(), dtype=np.int64)
 
 
+def _tile_rows(starts: np.ndarray, ends: np.ndarray, a: int, b: int, lo: int, hi: int) -> tuple[int, int]:
+    """The rows of [a, b), one term's runs (disjoint did ranges in
+    ascending order, so ``starts`` and ``ends`` both ascend there), whose
+    [start_did, end_did] overlaps the dids [lo, hi): one row range."""
+    return a + int(np.searchsorted(ends[a:b], lo)), a + int(np.searchsorted(starts[a:b], hi))
+
+
 def _daat_topk(
     runs: pa.Table,
     k: int,
@@ -250,52 +243,48 @@ def _daat_topk(
     hi: int,
     model: _Model,
     decode_counter: list | None = None,
-    order_tf: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Top-k (dids, scores) of one query's posting ``runs`` over the dids
     in [lo, hi), scored by ``model``: the block-max DAAT loop of both
     retrieval models (see the module docstring for the skip rule).
 
     ``runs`` is an Arrow table sorted by (term, start_did) (``_as_runs``),
-    so each term's runs are one row range.  Per term, in (descending
-    upper bound, term) order, the block-max rule masks the runs worth
-    decoding; all of them are decoded by ONE ``codec.decode_runs`` (one
-    varint decode per blob column, zero-copy when no run is skipped), and
-    the model gets ONE ``add`` per term.  That is exact: a term's runs
-    have disjoint did ranges, so a doc gets at most one posting per term,
-    and its score does not depend on the row order of ``runs``.
-
-    Every run overlapping [lo, hi) must be present; postings outside it
-    are dropped after decode.  ``order_tf`` (term -> max_tf over the
-    whole index) makes the sum order that of the terms' whole-index upper
-    bounds: a did-shard then sums a doc's score exactly as the
-    whole-range scorer does.  Ties rank by did ascending.
+    so each term's runs are one row range.  Terms are summed in
+    (descending upper bound, term) order, the bound taken over ALL of a
+    term's rows: every tile, and the whole range, then sums a doc's score
+    in the same order, the batch kernel's.  Per term, only the runs that
+    overlap [lo, hi) count (``_tile_rows``): their ``max_tf`` bounds the
+    term for pruning, the block-max rule masks those worth decoding, and
+    all of them are decoded by ONE ``codec.decode_runs`` (one varint
+    decode per blob column, zero-copy when no run is skipped); a term
+    with none drops out, and postings outside [lo, hi) are dropped after
+    decode.  The model gets ONE ``add`` per term.  That is exact: a
+    term's runs have disjoint did ranges, so a doc gets at most one
+    posting per term, and its score does not depend on the row order of
+    ``runs``.  Ties rank by did ascending.
     ``decode_counter`` (tests) receives [decoded_runs, total_runs].
     """
     if runs.num_rows == 0:
         return _NO_HITS
     names, bounds = _term_bounds(runs)
     starts, ends = _column(runs, "start_did"), _column(runs, "end_did")
-    counts = _column(runs, "n")
+    counts, max_tf = _column(runs, "n"), _column(runs, "max_tf")
     blobs = [runs.column(c) for c in ("deltas", "tfs", "dls")]
-    term_max_tf = np.maximum.reduceat(_column(runs, "max_tf"), bounds[:-1])
-    ub = {t: model.ub(t, float(m)) for t, m in zip(names, term_max_tf)}
+    key = {t: model.ub(t, float(m)) for t, m in zip(names, np.maximum.reduceat(max_tf, bounds[:-1]))}
     # a total order: terms tied on ub are summed in term order, not in the
     # order their runs arrived in (float addition is not associative)
-    key = ub if order_tf is None else {t: model.ub(t, float(order_tf[t])) for t in names}
-    order = sorted(range(len(names)), key=lambda i: (-key[names[i]], names[i]))
-    rest_after = {}
-    acc = 0.0
-    for i in reversed(order):
-        acc += ub[names[i]]
-        rest_after[i] = acc  # ub of term i + all later terms
+    terms = []  # (term, its tile rows [a, b), their ub), in summing order
+    for i in sorted(range(len(names)), key=lambda i: (-key[names[i]], names[i])):
+        a, b = _tile_rows(starts, ends, int(bounds[i]), int(bounds[i + 1]), lo, hi)
+        if a < b:
+            terms.append((names[i], a, b, model.ub(names[i], float(max_tf[a:b].max()))))
+    # the ub of each term plus those of all later terms
+    rest_after = list(accumulate(ub for *_, ub in reversed(terms)))[::-1]
 
     seen = np.zeros(hi - lo, dtype=bool)
     seen_count = 0
     decoded = 0
-    for i in order:
-        t, a, b = names[i], int(bounds[i]), int(bounds[i + 1])
-        rest = rest_after[i]
+    for (t, a, b, _), rest in zip(terms, rest_after):
         keep = None  # the term's runs to decode; None = all
         # theta exists once k docs are seen
         if model.prune and seen_count >= k:
@@ -352,7 +341,6 @@ def score_query_runs(
     decode_counter: list | None = None,
     did_lo: int | None = None,
     did_hi: int | None = None,
-    order_tf: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """BM25 top-k of one query's posting runs; returns (top dids, top
     scores).  The BM25 adapter of ``_daat_topk``: a posting scores
@@ -363,17 +351,17 @@ def score_query_runs(
     ``runs`` columns: term, start_did, end_did, n, max_tf, deltas, tfs, dls
     plus per-term ``df``, as a ``pa.Table`` or a pandas DataFrame, in any
     row order (converted and sorted once, ``_as_runs``).
-    ``decode_counter`` (tests) receives [decoded_runs, total_runs].  ``did_lo``/``did_hi`` restrict scoring to
-    dids in [lo, hi) — the shard contract: every run overlapping the range
-    must be present, postings outside it are dropped after decode.  They
-    default to the whole index, [0, doc_count).  ``order_tf``: see
-    ``_daat_topk``.
+    ``decode_counter`` (tests) receives [decoded_runs, total_runs].
+    ``did_lo``/``did_hi`` restrict scoring to the dids in [lo, hi), the
+    tile contract: ``runs`` holds every run of the query's terms, and
+    only those overlapping the range are decoded (``_daat_topk``).  They
+    default to the whole index, [0, doc_count).
     """
     runs = _as_runs(runs)
     df = dict(zip(runs.column("term").to_pylist(), runs.column("df").to_pylist()))
     lo = 0 if did_lo is None else did_lo
     hi = doc_count if did_hi is None else did_hi
-    return _bm25_topk(runs, df, doc_count, avg_doc_len, k, k1, b, lo, hi, decode_counter, order_tf)
+    return _bm25_topk(runs, df, doc_count, avg_doc_len, k, k1, b, lo, hi, decode_counter)
 
 
 def _bm25_topk(
@@ -387,7 +375,6 @@ def _bm25_topk(
     lo: int,
     hi: int,
     decode_counter: list | None = None,
-    order_tf: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """``score_query_runs`` of runs already sorted by (term, start_did),
     each term's df from ``df``, over the dids in [lo, hi)."""
@@ -400,7 +387,7 @@ def _bm25_topk(
     model = _Model(
         lambda t, max_tf: bk.bm25_ub(idf[t], max_tf, k1, b), add, lambda ix: acc[ix], lambda rest: rest, True
     )
-    return _daat_topk(runs, k, lo, hi, model, decode_counter, order_tf)
+    return _daat_topk(runs, k, lo, hi, model, decode_counter)
 
 
 def score_query_runs_ql(
@@ -412,7 +399,6 @@ def score_query_runs_ql(
     did_lo: int,
     did_hi: int,
     decode_counter: list | None = None,
-    order_tf: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Dirichlet-QL top-k of one query's posting runs in [did_lo, did_hi)
     — the QL adapter of ``_daat_topk``.
@@ -436,11 +422,12 @@ def score_query_runs_ql(
     DISABLED for such queries (decode everything; results unchanged).
 
     ``runs``: a ``pa.Table`` or a pandas DataFrame, in any row order, as
-    for ``score_query_runs`` but without ``df``.  Returns (dids, scores)
-    of the shard-local top-k; ``decode_counter`` (tests) receives
-    [decoded_runs, total_runs]; ``order_tf``: see ``_daat_topk``.
+    for ``score_query_runs`` but without ``df``; every run of the
+    query's terms, of which those overlapping [did_lo, did_hi) are
+    decoded.  Returns (dids, scores) of the tile-local top-k;
+    ``decode_counter`` (tests) receives [decoded_runs, total_runs].
     """
-    return _ql_topk(_as_runs(runs), term_w, term_bg, mu, k, did_lo, did_hi, decode_counter, order_tf)
+    return _ql_topk(_as_runs(runs), term_w, term_bg, mu, k, did_lo, did_hi, decode_counter)
 
 
 def _ql_topk(
@@ -452,7 +439,6 @@ def _ql_topk(
     did_lo: int,
     did_hi: int,
     decode_counter: list | None = None,
-    order_tf: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """``score_query_runs_ql`` of runs already sorted by (term, start_did)."""
     c0, q_total, n_cf0 = bk.ql_consts(term_w, term_bg, mu)
@@ -483,66 +469,14 @@ def _ql_topk(
         lambda rest: c0 + rest - unseen_norm,
         n_cf0 == 0,
     )
-    return _daat_topk(runs, k, did_lo, did_hi, model, decode_counter, order_tf)
-
-
-def _score_groups(
-    spark: SparkSession, matched: DataFrame, n_groups: int, score_group
-) -> DataFrame:
-    """Run ``score_group(query_id, shard, runs)`` once per (query_id,
-    shard) group of ``matched``; returns the (query_id, did, score) rows
-    of the (dids, scores) it returns.
-
-    The rows are hash-partitioned by (query_id, shard) into
-    n = min(defaultParallelism, ``n_groups``) partitions — AQE never
-    coalesces an explicit-count ``repartition``, so a sub-MB scoring
-    shuffle still runs on every core instead of one coalesced task — and
-    one ``mapInArrow`` kernel per partition sorts its record batches ONCE
-    by (query_id, shard, term, start_did) and hands each group its
-    zero-copy row slice as a ``pa.Table``.  ``n_groups`` may be an upper
-    bound; hashing leaves some partitions empty either way.
-    """
-    n = max(1, min(spark.sparkContext.defaultParallelism, n_groups))
-    keys = ["query_id", "shard"]
-
-    def kernel(batches):
-        batches = list(batches)
-        if not batches:  # an empty hash partition
-            return
-        table = pa.Table.from_batches(batches).sort_by(
-            [(c, "ascending") for c in (*keys, *_RUN_ORDER)]
-        )
-        qid_col = table.column("query_id").to_numpy(zero_copy_only=False)
-        shard_col = table.column("shard").to_numpy()
-        cut = np.flatnonzero((qid_col[1:] != qid_col[:-1]) | (shard_col[1:] != shard_col[:-1])) + 1
-        bounds = [0, *cut.tolist(), table.num_rows]
-        qids, dids, scores = [], [], []
-        for a, b in zip(bounds[:-1], bounds[1:]):
-            qid = qid_col[a]
-            d, s = score_group(qid, int(shard_col[a]), table.slice(a, b - a))
-            qids.extend([qid] * len(d))
-            dids.append(d)
-            scores.append(s)
-        if qids:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qids, pa.string()),
-                    pa.array(np.concatenate(dids), pa.int64()),
-                    pa.array(np.concatenate(scores), pa.float64()),
-                ],
-                names=["query_id", "did", "score"],
-            )
-
-    return matched.repartition(n, *keys).mapInArrow(
-        kernel, "query_id string, did long, score double"
-    )
+    return _daat_topk(runs, k, did_lo, did_hi, model, decode_counter)
 
 
 def _finish_topk(index: IndexHandle, scored: DataFrame, k: int) -> DataFrame:
-    """Global top-k of each query from its per-shard candidates
+    """Global top-k of each query from its per-tile candidates
     (``scored``: query_id, did, score), as (query_id, doc_key, rank,
     score): a window rank by score descending, then did ascending — a
-    doc's complete score lives in exactly one shard, so this is exact —
+    doc's complete score lives in exactly one tile, so this is exact —
     joined to docmeta lazily, so nothing is collected on the driver and
     the planner picks the join."""
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("did"))
@@ -574,9 +508,10 @@ def _term_stats(index: IndexHandle, terms: list[str]) -> dict[str, tuple[int, in
 
 
 def _query_work(lexicon: dict, terms: list[str]) -> int:
-    """A query's driver work: the postings it decodes, the lexicon ``df``
-    of its distinct terms, plus ``_DRIVER_QUERY_POSTINGS`` for its fixed
-    cost."""
+    """A query's work: the postings it decodes, the ``df`` of its
+    distinct terms in ``lexicon`` (term -> (df, cf)), plus
+    ``_DRIVER_QUERY_POSTINGS`` for its fixed cost.  It sizes the driver
+    path's budget and balances the shares of both paths."""
     return _DRIVER_QUERY_POSTINGS + sum(lexicon.get(t, (0, 0))[0] for t in set(terms))
 
 
@@ -619,6 +554,21 @@ def _driver_cores(spark: SparkSession) -> int:
     return cores
 
 
+def _query_jobs(runs: pa.Table, queries: list[tuple[str, list[str]]]) -> tuple[pa.Table, list]:
+    """``runs`` sorted by (term, start_did), and (query_id, row indices of
+    its distinct terms' runs) of each query with a run there, in request
+    order: the per-query input of ``score_pool._score_share``."""
+    runs = runs.sort_by([(c, "ascending") for c in _RUN_ORDER])
+    names, bounds = _term_bounds(runs)
+    rows_of = {t: np.arange(bounds[i], bounds[i + 1]) for i, t in enumerate(names)}
+    jobs = []
+    for qid, terms in queries:
+        rows = [rows_of[t] for t in sorted(set(terms)) if t in rows_of]
+        if rows:
+            jobs.append((qid, np.concatenate(rows)))
+    return runs, jobs
+
+
 def _driver_scores(
     spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], scorer, cols: tuple[str, ...]
 ) -> list[tuple[str, np.ndarray, np.ndarray]]:
@@ -632,11 +582,11 @@ def _driver_scores(
     process-wide cache (``postings_store.ROW_GROUPS``).
 
     Any other request (a phrase, which needs positions) reads its runs
-    (``cols``) from the row groups that hold its terms, sorted once by
-    (term, start_did); each query is one ``take`` of its distinct terms'
-    rows, scored by ``scorer`` over the whole did range, and
-    ``score_pool.score_queries`` spreads the queries over the driver's
-    cores in shares balanced by ``_query_work``."""
+    (``cols``) from the row groups that hold its terms; each query is one
+    ``take`` of its distinct terms' rows (``_query_jobs``), scored by
+    ``scorer`` over the whole did range, and ``score_pool.score_queries``
+    spreads the queries over the driver's cores in shares balanced by
+    ``_query_work``."""
     lexicon = index.lexicon
     batch = getattr(scorer, "batch", None)
     if batch is not None:
@@ -654,16 +604,9 @@ def _driver_scores(
             share, jobs, work, _driver_cores(spark), index, score_pool.BATCH_SHARE_WORK_FLOOR
         )
         return [(qid, d, v) for (qid, _), (d, v) in zip(jobs, hits)]
-    runs = index.postings_directory.runs(_query_terms(queries), ("term", *cols))
-    runs = runs.sort_by([(c, "ascending") for c in _RUN_ORDER])
-    names, bounds = _term_bounds(runs)
-    rows_of = {t: np.arange(bounds[i], bounds[i + 1]) for i, t in enumerate(names)}
-    jobs, work = [], []
-    for qid, terms in queries:
-        rows = [rows_of[t] for t in sorted(set(terms)) if t in rows_of]
-        if rows:
-            jobs.append((qid, np.concatenate(rows)))
-            work.append(_query_work(lexicon, terms))
+    runs, jobs = _query_jobs(index.postings_directory.runs(_query_terms(queries), ("term", *cols)), queries)
+    terms_of = dict(queries)
+    work = [_query_work(lexicon, terms_of[qid]) for qid, _ in jobs]
     hits = score_pool.score_queries(scorer, runs, jobs, work, index.doc_count, _driver_cores(spark), index)
     return [(qid, d, v) for (qid, _), (d, v) in zip(jobs, hits)]
 
@@ -700,51 +643,60 @@ def _spark_scores(
     queries: list[tuple[str, list[str]]],
     scorer,
     cols: tuple[str, ...],
-    order_tf: dict | None = None,
+    stats: dict[str, tuple[int, int]],
 ) -> DataFrame:
     """The Spark path's scoring step, shared by every indexed operator:
-    the (query_id, did, score) rows ``scorer`` returns for each (query,
-    did-shard) group of the request's runs (``cols``).  Each run row is
-    routed to every shard its [start_did, end_did] range overlaps
-    (``_route_runs``) and a shard scores only dids inside its range, so a
-    doc's complete data lives in exactly one shard and shard outputs
-    union exactly (the distributed form of collectPostings' doc-at-a-time
-    union, Posting2/Collect.hs:53-82).  ``order_tf``: see ``_daat_topk``."""
-    doc_count = index.doc_count
-    n_shards, span = _did_shards(spark, len(queries), doc_count)
-    runs = index.postings.filter(F.col("term").isin(_query_terms(queries)))  # parquet pushdown
-    post = runs.join(F.broadcast(queries_df(spark, queries)), "term")
-    matched = _route_runs(post, span).select("query_id", "shard", "term", *cols)
+    the (query_id, did, score) rows ``scorer`` returns for each query over
+    each did tile, from ONE stage of (query share x did tile) tasks.
 
-    def score_group(qid: str, shard: int, runs: pa.Table):
-        lo = shard * span
-        # the last shard ends at doc_count; a range is never empty
-        return scorer(qid, runs, lo, max(min(lo + span, doc_count), lo + 1), order_tf)
+    The queries are split into min(defaultParallelism, queries) shares of
+    whole queries, balanced by ``_query_work`` over the request's term
+    ``stats`` (``score_pool._split``); the tiles are ``_did_tiles``'s.
+    The job is ``spark.range`` over the tasks in min(defaultParallelism,
+    tasks) partitions, feeding one ``mapInArrow``.  Each task reads every
+    run (``cols``) of its share's terms through the handle's
+    ``PostingsDirectory``, pickled with the kernel (executors must see
+    the index path: local mode or a shared filesystem), so a reused
+    Python worker keeps the row groups it read warm in its
+    ``postings_store.ROW_GROUPS``.  It then builds each query's rows
+    (``_query_jobs``) and scores them over its tile
+    (``score_pool._score_share``).  A task holds all of a term's runs,
+    so every tile sums a doc's score in the whole-index term order
+    (``_daat_topk``), and a doc lives in exactly one tile, so tile
+    outputs union exactly (the distributed form of collectPostings'
+    doc-at-a-time union, Posting2/Collect.hs:53-82)."""
+    par = spark.sparkContext.defaultParallelism
+    work = [_query_work(stats, terms) for _, terms in queries]
+    shares = [[queries[j] for j in s] for s in score_pool._split(work, min(par, len(queries)))]
+    tiles = _did_tiles(spark, len(queries), index.doc_count)
+    tasks = [(share, lo, hi) for share in shares for lo, hi in tiles]
+    directory = index.postings_directory
 
-    return _score_groups(spark, matched, len(queries) * n_shards, score_group)
+    def kernel(batches):
+        for batch in batches:
+            for task in batch.column("id").to_pylist():
+                share, lo, hi = tasks[task]
+                runs, jobs = _query_jobs(directory.runs(_query_terms(share), ("term", *cols)), share)
+                hits = score_pool._score_share(scorer, runs, jobs, lo, hi)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array([qid for (qid, _), (d, _) in zip(jobs, hits) for _ in range(len(d))], pa.string()),
+                        pa.array(np.concatenate([_NO_HITS[0], *(d for d, _ in hits)]), pa.int64()),
+                        pa.array(np.concatenate([_NO_HITS[1], *(v for _, v in hits)]), pa.float64()),
+                    ],
+                    names=["query_id", "did", "score"],
+                )
 
-
-def _spark_topk(
-    spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], k: int, scorer
-) -> DataFrame:
-    """The ranked finish of the Spark path: per-shard top-k
-    (``_spark_scores``), then the lazy window finish (``_finish_topk``).
-    Every shard orders the terms by their whole-index upper bounds (one
-    collect of each term's max ``max_tf``), so a doc's score is summed
-    as on the driver path, to the last bit."""
-    runs = index.postings.filter(F.col("term").isin(_query_terms(queries)))
-    order_tf = {
-        r["term"]: int(r["max_tf"])
-        for r in runs.groupBy("term").agg(F.max("max_tf").alias("max_tf")).collect()
-    }
-    return _finish_topk(index, _spark_scores(spark, index, queries, scorer, _RUN_COLS, order_tf), k)
+    n = max(1, min(par, len(tasks)))
+    return spark.range(0, len(tasks), 1, n).mapInArrow(kernel, "query_id string, did long, score double")
 
 
 class Bm25Scorer(NamedTuple):
     """BM25's scorer, with each term's ``df`` from the request's term
-    stats: per query (``score_query_runs`` over sorted runs) on the Spark
-    path, per request (``batch_kernel.batch_topk``, ``batch``) on the
-    driver.  A module-level NamedTuple, so it pickles to a Spark task."""
+    stats: per query and tile (``score_query_runs`` over sorted runs) on
+    the Spark path, per request (``batch_kernel.batch_topk``, ``batch``)
+    on the driver.  A module-level NamedTuple, so it pickles to a Spark
+    task."""
 
     df: dict[str, int]
     doc_count: int
@@ -753,10 +705,8 @@ class Bm25Scorer(NamedTuple):
     k1: float
     b: float
 
-    def __call__(self, qid: str, runs: pa.Table, lo: int, hi: int, order_tf):
-        return _bm25_topk(
-            runs, self.df, self.doc_count, self.avg_doc_len, self.k, self.k1, self.b, lo, hi, order_tf=order_tf
-        )
+    def __call__(self, qid: str, runs: pa.Table, lo: int, hi: int):
+        return _bm25_topk(runs, self.df, self.doc_count, self.avg_doc_len, self.k, self.k1, self.b, lo, hi)
 
     def batch(self) -> bk.Bm25Batch:
         idf = {t: bk.bm25_idf(self.doc_count, df) for t, df in self.df.items()}
@@ -773,9 +723,9 @@ class QlScorer(NamedTuple):
     mu: float
     k: int
 
-    def __call__(self, qid: str, runs: pa.Table, lo: int, hi: int, order_tf):
+    def __call__(self, qid: str, runs: pa.Table, lo: int, hi: int):
         term_w, term_bg = self.weights[qid]
-        return _ql_topk(runs, term_w, term_bg, self.mu, self.k, lo, hi, order_tf=order_tf)
+        return _ql_topk(runs, term_w, term_bg, self.mu, self.k, lo, hi)
 
     def batch(self) -> bk.QlBatch:
         bg = {t: p for _, term_bg in self.weights.values() for t, p in term_bg.items()}
@@ -793,21 +743,22 @@ def _indexed_topk(
     doc_key, rank, score) — the one planner of the indexed request path.
 
     ``make_scorer(stats, merged)`` returns the model's scorer
-    (``Bm25Scorer``, ``QlScorer``): ``scorer(query_id, runs, lo, hi,
-    order_tf)`` scores one query's runs (a ``pa.Table``) over the dids in
-    [lo, hi) (``order_tf``: see ``_daat_topk``) and returns its top-k
-    there as (dids, scores); ``stats`` maps the request's indexed terms
-    to (df, cf) and ``merged`` is ``queries`` after
-    ``merge_query_entries``.  ``_on_driver`` picks the path: the driver
-    (``_driver_topk``) or Spark (``_spark_topk``).
+    (``Bm25Scorer``, ``QlScorer``): ``scorer(query_id, runs, lo, hi)``
+    scores one query's runs (a ``pa.Table``) over the dids in [lo, hi)
+    and returns its top-k there as (dids, scores); ``stats`` maps the
+    request's indexed terms to (df, cf) and ``merged`` is ``queries``
+    after ``merge_query_entries``.  ``_on_driver`` picks the path: the
+    driver (``_driver_topk``) or Spark (``_spark_scores``, ranked by
+    ``_finish_topk``).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     queries = merge_query_entries(queries)
-    scorer = make_scorer(_term_stats(index, _query_terms(queries)), queries)
+    stats = _term_stats(index, _query_terms(queries))
+    scorer = make_scorer(stats, queries)
     if _on_driver(index, queries):
         return _driver_topk(spark, index, queries, scorer)
-    return _spark_topk(spark, index, queries, k, scorer)
+    return _finish_topk(index, _spark_scores(spark, index, queries, scorer, _RUN_COLS, stats), k)
 
 
 def bm25_indexed(
@@ -832,9 +783,9 @@ def bm25_indexed(
     decoded postings (``batch_kernel``), split over the driver's cores
     when it is large (``score_pool``), and comes back as a driver-local
     DataFrame (``LocalFrame``) whose collect runs no Spark job and makes
-    no JVM call.  Any other request returns a lazy plan: did-sharded
-    scoring on the cluster, ranked with a window and joined to docmeta
-    there.  Both paths give the same rows.
+    no JVM call.  Any other request returns a lazy plan: (query share x
+    did tile) scoring tasks on the cluster, ranked with a window and
+    joined to docmeta there.  Both paths give the same rows.
     """
 
     def make_scorer(stats: dict, merged) -> Bm25Scorer:
@@ -855,7 +806,7 @@ def ql_dirichlet_indexed(
     index is retrieval-model-generic like the reference's SimpleIndex
     (RetrievalModel plug-in, SimpleIndex.hs:159-165).
 
-    Per query (and did-shard, on the Spark path) the match-any doc set
+    Per query (and did tile, on the Spark path) the match-any doc set
     scores via the dense decomposition
 
         score(d) = C0 + corr(d) - Q * ln(dl_d + mu)

@@ -17,9 +17,12 @@ worker is involved: the request runs in-process, on the same code path.
 Two kinds of share exist: a sub-batch (the batch kernel over its
 queries' decoded postings, packed into flat arrays by
 ``batch_kernel.pack``), and, through ``score_queries``, queries scored
-one at a time by a picklable ``scorer(qid, runs, lo, hi, order_tf) ->
-(dids, values)`` over the take of their encoded runs (a phrase's tfs,
-``phrase.PhraseScorer``).  This module imports no pyspark.
+one at a time by a picklable ``scorer(qid, runs, lo, hi) -> (dids,
+values)`` over the take of their encoded runs and the did range
+[lo, hi) (a phrase's tfs, ``phrase.PhraseScorer``).  ``_score_share``
+is that per-query loop; the Spark path's (query share x did tile)
+tasks run it too, over their tile (``query_indexed._spark_scores``).
+This module imports no pyspark.
 
 Workers are forked, not spawned: a spawned worker would import pyspark,
 numpy and pyarrow afresh and hold its own copy of them, while a forked
@@ -123,9 +126,10 @@ class _RemoteTraceback(Exception):
         return self.args[0]
 
 
-def _score_share(scorer, runs: pa.Table, jobs, n_docs: int) -> list[tuple[np.ndarray, np.ndarray]]:
-    """Each job's (qid, row indices into ``runs``) scored over [0, n_docs)."""
-    return [scorer(qid, runs.take(rows), 0, n_docs, None) for qid, rows in jobs]
+def _score_share(scorer, runs: pa.Table, jobs, lo: int, hi: int) -> list[tuple[np.ndarray, np.ndarray]]:
+    """Each job's (qid, row indices into ``runs``) scored over the dids
+    [lo, hi)."""
+    return [scorer(qid, runs.take(rows), lo, hi) for qid, rows in jobs]
 
 
 def _work(conn, inherited) -> None:
@@ -267,8 +271,8 @@ def score_queries(
 
     def share(sub: list, here: bool):
         if here:
-            return partial(_score_share, scorer, runs, sub, n_docs)
-        return partial(_score_share, scorer, *_sub_request(runs, sub), n_docs)
+            return partial(_score_share, scorer, runs, sub, 0, n_docs)
+        return partial(_score_share, scorer, *_sub_request(runs, sub), 0, n_docs)
 
     return score_shares(share, jobs, work, cores, owner, _SHARE_WORK_FLOOR)
 

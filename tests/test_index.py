@@ -148,9 +148,9 @@ def _force_spark(monkeypatch) -> None:
 
 
 def _force_shards(monkeypatch, n_shards: int) -> None:
-    """Route the indexed requests over ``n_shards`` did-shards on the
-    Spark path (the driver path has no shards); the 2,000-doc corpus gets
-    a single shard by default."""
+    """Score the indexed requests over ``n_shards`` did tiles on the
+    Spark path (the driver path has no tiles); the 500-doc corpus gets a
+    single tile by default."""
     import simplir_spark.operators.query_indexed as qi
 
     _force_spark(monkeypatch)
@@ -465,13 +465,13 @@ def test_edge_case_build_matches_oracle(spark, tmp_path_factory, with_positions)
     assert got == want
 
 
-def test_bm25_indexed_plan_broadcasts_and_prunes(spark, index_dir, monkeypatch):
+def test_bm25_indexed_spark_plan_is_one_stage_of_tile_tasks(spark, index_dir, monkeypatch):
     """Plan audit for the Spark path of an indexed request (forced; the
     driver serves this request by default).  The audit reads the SCORING
-    plan: the (query_id, term) side must broadcast (the postings are
-    never exchanged for the query join), term pruning must reach the
-    postings scan, and the scoring groups cross exactly ONE hash exchange
-    — the explicit-count repartition."""
+    plan: a ``Range`` of the (query share x did tile) tasks feeds the
+    Arrow map directly, over min(defaultParallelism, tasks) partitions;
+    the tasks read their own postings, so the plan has no postings
+    ``FileScan``, no join and no ``Exchange``."""
     import simplir_spark.operators.query_indexed as qi
 
     plans = {}
@@ -483,16 +483,20 @@ def test_bm25_indexed_plan_broadcasts_and_prunes(spark, index_dir, monkeypatch):
         plans["scoring"] = scored._jdf.queryExecution().executedPlan().toString()
         return finish(index, scored, k)
 
-    _force_spark(monkeypatch)
     monkeypatch.setattr(qi, "_finish_topk", spy_finish)
     idx = open_index(spark, index_dir)
-    assert qi.bm25_indexed(spark, idx, QUERIES[:4], k=5).collect()
-    plan = plans["scoring"]
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    # n = min(defaultParallelism, groups): 4 queries x 1 shard on this corpus
-    assert re.search(r"hashpartitioning\(query_id#\d+, shard#\d+L, 4\), REPARTITION_BY_NUM", plan), plan
-    assert "IN (" in plan or "In(term" in plan, plan  # term pruning reached the scan
+    for n_queries, n_shards in ((4, 1), (4, 2), (16, 1)):
+        _force_shards(monkeypatch, n_shards)
+        assert qi.bm25_indexed(spark, idx, QUERIES[:n_queries], k=5).collect()
+        plan = plans.pop("scoring")
+        for absent in ("Join", "FileScan", "Exchange"):
+            assert absent not in plan, (absent, plan)
+        # shares = min(defaultParallelism, queries), tasks = shares x tiles
+        tasks = min(spark.sparkContext.defaultParallelism, n_queries) * n_shards
+        parts = min(spark.sparkContext.defaultParallelism, tasks)
+        assert re.search(
+            rf"MapInArrow .*\n\+- (\*\(\d+\) )?Range \(0, {tasks}, step=1, splits={parts}\)", plan
+        ), plan
 
 
 def _jobs_run(spark, fn) -> tuple[object, int]:
@@ -589,7 +593,8 @@ def test_open_and_driver_request_make_no_jvm_call(spark, index_dir, small_groups
     """Opening an index builds no Spark DataFrame: open + a driver-path
     BM25 or QL request + its collect make no py4j call, on a Spark-built
     and a driver-built index.  The Spark frames are built on first use,
-    and the forced-Spark path over them gives the driver path's rows."""
+    and the forced-Spark path gives the driver path's rows without ever
+    building the postings DataFrame (its tasks read the row groups)."""
     import simplir_spark.operators.query_indexed as qi
 
     qi._driver_cores(spark)  # the session's first driver request reads this, once
@@ -607,6 +612,7 @@ def test_open_and_driver_request_make_no_jvm_call(spark, index_dir, small_groups
                 on_spark = fn(spark, idx, QUERIES, k=K).collect()
             key = lambda rs: sorted((r.query_id, r.doc_key, r.rank, repr(r.score)) for r in rs)  # noqa: E731
             assert key(on_spark) == key(rows), (root, fn.__name__)
+            assert "postings" not in idx.__dict__, (root, fn.__name__)
             idx.close()
 
 
@@ -629,8 +635,8 @@ def test_doc_key_type_equals_spark_read(spark, index_dir, small_groups, tmp_path
 
 def test_phrase_positional_repeated_id_raises_without_job(spark, tmp_path_factory, monkeypatch):
     """A repeated phrase_id is refused before any Spark job, on the
-    driver path and on the Spark path: grouped by id, two phrases would
-    share one (phrase, shard) group and match each other's terms."""
+    driver path and on the Spark path: the scorer is keyed by id, so one
+    of two phrases with the same id would be scored as the other."""
     from simplir_spark.operators.phrase import phrase_match_positional
 
     corpus = spark.createDataFrame(
@@ -1338,14 +1344,20 @@ def test_duplicate_query_ids_merge_not_double_score(spark, corpus_small, index_d
 def test_driver_path_matches_spark_path(spark, index_dir, monkeypatch):
     """The two paths of an indexed request agree.  By default the driver
     serves these requests and returns a local relation; with the postings
-    budget forced to 0 they take the Spark path (did-shard scoring,
+    budget forced to 0 they take the Spark path (did-tile scoring tasks,
     window rank, lazy docmeta join).  Rows, scores to the last bit, must
-    be identical for BM25, BM25 over 4 forced shards and QL, with an
-    absent-term query in the batch."""
+    be identical for BM25, BM25 over 4 forced tiles and QL, with an
+    absent-term query in the batch, and for BM25 and QL over 500
+    three-term queries of the lexicon's tail terms (many queries per
+    share, each share reading many terms)."""
     import simplir_spark.operators.query_indexed as qi
 
     idx = open_index(spark, index_dir)
     queries = [("q1", ["hash", "join"]), ("q2", ["customer", "order"]), ("q3", ["zzabsent"])]
+    by_df = sorted(idx.lexicon, key=lambda t: (idx.lexicon[t][0], t))
+    tail = by_df[: len(by_df) // 2]
+    rng = np.random.default_rng(17)
+    many = [(f"t{i:03d}", rng.choice(tail, 3, replace=False).tolist()) for i in range(500)]
 
     def bm25_4_shards():
         with monkeypatch.context() as m:
@@ -1355,7 +1367,10 @@ def test_driver_path_matches_spark_path(spark, index_dir, monkeypatch):
     requests = {
         "bm25": lambda: qi.bm25_indexed(spark, idx, queries, k=10),
         "ql": lambda: qi.ql_dirichlet_indexed(spark, idx, queries, k=10),
+        "bm25_tail": lambda: qi.bm25_indexed(spark, idx, many, k=10),
+        "ql_tail": lambda: qi.ql_dirichlet_indexed(spark, idx, many, k=10),
     }
+    n_rows = {"bm25_tail": 5000, "ql_tail": 5000}
 
     def run(fn, want_op):
         df = fn()
@@ -1368,16 +1383,17 @@ def test_driver_path_matches_spark_path(spark, index_dir, monkeypatch):
     _force_spark(monkeypatch)
     for name, fn in requests.items():
         on_spark = run(fn, "Window")
-        assert on_spark == driver[name] and len(on_spark) == 20, name
+        assert on_spark == driver[name] and len(on_spark) == n_rows.get(name, 20), name
 
 
 def test_sharded_scores_sum_in_whole_index_term_order(spark, index_dir, monkeypatch):
-    """A did-shard sees only its own runs, so its per-term upper bounds
-    (from the shard's max_tf) can order the terms differently from the
-    whole index, and a doc's score would then be summed in another order.
-    The Spark path orders every shard by the whole-index bounds: at 5 and
-    8 forced shards (where Q03 and Q15 have terms whose shard-local order
-    flips) BM25 rows equal the driver's to the last bit."""
+    """A did tile's own runs give per-term upper bounds (from the tile's
+    max_tf) that can order the terms differently from the whole index,
+    and a doc's score would then be summed in another order.  The Spark
+    path orders every tile by the bounds over all of a term's runs, which
+    each task holds: at 5 and 8 forced tiles (where Q03 and Q15 have
+    terms whose tile-local order flips) BM25 rows equal the driver's to
+    the last bit."""
     import simplir_spark.operators.query_indexed as qi
 
     idx = open_index(spark, index_dir)
@@ -1828,7 +1844,7 @@ class _FailInWorker(NamedTuple):
 
     parent: int
 
-    def __call__(self, qid, runs, lo, hi, order_tf):
+    def __call__(self, qid, runs, lo, hi):
         if os.getpid() != self.parent:
             raise ValueError(f"worker failed on {qid}")
         return np.zeros(0, dtype=np.int64), np.zeros(0)
@@ -2018,7 +2034,7 @@ def test_pool_workers_exit_when_parent_dies(tmp_path):
         f"sys.path.insert(0, {str(ROOT)!r})\n"
         "import numpy as np, pyarrow as pa\n"
         "from simplir_spark.operators import score_pool as sp\n"
-        "def scorer(qid, runs, lo, hi, order_tf):\n"
+        "def scorer(qid, runs, lo, hi):\n"
         "    return np.zeros(0, dtype=np.int64), np.zeros(0)\n"
         "class Owner: pass\n"
         "owner = Owner()\n"
@@ -2062,7 +2078,7 @@ def test_pool_shared_by_concurrent_requests(monkeypatch):
     rows = {t: np.flatnonzero(terms == t) for t in ("common", "mid", "rare")}
     jobs = [(f"q{i}", np.concatenate([rows[t] for t in sel]))
             for i, sel in enumerate([("common", "mid"), ("mid", "rare"), ("common", "rare"), ("rare",)] * 2)]
-    want = [(d.tolist(), list(map(repr, s))) for d, s in sp._score_share(scorer, table, jobs, n_docs)]
+    want = [(d.tolist(), list(map(repr, s))) for d, s in sp._score_share(scorer, table, jobs, 0, n_docs)]
     owner = _Owner()
     _force_pool_shares(monkeypatch, 3)
     got, errors = [], []
@@ -2112,7 +2128,7 @@ def test_scorers_pickle():
     for scorer in scorers:
         back = pickle.loads(pickle.dumps(scorer))
         assert back == scorer and type(back) is type(scorer)
-        (d1, s1), (d2, s2) = scorer("q", table, 0, n_docs, None), back("q", table, 0, n_docs, None)
+        (d1, s1), (d2, s2) = scorer("q", table, 0, n_docs), back("q", table, 0, n_docs)
         assert d1.tolist() == d2.tolist() and list(map(repr, s1)) == list(map(repr, s2)) and len(d1)
 
 
@@ -2396,6 +2412,33 @@ def test_decoded_postings_share_the_row_group_budget(spark, small_groups, monkey
             assert rows(QUERIES) == want, budget
             assert ps.ROW_GROUPS.nbytes <= budget, budget
     idx.close()
+
+
+def test_files_key_rehashes_where_it_is_unpickled(tmp_path):
+    """``postings_store._Files``, part of every decoded-postings cache
+    key, pickles by its tuple of files: loaded in a process with another
+    ``PYTHONHASHSEED`` (PySpark starts its workers with 0), its hash
+    equals that of an equal ``_Files`` built there, so the directory a
+    Spark task unpickles keys the cache as one built in the worker does."""
+    import pickle
+    import subprocess
+    import sys
+
+    from simplir_spark.operators.postings_store import _Files
+
+    blob = tmp_path / "files.pkl"
+    blob.write_bytes(pickle.dumps(_Files((("/idx/postings/part-00000.parquet", 1234, 5678),))))
+    script = (
+        "import pickle, sys\n"
+        f"sys.path.insert(0, {str(ROOT)!r})\n"
+        "from simplir_spark.operators.postings_store import _Files\n"
+        f"back = pickle.loads(open({str(blob)!r}, 'rb').read())\n"
+        "print(hash(back) == hash(_Files(back.files)), back == _Files(back.files))\n"
+    )
+    for seed in ("0", "1"):
+        env = {**os.environ, "PYTHONHASHSEED": seed}
+        out = subprocess.run([sys.executable, "-c", script], env=env, capture_output=True, text=True, check=True)
+        assert out.stdout.split() == ["True", "True"], (seed, out.stdout, out.stderr)
 
 
 def test_rewritten_postings_never_serve_cached_rows(spark, corpus_small, tmp_path):
