@@ -1,23 +1,23 @@
-"""Index merge — the Spark re-expression of ``DiskIndex.merge``
-(simplir-disk-index/src/SimplIR/DiskIndex.hs:121-139):
+"""Index merge — ``DiskIndex.merge``
+(simplir-disk-index/src/SimplIR/DiskIndex.hs:121-139) as a metadata
+rewrite on the driver, in pyarrow, with no Spark job:
 
 1. per-source doc-id offsets = exclusive scan over source doc counts
-   (mapAccumL in Document.hs:62-76) — computed driver-side from each
-   source's corpus_stats.json (no job);
-2. docmeta = union with ``did + offset`` re-basing;
-3. postings = union with ``start_did/end_did + offset`` — the delta blobs
-   are NOT rewritten (chunk-level DocIdDelta shifting, Posting2/Merge.hs:47-69);
-   merged runs of a term are globally doc-sorted because source did ranges
-   are disjoint and increasing, the v1 deterministic rule
-   (Posting/Merge.hs:87-99, SURVEY.md §4.4);
-4. term_stats = groupBy(term) re-aggregation (addCorpusStats's HashMap
-   unionWith, CorpusStats.hs:89-104);
+   (mapAccumL in Document.hs:62-76), from each source's corpus_stats.json;
+2. docmeta = each source's part files in order, with ``did + offset``;
+3. postings = each source's part files in order, with ``start_did/end_did
+   + offset`` — the delta blobs are NOT rewritten (chunk-level DocIdDelta
+   shifting, Posting2/Merge.hs:47-69); merged runs of a term are globally
+   doc-sorted because source did ranges are disjoint and increasing, the
+   v1 deterministic rule (Posting/Merge.hs:87-99, SURVEY.md §4.4);
+4. term_stats = one group_by(term) re-aggregation of the sources' rows
+   (addCorpusStats's HashMap unionWith, CorpusStats.hs:89-104);
 5. corpus_stats = scalar sums.
 
 Hierarchical merging for many sources mirrors ``treeReduce`` fan-in 64
-(Build.hs:41,52-77): a driver loop merges <=64 sources per level.  Union +
-re-aggregation is shuffle-free for docmeta/postings (narrow union; writes
-preserve source partitioning) and shuffle-light for term_stats.
+(Build.hs:41,52-77): a driver loop merges <=64 sources per level.  Each
+input part file becomes one output part file, read and written one at a
+time, so a merge holds one part file's table (plus term_stats) in memory.
 """
 
 from __future__ import annotations
@@ -25,11 +25,14 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from simplir_spark.functions import codec
 from simplir_spark.operators.index_build import (
@@ -38,7 +41,7 @@ from simplir_spark.operators.index_build import (
     IndexPaths,
     open_index,
 )
-from simplir_spark.plans.pipeline import parquet_writer
+from simplir_spark.plans.pipeline import parquet_writer, write_table_dir
 from simplir_spark.schema import POSTINGS_SCHEMA
 
 MERGE_FAN_IN = 64  # Build.hs:41
@@ -46,7 +49,9 @@ MERGE_FAN_IN = 64  # Build.hs:41
 
 def merge_indexes(spark: SparkSession, sources: list[str], out_dir: str) -> IndexPaths:
     """Merge index directories into ``out_dir``, ``MERGE_FAN_IN`` sources
-    at a time (hierarchically past that)."""
+    at a time (hierarchically past that).  The merge runs on the driver
+    and never uses ``spark``; the argument keeps the signature of the
+    other index operators."""
     if not sources:
         raise ValueError("no sources")
     level = 0
@@ -57,11 +62,11 @@ def merge_indexes(spark: SparkSession, sources: list[str], out_dir: str) -> Inde
         for gi in range(0, len(current), MERGE_FAN_IN):
             group = current[gi : gi + MERGE_FAN_IN]
             dst = os.path.join(out_dir, f"_level{level}", f"g{gi // MERGE_FAN_IN}")
-            next_level.append(str(_merge_group(spark, group, dst).root))
+            next_level.append(str(_merge_group(group, dst).root))
         current = next_level
         levels.append(os.path.join(out_dir, f"_level{level}"))
         level += 1
-    out = _merge_group(spark, current, out_dir)
+    out = _merge_group(current, out_dir)
     # the _level trees are pure temporaries: once the final merge is
     # written they only double the directory's footprint and look like
     # sibling indexes to anything scanning out_dir
@@ -70,47 +75,85 @@ def merge_indexes(spark: SparkSession, sources: list[str], out_dir: str) -> Inde
     return out
 
 
-def _merge_group(spark: SparkSession, sources: list[str], out_dir: str) -> IndexPaths:
-    os.makedirs(out_dir, exist_ok=True)
-    handles = [open_index(spark, s) for s in sources]
+def _part_files(table_dir: str) -> list[str]:
+    """A table directory's parquet part files, in Spark's part order."""
+    return sorted(os.path.join(table_dir, f) for f in os.listdir(table_dir) if f.endswith(".parquet"))
+
+
+class _SourceTable:
+    """One table (docmeta, postings or term_stats) of a merge group's
+    sources, read part file by part file in the schema of the first
+    source's first part file.  A part file whose columns differ from it
+    raises, as Spark's ``unionByName`` does; types are cast to it."""
+
+    def __init__(self, dirs: list[str]):
+        self.files = [_part_files(d) for d in dirs]
+        first = next((f for fs in self.files for f in fs), None)
+        if first is None:
+            raise ValueError(f"merge_indexes: no source has a parquet part file in {dirs}")
+        self.schema = pq.read_schema(first).remove_metadata()
+
+    def read(self, path: str) -> pa.Table:
+        with pq.ParquetFile(path) as f:
+            t = f.read()
+        if sorted(t.column_names) != sorted(self.schema.names):
+            raise ValueError(
+                f"merge_indexes: {path} has columns {t.column_names}, expected {self.schema.names}"
+            )
+        return t.select(self.schema.names).cast(self.schema)
+
+    def shifted(self, offsets: list[int], cols: tuple[str, ...]) -> Iterator[pa.Table]:
+        """Every part file of every source, in order, with the source's
+        did offset added to ``cols``."""
+        for files, off in zip(self.files, offsets):
+            for path in files:
+                t = self.read(path)
+                for c in cols:
+                    i = t.schema.get_field_index(c)
+                    t = t.set_column(i, self.schema.field(c), pc.add_checked(t[c], pa.scalar(off, t[c].type)))
+                yield t
+
+
+def _merge_group(sources: list[str], out_dir: str) -> IndexPaths:
+    srcs = [IndexPaths(s) for s in sources]
+    stats = []
+    for src in srcs:
+        with open(src.corpus_stats) as f:
+            stats.append(json.load(f))
 
     # exclusive scan of doc counts -> per-source offsets (Document.hs:62-76)
     offsets = []
     acc = 0
-    for h in handles:
+    for cs in stats:
         offsets.append(acc)
-        acc += h.doc_count
+        acc += int(cs["doc_count"])
 
     paths = IndexPaths(out_dir)
+    os.makedirs(out_dir, exist_ok=True)
+    docmeta = _SourceTable([s.docmeta for s in srcs])
+    write_table_dir(paths.docmeta, docmeta.shifted(offsets, ("did",)))
+    postings = _SourceTable([s.postings for s in srcs])
+    write_table_dir(
+        paths.postings, postings.shifted(offsets, ("start_did", "end_did")), POSTINGS_ROW_GROUP_RUNS
+    )
 
-    docmeta = None
-    for h, off in zip(handles, offsets):
-        part = h.docmeta.withColumn("did", F.col("did") + F.lit(off))
-        docmeta = part if docmeta is None else docmeta.unionByName(part)
-    parquet_writer(docmeta).parquet(paths.docmeta)
+    ts = _SourceTable([s.term_stats for s in srcs])
+    term_stats = (
+        pa.concat_tables(ts.read(p) for fs in ts.files for p in fs)
+        .group_by("term")
+        .aggregate([("df", "sum"), ("cf", "sum")])
+        .select(["term", "df_sum", "cf_sum"])
+        .rename_columns(["term", "df", "cf"])
+        .sort_by("term")
+    )
+    write_table_dir(paths.term_stats, [term_stats.cast(ts.schema)])
 
-    postings = None
-    for h, off in zip(handles, offsets):
-        part = h.postings.withColumn(
-            "start_did", F.col("start_did") + F.lit(off)
-        ).withColumn("end_did", F.col("end_did") + F.lit(off))
-        postings = part if postings is None else postings.unionByName(part)
-    parquet_writer(postings, POSTINGS_ROW_GROUP_RUNS).parquet(paths.postings)
-
-    ts = None
-    for h in handles:
-        ts = h.term_stats if ts is None else ts.unionByName(h.term_stats)
-    term_stats = ts.groupBy("term").agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-    parquet_writer(term_stats).parquet(paths.term_stats)
-
-    stats = {"doc_count": 0, "token_count": 0, "token_count_alnum": 0}
-    for h in handles:
-        with open(h.paths.corpus_stats) as f:
-            cs = json.load(f)
-        for k in stats:
-            stats[k] += int(cs.get(k, 0))
+    total = {"doc_count": 0, "token_count": 0, "token_count_alnum": 0}
+    for cs in stats:
+        for k in total:
+            total[k] += int(cs.get(k, 0))
     with open(paths.corpus_stats, "w") as f:
-        json.dump(stats, f, indent=1)
+        json.dump(total, f, indent=1)
     return paths
 
 

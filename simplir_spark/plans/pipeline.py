@@ -18,7 +18,7 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, Iterable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -27,6 +27,25 @@ from pyspark.sql import DataFrame, DataFrameWriter
 # Every table a stage writes is zstd-compressed, by pyarrow and by Spark
 # alike.
 PARQUET_CODEC = "zstd"
+
+# The columns a pyarrow write dictionary-encodes; every other column is
+# written plain.  pyarrow's default dictionary-encodes every column, which
+# only adds a dictionary page to a column that is unique per row (term,
+# doc_key, path, sha256, dids, the deltas and dls blobs) or whose values
+# repeat too little to pay for one (df, cf, doc lengths, positions).
+# Bytes of the seed-11 perfbench query_serve index, driver-built, zstd,
+# its tables rewritten with each encoding (the positional column: the
+# same corpus built with positions):
+#
+#   encoding                              index bytes   positional
+#   dictionary on every column (default)    2,414,089    2,987,224
+#   dictionary off everywhere               2,144,352    2,697,708
+#   dictionary on these columns only        2,090,921    2,644,328
+#
+# Each of these columns is smaller with a dictionary on that index, and
+# each other column larger (df and cf by 3.8 KB each, pos by 21 KB).
+# Names a table does not have are ignored, so one list serves every table.
+PARQUET_DICTIONARY_COLUMNS = ("n", "max_tf", "sum_tf", "tfs", "repo", "lang")
 
 
 def parquet_writer(df: DataFrame, row_group_rows: int | None = None) -> DataFrameWriter:
@@ -37,6 +56,26 @@ def parquet_writer(df: DataFrame, row_group_rows: int | None = None) -> DataFram
     if row_group_rows is not None:
         writer = writer.option("parquet.block.row.count.limit", row_group_rows)
     return writer
+
+
+def write_table_dir(out: str, tables: Iterable[pa.Table], row_group_rows: int | None = None) -> None:
+    """Replace the table directory ``out`` with one parquet part file per
+    table of ``tables``, in order, then ``_SUCCESS``: the layout Spark's
+    overwriting writer leaves, written by pyarrow in ``PARQUET_CODEC``
+    and ``PARQUET_DICTIONARY_COLUMNS``, with row groups of at most
+    ``row_group_rows`` rows when given.  ``tables`` is consumed one table
+    at a time, after ``out`` is emptied."""
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    for i, table in enumerate(tables):
+        pq.write_table(
+            table,
+            os.path.join(out, f"part-{i:05d}.{PARQUET_CODEC}.parquet"),
+            compression=PARQUET_CODEC,
+            use_dictionary=list(PARQUET_DICTIONARY_COLUMNS),
+            row_group_size=row_group_rows,
+        )
+    open(os.path.join(out, "_SUCCESS"), "w").close()
 
 
 def _fingerprint(obj) -> str:
@@ -166,10 +205,9 @@ class PipelineRunner:
         row_group_rows: int | None = None,
     ) -> StageResult:
         """Driver-side twin of :meth:`run_df_stage`: ``build`` returns a
-        pyarrow Table, written as one parquet part file plus ``_SUCCESS``
-        (the layout Spark's writer leaves, replacing whatever the output
-        directory held) under the same resume rule and manifest, in the
-        same codec and row-group bound.
+        pyarrow Table, written by :func:`write_table_dir` as one part file
+        under the same resume rule and manifest, in the same codec and
+        row-group bound.
         ``write=False`` records the manifest only: the stage lives in
         memory, and a consumer re-run on resume rebuilds it."""
         out = os.path.join(self.out_dir, name)
@@ -182,15 +220,7 @@ class PipelineRunner:
         table = build()
         if not write:
             return self._record(name, fp, time.time() - t0, None, table.num_rows)
-        shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out)
-        pq.write_table(
-            table,
-            os.path.join(out, f"part-00000.{PARQUET_CODEC}.parquet"),
-            compression=PARQUET_CODEC,
-            row_group_size=row_group_rows,
-        )
-        open(os.path.join(out, "_SUCCESS"), "w").close()
+        write_table_dir(out, [table], row_group_rows)
         return self._record(name, fp, time.time() - t0, out)
 
     def run_json_stage(self, name: str, build: Callable[[], dict], upstream: list[str] = ()) -> StageResult:

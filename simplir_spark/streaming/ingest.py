@@ -5,9 +5,9 @@ its chunked build (buildIndex: chunk -> temp index -> treeReduce merge,
 simplir-disk-index/src/SimplIR/DiskIndex/Build.hs:34-50) maps naturally
 onto micro-batches: each foreachBatch builds a self-contained chunk index
 (local dense ids), and ``merge_indexes`` re-bases ids and concatenates
-runs — so the streaming path reuses the exact batch build + merge
-machinery, and resumability comes from the streaming checkpoint +
-already-written chunk dirs.
+runs on the driver, in pyarrow, with no Spark job — so the streaming path
+reuses the exact batch build + merge machinery, and resumability comes
+from the streaming checkpoint + already-written chunk dirs.
 
 Also provides a watermarked windowed aggregation over an event stream —
 the standard Structured Streaming shape (not in the reference; included

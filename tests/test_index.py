@@ -221,6 +221,11 @@ def test_merge_equals_full_build(spark, corpus_small, index_dir, oracle_idx, tmp
     a = {(r.did, r.doc_key, r.doc_len) for r in mi.docmeta.collect()}
     b = {(r.did, r.doc_key, r.doc_len) for r in fi.docmeta.collect()}
     assert a == b
+    # the merge writes each table in the build's Arrow schema: types
+    # (string, not large_string) and nullability
+    merged_tables, full_tables = _index_tables(merged_dir), _index_tables(index_dir)
+    for name in ("docmeta", "postings", "term_stats"):
+        assert merged_tables[name].schema == full_tables[name].schema, name
     # and the merged index answers queries rank-identically
     got_q = bm25_indexed(spark, mi, QUERIES[:6], k=K).collect()
     by_q: dict[str, list] = {}
@@ -1739,20 +1744,76 @@ def test_driver_build_over_partitioned_index_leaves_no_stale_parts(spark, corpus
     _assert_same_index(out, str(tmp_path / "fresh"))
 
 
-def test_merge_of_driver_and_spark_chunks(spark, corpus_small, tmp_path):
-    """merge_indexes over one driver-built and one Spark-built chunk
-    equals the merge of the two chunks both built by Spark: the
-    pyarrow-written tables read and union like Spark-written ones."""
+def test_merge_of_driver_and_spark_chunks(spark, corpus_small, tmp_path, monkeypatch):
+    """merge_indexes over driver-built and Spark-built chunks runs on the
+    driver, with no Spark job and no py4j call, and its tables equal the
+    merge with each driver-built chunk replaced by its Spark build at one
+    partition: pyarrow-written tables merge like Spark-written ones."""
     keys = sorted(r.doc_key for r in corpus_small.select("doc_key").collect())
-    cut = keys[len(keys) // 2]
-    lo, hi = corpus_small.filter(F.col("doc_key") < cut), corpus_small.filter(F.col("doc_key") >= cut)
-    build_index(spark, lo, str(tmp_path / "lo_driver"), run_size=64)
-    _assert_driver_built(str(tmp_path / "lo_driver"))
-    build_index(spark, lo, str(tmp_path / "lo_spark"), n_partitions=1, run_size=64)
-    build_index(spark, hi, str(tmp_path / "hi_spark"), n_partitions=2, run_size=64)
-    merge_indexes(spark, [str(tmp_path / "lo_driver"), str(tmp_path / "hi_spark")], str(tmp_path / "mixed"))
-    merge_indexes(spark, [str(tmp_path / "lo_spark"), str(tmp_path / "hi_spark")], str(tmp_path / "spark"))
-    _assert_same_index(str(tmp_path / "mixed"), str(tmp_path / "spark"))
+    cut1, cut2 = keys[len(keys) // 3], keys[2 * len(keys) // 3]
+    parts = [
+        corpus_small.filter(F.col("doc_key") < cut1),
+        corpus_small.filter((F.col("doc_key") >= cut1) & (F.col("doc_key") < cut2)),
+        corpus_small.filter(F.col("doc_key") >= cut2),
+    ]
+    srcs, spark_srcs = [], []
+    for i, part in enumerate(parts):
+        srcs.append(str(tmp_path / f"src{i}"))
+        if i == 1:
+            build_index(spark, part, srcs[-1], n_partitions=2, run_size=64)
+            spark_srcs.append(srcs[-1])
+        else:
+            build_index(spark, part, srcs[-1], run_size=64)
+            _assert_driver_built(srcs[-1])
+            spark_srcs.append(str(tmp_path / f"spark{i}"))
+            build_index(spark, part, spark_srcs[-1], n_partitions=1, run_size=64)
+    out = str(tmp_path / "mixed")
+    (paths, sent), jobs = _jobs_run(spark, lambda: _py4j_calls(monkeypatch, lambda: merge_indexes(spark, srcs, out)))
+    assert jobs == 0 and sent == []
+    assert paths.root == out
+    merge_indexes(spark, spark_srcs, str(tmp_path / "spark"))
+    _assert_same_index(out, str(tmp_path / "spark"))
+
+
+def test_positional_merge_equals_full_build(spark, corpus_small, tmp_path):
+    """A driver-built and a Spark-built positional source merge into the
+    full positional build: the full build at two partitions, split where
+    its range exchange split the docs, so both hold the same runs.  The
+    merged and the full index give the same phrase rows."""
+    import pyarrow.dataset as pds
+
+    from simplir_spark.operators.phrase import phrase_match_positional
+
+    full = str(tmp_path / "full")
+    build_index(spark, corpus_small, full, n_partitions=2, run_size=64, with_positions=True)
+    docmeta = _index_tables(full)["docmeta"]
+    # the cut is the first doc of the second range partition: the chunk
+    # checkpoint tags each doc row with its partition
+    doc_parts = pds.dataset(os.path.join(full, "chunks"), format="parquet").to_table(
+        columns=["part"], filter=pds.field("row_kind") == 0
+    )
+    first = doc_parts["part"].to_pylist().count(0)
+    assert 0 < first < docmeta.num_rows
+    cut = docmeta["doc_key"][first].as_py()
+    lo = corpus_small.filter(F.col("doc_key") < cut)
+    hi = corpus_small.filter(F.col("doc_key") >= cut)
+    build_index(spark, lo, str(tmp_path / "lo"), run_size=64, with_positions=True)
+    _assert_driver_built(str(tmp_path / "lo"))
+    build_index(spark, hi, str(tmp_path / "hi"), n_partitions=1, run_size=64, with_positions=True)
+    merged = str(tmp_path / "merged")
+    merge_indexes(spark, [str(tmp_path / "lo"), str(tmp_path / "hi")], merged)
+    _assert_same_index(merged, full)
+
+    phrases = [
+        ("P1", ["hash", "join"]), ("P2", ["batch", "batch"]), ("P3", ["order", "sort"]),
+        ("P4", ["customer", "customer", "small"]), ("P5", ["spark"]), ("P6", ["join", "zebra"]),
+    ]
+    rows = {}
+    for root in (merged, full):
+        idx = open_index(spark, root)
+        rows[root] = sorted(tuple(r) for r in phrase_match_positional(spark, idx, phrases).collect())
+        idx.close()
+    assert rows[merged] == rows[full] and rows[full]
 
 
 # ---------------------------------------------------------------------------
