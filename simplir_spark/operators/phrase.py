@@ -31,21 +31,12 @@ from typing import NamedTuple
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from simplir_spark.functions import codec
 from simplir_spark.operators.index_build import IndexHandle
 from simplir_spark.operators.local_frame import LocalFrame
-from simplir_spark.operators.query_indexed import (
-    _driver_scores,
-    _on_driver,
-    _query_terms,
-    _spark_scores,
-    _term_bounds,
-    _term_stats,
-    _tile_rows,
-)
+from simplir_spark.operators.query_indexed import _score_request, _term_bounds, _tile_rows
 
 
 def phrase_match_scan(
@@ -167,7 +158,6 @@ class PhraseScorer(NamedTuple):
 
 
 _PHRASE_COLS = ("start_did", "end_did", "n", "deltas", "tfs", "dls", "pos")
-# the driver path's result schema, built once
 _PHRASE_SCHEMA = T.StructType(
     [
         T.StructField("phrase_id", T.StringType()),
@@ -190,17 +180,17 @@ def phrase_match_positional(
     Spark job.
 
     A phrase is a query to the indexed planner that BM25 and QL use
-    (``query_indexed``), with ``PhraseScorer`` as its scorer; the planner's
-    path rule (``_on_driver``) picks where it runs.  On the driver
-    (``_driver_scores``): the phrase terms' runs from their row groups,
-    each phrase intersected over the whole did range on the driver's
-    cores, and a driver-local DataFrame returned (``LocalFrame``): no
-    Spark job and no JVM call, at the call or at its collect.  On Spark
-    (``_spark_scores``): tasks of (phrase share x did tile), each reading
-    its phrases' runs through the index's row-group directory and
-    intersecting each phrase over its tile, decoding only the runs that
-    overlap it; a doc's complete position data lies in one tile, so tile
-    outputs union exactly.
+    (``query_indexed._score_request``), with ``PhraseScorer`` as its
+    scorer; the planner's path rule picks where it runs.  On the driver:
+    the phrase terms' runs from their row groups, each phrase intersected
+    over the whole did range on the driver's cores.  On Spark: one job
+    of (phrase share x did tile) tasks, each reading its phrases' runs
+    through the index's row-group directory and intersecting each phrase
+    over its tile, decoding only the runs that overlap it; a doc's
+    complete position data lies in one tile, so tile outputs union
+    exactly.  Either way the result is a driver-local DataFrame
+    (``LocalFrame``) whose collect runs no Spark job and makes no JVM
+    call.
     """
     ids = [pid for pid, _ in phrases]
     if len(set(ids)) != len(ids):
@@ -208,21 +198,16 @@ def phrase_match_positional(
     if not index.positional:
         raise ValueError("index was not built with_positions=True")
     scorer = PhraseScorer(dict(phrases))
-    if _on_driver(index, phrases):
-        hits = _driver_scores(spark, index, phrases, scorer, _PHRASE_COLS)
-        table = pa.table(
-            {
-                "phrase_id": pa.array([pid for pid, d, _ in hits for _ in range(len(d))], pa.string()),
-                "did": np.concatenate([_NONE, *(d for _, d, _ in hits)]),
-                "tf": np.concatenate([_NONE, *(tf for _, _, tf in hits)]),
-            }
-        )
-        return LocalFrame(spark, table, _PHRASE_SCHEMA)
-    stats = _term_stats(index, _query_terms(phrases))
-    scored = _spark_scores(spark, index, phrases, scorer, _PHRASE_COLS, stats)
-    return scored.select(
-        F.col("query_id").alias("phrase_id"), "did", F.col("score").cast("long").alias("tf")
+    hits = _score_request(spark, index, phrases, lambda stats: scorer, _PHRASE_COLS)
+    table = pa.table(
+        {
+            "phrase_id": pa.array([pid for pid, d, _ in hits for _ in range(len(d))], pa.string()),
+            "did": np.concatenate([_NONE, *(d for _, d, _ in hits)]),
+            # the Spark path's tile tasks return their values as doubles
+            "tf": np.concatenate([_NONE, *(tf for _, _, tf in hits)]).astype(np.int64, copy=False),
+        }
     )
+    return LocalFrame(spark, table, _PHRASE_SCHEMA)
 
 
 def phrase_unit_rows(

@@ -11,8 +11,11 @@ BM25 and QL build theirs from the request's term stats (df, cf) and rank
 its top-k (``_indexed_topk``); a phrase returns its (did, tf) rows.
 
 Two paths run the same scorer, and ``_on_driver`` picks one from the
-request and the index alone; each has one scoring step that all three
-operators share (``_driver_scores``, ``_spark_scores``):
+request and the index alone (``_score_request``); each has one scoring
+step that all three operators share (``_driver_scores``,
+``_spark_scores``), and both return each query's hits to the driver, so
+each operator has one finish: a driver-local DataFrame
+(``local_frame.LocalFrame``) whose collect runs no Spark job.
 
   * driver — when doc_count <= ``_MAX_SPAN`` (one dense accumulator holds
     the whole did range) and the request's work is within
@@ -29,21 +32,17 @@ operators share (``_driver_scores``, ``_spark_scores``):
     over the driver's cores.  A phrase request, which needs positions,
     scores each phrase over its encoded runs on the driver's cores
     (``score_pool``: shares of whole queries, the caller scoring one and
-    forked workers the rest).  Dids map to doc_keys through the
-    did-indexed doc_key array.  The result is a driver-local DataFrame
-    over the Arrow table the request built (``local_frame.LocalFrame``):
-    the request and its collect run no Spark job and make no JVM call
-    (``_driver_topk``).
+    forked workers the rest).  No Spark job runs.
   * Spark — every other request.  ONE stage of (query share x did tile)
     tasks: a share is a set of whole queries (``score_pool._split`` over
     ``_query_work``), a tile a [lo, hi) did range (``_did_tiles``), and
     the job is ``spark.range`` over the tasks feeding one ``mapInArrow``.
     Each task reads every run of its share's terms through the handle's
     ``PostingsDirectory``, as the driver does, and scores each query over
-    its tile (``_spark_scores``); the per-tile top-k candidates are
-    ranked by a window and joined to docmeta lazily (``_finish_topk``).
-    No scan, join or exchange feeds the scoring, and nothing is collected
-    on the driver but, past the accumulator cap, the request's term stats.
+    its tile; the driver collects the stage, the request's one Spark job,
+    and merges each query's per-tile top-k lists (``_spark_scores``).
+    Past the accumulator cap, term stats and doc_keys come from parquet
+    reads filtered to the request (``_term_stats``, ``_doc_keys``).
 
 The lexicon (term -> df, cf), the postings' row-group directory and the
 doc_key array are the ``IndexHandle``'s resident parts, each built on its
@@ -101,8 +100,9 @@ from typing import Callable, NamedTuple
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from simplir_spark.functions import codec
@@ -129,30 +129,29 @@ _MIN_SHARD_SPAN = 1 << 16
 _MAX_SPAN = 1 << 22
 # Driver-path budget of a request (``_on_driver``), in postings: each
 # query counts its distinct terms' df plus ``_DRIVER_QUERY_POSTINGS`` for
-# its fixed cost.  Measured with the columnar kernel on the 2,000-file
-# perfbench index (seed 1), 4 vCPU, BM25 k=10, 3-term queries drawn from
-# the head (top 50 terms by df), torso (next 1,950) or tail (the rest),
-# min of 3 per request in each of two runs (the lower shown; the runs
-# differ by up to 50% on Spark).  A least-squares fit of the driver
-# wall gives 1.0-1.3 ms per query and 0.29-0.40 us per posting, i.e. a
-# query's fixed cost is ~2,600-4,400 postings (2^12 here); the Spark
-# path pays ~0.8-1.3 s of jobs and spreads the work over all cores.
-# Driver vs forced Spark, by this count (work = queries * 2^12 + df):
-#   tail   64 (0.26M) 0.08 vs 1.14 s   tail 1024 (4.20M) 1.02 vs 3.84 s
-#   tail 2048 (8.40M) 1.46 vs 4.75 s   torso 512 (2.17M) 0.64 vs 1.56 s
-#   torso 1024 (4.35M) 1.23 vs 2.05 s  torso 2048 (8.70M) 2.95 vs 2.74 s
-#   head  64 (0.46M) 0.18 vs 0.82 s    head 256 (1.83M) 0.63 vs 1.38 s
-#   head 512 (3.63M) 1.18 vs 1.41 s    head 768 (5.48M) 1.84 vs 1.81 s
-#   head 1024 (7.28M) 2.12 vs 1.60 s
-# The budget sits between the largest requests the driver won in both
-# runs (torso 1024, head 512) and the head-term requests where Spark
-# caught up (768) or won (1024).  Tail-only batches favour the driver
-# more than this count says (with thousands of distinct terms the Spark
-# path slows per query), so past the budget they are the rule's worst
-# case: 2,048 tail queries take Spark, 3x slower than the driver.  The
-# table was measured with the driver scoring on one thread; now that
-# ``score_pool`` scores a request on every core, re-measuring it belongs
-# with the Spark-side crossovers (ROADMAP item 4).
+# its fixed cost.  Measured on the 2,000-file perfbench index (seed 1),
+# 4 vCPU, BM25 k=10, 3-term queries drawn from the head (top 50 terms by
+# df), torso (next 1,950) or tail (the rest), call + collect, min of 3
+# per request after a warm-up, in two runs of one session (the lower
+# shown): the driver's pooled batch kernel with its decoded postings
+# warm, and cold (``postings_store.ROW_GROUPS`` emptied before each
+# request), against forced Spark (one stage of tile tasks, merged on the
+# driver).  Driver warm / cold vs Spark, by this count
+# (work = queries * 2^12 + df):
+#   tail   64 (0.25M) 0.007/0.08 vs 0.43 s   tail 1024 (4.00M) 0.09/0.24 vs 0.79 s
+#   tail  256 (1.00M) 0.017/0.12 vs 0.52 s   tail 2048 (8.01M) 0.15/0.39 vs 0.97 s
+#   torso 512 (2.07M) 0.044/0.18 vs 0.56 s   torso 1024 (4.15M) 0.09/0.25 vs 0.77 s
+#   torso 2048 (8.31M) 0.19/0.32 vs 1.17 s   head 64 (0.43M) 0.009/0.08 vs 0.39 s
+#   head 256 (1.72M) 0.026/0.08 vs 0.47 s    head 512 (3.48M) 0.056/0.11 vs 0.63 s
+#   head 768 (5.20M) 0.07/0.14 vs 0.75 s     head 1024 (6.95M) 0.09/0.14 vs 0.65 s
+# The driver won every request, 6-60x warm and 2.5-6x cold, so on this
+# index the crossover lies past the largest request measured, and the
+# table gives no value to move the budget to.  It stays where the older
+# table (one scoring thread, Spark's run-routing shuffle and window
+# finish) put it: the driver's batch cost also grows with doc_count
+# (each query fills a dense accumulator over every did, which this count
+# does not see), so a 2,000-doc index cannot size it for indexes of up
+# to ``_MAX_SPAN`` docs.
 _DRIVER_QUERY_POSTINGS = 1 << 12
 _DRIVER_DF_BUDGET = 6 << 20
 
@@ -472,22 +471,6 @@ def _ql_topk(
     return _daat_topk(runs, k, did_lo, did_hi, model, decode_counter)
 
 
-def _finish_topk(index: IndexHandle, scored: DataFrame, k: int) -> DataFrame:
-    """Global top-k of each query from its per-tile candidates
-    (``scored``: query_id, did, score), as (query_id, doc_key, rank,
-    score): a window rank by score descending, then did ascending — a
-    doc's complete score lives in exactly one tile, so this is exact —
-    joined to docmeta lazily, so nothing is collected on the driver and
-    the planner picks the join."""
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("did"))
-    topk = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    return (
-        index.docmeta.select("did", "doc_key")
-        .join(topk, "did")
-        .select("query_id", "doc_key", F.col("rank").cast("int").alias("rank"), "score")
-    )
-
-
 def _query_terms(queries: list[tuple[str, list[str]]]) -> list[str]:
     return sorted({t for _, terms in queries for t in terms})
 
@@ -496,15 +479,32 @@ def _query_terms(queries: list[tuple[str, list[str]]]) -> list[str]:
 _RUN_COLS = ("start_did", "end_did", "n", "max_tf", "deltas", "tfs", "dls")
 
 
+def _read_where(path: str, columns: list[str], key: str, values) -> pa.Table:
+    """The rows of the parquet table at ``path`` whose ``key`` is in ``values``."""
+    return ds.dataset(path, format="parquet").to_table(columns=columns, filter=pc.field(key).isin(values))
+
+
 def _term_stats(index: IndexHandle, terms: list[str]) -> dict[str, tuple[int, int]]:
     """term -> (df, cf) of the indexed ``terms``: from the lexicon when
-    doc_count <= ``_MAX_SPAN``, otherwise from one term_stats collect (an
-    index that no driver-path request can use never builds its lexicon)."""
+    doc_count <= ``_MAX_SPAN``, otherwise from one term_stats read
+    filtered to ``terms`` (an index that no driver-path request can use
+    never builds its lexicon)."""
     if index.doc_count > _MAX_SPAN:
-        rows = index.term_stats.filter(F.col("term").isin(terms)).select("term", "df", "cf").collect()
-        return {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
+        t = _read_where(index.paths.term_stats, ["term", "df", "cf"], "term", terms)
+        return dict(zip(t["term"].to_pylist(), zip(t["df"].to_pylist(), t["cf"].to_pylist())))
     lexicon = index.lexicon
     return {t: lexicon[t] for t in terms if t in lexicon}
+
+
+def _doc_keys(index: IndexHandle, dids: np.ndarray) -> pa.Array:
+    """The doc_key of each of ``dids``, under ``_term_stats``'s rule: from
+    the did-indexed doc_key array when doc_count <= ``_MAX_SPAN``,
+    otherwise from one docmeta read filtered to ``dids``."""
+    dids = pa.array(dids, pa.int64())
+    if index.doc_count <= _MAX_SPAN:
+        return index.doc_key_array.take(dids)
+    t = _read_where(index.paths.docmeta, ["did", "doc_key"], "did", pc.unique(dids))
+    return t["doc_key"].take(pc.index_in(dids, t["did"]))
 
 
 def _query_work(lexicon: dict, terms: list[str]) -> int:
@@ -527,7 +527,7 @@ def _on_driver(index: IndexHandle, queries: list[tuple[str, list[str]]]) -> bool
 
 @cache
 def _result_schema(key_type: T.DataType) -> T.StructType:
-    """The driver path's result schema for a doc_key type, built once."""
+    """A BM25 or QL result schema for a doc_key type, built once."""
     return T.StructType(
         [
             T.StructField("query_id", T.StringType()),
@@ -611,32 +611,6 @@ def _driver_scores(
     return [(qid, d, v) for (qid, _), (d, v) in zip(jobs, hits)]
 
 
-def _driver_topk(
-    spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], scorer
-) -> DataFrame:
-    """The ranked finish of the driver path (``_driver_scores``): the
-    kernel's top-k is already ranked, and dids map to doc_keys through the
-    did-indexed doc_key array.  The result is a driver-local DataFrame
-    over the Arrow table (``LocalFrame``): no Spark job runs and no JVM
-    call is made, now or at collect; a composed use (``select``,
-    ``join``, ...) builds its LocalRelation once."""
-    qids, dids, ranks, scores = [], [_NO_HITS[0]], [np.zeros(0, dtype=np.int32)], [_NO_HITS[1]]
-    for qid, d, s in _driver_scores(spark, index, queries, scorer, _RUN_COLS):
-        qids += [qid] * len(d)
-        dids.append(d)
-        ranks.append(np.arange(1, len(d) + 1, dtype=np.int32))
-        scores.append(s)
-    table = pa.table(
-        {
-            "query_id": pa.array(qids, pa.string()),
-            "doc_key": index.doc_key_array.take(pa.array(np.concatenate(dids), pa.int64())),
-            "rank": pa.array(np.concatenate(ranks), pa.int32()),
-            "score": pa.array(np.concatenate(scores), pa.float64()),
-        }
-    )
-    return LocalFrame(spark, table, _result_schema(index.doc_key_type))
-
-
 def _spark_scores(
     spark: SparkSession,
     index: IndexHandle,
@@ -644,10 +618,11 @@ def _spark_scores(
     scorer,
     cols: tuple[str, ...],
     stats: dict[str, tuple[int, int]],
-) -> DataFrame:
+) -> list[tuple[str, np.ndarray, np.ndarray]]:
     """The Spark path's scoring step, shared by every indexed operator:
-    the (query_id, did, score) rows ``scorer`` returns for each query over
-    each did tile, from ONE stage of (query share x did tile) tasks.
+    what ``_driver_scores`` returns, (query_id, dids, values) of each
+    query with a hit, in request order, from ONE stage of (query share x
+    did tile) tasks, collected once.
 
     The queries are split into min(defaultParallelism, queries) shares of
     whole queries, balanced by ``_query_work`` over the request's term
@@ -664,31 +639,56 @@ def _spark_scores(
     so every tile sums a doc's score in the whole-index term order
     (``_daat_topk``), and a doc lives in exactly one tile, so tile
     outputs union exactly (the distributed form of collectPostings'
-    doc-at-a-time union, Posting2/Collect.hs:53-82)."""
+    doc-at-a-time union, Posting2/Collect.hs:53-82).  The collect keeps
+    the tasks' order, so each query's tiles come in did order; a ranking
+    scorer's (one with a ``k``: BM25, QL) are merged into its top-k by
+    score, then did (``batch_kernel._top``), which is exact."""
     par = spark.sparkContext.defaultParallelism
     work = [_query_work(stats, terms) for _, terms in queries]
-    shares = [[queries[j] for j in s] for s in score_pool._split(work, min(par, len(queries)))]
+    shares = score_pool._split(work, min(par, len(queries)))
     tiles = _did_tiles(spark, len(queries), index.doc_count)
     tasks = [(share, lo, hi) for share in shares for lo, hi in tiles]
+    at = {qid: j for j, (qid, _) in enumerate(queries)}
     directory = index.postings_directory
 
     def kernel(batches):
         for batch in batches:
             for task in batch.column("id").to_pylist():
                 share, lo, hi = tasks[task]
-                runs, jobs = _query_jobs(directory.runs(_query_terms(share), ("term", *cols)), share)
+                sub = [queries[j] for j in share]
+                runs, jobs = _query_jobs(directory.runs(_query_terms(sub), ("term", *cols)), sub)
                 hits = score_pool._score_share(scorer, runs, jobs, lo, hi)
                 yield pa.RecordBatch.from_arrays(
                     [
-                        pa.array([qid for (qid, _), (d, _) in zip(jobs, hits) for _ in range(len(d))], pa.string()),
+                        pa.array(np.repeat([at[qid] for qid, _ in jobs], [len(d) for d, _ in hits]), pa.int64()),
                         pa.array(np.concatenate([_NO_HITS[0], *(d for d, _ in hits)]), pa.int64()),
                         pa.array(np.concatenate([_NO_HITS[1], *(v for _, v in hits)]), pa.float64()),
                     ],
-                    names=["query_id", "did", "score"],
+                    names=["q", "did", "value"],
                 )
 
     n = max(1, min(par, len(tasks)))
-    return spark.range(0, len(tasks), 1, n).mapInArrow(kernel, "query_id string, did long, score double")
+    got = spark.range(0, len(tasks), 1, n).mapInArrow(kernel, "q long, did long, value double").toArrow()
+    q = got["q"].to_numpy()
+    order = np.argsort(q, kind="stable")
+    q, dids, values = q[order], got["did"].to_numpy()[order], got["value"].to_numpy()[order]
+    starts = np.flatnonzero(np.diff(q, prepend=-1))
+    top = partial(bk._top, k=scorer.k) if hasattr(scorer, "k") else lambda d, v: (d, v)
+    return [(queries[q[a]][0], *top(dids[a:b], values[a:b])) for a, b in zip(starts, [*starts[1:], len(q)])]
+
+
+def _score_request(
+    spark: SparkSession, index: IndexHandle, queries: list[tuple[str, list[str]]], make_scorer, cols: tuple[str, ...]
+) -> list[tuple[str, np.ndarray, np.ndarray]]:
+    """The planner of every indexed request: (query_id, dids, values) of
+    each query with a hit, in request order, scored by
+    ``make_scorer(stats)`` over the runs' ``cols``, on the path
+    ``_on_driver`` picks (``_driver_scores`` or ``_spark_scores``)."""
+    stats = _term_stats(index, _query_terms(queries))
+    scorer = make_scorer(stats)
+    if _on_driver(index, queries):
+        return _driver_scores(spark, index, queries, scorer, cols)
+    return _spark_scores(spark, index, queries, scorer, cols, stats)
 
 
 class Bm25Scorer(NamedTuple):
@@ -739,26 +739,36 @@ def _indexed_topk(
     k: int,
     make_scorer,
 ) -> DataFrame:
-    """Top-k of every query under one retrieval model, as (query_id,
-    doc_key, rank, score) — the one planner of the indexed request path.
+    """Top-k of every query under one retrieval model, as a
+    ``LocalFrame`` of (query_id, doc_key, rank, score).
 
     ``make_scorer(stats, merged)`` returns the model's scorer
     (``Bm25Scorer``, ``QlScorer``): ``scorer(query_id, runs, lo, hi)``
     scores one query's runs (a ``pa.Table``) over the dids in [lo, hi)
     and returns its top-k there as (dids, scores); ``stats`` maps the
     request's indexed terms to (df, cf) and ``merged`` is ``queries``
-    after ``merge_query_entries``.  ``_on_driver`` picks the path: the
-    driver (``_driver_topk``) or Spark (``_spark_scores``, ranked by
-    ``_finish_topk``).
+    after ``merge_query_entries``.  On either path (``_score_request``)
+    each query's hits are its ranked top-k.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     queries = merge_query_entries(queries)
-    stats = _term_stats(index, _query_terms(queries))
-    scorer = make_scorer(stats, queries)
-    if _on_driver(index, queries):
-        return _driver_topk(spark, index, queries, scorer)
-    return _finish_topk(index, _spark_scores(spark, index, queries, scorer, _RUN_COLS, stats), k)
+    hits = _score_request(spark, index, queries, lambda stats: make_scorer(stats, queries), _RUN_COLS)
+    qids, dids, ranks, scores = [], [_NO_HITS[0]], [np.zeros(0, dtype=np.int32)], [_NO_HITS[1]]
+    for qid, d, s in hits:
+        qids += [qid] * len(d)
+        dids.append(d)
+        ranks.append(np.arange(1, len(d) + 1, dtype=np.int32))
+        scores.append(s)
+    table = pa.table(
+        {
+            "query_id": pa.array(qids, pa.string()),
+            "doc_key": _doc_keys(index, np.concatenate(dids)),
+            "rank": pa.array(np.concatenate(ranks), pa.int32()),
+            "score": pa.array(np.concatenate(scores), pa.float64()),
+        }
+    )
+    return LocalFrame(spark, table, _result_schema(index.doc_key_type))
 
 
 def bm25_indexed(
@@ -783,9 +793,10 @@ def bm25_indexed(
     decoded postings (``batch_kernel``), split over the driver's cores
     when it is large (``score_pool``), and comes back as a driver-local
     DataFrame (``LocalFrame``) whose collect runs no Spark job and makes
-    no JVM call.  Any other request returns a lazy plan: (query share x
-    did tile) scoring tasks on the cluster, ranked with a window and
-    joined to docmeta there.  Both paths give the same rows.
+    no JVM call.  Any other request runs one Spark job before return:
+    (query share x did tile) scoring tasks on the cluster, whose per-tile
+    top-k lists the driver merges into each query's top-k, returned as
+    the same driver-local DataFrame.  Both paths give the same rows.
     """
 
     def make_scorer(stats: dict, merged) -> Bm25Scorer:

@@ -28,13 +28,3 @@ QUERIES: list[tuple[str, list[str]]] = [
     ("Q15", ["column", "row", "line", "part", "batch"]),
     ("Q16", ["group", "the", "dup"]),
 ]
-
-
-def query_rows() -> list[tuple[str, str]]:
-    """Flatten to (query_id, term) rows with per-query term dedup
-    (HS.fromList, SimpleIndex.hs:142)."""
-    out = []
-    for qid, terms in QUERIES:
-        for t in sorted(set(terms)):
-            out.append((qid, t))
-    return out

@@ -472,28 +472,32 @@ def test_edge_case_build_matches_oracle(spark, tmp_path_factory, with_positions)
 
 def test_bm25_indexed_spark_plan_is_one_stage_of_tile_tasks(spark, index_dir, monkeypatch):
     """Plan audit for the Spark path of an indexed request (forced; the
-    driver serves this request by default).  The audit reads the SCORING
-    plan: a ``Range`` of the (query share x did tile) tasks feeds the
-    Arrow map directly, over min(defaultParallelism, tasks) partitions;
-    the tasks read their own postings, so the plan has no postings
-    ``FileScan``, no join and no ``Exchange``."""
+    driver serves this request by default).  The audit reads the plan of
+    the tile stage, the one DataFrame the request collects: a ``Range``
+    of the (query share x did tile) tasks feeds the Arrow map directly,
+    over min(defaultParallelism, tasks) partitions; the tasks read their
+    own postings, so the plan has no postings ``FileScan``, no join and
+    no ``Exchange``."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
     import simplir_spark.operators.query_indexed as qi
 
-    plans = {}
-    finish = qi._finish_topk
+    plans = []
+    to_arrow = DataFrame.toArrow
 
-    def spy_finish(index, scored, k):
-        # read before the result executes it: AQE then prints only the
-        # initial plan, once
-        plans["scoring"] = scored._jdf.queryExecution().executedPlan().toString()
-        return finish(index, scored, k)
+    def spy_to_arrow(df):
+        # read before the stage runs: AQE then prints only the initial
+        # plan, once
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return to_arrow(df)
 
-    monkeypatch.setattr(qi, "_finish_topk", spy_finish)
+    monkeypatch.setattr(DataFrame, "toArrow", spy_to_arrow)
     idx = open_index(spark, index_dir)
     for n_queries, n_shards in ((4, 1), (4, 2), (16, 1)):
         _force_shards(monkeypatch, n_shards)
         assert qi.bm25_indexed(spark, idx, QUERIES[:n_queries], k=5).collect()
-        plan = plans.pop("scoring")
+        (plan,) = plans
+        plans.clear()
         for absent in ("Join", "FileScan", "Exchange"):
             assert absent not in plan, (absent, plan)
         # shares = min(defaultParallelism, queries), tasks = shares x tiles
@@ -507,14 +511,14 @@ def test_bm25_indexed_spark_plan_is_one_stage_of_tile_tasks(spark, index_dir, mo
 def _jobs_run(spark, fn) -> tuple[object, int]:
     """(fn(), number of Spark jobs it ran).  Jobs that engine threads
     (broadcasts) submit carry no job group, so every job newer than the
-    last one seen before the call is counted."""
+    last one seen before the call, in either group, is counted."""
     sc = spark.sparkContext
 
     def settle():  # job status reaches the tracker through the listener bus
         sc._jsc.sc().listenerBus().waitUntilEmpty()
 
     settle()
-    last = max([-1, *sc.statusTracker().getJobIdsForGroup(None)])
+    last = max([-1, *(j for g in (None, "counted") for j in sc.statusTracker().getJobIdsForGroup(g))])
     sc.setJobGroup("counted", "counted")
     try:
         out = fn()
@@ -812,7 +816,8 @@ def test_driver_local_result_composes_like_the_relation(spark, index_dir, tmp_pa
     ``__spark_entry__``'s round-and-rerank ``select``, a (broadcast)
     ``join`` with docmeta, ``unionByName`` with a Spark-path result, a
     temp view queried by SQL, and ``cli query``'s ``write_trec_run``
-    file.  All of them share one relation, built on the first use."""
+    file.  All of them share one relation, built on the first use; the
+    Spark-path result, driver-local too, builds its own at the union."""
     from simplir_spark.operators.query import topk_ranked
     from simplir_spark.sources.trec import write_trec_run
 
@@ -833,6 +838,7 @@ def test_driver_local_result_composes_like_the_relation(spark, index_dir, tmp_pa
     docmeta = idx.docmeta.select("doc_key", "did")
     for join in (lambda df: df.join(docmeta, "doc_key"), lambda df: docmeta.join(F.broadcast(df), "doc_key")):
         assert sorted(join(res).collect()) == sorted(join(ref).collect())
+    assert len(built) == 1
     assert sorted(res.unionByName(on_spark).collect()) == sorted(ref.unionByName(on_spark).collect())
     sql = "select query_id, count(*) n, max(score) s, min(rank) r from {} group by query_id"
     views = {}
@@ -846,7 +852,7 @@ def test_driver_local_result_composes_like_the_relation(spark, index_dir, tmp_pa
         (part,) = [p for p in (tmp_path / name).iterdir() if p.name.startswith("part-")]
         runs[name] = part.read_text()
     assert runs["local"] == runs["ref"] and runs["ref"].count("\n") == ref.count() > 0
-    assert len(built) == 1
+    assert len(built) == 2
 
 
 def test_compact_postings_rejects_mixed_pos_buffers(spark):
@@ -1346,11 +1352,21 @@ def test_duplicate_query_ids_merge_not_double_score(spark, corpus_small, index_d
         assert got == want and got
 
 
+def _path_rows(spark, request, jobs: int) -> list[tuple]:
+    """The sorted (query_id, doc_key, rank, repr(score)) rows of
+    ``request()``, which must run ``jobs`` Spark jobs at the call (0 on
+    the driver path, 1 on the Spark path) and none at its collect."""
+    df, at_call = _jobs_run(spark, request)
+    rows, at_collect = _jobs_run(spark, df.collect)
+    assert (at_call, at_collect) == (jobs, 0)
+    return sorted((r.query_id, r.doc_key, r.rank, repr(r.score)) for r in rows)
+
+
 def test_driver_path_matches_spark_path(spark, index_dir, monkeypatch):
     """The two paths of an indexed request agree.  By default the driver
     serves these requests and returns a local relation; with the postings
-    budget forced to 0 they take the Spark path (did-tile scoring tasks,
-    window rank, lazy docmeta join).  Rows, scores to the last bit, must
+    budget forced to 0 they take the Spark path: one Spark job of did-tile
+    scoring tasks at the call, none at the collect.  Rows, scores to the last bit, must
     be identical for BM25, BM25 over 4 forced tiles and QL, with an
     absent-term query in the batch, and for BM25 and QL over 500
     three-term queries of the lexicon's tail terms (many queries per
@@ -1377,17 +1393,12 @@ def test_driver_path_matches_spark_path(spark, index_dir, monkeypatch):
     }
     n_rows = {"bm25_tail": 5000, "ql_tail": 5000}
 
-    def run(fn, want_op):
-        df = fn()
-        assert want_op in df._jdf.queryExecution().executedPlan().toString()
-        return sorted((r.query_id, r.doc_key, r.rank, repr(r.score)) for r in df.collect())
-
-    driver = {name: run(fn, "LocalTableScan") for name, fn in requests.items()}
+    driver = {name: _path_rows(spark, fn, 0) for name, fn in requests.items()}
     requests["bm25_4_shards"] = bm25_4_shards
     driver["bm25_4_shards"] = driver["bm25"]
     _force_spark(monkeypatch)
     for name, fn in requests.items():
-        on_spark = run(fn, "Window")
+        on_spark = _path_rows(spark, fn, 1)
         assert on_spark == driver[name] and len(on_spark) == n_rows.get(name, 20), name
 
 
@@ -1419,7 +1430,10 @@ def test_sharded_scores_sum_in_whole_index_term_order(spark, index_dir, monkeypa
 def test_path_selection_declines_oversized_requests(spark, index_dir, monkeypatch):
     """The driver declines a request whose queries' postings exceed the
     budget, and any request on an index past the dense-accumulator cap;
-    both take the Spark path and return the rows the driver returns."""
+    both take the Spark path (one Spark job at the call, none at the
+    collect) and return the rows the driver returns.  Past the cap the
+    request builds no whole-index structure on the driver: no lexicon,
+    doc_key array or Spark DataFrame of docmeta or term_stats."""
     import dataclasses
 
     import simplir_spark.operators.query_indexed as qi
@@ -1427,27 +1441,80 @@ def test_path_selection_declines_oversized_requests(spark, index_dir, monkeypatc
     idx = open_index(spark, index_dir)
     queries = [("q1", ["hash", "join"]), ("q2", ["customer", "order"])]
 
-    def rows(df, want_op):
-        assert want_op in df._jdf.queryExecution().executedPlan().toString()
-        return sorted((r.query_id, r.doc_key, r.rank, repr(r.score)) for r in df.collect())
-
-    want_bm25 = rows(qi.bm25_indexed(spark, idx, queries, k=10), "LocalTableScan")
-    want_ql = rows(qi.ql_dirichlet_indexed(spark, idx, queries, k=10), "LocalTableScan")
+    want_bm25 = _path_rows(spark, lambda: qi.bm25_indexed(spark, idx, queries, k=10), 0)
+    want_ql = _path_rows(spark, lambda: qi.ql_dirichlet_indexed(spark, idx, queries, k=10), 0)
     postings = sum(
         qi._DRIVER_QUERY_POSTINGS + sum(idx.lexicon.get(t, (0, 0))[0] for t in set(terms))
         for _, terms in queries
     )
     with monkeypatch.context() as m:
         m.setattr(qi, "_DRIVER_DF_BUDGET", postings - 1)
-        assert rows(qi.bm25_indexed(spark, idx, queries, k=10), "Window") == want_bm25
+        assert _path_rows(spark, lambda: qi.bm25_indexed(spark, idx, queries, k=10), 1) == want_bm25
     with monkeypatch.context() as m:
         m.setattr(qi, "_DRIVER_DF_BUDGET", postings)
-        assert rows(qi.bm25_indexed(spark, idx, queries, k=10), "LocalTableScan") == want_bm25
+        assert _path_rows(spark, lambda: qi.bm25_indexed(spark, idx, queries, k=10), 0) == want_bm25
     # QL scores do not depend on doc_count, so the same rows must come
     # back from an index that claims more docs than one accumulator holds
     big = dataclasses.replace(idx, doc_count=qi._MAX_SPAN + 1)
-    assert rows(qi.ql_dirichlet_indexed(spark, big, queries, k=10), "Window") == want_ql
-    assert "lexicon" not in vars(big)  # the Spark path never builds it
+    assert _path_rows(spark, lambda: qi.ql_dirichlet_indexed(spark, big, queries, k=10), 1) == want_ql
+    assert not {"lexicon", "doc_key_array", "docmeta", "term_stats"} & vars(big).keys(), vars(big).keys()
+
+
+def test_spark_path_returns_driver_local_frame(spark, index_dir, tmp_path, monkeypatch):
+    """A forced-Spark BM25, QL or positional-phrase request returns a
+    driver-local DataFrame (``LocalFrame``): the call runs exactly one
+    Spark job (the tile stage), its collect none, and the request never
+    builds the docmeta DataFrame."""
+    import simplir_spark.operators.query_indexed as qi
+    from simplir_spark.operators.local_frame import LocalFrame
+    from simplir_spark.operators.phrase import phrase_match_positional
+
+    corpus = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "beta gamma alpha beta")], "doc_key long, content string"
+    )
+    build_index(spark, corpus, str(tmp_path / "pidx"), run_size=8, with_positions=True)
+    idx, pidx = open_index(spark, index_dir), open_index(spark, str(tmp_path / "pidx"))
+    requests = {
+        "bm25": (idx, lambda: bm25_indexed(spark, idx, QUERIES, k=K)),
+        "ql": (idx, lambda: qi.ql_dirichlet_indexed(spark, idx, QUERIES, k=K)),
+        "phrase": (pidx, lambda: phrase_match_positional(spark, pidx, [("P1", ["alpha", "beta"])])),
+    }
+    _force_spark(monkeypatch)
+    for name, (handle, request) in requests.items():
+        res, at_call = _jobs_run(spark, request)
+        rows, at_collect = _jobs_run(spark, res.collect)
+        assert isinstance(res, LocalFrame) and rows, name
+        assert (at_call, at_collect) == (1, 0), name
+        assert "docmeta" not in vars(handle), name
+
+
+def test_spark_path_ties_across_tiles_rank_by_did(spark, tmp_path, monkeypatch):
+    """Identical documents tie on score.  At forced 2 and 3 did tiles
+    they lie in different tiles, and ``k`` cuts inside the tie: the Spark
+    path's rows, ``repr(score)`` included, equal the driver path's, and
+    the tied docs rank by did."""
+    import simplir_spark.operators.query_indexed as qi
+
+    texts = [
+        "alpha gamma", "beta delta", "alpha beta", "gamma delta", "alpha beta",
+        "beta gamma", "alpha beta", "delta alpha", "alpha beta",
+    ]
+    corpus = spark.createDataFrame(list(enumerate(texts)), "doc_key long, content string")
+    build_index(spark, corpus, str(tmp_path / "ties"), run_size=2)
+    idx = open_index(spark, str(tmp_path / "ties"))
+    tied = [2, 4, 6, 8]  # doc_key = did
+    queries = [("q", ["alpha", "beta"])]
+    for fn in (bm25_indexed, qi.ql_dirichlet_indexed):
+        driver = _path_rows(spark, lambda: fn(spark, idx, queries, k=3), 0)
+        assert [(key, rank) for _, key, rank, _ in driver] == [(2, 1), (4, 2), (6, 3)], fn.__name__
+        assert len({score for *_, score in driver}) == 1, fn.__name__
+        for n_tiles in (2, 3):
+            with monkeypatch.context() as m:
+                _force_shards(m, n_tiles)
+                tiles = qi._did_tiles(spark, len(queries), idx.doc_count)
+                assert len({lo for lo, hi in tiles for d in tied if lo <= d < hi}) == n_tiles
+                on_spark = _path_rows(spark, lambda: fn(spark, idx, queries, k=3), 1)
+            assert on_spark == driver, (fn.__name__, n_tiles)
 
 
 def _input_form_runs():

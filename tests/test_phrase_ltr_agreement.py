@@ -52,11 +52,13 @@ def test_phrase_match_scan_vs_oracle(spark):
 
 def test_phrase_match_positional_raw_adjacency(spark, tmp_path_factory, monkeypatch):
     """Raw-token adjacency over a positional index, on the driver path
-    (the default here) and on the Spark path (postings budget forced to
-    0): identical rows."""
+    (the default here: no Spark job) and on the Spark path (postings
+    budget forced to 0: one Spark job at the call, none at the collect):
+    identical rows."""
     import simplir_spark.operators.query_indexed as qi
     from simplir_spark.operators.index_build import build_index, open_index
     from simplir_spark.operators.phrase import phrase_match_positional
+    from tests.test_index import _jobs_run
 
     rows = [
         (1, "alpha beta gamma"),
@@ -70,18 +72,17 @@ def test_phrase_match_positional_raw_adjacency(spark, tmp_path_factory, monkeypa
     idx = open_index(spark, out)
     phrases = [("P1", ["alpha", "beta"]), ("P2", ["gamma", "gamma"])]
 
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
+    def rows(jobs):
+        res, at_call = _jobs_run(spark, lambda: phrase_match_positional(spark, idx, phrases))
+        got, at_collect = _jobs_run(spark, res.collect)
+        assert (at_call, at_collect) == (jobs, 0)
+        return sorted(tuple(r) for r in got)
 
-    res = phrase_match_positional(spark, idx, phrases)
-    assert "LocalTableScan" in plan(res) and "MapInArrow" not in plan(res)
-    got = sorted(tuple(r) for r in res.collect())
+    got = rows(0)
     # did order = doc_key order: doc_key 1..4 -> did 0..3
     assert got == [("P1", 0, 1), ("P1", 2, 1), ("P2", 3, 2)]
     monkeypatch.setattr(qi, "_DRIVER_DF_BUDGET", 0)
-    res = phrase_match_positional(spark, idx, phrases)
-    assert "MapInArrow" in plan(res)
-    assert sorted(tuple(r) for r in res.collect()) == got
+    assert rows(1) == got
 
 
 def test_phrase_scan_on_testdata(spark):
