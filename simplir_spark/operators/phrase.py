@@ -34,9 +34,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from simplir_spark.functions import codec
+from simplir_spark.operators.batch_kernel import _term_bounds, _tile_rows
 from simplir_spark.operators.index_build import IndexHandle
 from simplir_spark.operators.local_frame import LocalFrame
-from simplir_spark.operators.query_indexed import _score_request, _term_bounds, _tile_rows
+from simplir_spark.operators.query_indexed import _score_request
 
 
 def phrase_match_scan(
@@ -148,8 +149,8 @@ def _phrase_tfs(runs: pa.Table, phrase: list[str], lo: int, hi: int) -> tuple[np
 class PhraseScorer(NamedTuple):
     """A phrase's scorer for the indexed planner: ``_phrase_tfs`` of the
     phrase's terms, its values being phrase tfs.  A module-level
-    NamedTuple like ``query_indexed.Bm25Scorer``, so it pickles to a
-    scoring-pool worker and to a Spark task."""
+    NamedTuple like the ranking models (``batch_kernel.Bm25Batch``), so
+    it pickles to a scoring-pool worker and to a Spark task."""
 
     phrases: dict[str, list[str]]  # phrase_id -> terms
 

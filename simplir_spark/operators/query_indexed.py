@@ -7,8 +7,9 @@ One planner runs every indexed request, as the reference runs every
 retrieval model and phrase node through one per-query fold
 (SimpleIndex.hs:159-165, TopK.hs:36-70, Streaming.hs:472-480).  An
 operator supplies only its per-query scorer and the shape of its result:
-BM25 and QL build theirs from the request's term stats (df, cf) and rank
-its top-k (``_indexed_topk``); a phrase returns its (did, tf) rows.
+BM25 and QL supply their model (``batch_kernel.Bm25Batch``, ``QlBatch``),
+built from the request's term stats (df, cf), and rank its top-k
+(``_indexed_topk``); a phrase returns its (did, tf) rows.
 
 Two paths run the same scorer, and ``_on_driver`` picks one from the
 request and the index alone (``_score_request``); each has one scoring
@@ -50,53 +51,20 @@ first use.  Row groups and each term's decoded postings are kept in one
 process-wide LRU within a byte budget (``postings_store.ROW_GROUPS``),
 so a repeated term decodes nothing.
 
-One per-query kernel, ``_daat_topk``, scores every (query, did tile) of
-the Spark path for both models, and backs the public
-``score_query_runs`` / ``score_query_runs_ql``; the batch kernel gives
-the same rows and bit-identical scores (same per-posting formulas, from
-``batch_kernel``, summed in the same term order).  Its input is
-columnar: every run of the query's terms as a ``pa.Table`` sorted by
-(term, start_did), so each term is one row range, and the runs that
-overlap the tile one sub-range of it.  Per term it decodes the selected
-runs with ONE ``codec.decode_runs`` (one varint decode per blob column
-over the Arrow data buffer, dids by a segmented cumulative sum), as the
-reference decodes a term's chunks in one batch (``SimplIR.EncodedList``),
-and calls the model once per term; no pandas and no per-run Python loop.
-It is document-at-a-time over decoded runs
-(collectPostings' k-way union, Posting2/Collect.hs:53-82, vectorized)
-with an exact block-max skip rule in the spirit of Block-Max WAND [Ding &
-Suel 2011] and the reference's lazily-thresholded top-k fold
-(TopK.hs:36-70):
-
-  * terms processed in descending score upper bound over all of a term's
-    runs, ties by term, so a score's last bits depend neither on the
-    order the runs arrive in nor on the tile;
-  * a run is decoded only if (a) undiscovered docs could still reach the
-    current kth score via the remaining terms' upper bounds, or (b) the
-    run's did range contains a *live* candidate (current score + remaining
-    potential >= threshold).
-
-Skipping is score-preserving for the returned top-k: any doc in the final
-top-k is live at every step (its partial score + remaining potential
-bounds its final score from above), so all its runs are decoded.
-
-A model is a small adapter (``_Model``), as a RetrievalModel is in the
-reference (SimpleIndex.hs:159-165): its per-term upper bound, its
-per-posting contribution into a dense accumulator over the scored did
-range, the score of the seen docs, the bound of an unseen doc and whether
-pruning holds.  ``score_query_runs`` (BM25) and ``score_query_runs_ql``
-(Dirichlet QL) build the two adapters; ``_bm25_topk`` and ``_ql_topk``
-take runs already sorted.
+BM25 and QL are each one model of ``batch_kernel`` (``Bm25Batch``,
+``QlBatch``), built per request from its term stats, and both kernels
+consume the same model object: the batch kernel on the driver path, and
+the per-query block-max kernel (``batch_kernel._daat_topk``, the
+model called as a scorer) for every (query, did tile) of the Spark path
+and in the public ``score_query_runs`` / ``score_query_runs_ql``.  The
+two give the same rows with bit-identical scores.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import weakref
 from functools import cache, partial
-from itertools import accumulate
-from typing import Callable, NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -105,7 +73,6 @@ import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from simplir_spark.functions import codec
 from simplir_spark.functions.scoring import B_DEFAULT, K1_DEFAULT
 from simplir_spark.operators import batch_kernel as bk
 from simplir_spark.operators import score_pool
@@ -175,161 +142,6 @@ def _did_tiles(spark: SparkSession, n_queries: int, doc_count: int) -> list[tupl
     return [(lo, min(lo + span, doc_count)) for lo in range(0, doc_count, span)]
 
 
-_NO_HITS = (np.zeros(0, dtype=np.int64), np.zeros(0))
-# the kernel's row order: each term's runs one row range, in did order
-_RUN_ORDER = ("term", "start_did")
-
-
-class _Model(NamedTuple):
-    """What a retrieval model supplies to ``_daat_topk``.
-
-    ``ub(term, max_tf)`` bounds one posting's contribution from above,
-    given its run's ``max_tf``; ``add(term, off, tfs, dls)`` adds all of
-    a term's decoded postings at tile offsets ``off`` (distinct, since a
-    term's runs cover disjoint dids; called once per term) to the model's
-    dense accumulator; ``scores(ix)`` is the current score
-    of the seen docs at offsets ``ix``; ``unseen(rest)`` bounds the score
-    of a doc no term has matched yet, ``rest`` being the upper bounds of
-    the terms still to come; ``prune`` is False when a partial score is
-    not a lower bound of the final score, and then every run is decoded.
-    """
-
-    ub: Callable[[str, float], float]
-    add: Callable[[str, np.ndarray, np.ndarray, np.ndarray], None]
-    scores: Callable[[np.ndarray], np.ndarray]
-    unseen: Callable[[float], float]
-    prune: bool
-
-
-def _as_runs(runs) -> pa.Table:
-    """``runs`` as an Arrow table sorted by (term, start_did).  A pandas
-    DataFrame (any row order and index) is converted once, its index
-    dropped; the scoring kernel itself only sees Arrow.  Only the public
-    ``score_query_runs`` / ``score_query_runs_ql`` take runs in any form
-    and order; the request paths hand ``_bm25_topk`` / ``_ql_topk`` runs
-    already sorted."""
-    if not isinstance(runs, pa.Table):
-        runs = pa.Table.from_pandas(runs, preserve_index=False)
-    return runs.sort_by([(c, "ascending") for c in _RUN_ORDER])
-
-
-def _term_bounds(runs: pa.Table) -> tuple[np.ndarray, np.ndarray]:
-    """(terms, bounds) of ``runs`` sorted by term: the distinct terms in
-    row order, term i's rows being [bounds[i], bounds[i + 1])."""
-    term = runs.column("term").to_numpy(zero_copy_only=False)
-    if len(term) == 0:
-        return term, np.zeros(1, dtype=np.int64)
-    cut = np.flatnonzero(term[1:] != term[:-1]) + 1
-    bounds = np.concatenate(([0], cut, [len(term)]))
-    return term[bounds[:-1]], bounds
-
-
-def _column(runs: pa.Table, name: str) -> np.ndarray:
-    return np.asarray(runs.column(name).to_numpy(), dtype=np.int64)
-
-
-def _tile_rows(starts: np.ndarray, ends: np.ndarray, a: int, b: int, lo: int, hi: int) -> tuple[int, int]:
-    """The rows of [a, b), one term's runs (disjoint did ranges in
-    ascending order, so ``starts`` and ``ends`` both ascend there), whose
-    [start_did, end_did] overlaps the dids [lo, hi): one row range."""
-    return a + int(np.searchsorted(ends[a:b], lo)), a + int(np.searchsorted(starts[a:b], hi))
-
-
-def _daat_topk(
-    runs: pa.Table,
-    k: int,
-    lo: int,
-    hi: int,
-    model: _Model,
-    decode_counter: list | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Top-k (dids, scores) of one query's posting ``runs`` over the dids
-    in [lo, hi), scored by ``model``: the block-max DAAT loop of both
-    retrieval models (see the module docstring for the skip rule).
-
-    ``runs`` is an Arrow table sorted by (term, start_did) (``_as_runs``),
-    so each term's runs are one row range.  Terms are summed in
-    (descending upper bound, term) order, the bound taken over ALL of a
-    term's rows: every tile, and the whole range, then sums a doc's score
-    in the same order, the batch kernel's.  Per term, only the runs that
-    overlap [lo, hi) count (``_tile_rows``): their ``max_tf`` bounds the
-    term for pruning, the block-max rule masks those worth decoding, and
-    all of them are decoded by ONE ``codec.decode_runs`` (one varint
-    decode per blob column, zero-copy when no run is skipped); a term
-    with none drops out, and postings outside [lo, hi) are dropped after
-    decode.  The model gets ONE ``add`` per term.  That is exact: a
-    term's runs have disjoint did ranges, so a doc gets at most one
-    posting per term, and its score does not depend on the row order of
-    ``runs``.  Ties rank by did ascending.
-    ``decode_counter`` (tests) receives [decoded_runs, total_runs].
-    """
-    if runs.num_rows == 0:
-        return _NO_HITS
-    names, bounds = _term_bounds(runs)
-    starts, ends = _column(runs, "start_did"), _column(runs, "end_did")
-    counts, max_tf = _column(runs, "n"), _column(runs, "max_tf")
-    blobs = [runs.column(c) for c in ("deltas", "tfs", "dls")]
-    key = {t: model.ub(t, float(m)) for t, m in zip(names, np.maximum.reduceat(max_tf, bounds[:-1]))}
-    # a total order: terms tied on ub are summed in term order, not in the
-    # order their runs arrived in (float addition is not associative)
-    terms = []  # (term, its tile rows [a, b), their ub), in summing order
-    for i in sorted(range(len(names)), key=lambda i: (-key[names[i]], names[i])):
-        a, b = _tile_rows(starts, ends, int(bounds[i]), int(bounds[i + 1]), lo, hi)
-        if a < b:
-            terms.append((names[i], a, b, model.ub(names[i], float(max_tf[a:b].max()))))
-    # the ub of each term plus those of all later terms
-    rest_after = list(accumulate(ub for *_, ub in reversed(terms)))[::-1]
-
-    seen = np.zeros(hi - lo, dtype=bool)
-    seen_count = 0
-    decoded = 0
-    for (t, a, b, _), rest in zip(terms, rest_after):
-        keep = None  # the term's runs to decode; None = all
-        # theta exists once k docs are seen
-        if model.prune and seen_count >= k:
-            ix = np.nonzero(seen)[0]
-            scores = model.scores(ix)
-            theta = float(np.partition(scores, -k)[-k])
-            # Skip a run's unseen docs only when theta beats their bound
-            # STRICTLY: with b=0 the BM25 upper bound (dl->0) is exact at
-            # tf==max_tf, so a doc scoring exactly theta is attainable and
-            # the did tie-break could place it in the top-k.
-            if theta > model.unseen(rest):
-                # then only runs overlapping live candidates matter
-                live = (ix + lo)[scores + rest >= theta]
-                first = np.searchsorted(live, starts[a:b], side="left")
-                keep = np.searchsorted(live, ends[a:b], side="right") > first
-        if keep is None or keep.all():
-            rows, cols = slice(a, b), [c.slice(a, b - a) for c in blobs]
-        elif keep.any():
-            rows = a + np.flatnonzero(keep)
-            cols = [c.take(rows) for c in blobs]
-        else:
-            continue
-        run_starts = starts[rows]
-        decoded += len(run_starts)
-        dids, tfs, dls = codec.decode_runs(run_starts, counts[rows], *cols)
-        if run_starts[0] < lo or ends[rows][-1] >= hi:
-            m = (dids >= lo) & (dids < hi)
-            dids, tfs, dls = dids[m], tfs[m], dls[m]
-            if len(dids) == 0:
-                continue
-        off = dids - lo
-        model.add(t, off, tfs, dls)
-        seen_count += int(np.count_nonzero(~seen[off]))
-        seen[off] = True
-
-    if decode_counter is not None:
-        decode_counter[:] = [decoded, runs.num_rows]
-    ix = np.nonzero(seen)[0]
-    if len(ix) == 0:
-        return _NO_HITS
-    scores = model.scores(ix)
-    dids = ix + lo
-    sel = np.lexsort((dids, -scores))[:k]
-    return dids[sel], scores[sel]
-
-
 def score_query_runs(
     runs: pa.Table,
     doc_count: int,
@@ -342,51 +154,24 @@ def score_query_runs(
     did_hi: int | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """BM25 top-k of one query's posting runs; returns (top dids, top
-    scores).  The BM25 adapter of ``_daat_topk``: a posting scores
-    idf·tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) into a dense accumulator
-    over the did range; the term upper bound takes tf=max_tf, dl→0
-    (``batch_kernel.bm25_contrib``, ``bm25_ub``).
+    scores): ``batch_kernel._daat_topk`` under ``batch_kernel.Bm25Batch``,
+    each term's idf from its ``df``.
 
     ``runs`` columns: term, start_did, end_did, n, max_tf, deltas, tfs, dls
     plus per-term ``df``, as a ``pa.Table`` or a pandas DataFrame, in any
-    row order (converted and sorted once, ``_as_runs``).
+    row order (converted and sorted once, ``batch_kernel._as_runs``).
     ``decode_counter`` (tests) receives [decoded_runs, total_runs].
     ``did_lo``/``did_hi`` restrict scoring to the dids in [lo, hi), the
     tile contract: ``runs`` holds every run of the query's terms, and
-    only those overlapping the range are decoded (``_daat_topk``).  They
-    default to the whole index, [0, doc_count).
+    only those overlapping the range are decoded.  They default to the
+    whole index, [0, doc_count).
     """
-    runs = _as_runs(runs)
+    runs = bk._as_runs(runs)
     df = dict(zip(runs.column("term").to_pylist(), runs.column("df").to_pylist()))
+    model = bk.Bm25Batch({t: bk.bm25_idf(doc_count, int(n)) for t, n in df.items()}, k1, b, avg_doc_len, k)
     lo = 0 if did_lo is None else did_lo
     hi = doc_count if did_hi is None else did_hi
-    return _bm25_topk(runs, df, doc_count, avg_doc_len, k, k1, b, lo, hi, decode_counter)
-
-
-def _bm25_topk(
-    runs: pa.Table,
-    df: dict,
-    doc_count: int,
-    avg_doc_len: float,
-    k: int,
-    k1: float,
-    b: float,
-    lo: int,
-    hi: int,
-    decode_counter: list | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """``score_query_runs`` of runs already sorted by (term, start_did),
-    each term's df from ``df``, over the dids in [lo, hi)."""
-    idf = {t: bk.bm25_idf(doc_count, int(df[t])) for t in _term_bounds(runs)[0].tolist()}
-    acc = np.zeros(hi - lo)
-
-    def add(t: str, off: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> None:
-        acc[off] += bk.bm25_contrib(idf[t], tfs, dls, k1, b, avg_doc_len)
-
-    model = _Model(
-        lambda t, max_tf: bk.bm25_ub(idf[t], max_tf, k1, b), add, lambda ix: acc[ix], lambda rest: rest, True
-    )
-    return _daat_topk(runs, k, lo, hi, model, decode_counter)
+    return bk._daat_topk(runs, k, lo, hi, model, "", decode_counter)
 
 
 def score_query_runs_ql(
@@ -399,26 +184,11 @@ def score_query_runs_ql(
     did_hi: int,
     decode_counter: list | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Dirichlet-QL top-k of one query's posting runs in [did_lo, did_hi)
-    — the QL adapter of ``_daat_topk``.
-
-    Decomposition (see ``ql_dirichlet_indexed``):
-        score(d) = C0 + corr(d) - Q * ln(dl_d + mu)
-    where every per-term corr contribution is STRICTLY POSITIVE
-    (w*(ln(tf+mu*bg)-ln(mu*bg)) > 0 for tf >= 1), so a seen doc's partial
-    score is a valid lower bound of its final score and the kernel's
-    threshold logic holds:
-      * per-term upper bound ub_t = w_t*(ln(max_tf_t+mu*bg_t)-ln(mu*bg_t));
-      * an UNSEEN doc's best case is C0 + rest - Q*ln(0+mu) (dl >= 0);
-      * a seen doc's partial score already holds its dl normalization
-        (a doc's dl is the same in every posting of it).
-    corr, each doc's dl and its count of cf=0 hits live in dense arrays
-    over the did range.  The formulas are ``batch_kernel``'s (``ql_ub``,
-    ``ql_contrib``, ``ql_consts``, ``ql_scores``).
-
-    Terms with cf = 0 (bg = 0) make matched docs lacking them score -inf,
-    which breaks the partial-is-a-lower-bound invariant — pruning is
-    DISABLED for such queries (decode everything; results unchanged).
+    """Dirichlet-QL top-k of one query's posting runs in [did_lo, did_hi):
+    ``batch_kernel._daat_topk`` under ``batch_kernel.QlBatch`` (its
+    docstring has the decomposition and the cf = 0 rule), with the
+    query's term weights ``term_w`` and background probabilities
+    ``term_bg``.
 
     ``runs``: a ``pa.Table`` or a pandas DataFrame, in any row order, as
     for ``score_query_runs`` but without ``df``; every run of the
@@ -426,49 +196,8 @@ def score_query_runs_ql(
     decoded.  Returns (dids, scores) of the tile-local top-k;
     ``decode_counter`` (tests) receives [decoded_runs, total_runs].
     """
-    return _ql_topk(_as_runs(runs), term_w, term_bg, mu, k, did_lo, did_hi, decode_counter)
-
-
-def _ql_topk(
-    runs: pa.Table,
-    term_w: dict,
-    term_bg: dict,
-    mu: float,
-    k: int,
-    did_lo: int,
-    did_hi: int,
-    decode_counter: list | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """``score_query_runs_ql`` of runs already sorted by (term, start_did)."""
-    c0, q_total, n_cf0 = bk.ql_consts(term_w, term_bg, mu)
-    unseen_norm = q_total * math.log(mu)  # dl >= 0 maximizes -Q*ln(dl+mu)
-
-    span = did_hi - did_lo
-    corr = np.zeros(span)
-    dl = np.zeros(span, dtype=np.int64)
-    cf0_hits = np.zeros(span, dtype=np.int32)
-
-    def add(t: str, off: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> None:
-        bg = term_bg.get(t, 0.0)
-        corr[off] += term_w[t] * bk.ql_contrib(tfs, bg, mu)
-        if bg <= 0:
-            cf0_hits[off] += 1
-        dl[off] = dls
-
-    def scores(ix: np.ndarray) -> np.ndarray:
-        s = bk.ql_scores(c0, corr[ix], q_total, dl[ix], mu)
-        if n_cf0:
-            s = np.where(cf0_hits[ix] == n_cf0, s, float("-inf"))
-        return s
-
-    model = _Model(
-        lambda t, max_tf: bk.ql_ub(term_w[t], term_bg.get(t, 0.0), max_tf, mu),
-        add,
-        scores,
-        lambda rest: c0 + rest - unseen_norm,
-        n_cf0 == 0,
-    )
-    return _daat_topk(runs, k, did_lo, did_hi, model, decode_counter)
+    model = bk.QlBatch({"": (term_w, term_bg)}, term_bg, mu, k)
+    return bk._daat_topk(bk._as_runs(runs), k, did_lo, did_hi, model, "", decode_counter)
 
 
 def _query_terms(queries: list[tuple[str, list[str]]]) -> list[str]:
@@ -558,8 +287,8 @@ def _query_jobs(runs: pa.Table, queries: list[tuple[str, list[str]]]) -> tuple[p
     """``runs`` sorted by (term, start_did), and (query_id, row indices of
     its distinct terms' runs) of each query with a run there, in request
     order: the per-query input of ``score_pool._score_share``."""
-    runs = runs.sort_by([(c, "ascending") for c in _RUN_ORDER])
-    names, bounds = _term_bounds(runs)
+    runs = bk._as_runs(runs)
+    names, bounds = bk._term_bounds(runs)
     rows_of = {t: np.arange(bounds[i], bounds[i + 1]) for i, t in enumerate(names)}
     jobs = []
     for qid, terms in queries:
@@ -576,10 +305,10 @@ def _driver_scores(
     Returns (query_id, dids, values) of every query that has an indexed
     term, in request order; no Spark job runs.
 
-    A BM25 or QL request (a scorer with a ``batch`` model) is scored in
-    one batch pass (``batch_kernel.batch_topk``) over its terms' decoded
-    postings, which ``IndexHandle.postings_directory`` keeps in the
-    process-wide cache (``postings_store.ROW_GROUPS``).
+    A BM25 or QL request (``batch_kernel.is_model``) is scored in one
+    batch pass (``batch_kernel.batch_topk``) under its model, over its
+    terms' decoded postings, which ``IndexHandle.postings_directory``
+    keeps in the process-wide cache (``postings_store.ROW_GROUPS``).
 
     Any other request (a phrase, which needs positions) reads its runs
     (``cols``) from the row groups that hold its terms; each query is one
@@ -588,16 +317,15 @@ def _driver_scores(
     spreads the queries over the driver's cores in shares balanced by
     ``_query_work``."""
     lexicon = index.lexicon
-    batch = getattr(scorer, "batch", None)
-    if batch is not None:
+    if bk.is_model(scorer):
         postings = index.postings_directory.postings([t for t in _query_terms(queries) if t in lexicon])
         jobs = [(qid, ts) for qid, terms in queries if (ts := sorted(set(terms) & postings.keys()))]
-        model, n_docs = batch(), index.doc_count
+        n_docs = index.doc_count
 
         def share(sub, here):
             if here:
-                return partial(bk.batch_topk, sub, postings, n_docs, scorer.k, model)
-            return partial(bk.topk_packed, *bk.pack(sub, postings), n_docs, scorer.k, model)
+                return partial(bk.batch_topk, sub, postings, n_docs, scorer.k, scorer)
+            return partial(bk.topk_packed, *bk.pack(sub, postings), n_docs, scorer.k, scorer)
 
         work = [_query_work(lexicon, ts) for _, ts in jobs]
         hits = score_pool.score_shares(
@@ -637,12 +365,13 @@ def _spark_scores(
     (``_query_jobs``) and scores them over its tile
     (``score_pool._score_share``).  A task holds all of a term's runs,
     so every tile sums a doc's score in the whole-index term order
-    (``_daat_topk``), and a doc lives in exactly one tile, so tile
-    outputs union exactly (the distributed form of collectPostings'
-    doc-at-a-time union, Posting2/Collect.hs:53-82).  The collect keeps
-    the tasks' order, so each query's tiles come in did order; a ranking
-    scorer's (one with a ``k``: BM25, QL) are merged into its top-k by
-    score, then did (``batch_kernel._top``), which is exact."""
+    (``batch_kernel._daat_topk``), and a doc lives in exactly one tile,
+    so tile outputs union exactly (the distributed form of
+    collectPostings' doc-at-a-time union, Posting2/Collect.hs:53-82).
+    The collect keeps the tasks' order, so each query's tiles come in
+    did order; a ranking model's (``batch_kernel.is_model``: BM25, QL)
+    are merged into its top-k by score, then did
+    (``batch_kernel._top``), which is exact."""
     par = spark.sparkContext.defaultParallelism
     work = [_query_work(stats, terms) for _, terms in queries]
     shares = score_pool._split(work, min(par, len(queries)))
@@ -661,8 +390,8 @@ def _spark_scores(
                 yield pa.RecordBatch.from_arrays(
                     [
                         pa.array(np.repeat([at[qid] for qid, _ in jobs], [len(d) for d, _ in hits]), pa.int64()),
-                        pa.array(np.concatenate([_NO_HITS[0], *(d for d, _ in hits)]), pa.int64()),
-                        pa.array(np.concatenate([_NO_HITS[1], *(v for _, v in hits)]), pa.float64()),
+                        pa.array(np.concatenate([bk._NO_HITS[0], *(d for d, _ in hits)]), pa.int64()),
+                        pa.array(np.concatenate([bk._NO_HITS[1], *(v for _, v in hits)]), pa.float64()),
                     ],
                     names=["q", "did", "value"],
                 )
@@ -673,7 +402,7 @@ def _spark_scores(
     order = np.argsort(q, kind="stable")
     q, dids, values = q[order], got["did"].to_numpy()[order], got["value"].to_numpy()[order]
     starts = np.flatnonzero(np.diff(q, prepend=-1))
-    top = partial(bk._top, k=scorer.k) if hasattr(scorer, "k") else lambda d, v: (d, v)
+    top = partial(bk._top, k=scorer.k) if bk.is_model(scorer) else lambda d, v: (d, v)
     return [(queries[q[a]][0], *top(dids[a:b], values[a:b])) for a, b in zip(starts, [*starts[1:], len(q)])]
 
 
@@ -691,70 +420,27 @@ def _score_request(
     return _spark_scores(spark, index, queries, scorer, cols, stats)
 
 
-class Bm25Scorer(NamedTuple):
-    """BM25's scorer, with each term's ``df`` from the request's term
-    stats: per query and tile (``score_query_runs`` over sorted runs) on
-    the Spark path, per request (``batch_kernel.batch_topk``, ``batch``)
-    on the driver.  A module-level NamedTuple, so it pickles to a Spark
-    task."""
-
-    df: dict[str, int]
-    doc_count: int
-    avg_doc_len: float
-    k: int
-    k1: float
-    b: float
-
-    def __call__(self, qid: str, runs: pa.Table, lo: int, hi: int):
-        return _bm25_topk(runs, self.df, self.doc_count, self.avg_doc_len, self.k, self.k1, self.b, lo, hi)
-
-    def batch(self) -> bk.Bm25Batch:
-        idf = {t: bk.bm25_idf(self.doc_count, df) for t, df in self.df.items()}
-        return bk.Bm25Batch(idf, self.k1, self.b, self.avg_doc_len)
-
-
-class QlScorer(NamedTuple):
-    """Dirichlet QL's scorer, with each query's term weights and
-    background probabilities (``score_query_runs_ql`` per query,
-    ``batch_kernel.QlBatch`` per request); picklable like
-    ``Bm25Scorer``."""
-
-    weights: dict[str, tuple[dict, dict]]  # query_id -> (term_w, term_bg)
-    mu: float
-    k: int
-
-    def __call__(self, qid: str, runs: pa.Table, lo: int, hi: int):
-        term_w, term_bg = self.weights[qid]
-        return _ql_topk(runs, term_w, term_bg, self.mu, self.k, lo, hi)
-
-    def batch(self) -> bk.QlBatch:
-        bg = {t: p for _, term_bg in self.weights.values() for t, p in term_bg.items()}
-        return bk.QlBatch(self.weights, bg, self.mu)
-
-
 def _indexed_topk(
     spark: SparkSession,
     index: IndexHandle,
     queries: list[tuple[str, list[str]]],
     k: int,
-    make_scorer,
+    make_model,
 ) -> DataFrame:
     """Top-k of every query under one retrieval model, as a
     ``LocalFrame`` of (query_id, doc_key, rank, score).
 
-    ``make_scorer(stats, merged)`` returns the model's scorer
-    (``Bm25Scorer``, ``QlScorer``): ``scorer(query_id, runs, lo, hi)``
-    scores one query's runs (a ``pa.Table``) over the dids in [lo, hi)
-    and returns its top-k there as (dids, scores); ``stats`` maps the
-    request's indexed terms to (df, cf) and ``merged`` is ``queries``
-    after ``merge_query_entries``.  On either path (``_score_request``)
-    each query's hits are its ranked top-k.
+    ``make_model(stats, merged)`` returns the request's model
+    (``batch_kernel.Bm25Batch``, ``QlBatch``) with its ``k``; ``stats``
+    maps the request's indexed terms to (df, cf) and ``merged`` is
+    ``queries`` after ``merge_query_entries``.  On either path
+    (``_score_request``) each query's hits are its ranked top-k.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     queries = merge_query_entries(queries)
-    hits = _score_request(spark, index, queries, lambda stats: make_scorer(stats, queries), _RUN_COLS)
-    qids, dids, ranks, scores = [], [_NO_HITS[0]], [np.zeros(0, dtype=np.int32)], [_NO_HITS[1]]
+    hits = _score_request(spark, index, queries, lambda stats: make_model(stats, queries), _RUN_COLS)
+    qids, dids, ranks, scores = [], [bk._NO_HITS[0]], [np.zeros(0, dtype=np.int32)], [bk._NO_HITS[1]]
     for qid, d, s in hits:
         qids += [qid] * len(d)
         dids.append(d)
@@ -780,8 +466,8 @@ def bm25_indexed(
     b: float = B_DEFAULT,
 ) -> DataFrame:
     """BM25 top-k of all queries against the index in one scoring pass
-    (``_indexed_topk``); the scorer is ``score_query_runs`` with each
-    term's ``df`` from the request's term stats (``Bm25Scorer``).
+    (``_indexed_topk``) under ``batch_kernel.Bm25Batch``, each term's idf
+    from its ``df`` in the request's term stats.
 
     Returns (query_id, doc_key, rank, score).  Rank ties break by did,
     which by construction equals doc_key order (dense ids are assigned in
@@ -799,11 +485,11 @@ def bm25_indexed(
     the same driver-local DataFrame.  Both paths give the same rows.
     """
 
-    def make_scorer(stats: dict, merged) -> Bm25Scorer:
-        df = {t: df for t, (df, _) in stats.items()}
-        return Bm25Scorer(df, index.doc_count, index.avg_doc_len, k, k1, b)
+    def make_model(stats: dict, merged) -> bk.Bm25Batch:
+        idf = {t: bk.bm25_idf(index.doc_count, df) for t, (df, _) in stats.items()}
+        return bk.Bm25Batch(idf, k1, b, index.avg_doc_len, k)
 
-    return _indexed_topk(spark, index, queries, k, make_scorer)
+    return _indexed_topk(spark, index, queries, k, make_model)
 
 
 def ql_dirichlet_indexed(
@@ -831,29 +517,28 @@ def ql_dirichlet_indexed(
     cf = 0 have probability 0: every matched doc lacking them scores
     -inf; docs containing them fall back to ln(tf/(dl+mu)).
 
-    Block-max run skipping (``score_query_runs_ql``): per-term upper
-    bounds on the positive corr contributions drive the same DAAT
-    threshold pruning as BM25 — disabled automatically for queries with
-    cf=0 terms, where -inf finals break the partial-score lower bound.
+    Block-max run skipping (``batch_kernel._daat_topk`` on the Spark
+    path): per-term upper bounds on the positive corr contributions drive
+    the same DAAT threshold pruning as BM25 — disabled automatically for
+    queries with cf=0 terms, where -inf finals break the partial-score
+    lower bound.
 
     The request runs through the planner ``bm25_indexed`` uses
-    (``_indexed_topk``), on the driver or on Spark by the same rule; the
-    background probabilities bg_t = cf_t / |C| come from the request's
-    term stats (``QlScorer``).
+    (``_indexed_topk``), on the driver or on Spark by the same rule,
+    under ``batch_kernel.QlBatch``; the background probabilities
+    bg_t = cf_t / |C| come from the request's term stats.
     """
     token_count = index.token_count
 
-    def make_scorer(stats: dict, merged) -> QlScorer:
-        weights: dict[str, tuple[dict, dict]] = {}
+    def make_model(stats: dict, merged) -> bk.QlBatch:
+        bg = {
+            t: (stats.get(t, (0, 0))[1] / token_count if token_count else 0.0)
+            for t in _query_terms(merged)
+        }
+        weights = {}
         for qid, terms in merged:
             term_w = {t: float(terms.count(t)) for t in sorted(set(terms))}
-            weights[qid] = (
-                term_w,
-                {
-                    t: (stats.get(t, (0, 0))[1] / token_count if token_count else 0.0)
-                    for t in term_w
-                },
-            )
-        return QlScorer(weights, mu, k)
+            weights[qid] = (term_w, {t: bg[t] for t in term_w})
+        return bk.QlBatch(weights, bg, mu, k)
 
-    return _indexed_topk(spark, index, queries, k, make_scorer)
+    return _indexed_topk(spark, index, queries, k, make_model)

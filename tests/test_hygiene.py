@@ -13,7 +13,7 @@
   the index build (``operators/index_build.py``) run on Arrow and numpy
   only: no pandas import, conversion, row iteration or groupby; the
   scoring pool, the postings reads and the batch kernel import no
-  pyspark.
+  pyspark, and importing them in a fresh interpreter loads none.
 """
 
 from __future__ import annotations
@@ -21,6 +21,8 @@ from __future__ import annotations
 import ast
 import importlib
 import importlib.util
+import subprocess
+import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -159,3 +161,19 @@ def test_batch_kernel_imports_no_pyspark():
     """The batch kernel and the model formulas it shares with the
     per-query kernel run on numpy alone, as a pool worker runs them."""
     assert not _imports_pyspark("operators/batch_kernel.py")
+
+
+def test_serving_modules_load_no_pyspark():
+    """Importing the scoring pool, the postings reads and the batch
+    kernel in a fresh interpreter loads no pyspark module at all: the
+    checks above read only each module's own import statements, not
+    what its package and its imports load."""
+    code = (
+        "import sys\n"
+        "import simplir_spark.operators.batch_kernel\n"
+        "import simplir_spark.operators.postings_store\n"
+        "import simplir_spark.operators.score_pool\n"
+        "print(sorted(m for m in sys.modules if m.split('.')[0] == 'pyspark'))\n"
+    )
+    out = subprocess.run([sys.executable, "-c", code], cwd=ROOT, capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == "[]", out.stdout[:500]

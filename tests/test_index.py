@@ -1127,8 +1127,8 @@ def test_batch_kernel_equals_per_query_kernel(case, b, cf0):
         return score_query_runs_ql(sub.drop(columns=["df"]), term_w, term_bg, mu, k, 0, n_docs)
 
     models = {
-        "bm25": bk.Bm25Batch({t: bk.bm25_idf(n_docs, df[t]) for t in df}, k1, b, avgdl),
-        "ql": bk.QlBatch(weights, bg, mu),
+        "bm25": bk.Bm25Batch({t: bk.bm25_idf(n_docs, df[t]) for t in df}, k1, b, avgdl, k),
+        "ql": bk.QlBatch(weights, bg, mu, k),
     }
     cells = bk.BATCH_CELLS
     bk.BATCH_CELLS = per_chunk * n_docs
@@ -1141,6 +1141,44 @@ def test_batch_kernel_equals_per_query_kernel(case, b, cf0):
                 assert list(map(repr, s.tolist())) == list(map(repr, want_s.tolist())), (name, qid)
     finally:
         bk.BATCH_CELLS = cells
+
+
+@settings(max_examples=300, deadline=None, derandomize=True)
+@given(case=_batch_case(), b=st.sampled_from([0.4, 0.0]), cf0=st.booleans(), data=st.data())
+def test_tiled_per_query_kernel_merges_to_batch_kernel(case, b, cf0, data):
+    """For a random tiling of [0, n_docs), each query's per-tile top-k
+    lists from the per-query kernel, merged by ``batch_kernel._top`` (as
+    ``_spark_scores`` merges its tile tasks' lists), equal the batch
+    kernel's top-k over the whole range under the same model object: the
+    same dids and ``repr``-identical scores, for BM25 at b in {0.4, 0}
+    and Dirichlet QL, with absent and repeated query terms, tied scores
+    and QL cf=0 terms."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    import simplir_spark.operators.batch_kernel as bk
+    from simplir_spark.operators.postings_store import TermPostings
+
+    runs, raw, n_docs, queries, k, _ = case
+    cuts = sorted(data.draw(st.sets(st.integers(1, n_docs - 1), max_size=6), label="cuts"))
+    tiles = list(zip([0, *cuts], [*cuts, n_docs]))
+    postings = {t: TermPostings.of(t, d, tf, dl, int(tf.max())) for t, (d, tf, dl) in raw.items()}
+    bg = {t: 0.0 if cf0 and i == 0 else 0.001 * (i + 1) for i, t in enumerate(sorted(raw))}
+    weights = {
+        qid: ({t: float(terms.count(t)) for t in sorted(set(terms))}, {t: bg.get(t, 0.0) for t in terms})
+        for qid, terms in queries
+    }
+    jobs = [(qid, ts) for qid, terms in queries if (ts := sorted(set(terms) & postings.keys()))]
+    table = bk._as_runs(runs)
+    idf = {t: bk.bm25_idf(n_docs, len(d)) for t, (d, _, _) in raw.items()}
+    for model in (bk.Bm25Batch(idf, 1.2, b, 2.5, k), bk.QlBatch(weights, bg, 10.0, k)):
+        want = bk.batch_topk(jobs, postings, n_docs, k, model)
+        for (qid, ts), (want_d, want_s) in zip(jobs, want):
+            sub = table.filter(pc.is_in(table["term"], value_set=pa.array(ts)))
+            parts = [bk._daat_topk(sub, k, lo, hi, model, qid) for lo, hi in tiles]
+            d, s = bk._top(np.concatenate([p[0] for p in parts]), np.concatenate([p[1] for p in parts]), k)
+            assert d.tolist() == want_d.tolist(), (type(model).__name__, qid, tiles)
+            assert list(map(repr, s.tolist())) == list(map(repr, want_s.tolist())), (type(model).__name__, qid)
 
 
 def test_ql_indexed_small_k_matches_scan(spark, index_dir, corpus_small, monkeypatch):
@@ -2194,14 +2232,15 @@ def test_pool_shared_by_concurrent_requests(monkeypatch):
 
     import pyarrow as pa
 
-    import simplir_spark.operators.query_indexed as qi
+    import simplir_spark.operators.batch_kernel as bk
     import simplir_spark.operators.score_pool as sp
 
     runs, n_docs = _input_form_runs()
     table = pa.Table.from_pandas(runs.drop(columns=["df"]), preserve_index=False).sort_by(
         [("term", "ascending"), ("start_did", "ascending")]
     )
-    scorer = qi.Bm25Scorer(dict(zip(runs["term"], runs["df"].astype(int))), n_docs, 110.0, 10, 1.2, 0.75)
+    idf = {t: bk.bm25_idf(n_docs, int(df)) for t, df in zip(runs["term"], runs["df"])}
+    scorer = bk.Bm25Batch(idf, 1.2, 0.75, 110.0, 10)
     terms = table.column("term").to_numpy(zero_copy_only=False)
     rows = {t: np.flatnonzero(terms == t) for t in ("common", "mid", "rare")}
     jobs = [(f"q{i}", np.concatenate([rows[t] for t in sel]))
@@ -2235,23 +2274,23 @@ def test_pool_shared_by_concurrent_requests(monkeypatch):
 
 
 def test_scorers_pickle():
-    """The model scorers are module-level NamedTuples: they pickle (to a
-    pool worker or a Spark task) and score the same after a round trip."""
+    """The models are module-level NamedTuples: they pickle (to a pool
+    worker or a Spark task) and score the same after a round trip."""
     import pickle
 
     import pyarrow as pa
 
-    import simplir_spark.operators.query_indexed as qi
+    import simplir_spark.operators.batch_kernel as bk
 
     runs, n_docs = _input_form_runs()
     table = pa.Table.from_pandas(runs.drop(columns=["df"]), preserve_index=False).sort_by(
         [("term", "ascending"), ("start_did", "ascending")]
     )
-    df = dict(zip(runs["term"], runs["df"].astype(int)))
+    idf = {t: bk.bm25_idf(n_docs, int(df)) for t, df in zip(runs["term"], runs["df"])}
+    term_bg = {"common": 0.01, "mid": 0.002, "rare": 0.0001}
     scorers = [
-        qi.Bm25Scorer(df, n_docs, 110.0, 10, 1.2, 0.75),
-        qi.QlScorer({"q": ({"common": 1.0, "mid": 2.0, "rare": 1.0},
-                           {"common": 0.01, "mid": 0.002, "rare": 0.0001})}, 1000.0, 10),
+        bk.Bm25Batch(idf, 1.2, 0.75, 110.0, 10),
+        bk.QlBatch({"q": ({"common": 1.0, "mid": 2.0, "rare": 1.0}, term_bg)}, term_bg, 1000.0, 10),
     ]
     for scorer in scorers:
         back = pickle.loads(pickle.dumps(scorer))
@@ -2341,7 +2380,7 @@ def test_directory_read_equals_filtered_read(spark, corpus_small, small_groups, 
     at 2/5/8 partitions, a 3-source merge, a compacted index and postings
     written without statistics, all in small row groups."""
     from simplir_spark.operators.merge import compact_index
-    from simplir_spark.operators.query_indexed import _as_runs
+    from simplir_spark.operators.batch_kernel import _as_runs
 
     _small_groups(monkeypatch)
 
@@ -2396,7 +2435,7 @@ def test_directory_read_of_unsorted_row_groups(spark, small_groups, tmp_path):
     import pyarrow.dataset as pds
     import pyarrow.parquet as pq
 
-    from simplir_spark.operators.query_indexed import _as_runs
+    from simplir_spark.operators.batch_kernel import _as_runs
 
     root = str(tmp_path / "shuffled")
     shutil.copytree(small_groups, root)
